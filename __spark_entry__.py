@@ -13,6 +13,7 @@ COUNT/ROW_NUMBER/LEN are all BIGINT).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,6 +25,36 @@ from keystone_spark.operators.relational import top_k_per_group
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
+
+
+def _session_key(spark: SparkSession, *parts) -> tuple:
+    """Cache key for a fixture index built under this session."""
+    sid = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
+           else id(spark))
+    return (sid, *parts)
+
+
+_MEMO_LOCK = threading.Lock()
+_MEMO_KEY_LOCKS: dict = {}
+
+
+def _memo(cache: dict, key, build: Callable[[], str]) -> str:
+    """``cache[key]``, built by ``build()`` once. The fixture indexes
+    are shared by queries that run on concurrent threads (the query
+    sweeps use thread pools), so the check-then-build is double-checked
+    under a per-key lock: a warm hit takes no lock, two threads never
+    build the same index, and different indexes still build in
+    parallel. ``_MEMO_LOCK`` only guards the per-key lock table."""
+    val = cache.get(key)
+    if val is None:
+        with _MEMO_LOCK:
+            lock = _MEMO_KEY_LOCKS.setdefault((id(cache), key),
+                                              threading.Lock())
+        with lock:
+            val = cache.get(key)
+            if val is None:
+                val = cache[key] = build()
+    return val
 
 
 # ---------------------------------------------------------------------------
@@ -1069,13 +1100,12 @@ def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 10)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _SQ8_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="sq8_index_")
         Sq8Index.build(e).save(path)
-        _SQ8_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_SQ8_INDEX_CACHE, _session_key(spark, sf_dir), build)
     idx = Sq8Index.load(spark, path)
     out = idx.search(e, probes, k=10, refine=4)
     return (
@@ -1120,13 +1150,12 @@ def q_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     pred = F.col("label") % 3 == 0
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVFPQ_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="ivfpq_index_")
         IvfPqIndex.build(e, n_cells=16, m=16, ks=32).save(path)
-        _IVFPQ_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_IVFPQ_INDEX_CACHE, _session_key(spark, sf_dir), build)
     idx = IvfPqIndex.load(spark, path)
     out = idx.search(e, probes, k=10, n_probe_cells=8, refine=8,
                      predicate=pred, metadata=e)
@@ -1337,13 +1366,12 @@ def q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files, not vacuously all of them; min recall@10 at this config is
     # 6/10 (seeded, deterministic).
     probes = e.where(F.col("vec_id") < 3)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="ivf_index_")
         IvfIndex.build(e, n_cells=16).save(path)
-        _IVF_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_IVF_INDEX_CACHE, _session_key(spark, sf_dir), build)
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=6)
 
@@ -1416,13 +1444,12 @@ def q_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = F.col("label") % 3 == 0
     # same build as q_ivf_index_topk -> shared cache key: one persisted
     # index serves both the unfiltered and the filtered search query
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="ivf_index_")
         IvfIndex.build(e, n_cells=16).save(path)
-        _IVF_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_IVF_INDEX_CACHE, _session_key(spark, sf_dir), build)
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=8,
                      predicate=pred, metadata=e)
@@ -1521,10 +1548,7 @@ def q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     deleted = F.col("vec_id") % 7 == 2
-    key = ("ivfdel", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="ivf_del_")
         IvfIndex.build(e, n_cells=16).save(path)
         stats = IvfIndex.delete(
@@ -1532,7 +1556,10 @@ def q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if stats["tombstones_added"] <= 0:
             raise AssertionError(f"ivf delete did not land: {stats}")
-        _IVF_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_IVF_INDEX_CACHE,
+                 _session_key(spark, "ivfdel", sf_dir), build)
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=6)
 
@@ -1606,10 +1633,7 @@ def q_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     deleted = F.col("vec_id") % 7 == 3
-    key = ("ivfrt", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    root = _IVF_INDEX_CACHE.get(key)
-    if root is None:
+    def build():
         root = tempfile.mkdtemp(prefix="ivf_retrain_")
         IvfIndex.build(e, n_cells=16).save(f"{root}/v0")
         write_latest_pointer(spark, root, "v0")
@@ -1621,7 +1645,9 @@ def q_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         rstats = IvfIndex.retrain(spark, root, f"{root}/v1")
         if rstats["pointer_version"] <= 1 or rstats["n_cells"] != 16:
             raise AssertionError(f"retrain did not land: {rstats}")
-        _IVF_INDEX_CACHE[key] = root
+        return root
+
+    root = _memo(_IVF_INDEX_CACHE, _session_key(spark, "ivfrt", sf_dir), build)
     if read_latest_pointer(spark, root) != "v1":
         raise AssertionError(
             "retrain did not flip the _LATEST pointer: "
@@ -1714,10 +1740,7 @@ def q_ivf_stream_autoretrain_topk(spark: SparkSession, sf_dir: str
     probes = e.where(F.col("vec_id") < 3)
     even = F.col("vec_id") % 2 == 0
     deleted = even & (F.col("vec_id") % 7 == 5)
-    key = ("ivfstream", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    root = _IVF_INDEX_CACHE.get(key)
-    if root is None:
+    def build():
         root = tempfile.mkdtemp(prefix="ivf_stream_")
         IvfIndex.build(e.where(even), n_cells=16).save(f"{root}/v0")
         write_latest_pointer(spark, root, "v0")
@@ -1748,7 +1771,10 @@ def q_ivf_stream_autoretrain_topk(spark: SparkSession, sf_dir: str
         ).parquet(f"{src}/*")
         stream_vector_ingest(stream, root, family="ivf",
                              retrain_if_skewed=0.0)
-        _IVF_INDEX_CACHE[key] = root
+        return root
+
+    root = _memo(_IVF_INDEX_CACHE,
+                 _session_key(spark, "ivfstream", sf_dir), build)
     ptr = read_latest_pointer(spark, root)
     if not (ptr or "").startswith("retrain_e"):
         raise AssertionError(
@@ -2891,13 +2917,12 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 10)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVFPQ_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="ivfpq_index_")
         IvfPqIndex.build(e, n_cells=16, m=16, ks=32).save(path)
-        _IVFPQ_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_IVFPQ_INDEX_CACHE, _session_key(spark, sf_dir), build)
     idx = IvfPqIndex.load(spark, path)
     out = idx.search(e, probes, k=10, n_probe_cells=8, refine=8)
     exact = cosine_topk(e, probes, k=10)
@@ -3597,13 +3622,12 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = _bm25_index_path(sf_dir, "bm25")
         Bm25Index.build(d, k1=1.2, b=0.75, n_term_buckets=64).save(path)
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_BM25_INDEX_CACHE, _session_key(spark, sf_dir), build)
     idx = Bm25Index.load(spark, path)
     qs = d.where(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("query_id"), F.slice("toks", 1, 5).alias("q_toks")
@@ -3651,10 +3675,7 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25inc", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = _bm25_index_path(sf_dir, "bm25inc")
         Bm25Index.build(
             d.where(F.col("doc_id") % 2 == 0), k1=1.2, b=0.75,
@@ -3665,7 +3686,10 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if stats["generation"] != 1 or stats["batch_docs"] <= 0:
             raise AssertionError(f"bm25 append did not land: {stats}")
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_BM25_INDEX_CACHE,
+                 _session_key(spark, "bm25inc", sf_dir), build)
     idx = Bm25Index.load(spark, path)
     qs = d.where(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("query_id"), F.slice("toks", 1, 5).alias("q_toks")
@@ -3701,10 +3725,7 @@ def q_bm25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25stream", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = _bm25_index_path(sf_dir, "bm25stream")
         Bm25Index.build(
             d.where(F.col("doc_id") % 2 == 0), k1=1.2, b=0.75,
@@ -3723,7 +3744,10 @@ def q_bm25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{src}/*")
         )
         stream_bm25_ingest(stream, path, compact_every_n=2)
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_BM25_INDEX_CACHE,
+                 _session_key(spark, "bm25stream", sf_dir), build)
     idx = Bm25Index.load(spark, path)
     n_all = d.count()
     if idx.params["n_docs"] != n_all:
@@ -3771,10 +3795,7 @@ def q_bm25_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25del", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = _bm25_index_path(sf_dir, "bm25del")
         Bm25Index.build(d, k1=1.2, b=0.75, n_term_buckets=64).save(path)
         stats = Bm25Index.delete(
@@ -3783,7 +3804,10 @@ def q_bm25_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         if stats["tombstones_added"] <= 0:
             raise AssertionError(f"bm25 delete did not land: {stats}")
         Bm25Index.compact(spark, path)
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_BM25_INDEX_CACHE,
+                 _session_key(spark, "bm25del", sf_dir), build)
     idx = Bm25Index.load(spark, path)
     if idx.params["incomplete_generations"]:
         raise AssertionError(
@@ -3843,10 +3867,7 @@ def q_bm25_pointer_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25ptr", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    root = _BM25_INDEX_CACHE.get(key)
-    if root is None:
+    def build():
         root = _bm25_index_path(sf_dir, "bm25ptr")
         fs_delete(spark, root)  # stale root (old pointer) from a
         # previous harness session must not redirect the fresh build
@@ -3868,7 +3889,10 @@ def q_bm25_pointer_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         cstats = Bm25Index.compact(spark, root, dest=f"{root}/v1")
         if cstats["dest"] != f"{root}/v1":
             raise AssertionError(f"dest compact did not land: {cstats}")
-        _BM25_INDEX_CACHE[key] = root
+        return root
+
+    root = _memo(_BM25_INDEX_CACHE,
+                 _session_key(spark, "bm25ptr", sf_dir), build)
     if read_latest_pointer(spark, root) != "v1":
         raise AssertionError(
             "dest compact did not flip the _LATEST pointer: "
@@ -5381,10 +5405,7 @@ def q_incremental_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_parallelism(_t(spark, sf_dir, "documents"))
     corpus = d.where(F.col("doc_id") % 4 != 0)
     batch = d.where(F.col("doc_id") % 4 == 0)
-    key = ("mh_inc", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = _bm25_index_path(sf_dir, "minhash_inc")
         mid = corpus.agg(F.max("doc_id")).first()[0] // 2
         build_minhash_index(
@@ -5400,7 +5421,10 @@ def q_incremental_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the add==rebuild identity is what the SQL oracle checks
         if stats["batch_docs"] <= 0:
             raise AssertionError(f"minhash append saw no batch: {stats}")
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo(_BM25_INDEX_CACHE,
+                 _session_key(spark, "mh_inc", sf_dir), build)
     out = match_minhash_index(
         spark, path, batch, corpus, n_hashes=64, n_bands=16, threshold=0.8
     )
@@ -5571,126 +5595,6 @@ def q_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return q_multi_join(spark, "/root/testdata/sf0.001")
-
-
-# r12 driver-window rotation (VERDICT r11 #7): the driver samples the
-# FIRST 50 registry entries each round. This round leads with (a) the
-# two NEW r12 declared queries — bm25_pointer_compact (object-store-
-# safe dest-compaction + _LATEST pointer flip, full survivor-corpus
-# SQL oracle) and ivf_retrain_topk (quantizer retrain + purge +
-# pointer-resolved search, invariant oracle) — and (b) the two queries
-# most directly REWIRED by the Bm25Index v4 format (per-doc membership
-# table: add's skip set, compact's exact purge accounting):
-# bm25_incremental and bm25_delete_compact. The rest of the window is
-# the cohort least recently driver-sampled, oldest first: the five
-# r2-window members, the three r3 ones, the sixteen r4 statistics/
-# events queries, the ten r5 ones, and the twelve r6 curation queries
-# — 46 stale members in-window; pii_redact (r7) and collect_agg (r8)
-# spill to positions 51-52 and lead the r13 rotation. 48 of this
-# 50-query window are NOT in the r11 window (computed from
-# CORRECTNESS_r02..r11.json last-sampled rounds). queries() applies
-# this order ON TOP of the historical dict below, so round-history
-# comments stay put; the full set stays CI-gated at full width via
-# tests/test_oracle_full.py regardless of order. Update
-# tests/test_entry_contract.py's pin when changing this.
-_R12_HEAD = [
-    # NEW r12: dest-compaction + pointer flip, and the retrain path,
-    # both driver-hash-checked
-    "bm25_pointer_compact",
-    "ivf_retrain_topk",
-    # rewired by the v4 per-doc membership table
-    "bm25_incremental",
-    "bm25_delete_compact",
-    # stale cohort, least recently sampled first: r2
-    "term_frequency", "stupid_backoff", "mean_avg_precision",
-    "window_range_frame", "percentiles",
-    # r3
-    "fuzzy_name_pairs", "heavy_hitters", "funnel",
-    # r4
-    "jaccard_prefix_pairs", "supplier_reliability", "cross_source_dups",
-    "label_coherence", "event_transitions", "session_stats",
-    "funnel_latency", "twap_hourly", "table_profile", "snapshot_diff",
-    "target_encoding", "quantile_normalize", "rolling_median",
-    "retention_cohorts", "anomaly_flags", "first_touch",
-    # r5
-    "weighted_sample", "hashed_tf", "scd2_lookup", "triangle_count",
-    "dq_checks", "hll_union", "binned_range", "assoc_rules",
-    "pagerank_ranks", "gap_interpolate",
-    # r6
-    "repetition_signals", "contamination", "line_dedup", "cdc_upsert",
-    "lm_score", "gopher_rules", "bm25_search", "url_stats",
-    "ewma_smooth", "winsorized_stats", "bpe_tokens", "semantic_clusters",
-    # r7 (position 50)
-    "pii_redact",
-    # r8 — spills to position 51, leads the r13 rotation
-    "collect_agg",
-]
-
-# r13 driver-window rotation (VERDICT r12 #8): leads with the one NEW
-# r13 declared query — ivf_stream_autoretrain_topk (the closed drift
-# loop: streaming ingest fold watches the max_cell_share signal and
-# fires the quantizer retrain itself; invariant oracle) — then the
-# cohort least recently driver-sampled, oldest first: pii_redact (last
-# sampled r7), collect_agg (r8), and the 47 r9-window members
-# (computed from CORRECTNESS_r02..r12.json last-sampled rounds). 49 of
-# this 50-query window are NOT in the r12 window. Update
-# tests/test_entry_contract.py's pin when changing this.
-_R13_HEAD = [
-    # NEW r13: the fold-triggered retrain loop and the streaming BM25
-    # ingest fold (oracle class upgraded to DuckDB hash), both
-    # driver-hash-checked
-    "ivf_stream_autoretrain_topk",
-    "bm25_stream_ingest",
-    # stale cohort, least recently sampled first: r7, r8
-    "pii_redact", "collect_agg",
-    # r9 cohort (47)
-    "phash_neardup", "ordered_funnel", "source_similarity", "psi_drift",
-    "oov_rate", "dedup_savings", "doc_chunks", "url_dedup",
-    "mixture_weights", "key_skew_profile", "top_paths", "mad_outliers",
-    "duplicate_spans", "dsir_weights", "top_boilerplate_spans",
-    "dsir_resample", "strip_spans", "equidepth_hist",
-    "revenue_concentration", "doc_fingerprint", "minhash_dedup",
-    "dedup_clusters", "monthly_trend", "abc_classes",
-    "repeat_purchase_curve", "activity_heatmap", "chi_square_test",
-    "token_entropy", "rfm_segments", "brand_hhi", "group_mode",
-    "interarrival_stats", "twoway_effects", "value_autocorr",
-    "cusum_drift", "vocab_growth", "zipf_curve", "order_gaps",
-    "dup_rate_by_source", "gap_fill", "udtf_sentences", "nation_trade",
-    "nation_profit", "late_shipments", "order_distribution",
-    "waiting_suppliers", "window_nav",
-]
-
-
-_R14_HEAD = [
-    # NEW r14: filtered ANN (predicate pushed into the cell-pruned
-    # scan, invariant oracle), its exact value-hashed baseline, MMR
-    # diversity re-rank, and embedding-space decontamination
-    "ivf_filtered_topk",
-    "cosine_filtered_topk",
-    "mmr_rerank",
-    "embedding_decontamination",
-    "sq8_topk",
-    "group_cosine_topk",
-    "ivfpq_filtered_topk",
-    "token_budget_select",
-    # window_nav spilled to position 51 in r13 (the r13 head comment
-    # flagged it to lead this rotation); then the stalest cohort —
-    # every query last sampled in the r10 window (45), then the r11
-    # head's first two. ZERO overlap with the r13 window.
-    "window_nav",
-    "approx_distinct", "approx_percentile", "argmin_part", "array_fns2",
-    "augmented_eval", "binary_metrics", "conditional_agg", "covar_corr",
-    "disjunctive_pred", "embedding_neardup", "event_sliding_window",
-    "excess_shipments", "exists_subquery", "funnel_completions",
-    "grouped_ols", "histogram_bins", "idle_customers",
-    "important_stock", "ivf_topk", "kmv_distinct", "lang_id",
-    "large_orders", "local_supplier_volume", "map_fns", "market_share",
-    "null_fns", "ohlc_rollup", "pivot_counts", "pq_topk",
-    "promo_revenue", "regr_fns", "reservoir_sample", "returned_items",
-    "revenue_predicate", "scalar_subquery", "scd2_intervals",
-    "shipping_priority", "simhash_pairs", "supplier_part_counts",
-    "token_packing", "token_packing_greedy",
-]
 
 
 # r15 driver-window rotation (continuing the freshness-maximizing
@@ -5965,8 +5869,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     # rotate the r15 head to the front (comment above _R15_HEAD); the
     # second splat only UPDATES values for head keys, so order is
-    # head-first then historical order for the rest (_R12/_R13/_R14_HEAD
-    # kept above as round history)
+    # head-first then historical order for the rest
     return {**{k: base[k] for k in _R15_HEAD}, **base}
 
 

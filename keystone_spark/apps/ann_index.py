@@ -24,7 +24,7 @@ def build_or_load(spark, sf_dir: str, index_dir: str, n_cells: int = 16,
     from keystone_spark.sources import load_table
 
     e = load_table(spark, "embeddings", sf_dir)
-    if os.path.exists(os.path.join(index_dir, "model.json")):
+    if os.path.exists(os.path.join(index_dir, IvfPqIndex.MANIFEST)):
         return IvfPqIndex.load(spark, index_dir), e, False
     idx = IvfPqIndex.build(e, n_cells=n_cells, m=m, ks=ks)
     idx.save(index_dir)

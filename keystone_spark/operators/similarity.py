@@ -20,6 +20,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import copy
+import json
 from functools import reduce
 from operator import or_
 from typing import Iterable, Iterator
@@ -34,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from keystone_spark import fsutil
 
 
 def _collect_probes(
@@ -525,7 +529,385 @@ def _apply_search_predicate(subset: DataFrame, predicate, metadata,
     return subset.join(allowed, id_col, "left_semi")
 
 
-class IvfIndex:
+def _sample_vectors(data: DataFrame, id_col: str, vec_col: str, n: int,
+                    order) -> np.ndarray:
+    """The first ``n`` vectors of ``data`` under ``order`` as a float64
+    matrix — the driver-side training sample of build and retrain."""
+    return np.array(
+        [r[1] for r in data.select(id_col, vec_col)
+         .orderBy(order).limit(n).collect()],
+        dtype=np.float64,
+    )
+
+
+def _cell_histogram(df: DataFrame) -> dict:
+    return {
+        int(r["cell"]): int(r["n"])
+        for r in df.groupBy("cell").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def _check_new_dest(root: str, path: str, dest: str, verb: str) -> None:
+    if dest.rstrip("/") in (path.rstrip("/"), root.rstrip("/")):
+        raise ValueError(
+            f"{verb} dest must be a NEW index path — not the "
+            "current snapshot, and not the pointer root itself"
+        )
+
+
+class _IvfFamily:
+    """The storage and commit protocol shared by the two IVF families —
+    one logical index (frozen coarse centroids, a table partitioned by
+    ``cell``, tombstones) with two physical encodings: ``IvfIndex``
+    keeps the raw vectors in ``corpus``, ``IvfPqIndex`` keeps PQ codes
+    in ``codes``. This class owns ``add``, ``delete``, ``compact``, the
+    lock/publish shell of ``retrain`` and ``save``/``load``. A family
+    supplies:
+
+    - ``TABLE`` (the cell-partitioned table) and ``MANIFEST`` (the
+      model JSON, also the family's on-disk marker);
+    - ``_kernel(data)``: the per-row cell-assign (+ encode) against the
+      FROZEN model, shared by build and add;
+    - ``_model_json()`` / ``_from_model(meta, indexed, path)``;
+    - the training step of its ``retrain`` (see ``_retrain``).
+
+    fsutil helpers are called as ``fsutil.x`` so that a helper patched
+    on the module (crash injection) is the one that runs."""
+
+    TABLE: str
+    MANIFEST: str
+
+    def _load_tombstones(self, spark) -> DataFrame | None:
+        if self.path is None:
+            return None
+        return fsutil.read_tombstones(spark, self.path, self.id_col)
+
+    def _live(self, spark) -> DataFrame:
+        """The stored table minus tombstoned ids."""
+        live = self.indexed
+        tomb = self._load_tombstones(spark)
+        if tomb is not None:
+            live = live.join(F.broadcast(tomb), self.id_col, "left_anti")
+        return live
+
+    def _pruned_scan(self, probes: DataFrame, n_probe_cells: int,
+                     predicate, metadata):
+        """The front half of both searches: collect and normalize the
+        probes, pick each probe's ``n_probe_cells`` nearest cells, and
+        scan only those cells' files (partition pruning), predicate-
+        filtered and with deleted vectors anti-joined out — they vanish
+        from results immediately; the physical purge is ``compact``.
+        Returns ``(probe ids, normalized probes, probe cells, scan)``."""
+        p_ids, p_mat = _collect_probes(probes, self.id_col, self.vec_col)
+        p_norm = _normalize(p_mat)
+        probe_cells = np.argsort(-(p_norm @ self.C.T), axis=1)[:, :n_probe_cells]
+        wanted = sorted({int(c) for row in probe_cells for c in row})
+        subset = self.indexed.where(F.col("cell").isin(wanted))
+        subset = _apply_search_predicate(
+            subset, predicate, metadata, self.id_col)
+        tomb = self._load_tombstones(probes.sparkSession)
+        if tomb is not None:
+            subset = subset.join(F.broadcast(tomb), self.id_col, "left_anti")
+        return p_ids, p_norm, probe_cells, subset
+
+    @classmethod
+    def add(cls, spark, path: str, batch: DataFrame,
+            skip_existing_ids: bool = False) -> dict:
+        """Append new vectors to a stored index WITHOUT retraining: the
+        model is FROZEN — exactly FAISS's ``IndexIVF.add`` /
+        ``IndexIVFPQ.add`` semantics, where adding vectors assigns (and
+        encodes) them against the existing centroids and codebooks and
+        never moves one — so the batch goes through the same per-row
+        kernel the build used and is appended to the cell-partitioned
+        table. Search after add is IDENTICAL to search over an index
+        whose whole table was encoded in one pass with the same model
+        (pinned by test).
+
+        Staleness contract: what CAN degrade under appends is cell
+        balance (and PQ quantization error) — the model was trained on
+        the build-time sample, so if the data distribution drifts, new
+        vectors crowd few cells and recall/latency worsen at the same
+        n_probe_cells. That is a ``retrain`` decision; monitor the
+        returned per-add cell histogram. Batch ids must be fresh among
+        live ids (takedowns go through ``delete``) — or pass
+        ``skip_existing_ids=True`` to make the add IDEMPOTENT: ids
+        already stored OR tombstoned are anti-joined out BEFORE the
+        kernel (one narrow id-column scan, no vector bytes), so a
+        replayed batch (at-least-once streaming) appends nothing and
+        ``vectors_added`` counts only genuinely new ids. Note the union
+        with tombstones: a deleted id cannot be re-added under the same
+        id until ``compact`` purges its tombstone (search would
+        anti-join the new row out anyway); re-ingest deleted content
+        under a fresh id instead."""
+        # mutations target the CURRENT snapshot (a dest-compact or
+        # retrain may have republished under a _LATEST pointer)
+        root, path = path, fsutil.resolve_index_path(spark, path)
+        # mutation lock FIRST (VERDICT r11 #1): serializes concurrent
+        # adds/deletes; lock-then-check-compact is the deadlock-free
+        # handshake documented on acquire_write_lock
+        fsutil.acquire_write_lock(spark, path)
+        try:
+            fsutil.assert_latest_unchanged(spark, root, path)
+            fsutil.assert_not_compacting(spark, path)
+            idx = cls.load(spark, path)
+            # pin the batch to the STORED schema (r13): an append whose
+            # id/vector types differ from the table (array<double>
+            # into an array<float> table) writes parquet files the
+            # reader cannot merge — later scans fail (or flake by
+            # file-listing order) with a physical-type mismatch.
+            batch = _cast_batch_checked(
+                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
+            if skip_existing_ids:
+                known = idx.indexed.select(idx.id_col)
+                tomb = idx._load_tombstones(spark)
+                if tomb is not None:
+                    known = known.unionByName(tomb)
+                batch = batch.join(known, idx.id_col, "left_anti")
+            # persist-once (VERDICT r10 #3): the histogram collect
+            # materializes the cache and the write reads it back — the
+            # kernel no longer runs twice per append
+            rows = idx._kernel(
+                batch.where(F.col(idx.vec_col).isNotNull())).persist()
+            try:
+                cells = _cell_histogram(rows)
+                # re-check at the write: a compact listed its input
+                # before this batch existed — committing under it hands
+                # the swap rows it will erase
+                fsutil.assert_not_compacting(spark, path)
+                entry_epoch = fsutil.read_compact_epoch(spark, path)
+                # pre-write stats read (r14): validation is against the
+                # PRE-append file listing, so it must happen before the
+                # parquet write changes the count
+                pre_counts = fsutil.read_valid_index_stats(
+                    spark, path, cls.TABLE, "cell")
+                rows.write.mode("append").partitionBy("cell").parquet(
+                    f"{path}/{cls.TABLE}")
+                # post-write lock re-check (ADVICE r11 #2): the write
+                # job is the LONGEST phase — a compact that STARTED
+                # during it and is still running holds the lock but has
+                # not bumped the epoch yet, so the epoch fence alone
+                # would pass while the compact's swap goes on to erase
+                # the just-appended rows. Same pattern as
+                # fsutil.append_tombstones and Bm25Index.add.
+                try:
+                    fsutil.assert_not_compacting(spark, path)
+                    fsutil.assert_same_compact_epoch(
+                        spark, path, entry_epoch)
+                except ValueError as e:
+                    # re-wrap PRESERVING IndexContention (r13): the
+                    # streaming fold's retry loop keys on the class
+                    raise fsutil.IndexContention(
+                        str(e) + " — for vector appends, retry with "
+                        "skip_existing_ids=True (surviving rows are "
+                        "skipped, erased ones re-added)"
+                    ) from e
+                # manifest-carried occupancy stays current through the
+                # streaming fold without a table scan: merge this
+                # batch's histogram into the pre-append counts (or
+                # re-scan once if a non-stats-aware mutation staled
+                # them). A crash between the append and this write is
+                # detected by the file-count fence — readers fall back
+                # to the scan, never serve a silently wrong number.
+                if pre_counts is not None:
+                    for c, n in cells.items():
+                        pre_counts[c] = pre_counts.get(c, 0) + n
+                    fsutil.write_index_stats(
+                        spark, path, cls.TABLE, "cell", pre_counts)
+                else:
+                    fsutil.refresh_index_stats(
+                        spark, path, cls.TABLE, "cell")
+            finally:
+                rows.unpersist()
+        finally:
+            fsutil.release_write_lock(spark, path)
+        total = sum(cells.values())
+        return {"vectors_added": total,
+                "cells_touched": len(cells), "cell_histogram": cells,
+                # drift signal (reads against 1/n_cells): the share of
+                # THIS batch landing in its most crowded cell — a
+                # batch whose mass piles into one build-time cell is
+                # the retrain() trigger the docstring above describes
+                "max_cell_share": round(max(cells.values()) / total, 4)
+                if total else 0.0}
+
+    @classmethod
+    def delete(cls, spark, path: str, ids) -> dict:
+        """Tombstone vectors out of the stored index — the takedown
+        path the text index families already have (VERDICT r10,
+        family parity): one parquet append to ``{path}/tombstones``;
+        ``search`` anti-joins its cell-pruned scan against the set, so
+        a deleted embedding stops being served IMMEDIATELY, and
+        ``compact`` physically purges its rows. ``ids`` is a list or a
+        one-column DataFrame (typed from the stored table schema);
+        unknown ids are harmless no-op rows."""
+        root, path = path, fsutil.resolve_index_path(spark, path)
+        fsutil.assert_not_compacting(spark, path)
+        idx = cls.load(spark, path)
+        id_type = idx.indexed.schema[idx.id_col].dataType
+        tomb = fsutil.ids_to_tombstones(spark, ids, idx.id_col, id_type)
+        return fsutil.append_tombstones(spark, path, tomb, root=root)
+
+    @classmethod
+    def compact(cls, spark, path: str, dest: str | None = None) -> dict:
+        """Physically purge tombstoned vectors and rewrite the table to
+        one file per cell directory (every ``add`` leaves a small file
+        set per touched cell). Search results afterwards equal an index
+        whose surviving rows were encoded in one pass with the same
+        frozen model (pinned by test). In-place: stage-and-swap through
+        the Hadoop FileSystem API (rename is atomic on local/HDFS
+        only). ``dest=...``: the object-store-safe form — the purged
+        table written as a FRESH index at ``dest``, published with one
+        atomic ``_LATEST`` pointer flip at ``path`` (see
+        ``Bm25Index.compact``). Not safe concurrently with ``add``
+        (enforced by the lock handshake). Returns
+        ``{TABLE}_files_before`` / ``{TABLE}_files_after`` (dest form:
+        ``dest``, ``pointer_version`` and ``{TABLE}_files_after``)."""
+        table = cls.TABLE
+        root, path = path, fsutil.resolve_index_path(spark, path)
+        if dest is not None:
+            _check_new_dest(root, path, dest, "compact")
+        # lock FIRST, load after: the rewrite's file listing and
+        # tombstone read must postdate the lock (see Bm25Index.compact).
+        # The WHOLE post-lock body sits in one try — an analyzer or IO
+        # error anywhere before the swap must release the lock, or it
+        # leaks and blocks every later mutation
+        fsutil.acquire_compact_lock(spark, path)
+        if dest is not None:
+            # dest mode never mutates the source: release
+            # unconditionally — no repair path to keep the lock for
+            try:
+                fsutil.assert_no_write_lock(spark, path)
+                idx = cls.load(spark, path)
+                purged = copy.copy(idx)  # same frozen model, new table
+                purged.indexed = idx._live(spark).repartition(F.col("cell"))
+                purged.save(dest)
+                if fsutil.count_parquet_files(
+                        spark, f"{dest}/{table}") == 0:
+                    fsutil.fs_delete(spark, dest)
+                    raise ValueError(
+                        "compact aborted: every vector is tombstoned "
+                        f"and the rewritten {table} table at dest "
+                        "would be empty — delete the index instead of "
+                        "compacting it empty"
+                    )
+                ptr = fsutil.write_latest_pointer(
+                    spark, root, fsutil.pointer_target(root, dest))
+            finally:
+                fsutil.release_compact_lock(spark, path)
+            return {"dest": dest, "pointer_version": ptr,
+                    f"{table}_files_after": fsutil.count_parquet_files(
+                        spark, f"{dest}/{table}")}
+        stage = f"{path.rstrip('/')}/_compact_tmp"
+        try:
+            # compact's half of the mutation-lock handshake (r12)
+            fsutil.assert_no_write_lock(spark, path)
+            live = cls.load(spark, path)._live(spark)
+            fsutil.fs_delete(spark, stage)
+            (
+                live.repartition(F.col("cell"))
+                .write.mode("overwrite").partitionBy("cell")
+                .parquet(f"{stage}/{table}")
+            )
+            if fsutil.count_parquet_files(spark, f"{stage}/{table}") == 0:
+                fsutil.fs_delete(spark, stage)
+                raise ValueError(
+                    "compact aborted: every vector is tombstoned, and "
+                    f"the staged rewrite would leave an empty {table} "
+                    "table that no reader can load (parquet schema "
+                    "inference fails on a file-less directory) — the "
+                    "live index is untouched; delete the index "
+                    "directory instead of compacting it empty"
+                )
+            before = fsutil.count_parquet_files(spark, f"{path}/{table}")
+            fsutil.swap_tables(spark, path, stage, [table])
+            fsutil.fs_delete(spark, f"{path}/tombstones")
+        except BaseException:
+            if not fsutil.fs_exists(spark, f"{stage}/{fsutil.SWAP_MARKER}"):
+                fsutil.release_compact_lock(spark, path)
+            raise
+        fsutil.bump_compact_epoch(spark, path)  # the mutation commit fence
+        # re-sync the occupancy manifest to the rewritten table (r14);
+        # one narrow partition-column scan inside the already-held lock
+        fsutil.refresh_index_stats(spark, path, table, "cell")
+        fsutil.release_compact_lock(spark, path)
+        return {f"{table}_files_before": before,
+                f"{table}_files_after": fsutil.count_parquet_files(
+                    spark, f"{path}/{table}")}
+
+    @classmethod
+    def _retrain(cls, spark, path: str, dest: str, train) -> dict:
+        """The lock/publish shell of both families' ``retrain``.
+        ``train(idx, live)`` receives the loaded index and its
+        tombstone-filtered table and returns ``(new_index, stats)``:
+        the re-trained model over the re-encoded live rows (unsaved)
+        and family-specific result keys. Same locking as a
+        dest-compact: the rewrite must not race a mutation and never
+        mutates the source, so the lock is released unconditionally.
+        Tombstones are purged in ``dest`` (a retrain is also a
+        compact)."""
+        root, path = path, fsutil.resolve_index_path(spark, path)
+        _check_new_dest(root, path, dest, "retrain")
+        fsutil.acquire_compact_lock(spark, path)
+        try:
+            fsutil.assert_no_write_lock(spark, path)
+            idx = cls.load(spark, path)
+            new, stats = train(idx, idx._live(spark))
+            new.indexed = new.indexed.repartition(F.col("cell"))
+            new.save(dest)
+            if fsutil.count_parquet_files(
+                    spark, f"{dest}/{cls.TABLE}") == 0:
+                fsutil.fs_delete(spark, dest)
+                raise ValueError(
+                    "retrain aborted: the live corpus is empty — "
+                    "nothing to train on"
+                )
+            hist = _cell_histogram(
+                spark.read.parquet(f"{dest}/{cls.TABLE}"))
+            ptr = fsutil.write_latest_pointer(
+                spark, root, fsutil.pointer_target(root, dest))
+        finally:
+            fsutil.release_compact_lock(spark, path)
+        # n_cells reports the centroids actually trained (ADVICE r12
+        # #4): a live sample smaller than k yields len(C) < k centroids
+        return {"dest": dest, "pointer_version": ptr, "n_cells": len(new.C),
+                **stats, "vectors": sum(hist.values()),
+                "cell_histogram": hist}
+
+    def save(self, path: str) -> None:
+        """The table partitioned by cell (-> partition pruning on load
+        and search), the model as JSON."""
+        spark = self.indexed.sparkSession
+        # brand-new index: clear control state from any previous index
+        # at this path (single-writer contract: a rebuild must not race
+        # a live compact/mutation of the old index)
+        fsutil.clear_index_control_state(spark, path)
+        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
+            f"{path}/{self.TABLE}"
+        )
+        # manifest-carried occupancy (r14): one narrow partition-column
+        # scan NOW so every later index-status / --if-occupancy-above /
+        # streaming retrain-gate read is driver-side metadata instead
+        # of a table-proportional Spark job
+        fsutil.refresh_index_stats(spark, path, self.TABLE, "cell")
+        # the model JSON rides the same Hadoop FileSystem as the table
+        # (file://, hdfs://, bare local all work) — a driver-local
+        # open() here made every non-local path fail at load before the
+        # FS-agnostic compact could even run
+        fsutil.fs_write_text(spark, f"{path}/{self.MANIFEST}",
+                             json.dumps(self._model_json()))
+        self.path = path
+
+    @classmethod
+    def load(cls, spark, path: str):
+        path = fsutil.resolve_index_path(spark, path)  # follow _LATEST
+        fsutil.assert_no_interrupted_swap(spark, path)
+        meta = json.loads(
+            fsutil.fs_read_text(spark, f"{path}/{cls.MANIFEST}"))
+        return cls._from_model(
+            meta, spark.read.parquet(f"{path}/{cls.TABLE}"), path)
+
+
+class IvfIndex(_IvfFamily):
     """Fit-once IVF index: trained centroids + a cell-assigned corpus.
 
     ``ivf_topk`` recomputes cell assignments per query (pure function —
@@ -536,6 +918,9 @@ class IvfIndex:
     100 TB a search touches n_probe_cells/n_cells of the data and reads
     nothing else). The centroid table is tiny and rides along as JSON.
     """
+
+    TABLE = "corpus"
+    MANIFEST = "centroids.json"
 
     def __init__(self, centroids: np.ndarray, indexed: DataFrame,
                  id_col: str = "vec_id", vec_col: str = "embedding",
@@ -556,16 +941,7 @@ class IvfIndex:
         seed: int = 42,
     ) -> "IvfIndex":
         data = data.where(F.col(vec_col).isNotNull())  # null vec: not indexable
-        samp = np.array(
-            [
-                r[1]
-                for r in data.select(id_col, vec_col)
-                .orderBy(id_col)
-                .limit(sample_size)
-                .collect()
-            ],
-            dtype=np.float64,
-        )
+        samp = _sample_vectors(data, id_col, vec_col, sample_size, id_col)
         C = _normalize(_kmeans_centroids(_normalize(samp), n_cells, seed))
         indexed = cls._assign(data, C, id_col, vec_col)
         return cls(C, indexed, id_col, vec_col)
@@ -591,304 +967,18 @@ class IvfIndex:
 
         return data.select(id_col, vec_col).mapInPandas(assign, schema)
 
-    @classmethod
-    def add(cls, spark, path: str, batch: DataFrame,
-            skip_existing_ids: bool = False) -> dict:
-        """Append new vectors to a stored index WITHOUT retraining
-        (VERDICT r9 #1, the third index family): the coarse quantizer
-        is FROZEN — exactly FAISS's ``IndexIVF.add`` semantics, where
-        adding vectors assigns them to existing cells and never moves
-        a centroid — so the batch is cell-assigned by the same kernel
-        the build used and appended to the cell-partitioned corpus.
-        Because assignment is a pure per-row function of (vector,
-        centroids), search after add is IDENTICAL to search over an
-        index whose whole corpus was assigned in one pass with the
-        same centroids (pinned by test).
+    def _kernel(self, data: DataFrame) -> DataFrame:
+        return self._assign(data, self.C, self.id_col, self.vec_col)
 
-        Staleness contract: what CAN degrade under appends is cell
-        balance — the quantizer was trained on the build-time sample,
-        so if the data distribution drifts, new vectors crowd few
-        cells and recall/latency worsen at the same n_probe_cells.
-        That is a retrain (rebuild) decision; monitor the returned
-        per-add cell histogram. Batch ids must be fresh among live
-        ids (takedowns go through ``delete``) — or pass
-        ``skip_existing_ids=True`` to make the add IDEMPOTENT: ids
-        already stored OR tombstoned are anti-joined out BEFORE the
-        assignment kernel (one narrow id-column scan, no vector
-        bytes), so a replayed batch (at-least-once streaming) appends
-        nothing and ``vectors_added`` counts only genuinely new ids.
-        Note the union with tombstones: a deleted id cannot be
-        re-added under the same id until ``compact`` purges its
-        tombstone (search would anti-join the new row out anyway);
-        re-ingest deleted content under a fresh id instead."""
-        import os
-
-        from keystone_spark.fsutil import (
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            release_write_lock,
-            resolve_index_path,
-        )
-
-        # mutations target the CURRENT snapshot (a dest-compact or
-        # retrain may have republished under a _LATEST pointer)
-        root, path = path, resolve_index_path(spark, path)
-        # mutation lock FIRST (VERDICT r11 #1): serializes concurrent
-        # adds/deletes; lock-then-check-compact is the deadlock-free
-        # handshake documented on acquire_write_lock
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
-            idx = cls.load(spark, path)
-            # pin the batch to the STORED schema (r13): an append whose
-            # id/vector types differ from the corpus (array<double>
-            # into an array<float> table) writes parquet files the
-            # reader cannot merge — later scans fail (or flake by
-            # file-listing order) with a physical-type mismatch.
-            batch = _cast_batch_checked(
-                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
-            if skip_existing_ids:
-                known = idx.indexed.select(idx.id_col)
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    known = known.unionByName(tomb)
-                batch = batch.join(known, idx.id_col, "left_anti")
-            assigned = cls._assign(
-                batch.where(F.col(idx.vec_col).isNotNull()),
-                idx.C, idx.id_col, idx.vec_col,
-            )
-            # persist-once (VERDICT r10 #3): the histogram collect
-            # materializes the cache and the write reads it back — the
-            # assignment kernel no longer runs twice per append
-            assigned = assigned.persist()
-            try:
-                cells = {
-                    int(r["cell"]): int(r["n"])
-                    for r in assigned.groupBy("cell").agg(
-                        F.count("*").alias("n")
-                    ).collect()
-                }
-                from keystone_spark.fsutil import (
-                    assert_not_compacting,
-                    assert_same_compact_epoch,
-                    read_compact_epoch,
-                )
-
-                # re-check at the write: a compact listed its input
-                # before this batch existed — committing under it hands
-                # the swap rows it will erase
-                assert_not_compacting(spark, path)
-                entry_epoch = read_compact_epoch(spark, path)
-                # pre-write stats read (r14): validation is against the
-                # PRE-append file listing, so it must happen before the
-                # parquet write changes the count
-                from keystone_spark.fsutil import (
-                    read_valid_index_stats,
-                    refresh_index_stats,
-                    write_index_stats,
-                )
-
-                pre_counts = read_valid_index_stats(
-                    spark, path, "corpus", "cell")
-                assigned.write.mode("append").partitionBy("cell").parquet(
-                    os.path.join(path, "corpus")
-                )
-                # post-write lock re-check (ADVICE r11 #2): the write
-                # job is the LONGEST phase — a compact that STARTED
-                # during it and is still running holds the lock but has
-                # not bumped the epoch yet, so the epoch fence alone
-                # would pass while the compact's swap goes on to erase
-                # the just-appended rows. Same pattern as
-                # fsutil.append_tombstones and Bm25Index.add.
-                try:
-                    assert_not_compacting(spark, path)
-                    assert_same_compact_epoch(spark, path, entry_epoch)
-                except ValueError as e:
-                    # re-wrap PRESERVING IndexContention (r13): the
-                    # streaming fold's retry loop keys on the class
-                    from keystone_spark.fsutil import IndexContention
-
-                    raise IndexContention(
-                        str(e) + " — for vector appends, retry with "
-                        "skip_existing_ids=True (surviving rows are "
-                        "skipped, erased ones re-added)"
-                    ) from e
-                # manifest-carried occupancy stays current through the
-                # streaming fold without a corpus scan: merge this
-                # batch's histogram into the pre-append counts (or
-                # re-scan once if a non-stats-aware mutation staled
-                # them). A crash between the append and this write is
-                # detected by the file-count fence — readers fall back
-                # to the scan, never serve a silently wrong number.
-                if pre_counts is not None:
-                    for c, n in cells.items():
-                        pre_counts[c] = pre_counts.get(c, 0) + n
-                    write_index_stats(
-                        spark, path, "corpus", "cell", pre_counts)
-                else:
-                    refresh_index_stats(spark, path, "corpus", "cell")
-            finally:
-                assigned.unpersist()
-        finally:
-            release_write_lock(spark, path)
-        total = sum(cells.values())
-        return {"vectors_added": total,
-                "cells_touched": len(cells), "cell_histogram": cells,
-                # drift signal (reads against 1/n_cells): the share of
-                # THIS batch landing in its most crowded cell — a
-                # batch whose mass piles into one build-time cell is
-                # the retrain() trigger the class docstring describes
-                "max_cell_share": round(max(cells.values()) / total, 4)
-                if total else 0.0}
+    def _model_json(self) -> dict:
+        return {"centroids": self.C.tolist(),
+                "id_col": self.id_col, "vec_col": self.vec_col}
 
     @classmethod
-    def delete(cls, spark, path: str, ids) -> dict:
-        """Tombstone vectors out of the stored index — the takedown
-        path the text index families already have (VERDICT r10,
-        family parity): one parquet append to ``{path}/tombstones``;
-        ``search`` anti-joins its cell-pruned scan against the set, so
-        a deleted embedding stops being served IMMEDIATELY, and
-        ``compact`` physically purges its rows. ``ids`` is a list or a
-        one-column DataFrame (typed from the stored corpus schema);
-        unknown ids are harmless no-op rows."""
-        from keystone_spark.fsutil import (
-            assert_not_compacting,
-            ids_to_tombstones,
-            resolve_index_path,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_type = idx.indexed.schema[idx.id_col].dataType
-        from keystone_spark.fsutil import append_tombstones
-
-        tomb = ids_to_tombstones(spark, ids, idx.id_col, id_type)
-        return append_tombstones(spark, path, tomb, root=root)
-
-    @classmethod
-    def compact(cls, spark, path: str, dest: str | None = None) -> dict:
-        """Physically purge tombstoned vectors and rewrite the corpus
-        to one file per cell directory (every ``add`` leaves a small
-        file set per touched cell). Search results afterwards equal an
-        index whose surviving corpus was assigned in one pass with the
-        same frozen centroids (pinned by test). In-place: stage-and-
-        swap through the Hadoop FileSystem API (rename is atomic on
-        local/HDFS only). ``dest=...``: the object-store-safe form —
-        purged corpus written as a FRESH index at ``dest``, published
-        with one atomic ``_LATEST`` pointer flip at ``path`` (see
-        ``Bm25Index.compact``). Not safe concurrently with ``add``
-        (enforced by the lock handshake)."""
-        from keystone_spark.fsutil import (
-            SWAP_MARKER,
-            acquire_compact_lock,
-            count_parquet_files,
-            fs_delete,
-            fs_exists,
-            release_compact_lock,
-            resolve_index_path,
-            swap_tables,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                     root.rstrip("/")):
-            raise ValueError(
-                "compact dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        # lock FIRST, load after: the rewrite's file listing and
-        # tombstone read must postdate the lock (see Bm25Index.compact).
-        # The WHOLE post-lock body sits in one try — an analyzer or IO
-        # error anywhere before the swap must release the lock, or it
-        # leaks and blocks every later mutation
-        acquire_compact_lock(spark, path)
-        if dest is not None:
-            # dest mode never mutates the source: release
-            # unconditionally — no repair path to keep the lock for
-            try:
-                from keystone_spark.fsutil import (
-                    assert_no_write_lock,
-                    pointer_target,
-                    write_latest_pointer,
-                )
-
-                assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                corpus = idx.indexed
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    corpus = corpus.join(
-                        F.broadcast(tomb), idx.id_col, "left_anti"
-                    )
-                cls(idx.C, corpus.repartition(F.col("cell")),
-                    idx.id_col, idx.vec_col).save(dest)
-                if count_parquet_files(spark, f"{dest}/corpus") == 0:
-                    fs_delete(spark, dest)
-                    raise ValueError(
-                        "compact aborted: every vector is tombstoned "
-                        "and the rewritten corpus at dest would be "
-                        "empty — delete the index instead of "
-                        "compacting it empty"
-                    )
-                ptr = write_latest_pointer(spark, root,
-                                           pointer_target(root, dest))
-            finally:
-                release_compact_lock(spark, path)
-            return {"dest": dest, "pointer_version": ptr,
-                    "corpus_files_after": count_parquet_files(
-                        spark, f"{dest}/corpus")}
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        try:
-            # compact's half of the mutation-lock handshake (r12)
-            from keystone_spark.fsutil import assert_no_write_lock
-
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            corpus = idx.indexed
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                corpus = corpus.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
-            fs_delete(spark, stage)
-            (
-                corpus.repartition(F.col("cell"))
-                .write.mode("overwrite").partitionBy("cell")
-                .parquet(f"{stage}/corpus")
-            )
-            if count_parquet_files(spark, f"{stage}/corpus") == 0:
-                fs_delete(spark, stage)
-                raise ValueError(
-                    "compact aborted: every vector is tombstoned, and "
-                    "the staged rewrite would leave an empty corpus "
-                    "table that no reader can load (parquet schema "
-                    "inference fails on a file-less directory) — the "
-                    "live index is untouched; delete the index "
-                    "directory instead of compacting it empty"
-                )
-            before = count_parquet_files(spark, f"{path}/corpus")
-            swap_tables(spark, path, stage, ["corpus"])
-            fs_delete(spark, f"{path}/tombstones")
-        except BaseException:
-            if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-                release_compact_lock(spark, path)
-            raise
-        from keystone_spark.fsutil import (
-            bump_compact_epoch,
-            refresh_index_stats,
-        )
-
-        bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the rewritten corpus (r14);
-        # one narrow partition-column scan inside the already-held lock
-        refresh_index_stats(spark, path, "corpus", "cell")
-        release_compact_lock(spark, path)
-        return {"corpus_files_before": before,
-                "corpus_files_after": count_parquet_files(
-                    spark, f"{path}/corpus")}
+    def _from_model(cls, meta: dict, indexed: DataFrame,
+                    path: str) -> "IvfIndex":
+        return cls(np.asarray(meta["centroids"]), indexed,
+                   meta["id_col"], meta["vec_col"], path=path)
 
     @classmethod
     def retrain(cls, spark, path: str, dest: str, n_cells: int | None = None,
@@ -911,93 +1001,28 @@ class IvfIndex:
         Tombstones are purged in ``dest`` (a retrain is also a
         compact). Returns the new cell histogram for before/after
         balance comparison."""
-        from keystone_spark.fsutil import (
-            acquire_compact_lock,
-            assert_no_write_lock,
-            count_parquet_files,
-            fs_delete,
-            pointer_target,
-            release_compact_lock,
-            resolve_index_path,
-            write_latest_pointer,
-        )
 
-        root, path = path, resolve_index_path(spark, path)
-        if dest.rstrip("/") in (path.rstrip("/"), root.rstrip("/")):
-            raise ValueError(
-                "retrain dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        # same locking as a dest-compact: the rewrite must not race a
-        # mutation, and never mutates the source — release
-        # unconditionally
-        acquire_compact_lock(spark, path)
-        try:
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            corpus = idx.indexed
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                corpus = corpus.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
-            k = int(n_cells) if n_cells is not None else len(idx.C)
+        def train(idx, live):
             # hash-ordered deterministic sample across the WHOLE live
             # id range: orderBy(id).limit() (build's shape) would
             # sample only the oldest ids — exactly the rows that do
             # NOT carry the drift a retrain exists to capture
-            samp = np.array(
-                [
-                    r[1]
-                    for r in corpus.select(idx.id_col, idx.vec_col)
-                    .orderBy(F.xxhash64(F.col(idx.id_col)))
-                    .limit(sample_size)
-                    .collect()
-                ],
-                dtype=np.float64,
-            )
+            samp = _sample_vectors(live, idx.id_col, idx.vec_col,
+                                   sample_size, F.xxhash64(idx.id_col))
             # ADVICE r12 #4: an all-tombstoned corpus must abort with
             # THIS message, not a raw numpy IndexError from
-            # _normalize/_kmeans_centroids on an empty array (the
-            # post-save emptiness check below is never reached)
+            # _normalize/_kmeans_centroids on an empty array
             if len(samp) == 0:
                 raise ValueError(
                     "retrain aborted: the live corpus is empty — "
                     "nothing to train on"
                 )
+            k = int(n_cells) if n_cells is not None else len(idx.C)
             C = _normalize(_kmeans_centroids(_normalize(samp), k, seed))
-            reassigned = cls._assign(
-                corpus.select(idx.id_col, idx.vec_col), C,
-                idx.id_col, idx.vec_col,
-            )
-            cls(C, reassigned.repartition(F.col("cell")),
-                idx.id_col, idx.vec_col).save(dest)
-            if count_parquet_files(spark, f"{dest}/corpus") == 0:
-                fs_delete(spark, dest)
-                raise ValueError(
-                    "retrain aborted: the live corpus is empty — "
-                    "nothing to train on"
-                )
-            hist = {
-                int(r["cell"]): int(r["n"])
-                for r in spark.read.parquet(f"{dest}/corpus")
-                .groupBy("cell").agg(F.count("*").alias("n")).collect()
-            }
-            ptr = write_latest_pointer(spark, root,
-                                       pointer_target(root, dest))
-        finally:
-            release_compact_lock(spark, path)
-        # n_cells reports the centroids actually trained (ADVICE r12
-        # #4): a live sample smaller than k yields len(C) < k centroids
-        return {"dest": dest, "pointer_version": ptr, "n_cells": len(C),
-                "vectors": sum(hist.values()), "cell_histogram": hist}
+            return cls(C, cls._assign(live, C, idx.id_col, idx.vec_col),
+                       idx.id_col, idx.vec_col), {}
 
-    def _load_tombstones(self, spark) -> DataFrame | None:
-        from keystone_spark.fsutil import read_tombstones
-
-        if self.path is None:
-            return None
-        return read_tombstones(spark, self.path, self.id_col)
+        return cls._retrain(spark, path, dest, train)
 
     def search(
         self,
@@ -1034,19 +1059,8 @@ class IvfIndex:
         cells); raise ``n_probe_cells`` as selectivity rises — the
         standard IVF prefilter trade-off."""
         id_col, vec_col = self.id_col, self.vec_col
-        p_ids, p_mat = _collect_probes(probes, id_col, vec_col)
-        p_norm = _normalize(p_mat)
-        probe_cells = np.argsort(-(p_norm @ self.C.T), axis=1)[:, :n_probe_cells]
-        wanted = sorted({int(c) for row in probe_cells for c in row})
-        # cell filter prunes at the scan (partition pruning on a saved index)
-        subset = self.indexed.where(F.col("cell").isin(wanted))
-        subset = _apply_search_predicate(
-            subset, predicate, metadata, id_col)
-        tomb = self._load_tombstones(probes.sparkSession)
-        if tomb is not None:
-            # deleted vectors vanish from results immediately; physical
-            # purge happens at compact (text-index tombstone parity)
-            subset = subset.join(F.broadcast(tomb), id_col, "left_anti")
+        p_ids, p_norm, probe_cells, subset = self._pruned_scan(
+            probes, n_probe_cells, predicate, metadata)
 
         out_schema = StructType(
             [
@@ -1087,59 +1101,6 @@ class IvfIndex:
             partial.withColumn("rk", F.row_number().over(w).cast("long"))
             .where(F.col("rk") <= k)
         )
-
-    def save(self, path: str) -> None:
-        """Corpus partitioned by cell (-> partition pruning on load+search),
-        centroids as JSON."""
-        import json
-
-        from keystone_spark.fsutil import (
-            clear_index_control_state,
-            fs_write_text,
-        )
-
-        # brand-new index: clear control state from any previous index
-        # at this path (single-writer contract: a rebuild must not race
-        # a live compact/mutation of the old index)
-        clear_index_control_state(self.indexed.sparkSession, path)
-        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/corpus"
-        )
-        # manifest-carried occupancy (r14): one narrow partition-column
-        # scan NOW so every later index-status / --if-occupancy-above /
-        # streaming retrain-gate read is driver-side metadata instead
-        # of a corpus-proportional Spark job
-        from keystone_spark.fsutil import refresh_index_stats
-
-        refresh_index_stats(
-            self.indexed.sparkSession, path, "corpus", "cell")
-        # centroid JSON rides the same Hadoop FileSystem as the corpus
-        # (file://, hdfs://, bare local all work) — a driver-local
-        # open() here made every non-local path fail at load before the
-        # FS-agnostic compact could even run
-        fs_write_text(
-            self.indexed.sparkSession, f"{path}/centroids.json",
-            json.dumps({"centroids": self.C.tolist(),
-                        "id_col": self.id_col, "vec_col": self.vec_col}),
-        )
-        self.path = path
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IvfIndex":
-        import json
-
-        from keystone_spark.fsutil import (
-            assert_no_interrupted_swap,
-            fs_read_text,
-            resolve_index_path,
-        )
-
-        path = resolve_index_path(spark, path)  # follow _LATEST
-        assert_no_interrupted_swap(spark, path)
-        meta = json.loads(fs_read_text(spark, f"{path}/centroids.json"))
-        indexed = spark.read.parquet(f"{path}/corpus")
-        return cls(np.asarray(meta["centroids"]), indexed,
-                   meta["id_col"], meta["vec_col"], path=path)
 
 
 def _train_pq_codebooks(
@@ -1304,7 +1265,7 @@ def pq_topk(
     )
 
 
-class IvfPqIndex:
+class IvfPqIndex(_IvfFamily):
     """IVF-PQ: the production ANN composition — IVF cells prune WHICH
     files a search reads (partition pruning, like ``IvfIndex``) and PQ
     codes shrink WHAT each file stores (m uint8 codes per vector instead
@@ -1318,7 +1279,14 @@ class IvfPqIndex:
     back to the BASE data for exact cosine -> final top-k. Exactly the
     FAISS IVFPQ + refine recipe, Spark-first: pruning is Catalyst
     partition pruning, ADC is an Arrow kernel, re-rank is a bounded join.
+
+    NOTE for ``add``: the exact re-rank at search time fetches raw
+    vectors from the BASE table the caller passes — it must cover the
+    appended ids too.
     """
+
+    TABLE = "codes"
+    MANIFEST = "model.json"
 
     def __init__(self, C, books, indexed, id_col="vec_id",
                  vec_col="embedding", path=None, base_path=None):
@@ -1353,16 +1321,7 @@ class IvfPqIndex:
         ``retrain`` can locate the raw vectors without the caller
         re-supplying (and possibly mis-pairing) them."""
         data = data.where(F.col(vec_col).isNotNull())
-        samp = np.array(
-            [
-                r[1]
-                for r in data.select(id_col, vec_col)
-                .orderBy(id_col)
-                .limit(sample_size)
-                .collect()
-            ],
-            dtype=np.float64,
-        )
+        samp = _sample_vectors(data, id_col, vec_col, sample_size, id_col)
         sn = _normalize(samp)
         C = _normalize(_kmeans_centroids(sn, n_cells, seed))
         books = _train_pq_codebooks(sn, m, ks, seed)
@@ -1410,263 +1369,31 @@ class IvfPqIndex:
 
         return data.select(id_col, vec_col).mapInPandas(encode, out_schema)
 
-    @classmethod
-    def add(cls, spark, path: str, batch: DataFrame,
-            skip_existing_ids: bool = False) -> dict:
-        """Append new vectors WITHOUT retraining — FAISS
-        ``IndexIVFPQ.add`` semantics: coarse centroids AND PQ codebooks
-        are frozen, the batch is assigned+encoded by the build's own
-        kernel and appended to the cell-partitioned codes table. Search
-        after add is identical to a one-pass encoding of the union
-        under the same model (per-row pure kernels; pinned by test).
-        Same staleness contract as ``IvfIndex.add``: distribution
-        drift degrades cell balance and quantization error — retrain
-        by rebuild; ids must be fresh among live ids (takedowns go
-        through ``delete``), or pass ``skip_existing_ids=True`` for
-        the idempotent form (stored ∪ tombstoned ids anti-joined out
-        before the encode kernel — replay-safe; a deleted id stays
-        un-re-addable until compact, same note as ``IvfIndex.add``).
-        NOTE: the exact re-rank at search time fetches raw vectors
-        from the BASE table the caller passes — it must cover the
-        appended ids too."""
-        import os
+    def _kernel(self, data: DataFrame) -> DataFrame:
+        return self._encode(data, self.C, self.books, self.id_col,
+                            self.vec_col)
 
-        from keystone_spark.fsutil import (
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            release_write_lock,
-            resolve_index_path,
-        )
-
-        # mutation lock FIRST (VERDICT r11 #1) — see IvfIndex.add
-        root, path = path, resolve_index_path(spark, path)
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
-            idx = cls.load(spark, path)
-            # pin the id column to the stored codes-table type, cast
-            # validated (ADVICE r13 #2 — the IvfIndex.add note; the
-            # vec column is not stored here, the encode kernel consumes
-            # it as float64 and fails loudly on garbage)
-            batch = _cast_batch_checked(
-                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
-            if skip_existing_ids:
-                known = idx.indexed.select(idx.id_col)
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    known = known.unionByName(tomb)
-                batch = batch.join(known, idx.id_col, "left_anti")
-            encoded = cls._encode(
-                batch.where(F.col(idx.vec_col).isNotNull()),
-                idx.C, idx.books, idx.id_col, idx.vec_col,
-            )
-            # persist-once (VERDICT r10 #3): histogram collect
-            # materializes the cache, the write reads it back —
-            # assign+encode runs once
-            encoded = encoded.persist()
-            try:
-                cells = {
-                    int(r["cell"]): int(r["n"])
-                    for r in encoded.groupBy("cell").agg(
-                        F.count("*").alias("n")
-                    ).collect()
-                }
-                from keystone_spark.fsutil import (
-                    assert_not_compacting,
-                    assert_same_compact_epoch,
-                    read_compact_epoch,
-                )
-
-                # re-check at the write: a compact listed its input
-                # before this batch existed — committing under it hands
-                # the swap rows it will erase
-                assert_not_compacting(spark, path)
-                entry_epoch = read_compact_epoch(spark, path)
-                # pre-write stats read (r14) — see IvfIndex.add
-                from keystone_spark.fsutil import (
-                    read_valid_index_stats,
-                    refresh_index_stats,
-                    write_index_stats,
-                )
-
-                pre_counts = read_valid_index_stats(
-                    spark, path, "codes", "cell")
-                encoded.write.mode("append").partitionBy("cell").parquet(
-                    os.path.join(path, "codes")
-                )
-                # post-write lock re-check (ADVICE r11 #2) — see
-                # IvfIndex.add: a compact that started during the write
-                # job holds the lock but has not bumped the epoch, so
-                # the epoch fence alone would miss it
-                try:
-                    assert_not_compacting(spark, path)
-                    assert_same_compact_epoch(spark, path, entry_epoch)
-                except ValueError as e:
-                    # re-wrap PRESERVING IndexContention (r13): the
-                    # streaming fold's retry loop keys on the class
-                    from keystone_spark.fsutil import IndexContention
-
-                    raise IndexContention(
-                        str(e) + " — for vector appends, retry with "
-                        "skip_existing_ids=True (surviving rows are "
-                        "skipped, erased ones re-added)"
-                    ) from e
-                # merge batch histogram into the occupancy manifest
-                # (r14) — see IvfIndex.add
-                if pre_counts is not None:
-                    for c, n in cells.items():
-                        pre_counts[c] = pre_counts.get(c, 0) + n
-                    write_index_stats(
-                        spark, path, "codes", "cell", pre_counts)
-                else:
-                    refresh_index_stats(spark, path, "codes", "cell")
-            finally:
-                encoded.unpersist()
-        finally:
-            release_write_lock(spark, path)
-        total = sum(cells.values())
-        return {"vectors_added": total,
-                "cells_touched": len(cells), "cell_histogram": cells,
-                # drift signal — see IvfIndex.add
-                "max_cell_share": round(max(cells.values()) / total, 4)
-                if total else 0.0}
+    def _model_json(self) -> dict:
+        return {
+            "centroids": self.C.tolist(),
+            "books": self.books.tolist(),
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "base_path": self.base_path,
+        }
 
     @classmethod
-    def delete(cls, spark, path: str, ids) -> dict:
-        """Tombstone vectors out of the stored codes table — same
-        contract as ``IvfIndex.delete``: immediate exclusion from
-        search (anti-join on the cell-pruned scan), physical purge at
-        ``compact``."""
-        from keystone_spark.fsutil import (
-            assert_not_compacting,
-            ids_to_tombstones,
-            resolve_index_path,
+    def _from_model(cls, meta: dict, indexed: DataFrame,
+                    path: str) -> "IvfPqIndex":
+        return cls(
+            np.asarray(meta["centroids"]),
+            np.asarray(meta["books"]),
+            indexed,
+            meta["id_col"],
+            meta["vec_col"],
+            path=path,
+            base_path=meta.get("base_path"),  # absent pre-r13: None
         )
-
-        root, path = path, resolve_index_path(spark, path)
-        assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_type = idx.indexed.schema[idx.id_col].dataType
-        from keystone_spark.fsutil import append_tombstones
-
-        tomb = ids_to_tombstones(spark, ids, idx.id_col, id_type)
-        return append_tombstones(spark, path, tomb, root=root)
-
-    @classmethod
-    def compact(cls, spark, path: str, dest: str | None = None) -> dict:
-        """Purge tombstoned codes and rewrite one file per cell dir —
-        ``IvfIndex.compact`` for the codes table; Hadoop-FS
-        stage-and-swap in place, or ``dest=...`` for the
-        object-store-safe fresh-snapshot + ``_LATEST`` pointer flip."""
-        from keystone_spark.fsutil import (
-            SWAP_MARKER,
-            acquire_compact_lock,
-            count_parquet_files,
-            fs_delete,
-            fs_exists,
-            release_compact_lock,
-            resolve_index_path,
-            swap_tables,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                     root.rstrip("/")):
-            raise ValueError(
-                "compact dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        # lock FIRST, load after: the rewrite's file listing and
-        # tombstone read must postdate the lock (see Bm25Index.compact).
-        # The WHOLE post-lock body sits in one try — an analyzer or IO
-        # error anywhere before the swap must release the lock, or it
-        # leaks and blocks every later mutation
-        acquire_compact_lock(spark, path)
-        if dest is not None:
-            try:
-                from keystone_spark.fsutil import (
-                    assert_no_write_lock,
-                    pointer_target,
-                    write_latest_pointer,
-                )
-
-                assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                codes = idx.indexed
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    codes = codes.join(
-                        F.broadcast(tomb), idx.id_col, "left_anti"
-                    )
-                cls(idx.C, idx.books,
-                    codes.repartition(F.col("cell")),
-                    idx.id_col, idx.vec_col,
-                    base_path=idx.base_path).save(dest)
-                if count_parquet_files(spark, f"{dest}/codes") == 0:
-                    fs_delete(spark, dest)
-                    raise ValueError(
-                        "compact aborted: every vector is tombstoned "
-                        "and the rewritten codes table at dest would "
-                        "be empty — delete the index instead of "
-                        "compacting it empty"
-                    )
-                ptr = write_latest_pointer(spark, root,
-                                           pointer_target(root, dest))
-            finally:
-                release_compact_lock(spark, path)
-            return {"dest": dest, "pointer_version": ptr,
-                    "codes_files_after": count_parquet_files(
-                        spark, f"{dest}/codes")}
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        try:
-            # compact's half of the mutation-lock handshake (r12)
-            from keystone_spark.fsutil import assert_no_write_lock
-
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            codes = idx.indexed
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                codes = codes.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
-            fs_delete(spark, stage)
-            (
-                codes.repartition(F.col("cell"))
-                .write.mode("overwrite").partitionBy("cell")
-                .parquet(f"{stage}/codes")
-            )
-            if count_parquet_files(spark, f"{stage}/codes") == 0:
-                fs_delete(spark, stage)
-                raise ValueError(
-                    "compact aborted: every vector is tombstoned, and "
-                    "the staged rewrite would leave an empty codes "
-                    "table that no reader can load (parquet schema "
-                    "inference fails on a file-less directory) — the "
-                    "live index is untouched; delete the index "
-                    "directory instead of compacting it empty"
-                )
-            before = count_parquet_files(spark, f"{path}/codes")
-            swap_tables(spark, path, stage, ["codes"])
-            fs_delete(spark, f"{path}/tombstones")
-        except BaseException:
-            if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-                release_compact_lock(spark, path)
-            raise
-        from keystone_spark.fsutil import (
-            bump_compact_epoch,
-            refresh_index_stats,
-        )
-
-        bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the rewritten table (r14)
-        refresh_index_stats(spark, path, "codes", "cell")
-        release_compact_lock(spark, path)
-        return {"codes_files_before": before,
-                "codes_files_after": count_parquet_files(
-                    spark, f"{path}/codes")}
 
     @classmethod
     def retrain(cls, spark, path: str, dest: str,
@@ -1697,29 +1424,10 @@ class IvfPqIndex:
         to stop. A ``base`` DataFrame is taken as-is (nothing to
         validate against) and the manifest pointer is carried forward
         unchanged."""
-        from keystone_spark.fsutil import (
-            acquire_compact_lock,
-            assert_no_write_lock,
-            count_parquet_files,
-            fs_delete,
-            pointer_target,
-            release_compact_lock,
-            resolve_index_path,
-            write_latest_pointer,
-        )
 
-        root, path = path, resolve_index_path(spark, path)
-        if dest.rstrip("/") in (path.rstrip("/"), root.rstrip("/")):
-            raise ValueError(
-                "retrain dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        acquire_compact_lock(spark, path)
-        try:
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            new_base_path = idx.base_path
-            if base is None:
+        def train(idx, live_codes):
+            src, new_base_path = base, idx.base_path
+            if src is None:
                 bp = base_path or idx.base_path
                 if bp is None:
                     raise ValueError(
@@ -1741,33 +1449,20 @@ class IvfPqIndex:
                         "(CLI: --force-base) only after confirming the "
                         "base really moved"
                     )
-                base = spark.read.parquet(bp)
+                src = spark.read.parquet(bp)
                 new_base_path = bp
-            live_ids = idx.indexed.select(idx.id_col)
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                live_ids = live_ids.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
             live = (
-                base.where(F.col(idx.vec_col).isNotNull())
-                .join(live_ids, idx.id_col, "left_semi")
+                src.where(F.col(idx.vec_col).isNotNull())
+                .join(live_codes.select(idx.id_col), idx.id_col,
+                      "left_semi")
             )
             k = int(n_cells) if n_cells is not None else len(idx.C)
             mm = int(m) if m is not None else idx.books.shape[0]
             kk = int(ks) if ks is not None else idx.books.shape[1]
             # hash-ordered sample across the whole live id range — see
             # IvfIndex.retrain
-            samp = np.array(
-                [
-                    r[1]
-                    for r in live.select(idx.id_col, idx.vec_col)
-                    .orderBy(F.xxhash64(F.col(idx.id_col)))
-                    .limit(sample_size)
-                    .collect()
-                ],
-                dtype=np.float64,
-            )
+            samp = _sample_vectors(live, idx.id_col, idx.vec_col,
+                                   sample_size, F.xxhash64(idx.id_col))
             if len(samp) == 0:
                 raise ValueError(
                     "retrain aborted: no live vectors in base — check "
@@ -1776,91 +1471,11 @@ class IvfPqIndex:
             sn = _normalize(samp)
             C = _normalize(_kmeans_centroids(sn, k, seed))
             books = _train_pq_codebooks(sn, mm, kk, seed)
-            reencoded = cls._encode(live, C, books, idx.id_col,
-                                    idx.vec_col)
-            cls(C, books, reencoded.repartition(F.col("cell")),
-                idx.id_col, idx.vec_col,
-                base_path=new_base_path).save(dest)
-            if count_parquet_files(spark, f"{dest}/codes") == 0:
-                fs_delete(spark, dest)
-                raise ValueError(
-                    "retrain aborted: the live corpus is empty — "
-                    "nothing to train on"
-                )
-            hist = {
-                int(r["cell"]): int(r["n"])
-                for r in spark.read.parquet(f"{dest}/codes")
-                .groupBy("cell").agg(F.count("*").alias("n")).collect()
-            }
-            ptr = write_latest_pointer(spark, root,
-                                       pointer_target(root, dest))
-        finally:
-            release_compact_lock(spark, path)
-        # n_cells = centroids actually trained (ADVICE r12 #4 parity
-        # with IvfIndex.retrain): a sample smaller than k yields fewer
-        return {"dest": dest, "pointer_version": ptr, "n_cells": len(C),
-                "m": mm, "ks": kk, "vectors": sum(hist.values()),
-                "cell_histogram": hist}
+            reencoded = cls._encode(live, C, books, idx.id_col, idx.vec_col)
+            return cls(C, books, reencoded, idx.id_col, idx.vec_col,
+                       base_path=new_base_path), {"m": mm, "ks": kk}
 
-    def _load_tombstones(self, spark) -> DataFrame | None:
-        from keystone_spark.fsutil import read_tombstones
-
-        if self.path is None:
-            return None
-        return read_tombstones(spark, self.path, self.id_col)
-
-    def save(self, path: str) -> None:
-        import json
-
-        from keystone_spark.fsutil import (
-            clear_index_control_state,
-            fs_write_text,
-        )
-
-        clear_index_control_state(self.indexed.sparkSession, path)
-        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/codes"
-        )
-        # manifest-carried occupancy (r14) — see IvfIndex.save
-        from keystone_spark.fsutil import refresh_index_stats
-
-        refresh_index_stats(
-            self.indexed.sparkSession, path, "codes", "cell")
-        fs_write_text(
-            self.indexed.sparkSession, f"{path}/model.json",
-            json.dumps({
-                "centroids": self.C.tolist(),
-                "books": self.books.tolist(),
-                "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "base_path": self.base_path,
-            }),
-        )
-        self.path = path
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IvfPqIndex":
-        import json
-
-        from keystone_spark.fsutil import (
-            assert_no_interrupted_swap,
-            fs_read_text,
-            resolve_index_path,
-        )
-
-        path = resolve_index_path(spark, path)  # follow _LATEST
-        assert_no_interrupted_swap(spark, path)
-        meta = json.loads(fs_read_text(spark, f"{path}/model.json"))
-        indexed = spark.read.parquet(f"{path}/codes")
-        return cls(
-            np.asarray(meta["centroids"]),
-            np.asarray(meta["books"]),
-            indexed,
-            meta["id_col"],
-            meta["vec_col"],
-            path=path,
-            base_path=meta.get("base_path"),  # absent pre-r13: None
-        )
+        return cls._retrain(spark, path, dest, train)
 
     def search(
         self,
@@ -1885,22 +1500,13 @@ class IvfPqIndex:
         ``IvfIndex.search``."""
         id_col, vec_col = self.id_col, self.vec_col
         m, ks, dsub = self.books.shape
-        p_ids, p_mat = _collect_probes(probes, id_col, vec_col)
-        p_norm = _normalize(p_mat)
-        probe_cells = np.argsort(-(p_norm @ self.C.T), axis=1)[:, :n_probe_cells]
-        wanted = sorted({int(c) for row in probe_cells for c in row})
+        p_ids, p_norm, probe_cells, subset = self._pruned_scan(
+            probes, n_probe_cells, predicate, metadata)
         luts = np.einsum(
             "pjd,jcd->pjc", p_norm.reshape(len(p_ids), m, dsub), self.books
         )
         n_cand = refine * k
 
-        subset = self.indexed.where(F.col("cell").isin(wanted))
-        subset = _apply_search_predicate(
-            subset, predicate, metadata, id_col)
-        tomb = self._load_tombstones(probes.sparkSession)
-        if tomb is not None:
-            # deleted vectors can never candidate; purge at compact
-            subset = subset.join(F.broadcast(tomb), id_col, "left_anti")
         out_schema = StructType(
             [
                 StructField("probe", LongType()),

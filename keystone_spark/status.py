@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from keystone_spark import fsutil
+from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
 
 
 def _family(spark, snap: str) -> tuple[str, str, str, str]:
@@ -33,17 +34,17 @@ def _family(spark, snap: str) -> tuple[str, str, str, str]:
     unique marker file/table, so no --kind argument is needed."""
     if fsutil.fs_exists(spark, f"{snap}/sq8.json"):
         return "sq8", "codes", "codes", None  # flat index: no partition
-    if fsutil.fs_exists(spark, f"{snap}/model.json"):
-        return "ivfpq", "codes", "codes", "cell"
-    if fsutil.fs_exists(spark, f"{snap}/centroids.json"):
-        return "ivf", "corpus", "corpus", "cell"
+    for family, cls in (("ivfpq", IvfPqIndex), ("ivf", IvfIndex)):
+        if fsutil.fs_exists(spark, f"{snap}/{cls.MANIFEST}"):
+            return family, cls.TABLE, cls.TABLE, "cell"
     if fsutil.fs_exists(spark, f"{snap}/postings"):
         return "bm25", "docs", "postings", "tbucket"
     if fsutil.fs_exists(spark, f"{snap}/bands"):
         return "minhash", "sigs", "bands", "band"
     raise ValueError(
         f"no stored index recognized at {snap} — expected one of "
-        "sq8.json (sq8), model.json (ivfpq), centroids.json (ivf), "
+        f"sq8.json (sq8), {IvfPqIndex.MANIFEST} (ivfpq), "
+        f"{IvfIndex.MANIFEST} (ivf), "
         "postings/ (bm25), bands/ (minhash)"
     )
 
@@ -192,7 +193,7 @@ def index_status(spark, path: str) -> dict:
             import json as _json
 
             meta = _json.loads(
-                fsutil.fs_read_text(spark, f"{snap}/model.json"))
+                fsutil.fs_read_text(spark, f"{snap}/{IvfPqIndex.MANIFEST}"))
             # the retrain/re-rank raw-vector table (r13 manifest field)
             out["base_path"] = meta.get("base_path")
 

@@ -607,14 +607,18 @@ def streaming_upsert(
     changelog stream. Each micro-batch folds onto the current snapshot
     with ``operators/curation.apply_changes`` (latest-change-per-key,
     delete/upsert semantics) and commits a NEW versioned directory
-    ``<snapshot_dir>/v<batch_id>`` plus an atomically-replaced ``_LATEST``
-    pointer file — readers always see a complete snapshot, never a
-    half-written one (the poor-man's table-format commit; on a real
-    deployment swap the commit for Delta/Iceberg ``MERGE``).
+    ``<snapshot_dir>/v<batch_id>`` published through the same
+    ``_LATEST.N`` pointer the stored indexes use
+    (``fsutil.write_latest_pointer``) — readers always see a complete
+    snapshot, never a half-written one (the poor-man's table-format
+    commit; on a real deployment swap the commit for Delta/Iceberg
+    ``MERGE``). Every read and write goes through the Hadoop FileSystem
+    API, so ``snapshot_dir`` may be a local path or a ``file://``,
+    ``hdfs://`` or ``s3a://`` URI.
 
     Returns a ``DataStreamWriter`` (caller picks trigger/checkpoint).
     Exactly-once snapshot state despite at-least-once foreachBatch: a
-    replayed batch that crashed BEFORE its pointer replace re-folds from
+    replayed batch that crashed BEFORE its pointer publish re-folds from
     the previous version (same inputs -> same v<batch_id>); one that
     already committed is detected (pointer == v<batch_id>) and skipped,
     which also prevents overwriting a version directory while reading it.
@@ -625,10 +629,10 @@ def streaming_upsert(
     snapshot and rewrite only touched partitions (dynamic partition
     overwrite), which this layout permits per-version.
     """
-    import os
-
+    from keystone_spark import fsutil
     from keystone_spark.operators.curation import apply_changes
 
+    root = snapshot_dir.rstrip("/")
     data_cols = None  # resolved on first batch
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -637,19 +641,15 @@ def streaming_upsert(
         if data_cols is None:
             drop = {op_col} | ({seq_col} if seq_col else set())
             data_cols = [c for c in batch_df.columns if c not in drop]
-        pointer = os.path.join(snapshot_dir, "_LATEST")
-        cur = None
-        if os.path.exists(pointer):
-            with open(pointer) as fh:
-                cur_dir = fh.read().strip()
-            if cur_dir == f"v{batch_id}":
-                # replayed batch whose pointer replace (the commit point)
-                # already happened: the fold is complete — re-running it
-                # would overwrite v<batch_id> while reading from it
-                return
-            if cur_dir:
-                cur = spark.read.parquet(os.path.join(snapshot_dir, cur_dir))
-        if cur is None:
+        cur_dir = fsutil.read_latest_pointer(spark, root)
+        if cur_dir == f"v{batch_id}":
+            # replayed batch whose pointer publish (the commit point)
+            # already happened: the fold is complete — re-running it
+            # would overwrite v<batch_id> while reading from it
+            return
+        if cur_dir:
+            cur = spark.read.parquet(f"{root}/{cur_dir}")
+        else:
             cur = (
                 base_df
                 if base_df is not None
@@ -659,22 +659,24 @@ def streaming_upsert(
             cur, batch_df, key_cols, op_col=op_col, seq_col=seq_col
         )
         vdir = f"v{batch_id}"
-        new.write.mode("overwrite").parquet(os.path.join(snapshot_dir, vdir))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(vdir)
-        os.replace(tmp, pointer)
+        new.write.mode("overwrite").parquet(f"{root}/{vdir}")
+        fsutil.write_latest_pointer(spark, root, vdir)
 
     return changes_stream.writeStream.foreachBatch(fold)
 
 
 def read_snapshot(spark, snapshot_dir: str) -> DataFrame:
     """Read the current committed version of a streaming_upsert snapshot."""
-    import os
+    from keystone_spark import fsutil
 
-    with open(os.path.join(snapshot_dir, "_LATEST")) as fh:
-        vdir = fh.read().strip()
-    return spark.read.parquet(os.path.join(snapshot_dir, vdir))
+    root = snapshot_dir.rstrip("/")
+    vdir = fsutil.read_latest_pointer(spark, root)
+    if vdir is None:
+        raise ValueError(
+            f"no streaming_upsert snapshot committed at {snapshot_dir}: "
+            "no _LATEST pointer"
+        )
+    return spark.read.parquet(f"{root}/{vdir}")
 
 
 def stateful_ewma(
@@ -1103,7 +1105,6 @@ def stream_vector_ingest(
         raise ValueError(f"family must be 'ivf' or 'ivfpq', got {family!r}")
     spark = stream_vecs.sparkSession
     n_folds = {"n": 0}
-    table = "corpus" if family == "ivf" else "codes"
 
     def fold(bdf: DataFrame, epoch_id: int) -> None:
         retry_contention(
@@ -1115,7 +1116,7 @@ def stream_vector_ingest(
         n_folds["n"] += 1
         if retrain_if_skewed is not None:
             _maybe_auto_retrain(
-                spark, index_path, fam, table, int(epoch_id),
+                spark, index_path, fam, int(epoch_id),
                 retrain_if_skewed, retrain_sample_size,
                 min_epochs_between_retrains, retry_attempts,
                 retry_base_sleep,
@@ -1156,9 +1157,8 @@ def _write_retrain_state(spark, root: str, state: dict) -> None:
     fsutil.fs_rename(spark, f"{p}.tmp", p)
 
 
-def _maybe_auto_retrain(spark, index_path: str, fam, table: str,
-                        epoch_id: int, threshold: float,
-                        sample_size: int, min_epochs: int,
+def _maybe_auto_retrain(spark, index_path: str, fam, epoch_id: int,
+                        threshold: float, sample_size: int, min_epochs: int,
                         retry_attempts: int, retry_base_sleep: float
                         ) -> None:
     """The fold's drift trigger — see ``stream_vector_ingest``'s
@@ -1184,9 +1184,10 @@ def _maybe_auto_retrain(spark, index_path: str, fam, table: str,
         # occupancy signal: manifest-first (the add this fold just ran
         # refreshed it under its own lock), scan fallback for pre-r14
         # indexes that have never been compacted
-        counts = fsutil.read_valid_index_stats(spark, snap, table, "cell")
+        counts = fsutil.read_valid_index_stats(
+            spark, snap, fam.TABLE, "cell")
         if counts is None:
-            counts = fsutil.scan_index_stats(spark, snap, table, "cell")
+            counts = fsutil.scan_index_stats(spark, snap, fam.TABLE, "cell")
         occ = fsutil.occupancy_from_counts(counts)
         if occ["max_share"] < threshold:
             return

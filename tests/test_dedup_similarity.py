@@ -1589,7 +1589,8 @@ def test_vector_index_add_skip_existing_ids(spark, tmp_path):
     hi = e.where(F.col("vec_id") % 3 != 1)
     n_hi = hi.count()
 
-    for fam, tbl in ((IvfIndex, "corpus"), (IvfPqIndex, "codes")):
+    for fam in (IvfIndex, IvfPqIndex):
+        tbl = fam.TABLE
         path = str(tmp_path / f"skip_{tbl}")
         fam.build(lo, n_cells=8).save(path)
         stats = fam.add(spark, path, hi, skip_existing_ids=True)

@@ -39,6 +39,36 @@ def test_all_queries_run(spark, sf_dir):
     assert not failures, failures
 
 
+def test_memo_builds_each_key_once_under_threads():
+    """The fixture-index memo under contention: many threads asking for
+    the same few keys at once must run each build exactly once and all
+    get the built value (a lost check-then-set race builds twice)."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    cache, calls = {}, []
+
+    def build(key):
+        def run():
+            calls.append(key)
+            time.sleep(0.01)  # widen the check-then-build window
+            return f"path-{key}"
+        return run
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futs = [pool.submit(entry_mod._memo, cache, i % 3, build(i % 3))
+                    for i in range(64)]
+            got = [f.result(timeout=30) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert got == [f"path-{i % 3}" for i in range(64)]
+    assert sorted(calls) == [0, 1, 2]
+
+
 def test_registry_hygiene_full_surface():
     """Every declared query has an oracle, every oracle has a query, all
     oracle strings are non-trivial SQL, and the rotation set (queries

@@ -213,7 +213,8 @@ def test_compact_to_empty_aborts_and_leaves_index_live(spark, tmp_path):
     assert spark.read.parquet(f"{p}/bands").count() > 0  # untouched
 
     e = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-    for fam, tbl in ((IvfIndex, "corpus"), (IvfPqIndex, "codes")):
+    for fam in (IvfIndex, IvfPqIndex):
+        tbl = fam.TABLE
         p = str(tmp_path / f"vec_{tbl}")
         fam.build(e, n_cells=4).save(p)
         fam.delete(spark, p, e.select("vec_id"))

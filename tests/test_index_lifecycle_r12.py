@@ -472,52 +472,34 @@ def test_minhash_dest_compact_pointer_flip(spark, tmp_path):
     assert fsutil.fs_exists(spark, f"{v0}/bands")
 
 
-def test_ivf_dest_compact_pointer_flip(spark, tmp_path):
-    from keystone_spark.operators.similarity import IvfIndex
+@pytest.mark.parametrize("family", ["ivf", "ivfpq"])
+def test_vector_dest_compact_pointer_flip(spark, tmp_path, family):
+    from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
 
-    root = str(tmp_path / "ivfroot")
+    fam = {"ivf": IvfIndex, "ivfpq": IvfPqIndex}[family]
+    root = str(tmp_path / "root")
     v0, v1 = f"{root}/v0", f"{root}/v1"
     e = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-    IvfIndex.build(e, n_cells=4).save(v0)
+    if fam is IvfPqIndex:
+        fam.build(e, n_cells=4, m=8, ks=16).save(v0)
+    else:
+        fam.build(e, n_cells=4).save(v0)
     fsutil.write_latest_pointer(spark, root, "v0")
 
     probes = e.limit(2)
     dead = [int(r[0]) for r in probes.select("vec_id").collect()]
-    IvfIndex.delete(spark, root, dead)
-    stats = IvfIndex.compact(spark, root, dest=v1)
+    fam.delete(spark, root, dead)
+    stats = fam.compact(spark, root, dest=v1)
     assert stats["dest"] == v1
+    assert stats[f"{fam.TABLE}_files_after"] >= 1
     assert fsutil.read_latest_pointer(spark, root) == "v1"
     assert not fsutil.fs_exists(spark, f"{v1}/tombstones")
 
-    idx = IvfIndex.load(spark, root)
+    idx = fam.load(spark, root)
     assert idx.path.rstrip("/") == v1
-    got = {int(r[0]) for r in idx.search(
-        probes, k=5, n_probe_cells=4, exclude_self=False
-    ).select("vec_id").distinct().collect()}
-    assert not (got & set(dead))
-
-
-def test_ivfpq_dest_compact_pointer_flip(spark, tmp_path):
-    from keystone_spark.operators.similarity import IvfPqIndex
-
-    root = str(tmp_path / "pqroot")
-    v0, v1 = f"{root}/v0", f"{root}/v1"
-    e = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-    IvfPqIndex.build(e, n_cells=4, m=8, ks=16).save(v0)
-    fsutil.write_latest_pointer(spark, root, "v0")
-
-    probes = e.limit(2)
-    dead = [int(r[0]) for r in probes.select("vec_id").collect()]
-    IvfPqIndex.delete(spark, root, dead)
-    stats = IvfPqIndex.compact(spark, root, dest=v1)
-    assert stats["dest"] == v1
-    assert fsutil.read_latest_pointer(spark, root) == "v1"
-    assert not fsutil.fs_exists(spark, f"{v1}/tombstones")
-
-    idx = IvfPqIndex.load(spark, root)
-    assert idx.path.rstrip("/") == v1
-    got = {int(r[1]) for r in idx.search(
-        e, probes, k=5, n_probe_cells=4, exclude_self=False
+    args = (e, probes) if fam is IvfPqIndex else (probes,)
+    got = {int(r.vec_id) for r in idx.search(
+        *args, k=5, n_probe_cells=4, exclude_self=False
     ).collect()}
     assert not (got & set(dead))
 

@@ -60,21 +60,26 @@ def test_publish_pointer_revalidates_target_under_lock(
 # -------------------------------------------- ADVICE r13 #2: checked casts
 
 
-def test_ivf_add_rejects_nulling_cast(spark, tmp_path):
+@pytest.mark.parametrize("family", ["ivf", "ivfpq"])
+def test_vector_add_rejects_nulling_cast(spark, tmp_path, family):
     """Non-ANSI mode turns an un-castable id into NULL; a nulled id row
     would dodge every skip_existing_ids anti-join and duplicate on
     replay — the add must refuse the batch instead."""
-    from keystone_spark.operators.similarity import IvfIndex
+    from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
 
-    path = str(tmp_path / "ivf")
-    IvfIndex.build(_vecs(spark, range(40)), n_cells=4).save(path)
+    fam = {"ivf": IvfIndex, "ivfpq": IvfPqIndex}[family]
+    path = str(tmp_path / family)
+    if fam is IvfPqIndex:
+        fam.build(_vecs(spark, range(40)), n_cells=4, m=4, ks=8).save(path)
+    else:
+        fam.build(_vecs(spark, range(40)), n_cells=4).save(path)
 
     bad = spark.createDataFrame(
         [("not-an-id", [0.1] * 8)], "vec_id string, embedding array<double>")
     with pytest.raises(ValueError, match="cast"):
-        IvfIndex.add(spark, path, bad)
+        fam.add(spark, path, bad)
     # nothing appended
-    idx = IvfIndex.load(spark, path)
+    idx = fam.load(spark, path)
     assert idx.indexed.where(F.col("vec_id").isNull()).count() == 0
     assert idx.indexed.count() == 40
     # lock released (the guard raised inside the locked span)
@@ -83,24 +88,10 @@ def test_ivf_add_rejects_nulling_cast(spark, tmp_path):
     # a castable string id is fine — schema pinning, not type policing
     ok = spark.createDataFrame(
         [("100", [0.1] * 8)], "vec_id string, embedding array<double>")
-    stats = IvfIndex.add(spark, path, ok)
+    stats = fam.add(spark, path, ok)
     assert stats["vectors_added"] == 1
-    assert IvfIndex.load(spark, path).indexed.where(
+    assert fam.load(spark, path).indexed.where(
         F.col("vec_id") == 100).count() == 1
-
-
-def test_ivfpq_add_rejects_nulling_cast(spark, tmp_path):
-    from keystone_spark.operators.similarity import IvfPqIndex
-
-    path = str(tmp_path / "pq")
-    IvfPqIndex.build(_vecs(spark, range(64)), n_cells=4, m=4, ks=8).save(path)
-    bad = spark.createDataFrame(
-        [("oops", [0.1] * 8)], "vec_id string, embedding array<double>")
-    with pytest.raises(ValueError, match="cast"):
-        IvfPqIndex.add(spark, path, bad)
-    idx = IvfPqIndex.load(spark, path)
-    assert idx.indexed.where(F.col("vec_id").isNull()).count() == 0
-    assert not fsutil.fs_exists(spark, f"{path}/{fsutil.WRITE_LOCK}")
 
 
 # ------------------------------------- ADVICE r13 #3: pre-r11 bm25 status
@@ -358,7 +349,7 @@ def test_pending_retrain_marker_replay_semantics(spark, tmp_path):
     dest = f"{root}/retrain_e000007"
     W._write_retrain_state(spark, root, {
         "last_epoch": None, "pending": {"epoch": 7, "dest": dest}})
-    W._maybe_auto_retrain(spark, root, IvfIndex, "corpus", 7,
+    W._maybe_auto_retrain(spark, root, IvfIndex, 7,
                           threshold=0.99,  # occupancy balanced: no NEW
                           sample_size=160, min_epochs=5,
                           retry_attempts=2, retry_base_sleep=0.01)
@@ -371,7 +362,7 @@ def test_pending_retrain_marker_replay_semantics(spark, tmp_path):
     W._write_retrain_state(spark, root, {
         "last_epoch": None, "pending": {"epoch": 7, "dest": dest}})
     ptr_before = fsutil._latest_files(spark, root)
-    W._maybe_auto_retrain(spark, root, IvfIndex, "corpus", 8,
+    W._maybe_auto_retrain(spark, root, IvfIndex, 8,
                           threshold=0.99, sample_size=160,
                           min_epochs=5, retry_attempts=2,
                           retry_base_sleep=0.01)

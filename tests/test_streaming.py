@@ -599,11 +599,14 @@ def test_streaming_funnel_state_schema_pinned(spark, tmp_path):
         assert field in blob, f"state schema no longer records {field!r}"
 
 
-def test_streaming_upsert_maintains_snapshot(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_streaming_upsert_maintains_snapshot(spark, tmp_path, as_uri):
     """foreachBatch CDC fold (streaming MERGE INTO): two micro-batches of
     changes applied in order produce exactly the batch-mode apply_changes
-    result, the _LATEST pointer commit is atomic-replace, and every
-    committed version stays a complete readable snapshot."""
+    result, each commit publishes a new _LATEST.N pointer, and every
+    committed version stays a complete readable snapshot. The snapshot
+    directory may be a plain path or a file:// URI (all IO goes through
+    the Hadoop FileSystem API)."""
     import os
 
     from keystone_spark.operators.curation import apply_changes
@@ -628,14 +631,17 @@ def test_streaming_upsert_maintains_snapshot(spark, tmp_path):
     )
     snap_dir = str(tmp_path / "snap")
     os.makedirs(snap_dir)
+    snap = f"file://{snap_dir}" if as_uri else snap_dir
+    with pytest.raises(ValueError, match="no streaming_upsert snapshot"):
+        read_snapshot(spark, snap)  # nothing committed yet
     q = (
-        streaming_upsert(stream, snap_dir, ["k"], seq_col="seq", base_df=base)
+        streaming_upsert(stream, snap, ["k"], seq_col="seq", base_df=base)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    got = {r.k: (r.s, r.v) for r in read_snapshot(spark, snap_dir).collect()}
+    got = {r.k: (r.s, r.v) for r in read_snapshot(spark, snap).collect()}
     all_changes = spark.createDataFrame(chunk1 + chunk2, schema)
     want = {r.k: (r.s, r.v)
             for r in apply_changes(base, all_changes, ["k"], seq_col="seq")

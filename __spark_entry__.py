@@ -1208,10 +1208,14 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.col("n_chars")).alias("quality"),
     )
     out = token_budget_select(scored, budget=12000, n_buckets=32)
-    return (
+    final = (
         out.select("doc_id", "toks", F.round("quality", 6).alias("quality"))
         .orderBy("doc_id")
     )
+    # the boundary bucket's checkpoint rides the result (see
+    # q_minhash_dedup): the harness release loop frees it
+    final._keystone_caches = list(getattr(out, "_keystone_caches", []))
+    return final
 
 
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

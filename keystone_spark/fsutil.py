@@ -19,9 +19,20 @@ on each index family (r12): the rewrite lands as a FRESH index at
 dest and the commit is one atomic versioned ``_LATEST.N`` pointer
 publish (``write_latest_pointer`` / ``resolve_index_path`` below) —
 no rename of live data at all.
+
+The four families share one mutation protocol, defined here:
+``locked_mutation`` (write-lock prologue and commit fence),
+``commit_generation`` (intent -> data -> fence -> commit for the
+generation-manifest families), ``delete_ids`` (the delete front half
+over ``append_tombstones``) and ``compact_index`` (in-place
+stage-and-swap and ``dest=`` pointer flip). A family supplies only its
+table names, a rewrite callback, its kernel or stats step and its
+manifest writer.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 
 def _fs_path(spark, path: str):
@@ -996,6 +1007,175 @@ def generation_sets(rows) -> dict:
         "max_generation": max(all_gens),
         "incomplete_generations": sorted(all_gens - set(committed)),
     }
+
+
+@contextmanager
+def locked_mutation(spark, path: str):
+    """The prologue every family's ``add`` shares. Resolves ``path`` to
+    the CURRENT snapshot (a dest-compact or retrain may have
+    republished it under a ``_LATEST`` pointer), takes the write lock
+    FIRST (serializes adds and deletes, so generation allocation is
+    race-free), then re-checks the pointer and the compact lock — the
+    deadlock-free handshake documented on ``acquire_write_lock`` — and
+    reads the entry compact epoch. Yields ``(snapshot, fence)``; call
+    ``fence()`` right before the commit write. It raises
+    ``IndexContention`` when a compact is running (a lock check) or
+    started AND finished inside the mutation's window (the epoch
+    fence): the compact's swap erased the in-flight data, so the
+    mutation must abort uncommitted and be retried. The write lock is
+    released on every exit path."""
+    root, snap = path, resolve_index_path(spark, path)
+    acquire_write_lock(spark, snap)
+    try:
+        assert_latest_unchanged(spark, root, snap)
+        assert_not_compacting(spark, snap)
+        entry_epoch = read_compact_epoch(spark, snap)
+
+        def fence() -> None:
+            assert_not_compacting(spark, snap)
+            assert_same_compact_epoch(spark, snap, entry_epoch)
+
+        yield snap, fence
+    finally:
+        release_write_lock(spark, snap)
+
+
+def commit_generation(fence, max_generation: int, write_manifest,
+                      write_data) -> int:
+    """The two-phase commit of the generation-manifest families
+    (BM25, MinHash): ``write_manifest(gen, False)`` appends the INTENT
+    row that durably claims generation ``max_generation + 1``;
+    ``write_data(gen)`` appends the data rows tagged with it;
+    ``fence()`` (from ``locked_mutation``) aborts if a compact
+    intervened; ``write_manifest(gen, True)`` appends the COMMIT row
+    LAST. Readers serve committed generations only, so a crash
+    anywhere before the commit row leaves nothing visible, and a blind
+    retry allocates the NEXT generation (the intent row advanced the
+    max) and cannot double-count. Orphans are purged by the next
+    compact. Returns the committed generation."""
+    gen = int(max_generation) + 1
+    write_manifest(gen, False)
+    write_data(gen)
+    fence()
+    write_manifest(gen, True)
+    return gen
+
+
+def delete_ids(spark, path: str, ids, stored_id) -> dict:
+    """Every family's ``delete``: resolve the current snapshot, refuse
+    while a compact runs, type the tombstones from the index's own
+    stored id column (``stored_id(snapshot) -> (id_col, id_type)``)
+    and commit them through ``append_tombstones``. Search anti-joins
+    the tombstones at once; ``compact_index`` purges the rows."""
+    root, snap = path, resolve_index_path(spark, path)
+    assert_not_compacting(spark, snap)
+    id_col, id_type = stored_id(snap)
+    tomb = ids_to_tombstones(spark, ids, id_col, id_type)
+    return append_tombstones(spark, snap, tomb, root=root)
+
+
+def compact_index(spark, path: str, dest: str | None, table: str,
+                  part_col: str, rewrite, verb: str = "compact",
+                  files_key: str | None = None) -> dict:
+    """The compact of every stored index family, in both forms.
+    ``rewrite(snapshot, out_dir)`` writes the purged rewrite of the
+    current snapshot into ``out_dir`` — tombstoned ids and orphan
+    generations dropped, one right-sized file per partition — and
+    returns ``(tables, extra)``: the tables an in-place compact swaps
+    in and family-specific result keys. ``table`` is the partitioned data
+    table, ``part_col`` its partition column.
+
+    Lock FIRST, rewrite after: the rewrite's file listing and tombstone
+    read must postdate the lock, or a mutation committing in between
+    would be silently erased. Mutations are excluded by the lock
+    handshake (``assert_no_write_lock`` here, ``assert_not_compacting``
+    in theirs). A rewrite whose ``table`` holds no file aborts with the
+    live index untouched: no reader can load a file-less parquet
+    directory.
+
+    In place (``dest=None``): the rewrite is staged under
+    ``{snapshot}/_compact_tmp`` and ``swap_tables`` moves it in through
+    the Hadoop FileSystem API (directory rename is atomic on
+    local/HDFS; object stores emulate it by copy+delete). The
+    tombstones are then deleted, the compact epoch is bumped (the
+    mutation commit fence) and the occupancy manifest re-synced. A
+    failure before the swap marker lands releases the lock; a failure
+    mid-swap keeps it held until ``finish_swap`` repairs the index.
+    Returns ``{key}_files_before`` / ``{key}_files_after`` plus
+    ``extra``, where ``key`` is ``files_key`` or ``table``.
+
+    ``dest=...`` (the object-store-safe form): the rewrite lands as a
+    FRESH index at ``dest`` with its own occupancy manifest and is
+    published with one atomic ``_LATEST`` pointer flip at ``path`` — no
+    rename of live data. Readers resolving ``path`` see the old
+    snapshot until the flip and the new one after; the old snapshot,
+    tombstones included, stays intact for in-flight readers
+    (``gc_snapshots`` deletes it once they drain). Canonical layout: snapshots under a
+    root (``{root}/v0`` -> ``compact(root, dest=f"{root}/v1")``). A
+    retrain is this form with a rewrite that re-trains the model
+    (``verb="retrain"``). Returns ``dest``, ``pointer_version`` and
+    ``{key}_files_after`` plus ``extra``."""
+    key = f"{files_key or table}_files"
+    root, path = path, resolve_index_path(spark, path)
+    if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
+                                                 root.rstrip("/")):
+        raise ValueError(
+            f"{verb} dest must be a NEW index path — not the current "
+            "snapshot, and not the pointer root itself"
+        )
+    stage = f"{path.rstrip('/')}/_compact_tmp"
+    out_dir = stage if dest is None else dest
+    acquire_compact_lock(spark, path)
+    # the WHOLE post-lock body sits in one try: an error anywhere
+    # before the swap must release the lock, or it leaks and blocks
+    # every later mutation
+    try:
+        assert_no_write_lock(spark, path)
+        if dest is None:
+            fs_delete(spark, stage)
+        else:
+            clear_index_control_state(spark, dest)
+        tables, extra = rewrite(path, out_dir)
+        if count_parquet_files(spark, f"{out_dir}/{table}") == 0:
+            fs_delete(spark, out_dir)
+            raise ValueError(
+                f"{verb} aborted: the live corpus is empty — every "
+                f"indexed row is tombstoned, and the rewritten {table} "
+                "table would leave no file a reader can load (parquet "
+                "schema inference fails on a file-less directory). The "
+                "live index is untouched; delete the index rather than "
+                "rewrite it empty"
+            )
+        if dest is not None:
+            refresh_index_stats(spark, dest, table, part_col)
+            ptr = write_latest_pointer(spark, root,
+                                       pointer_target(root, dest))
+        else:
+            before = count_parquet_files(spark, f"{path}/{table}")
+            swap_tables(spark, path, stage, tables)
+            # the tombstones are now physically purged from the data
+            fs_delete(spark, f"{path}/tombstones")
+    except BaseException:
+        # staging failure (live index untouched) releases; a swap
+        # failure keeps the lock until repair — the marker tells them
+        # apart. Dest mode never mutates the source: always release.
+        if dest is not None or not fs_exists(spark,
+                                             f"{stage}/{SWAP_MARKER}"):
+            release_compact_lock(spark, path)
+        raise
+    if dest is not None:
+        release_compact_lock(spark, path)
+        return {"dest": dest, "pointer_version": ptr,
+                f"{key}_after": count_parquet_files(
+                    spark, f"{dest}/{table}"), **extra}
+    bump_compact_epoch(spark, path)  # the mutation commit fence
+    # re-sync the occupancy manifest to the rewrite; one narrow
+    # partition-column scan inside the already-held lock
+    refresh_index_stats(spark, path, table, part_col)
+    release_compact_lock(spark, path)
+    return {f"{key}_before": before,
+            f"{key}_after": count_parquet_files(spark, f"{path}/{table}"),
+            **extra}
 
 
 def is_missing_path(e) -> bool:

@@ -9,6 +9,8 @@ ordinary Spark shuffles.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -997,6 +999,16 @@ def token_budget_select(
     counts make the running sum exact in any engine. Returns the
     selected rows (original columns); quality ties across the budget
     line break by id ASC.
+
+    The boundary bucket is ``localCheckpoint``-ed so the range
+    boundaries and partition offsets stay fixed across its actions.
+    Its blocks ride the result's ``_keystone_caches``; free them with
+    ``dedup.release(out)`` once the result is materialized
+    (``unpersist``/``clearCache`` leave checkpoint blocks in place).
+    Two tradeoffs: construction is eager (the boundary bucket is
+    computed here, not at the caller's first action), and losing the
+    executor that holds a checkpoint block loses it, so the result
+    can no longer be recomputed.
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
@@ -1028,6 +1040,7 @@ def token_budget_select(
             break
     out = dfb.where(F.col("__qb").isin(keep_whole)) if keep_whole \
         else dfb.limit(0)
+    caches = []
     if boundary is not None:
         # r15 (VERDICT r14 #4/#5): the boundary bucket used to run an
         # UNPARTITIONED cumulative window — bounded to ~1/n_buckets of
@@ -1050,6 +1063,11 @@ def token_budget_select(
             .withColumn("__pid", F.spark_partition_id())
             .localCheckpoint(eager=True)
         )
+        # the checkpointed RDD behind pr's plan holds its blocks;
+        # unpersisting it is the only way to free them
+        ckpt = pr._jdf.queryExecution().analyzed().rdd()
+        caches.append(SimpleNamespace(
+            unpersist=lambda blocking=False: ckpt.unpersist(blocking)))
         stats = sorted(
             pr.groupBy("__pid").agg(F.sum(t).alias("__s")).collect(),
             key=lambda r: r["__pid"],
@@ -1073,4 +1091,6 @@ def token_budget_select(
             .drop("__cum", "__off", "__pid")
         )
         out = out.unionByName(part)
-    return out.drop("__qb")
+    out = out.drop("__qb")
+    out._keystone_caches = caches
+    return out

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from keystone_spark import fsutil
+
 DEFAULT_BUCKET_CAP = 2000
 
 # 64-bit Hamming banding (simhash/phash) has a CONSTANT band-key space
@@ -1380,6 +1382,12 @@ def prefix_jaccard_pairs(
     )
 
 
+# the MinHash index's stored tables: ``bands`` is partitioned by
+# ``band`` (and gen); ``sigs`` holds one row per indexed document
+MINHASH_TABLE = "bands"
+MINHASH_PART_COL = "band"
+MINHASH_MEMBERS = "sigs"
+
 _MINHASH_PARAMS_SCHEMA = (
     "n_hashes long, n_bands long, shingle_k long, seed long, "
     "bucket_cap long, store_texts boolean, generation long, "
@@ -1406,16 +1414,11 @@ def _minhash_manifest(spark, path: str) -> dict:
     crash-safe layout; rebuild with build_minhash_index."""
     from pyspark.errors import AnalysisException
 
-    from keystone_spark.fsutil import (
-        assert_no_interrupted_swap,
-        is_missing_path,
-    )
-
-    assert_no_interrupted_swap(spark, path)
+    fsutil.assert_no_interrupted_swap(spark, path)
     try:
         rows = spark.read.parquet(f"{path}/params").collect()
     except AnalysisException as e:
-        if not is_missing_path(e):
+        if not fsutil.is_missing_path(e):
             raise
         raise ValueError(
             f"no index manifest at {path}/params — a "
@@ -1435,13 +1438,11 @@ def _minhash_manifest(spark, path: str) -> dict:
             f"manifests ({sorted(fixed)}) — the index is corrupt; "
             "rebuild it"
         )
-    from keystone_spark.fsutil import generation_sets
-
     nh, nb, sk, seed, cap, st = next(iter(fixed))
     return {
         "n_hashes": nh, "n_bands": nb, "shingle_k": sk, "seed": seed,
         "bucket_cap": None if cap == -1 else cap, "store_texts": st,
-        **generation_sets(rows),
+        **fsutil.generation_sets(rows),
     }
 
 
@@ -1510,13 +1511,11 @@ def build_minhash_index(
     two-phase append — an interrupted mutation is invisible, a blind
     retry cannot double-index, and ``compact_minhash_index`` purges
     the orphan rows."""
-    from keystone_spark.fsutil import clear_index_control_state
-
     # a build is a brand-new index: control state from any previous
     # index at this path (tombstones, compact stage, locks, epoch
     # fence) must not leak into it — see clear_index_control_state
     spark = corpus.sparkSession
-    clear_index_control_state(spark, path)
+    fsutil.clear_index_control_state(spark, path)
     corpus = corpus.where(F.col(text_col).isNotNull())  # no-shingle docs
     # min-id-per-content collapse, mirroring neardup_against_corpus's
     # inline path (see its docstring for the result-identity argument):
@@ -1537,10 +1536,10 @@ def build_minhash_index(
     kept = _drop_oversized_buckets(banded, ["band", "bucket"], bucket_cap)
     gen0 = F.lit(0)
     kept.withColumn("gen", gen0).write.mode("overwrite").partitionBy(
-        "band", "gen"
-    ).parquet(f"{path}/bands")
+        MINHASH_PART_COL, "gen"
+    ).parquet(f"{path}/{MINHASH_TABLE}")
     sigs.withColumn("gen", gen0).write.mode("overwrite").parquet(
-        f"{path}/sigs"
+        f"{path}/{MINHASH_MEMBERS}"
     )
     crep.select(
         F.col("__ck").alias("ck"), F.col(id_col)
@@ -1562,13 +1561,11 @@ def build_minhash_index(
            "store_texts": store_texts}
     _minhash_append_manifest(spark, path, cfg, 0, committed=True,
                              mode="overwrite")
-    # manifest-carried occupancy (r14) — see Bm25Index.save: a later
-    # add_to_minhash_index stales this via the file-count fence and
-    # status falls back to the band scan until the next compact
-    from keystone_spark.fsutil import refresh_index_stats
-
-    refresh_index_stats(spark, path, "bands", "band")
-    n_bands_rows = spark.read.parquet(f"{path}/bands").count()
+    # manifest-carried occupancy (r14): a later add_to_minhash_index
+    # stales this via the file-count fence and status falls back to
+    # the band scan until the next compact re-syncs it
+    fsutil.refresh_index_stats(spark, path, MINHASH_TABLE, MINHASH_PART_COL)
+    n_bands_rows = spark.read.parquet(f"{path}/{MINHASH_TABLE}").count()
     return {
         "corpus_docs": n_sigs,
         "band_rows": n_bands_rows,
@@ -1624,53 +1621,26 @@ def add_to_minhash_index(
     arrives AFTER the family was first indexed keeps the earlier,
     larger-id representative).
 
-    Crash safety (VERDICT r10 #1): same two-phase commit as
-    ``Bm25Index.add`` — an INTENT manifest row claims the generation
-    number, the data appends carry that generation tag, and the
-    COMMIT manifest row lands LAST. A crash in between leaves rows no
-    reader serves; a blind re-run allocates the next generation and
+    Crash safety (VERDICT r10 #1): the add runs under
+    ``fsutil.locked_mutation`` and commits through
+    ``fsutil.commit_generation`` — an INTENT manifest row claims the
+    generation number, the data appends carry that generation tag, and
+    the COMMIT manifest row lands LAST. A crash in between leaves rows
+    no reader serves; a blind re-run allocates the next generation and
     indexes the batch exactly once (its content anti-join sees only
     committed rows, so nothing the crashed attempt landed blocks it).
 
     Returns {batch_docs, new_content, band_rows_added,
     band_rows_capped, generation}."""
-    from keystone_spark.fsutil import (
-        acquire_write_lock,
-        assert_latest_unchanged,
-        release_write_lock,
-        resolve_index_path,
-    )
-
-    # mutations target the CURRENT snapshot (a dest-compact may have
-    # republished the index under a _LATEST pointer)
-    root, path = path, resolve_index_path(spark, path)
-    # mutation lock FIRST (VERDICT r11 #1): generation allocation reads
-    # max_generation from the manifest, so two concurrent adds without
-    # the lock could both claim gen N+1 and interleave their rows under
-    # one committed generation. Lock-then-check-compact is the
-    # deadlock-free handshake documented on acquire_write_lock; the
-    # whole intent->commit span runs under it.
-    acquire_write_lock(spark, path)
-    try:
-        assert_latest_unchanged(spark, root, path)
-        return _add_to_minhash_locked(spark, path, batch, id_col,
+    with fsutil.locked_mutation(spark, path) as (path, fence):
+        return _add_to_minhash_locked(spark, path, fence, batch, id_col,
                                       text_col)
-    finally:
-        release_write_lock(spark, path)
 
 
-def _add_to_minhash_locked(spark, path: str, batch: DataFrame,
+def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
                            id_col: str, text_col: str) -> dict:
     from pyspark.errors import AnalysisException
 
-    from keystone_spark.fsutil import (
-        assert_not_compacting,
-        is_missing_path,
-        read_compact_epoch,
-    )
-
-    assert_not_compacting(spark, path)
-    entry_epoch = read_compact_epoch(spark, path)
     cfg = _minhash_manifest(spark, path)
     n_hashes, n_bands = cfg["n_hashes"], cfg["n_bands"]
     shingle_k, seed = cfg["shingle_k"], cfg["seed"]
@@ -1679,13 +1649,13 @@ def _add_to_minhash_locked(spark, path: str, batch: DataFrame,
     try:
         content = _minhash_committed(spark, path, "content", committed)
     except AnalysisException as e:
-        if not is_missing_path(e):
+        if not fsutil.is_missing_path(e):
             raise
         raise ValueError(
             f"index at {path} has no content table — it predates r10 "
             "append support; rebuild it with build_minhash_index"
         ) from e
-    tomb = _minhash_tombstones(spark, path, id_col)
+    tomb = fsutil.read_tombstones(spark, path, id_col)
     if tomb is not None:
         # ADVICE r10 #1 / VERDICT r10 #1: a tombstoned representative's
         # content row must NOT block re-adding that content before the
@@ -1737,7 +1707,8 @@ def _add_to_minhash_locked(spark, path: str, batch: DataFrame,
     n_banded = bands_new.count()
     if bucket_cap is not None:
         touched = bands_new.select("band", "bucket").distinct()
-        stored_bands = _minhash_committed(spark, path, "bands", committed)
+        stored_bands = _minhash_committed(spark, path, MINHASH_TABLE,
+                                          committed)
         if tomb is not None:
             # occupancy counts LIVE members only: tombstoned docs'
             # band rows are dead weight a compact will drop — counting
@@ -1770,39 +1741,32 @@ def _add_to_minhash_locked(spark, path: str, batch: DataFrame,
         kept = bands_new
     kept = _persist_once(kept, caches)
     n_kept = kept.count()
-    gen = int(cfg["max_generation"]) + 1
-    genl = F.lit(gen)
-    _minhash_append_manifest(spark, path, cfg, gen, committed=False)
-    kept.withColumn("gen", genl).write.mode("append").partitionBy(
-        "band", "gen"
-    ).parquet(f"{path}/bands")
-    sigs_new.withColumn("gen", genl).write.mode("append").parquet(
-        f"{path}/sigs"
-    )
-    new.select("ck", id_col).withColumn("gen", genl).write.mode(
-        "append"
-    ).parquet(f"{path}/content")
-    if cfg["store_texts"]:
-        new_reps.select(F.col(id_col), F.col(text_col)).withColumn(
-            "gen", genl
-        ).write.mode("append").parquet(f"{path}/texts")
-    # re-check the compact lock at the COMMIT point (see
-    # Bm25Index.add): a compact that started mid-add listed the tables
-    # without this generation; abort uncommitted instead of handing its
-    # swap rows to erase
-    from keystone_spark.fsutil import assert_not_compacting as _anc
-    from keystone_spark.fsutil import assert_same_compact_epoch as _ace
+
+    def write_data(gen):
+        genl = F.lit(gen)
+        kept.withColumn("gen", genl).write.mode("append").partitionBy(
+            MINHASH_PART_COL, "gen"
+        ).parquet(f"{path}/{MINHASH_TABLE}")
+        sigs_new.withColumn("gen", genl).write.mode("append").parquet(
+            f"{path}/{MINHASH_MEMBERS}"
+        )
+        new.select("ck", id_col).withColumn("gen", genl).write.mode(
+            "append"
+        ).parquet(f"{path}/content")
+        if cfg["store_texts"]:
+            new_reps.select(F.col(id_col), F.col(text_col)).withColumn(
+                "gen", genl
+            ).write.mode("append").parquet(f"{path}/texts")
 
     try:
-        _anc(spark, path)
-        _ace(spark, path, entry_epoch)
-        _minhash_append_manifest(spark, path, cfg, gen, committed=True)
-    except BaseException:
+        gen = fsutil.commit_generation(
+            fence, cfg["max_generation"],
+            lambda g, done: _minhash_append_manifest(
+                spark, path, cfg, g, committed=done),
+            write_data)
+    finally:
         for c in caches:
             c.unpersist()
-        raise
-    for c in caches:
-        c.unpersist()
     return {
         "batch_docs": int(n_batch),
         "new_content": int(n_new),
@@ -1837,122 +1801,28 @@ def delete_from_minhash_index(
     fail with a raw KeyError; the stored column is the only one the
     anti-joins can ever match, so it is authoritative and the argument
     is validated against it)."""
-    from keystone_spark.fsutil import (
-        assert_not_compacting,
-        ids_to_tombstones,
-        resolve_index_path,
-    )
+    def stored_id(snap):
+        schema = spark.read.parquet(f"{snap}/{MINHASH_MEMBERS}").schema
+        stored = [f for f in schema.fields if f.name not in ("sig", "gen")]
+        if len(stored) != 1:
+            raise ValueError(
+                f"cannot determine the id column of the index at {snap}: "
+                f"sigs schema has non-sig columns "
+                f"{[f.name for f in stored]} — the index is corrupt"
+            )
+        if id_col != "doc_id" and id_col != stored[0].name:
+            raise ValueError(
+                f"id_col={id_col!r} does not match the index's stored id "
+                f"column {stored[0].name!r} — tombstones are keyed by the "
+                "stored column; omit id_col to use it"
+            )
+        return stored[0].name, stored[0].dataType
 
-    root, path = path, resolve_index_path(spark, path)
-    assert_not_compacting(spark, path)
-    schema = spark.read.parquet(f"{path}/sigs").schema
-    stored = [f for f in schema.fields if f.name not in ("sig", "gen")]
-    if len(stored) != 1:
-        raise ValueError(
-            f"cannot determine the id column of the index at {path}: "
-            f"sigs schema has non-sig columns "
-            f"{[f.name for f in stored]} — the index is corrupt"
-        )
-    if id_col != "doc_id" and id_col != stored[0].name:
-        raise ValueError(
-            f"id_col={id_col!r} does not match the index's stored id "
-            f"column {stored[0].name!r} — tombstones are keyed by the "
-            "stored column; omit id_col to use it"
-        )
-    id_col, id_type = stored[0].name, stored[0].dataType
-    from keystone_spark.fsutil import append_tombstones
-
-    tomb = ids_to_tombstones(spark, ids, id_col, id_type)
-    return append_tombstones(spark, path, tomb, root=root)
-
-
-def _minhash_tombstones(spark, path: str, id_col: str):
-    from keystone_spark.fsutil import read_tombstones
-
-    return read_tombstones(spark, path, id_col)
+    return fsutil.delete_ids(spark, path, ids, stored_id)
 
 
 def compact_minhash_index(spark, path: str, dest: str | None = None
                           ) -> dict:
-    """OPTIMIZE pass for an appended-to ``build_minhash_index`` — see
-    ``_compact_minhash_locked`` for the full contract. Mutual exclusion
-    with ``add``/``delete`` via the compact write-lock: a crash during
-    the destructive swap keeps the lock held until
-    ``fsutil.finish_swap`` repairs; a staging failure releases it (the
-    live index is untouched).
-
-    ``dest=...`` is the object-store-safe form (VERDICT r11 #3): the
-    compacted index is written as a FRESH index at ``dest`` (no rename
-    of live data) and published with one atomic ``_LATEST`` pointer
-    flip at ``path`` — readers resolving ``path`` see the old snapshot
-    until the flip, the new one after; the old snapshot stays intact
-    for in-flight readers. The source keeps its tombstones (it remains
-    a correct pre-compact snapshot); ``dest`` starts purged."""
-    from keystone_spark.fsutil import (
-        SWAP_MARKER,
-        acquire_compact_lock,
-        fs_exists,
-        release_compact_lock,
-        resolve_index_path,
-    )
-
-    root, path = path, resolve_index_path(spark, path)
-    if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                 root.rstrip("/")):
-        raise ValueError(
-            "compact dest must be a NEW index path — not the current "
-            "snapshot, and not the pointer root itself"
-        )
-    _minhash_manifest(spark, path)  # validate before taking the lock
-    acquire_compact_lock(spark, path)
-    stage = f"{path.rstrip('/')}/_compact_tmp"
-    if dest is not None:
-        # dest mode never mutates the source: release unconditionally
-        try:
-            from keystone_spark.fsutil import (
-                assert_no_write_lock,
-                pointer_target,
-                write_latest_pointer,
-            )
-
-            assert_no_write_lock(spark, path)
-            cfg, tables = _compact_minhash_rewrite(spark, path, dest,
-                                                   fresh_dest=True)
-            ptr = write_latest_pointer(spark, root,
-                                       pointer_target(root, dest))
-        finally:
-            release_compact_lock(spark, path)
-        from keystone_spark.fsutil import count_parquet_files
-
-        return {
-            "dest": dest,
-            "pointer_version": ptr,
-            "band_files_after": count_parquet_files(
-                spark, f"{dest}/bands"),
-            "orphan_generations_purged": cfg["incomplete_generations"],
-        }
-    try:
-        # compact's half of the mutation-lock handshake (r12): fail
-        # fast on an in-flight add/delete instead of purging its
-        # uncommitted rows and aborting it at its epoch fence
-        from keystone_spark.fsutil import assert_no_write_lock
-
-        assert_no_write_lock(spark, path)
-        out = _compact_minhash_locked(spark, path)
-    except BaseException:
-        if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-            release_compact_lock(spark, path)
-        raise
-    from keystone_spark.fsutil import bump_compact_epoch, refresh_index_stats
-
-    bump_compact_epoch(spark, path)  # the mutation commit fence
-    # re-sync the occupancy manifest to the merged rewrite (r14)
-    refresh_index_stats(spark, path, "bands", "band")
-    release_compact_lock(spark, path)
-    return out
-
-
-def _compact_minhash_locked(spark, path: str) -> dict:
     """OPTIMIZE pass for an appended-to ``build_minhash_index``: every
     ``add_to_minhash_index`` leaves a small file set per band partition
     plus appended sigs/content files; this rewrites bands back to one
@@ -1961,105 +1831,52 @@ def _compact_minhash_locked(spark, path: str) -> dict:
     the index stores them), changing NO served rows — match results
     are identical before and after (pinned by test). It is also the
     physical PURGE point for tombstoned documents and for orphan rows
-    left by a crashed add (the staged rewrite reads committed
-    generations only and lands everything as a single committed
-    generation 0).
+    left by a crashed add (the rewrite reads committed generations
+    only and lands everything as a single committed generation 0).
 
-    The stage-and-swap goes through the Hadoop FileSystem API
-    (VERDICT r10 #2), so ``file://``, bare local and ``hdfs://`` index
-    paths compact in place; object stores emulate rename by
-    copy+delete — there, compact into a NEW index path and flip the
-    reader's pointer. Concurrent mutations are excluded by the compact
-    write-lock (the public wrapper holds it)."""
-    from keystone_spark.fsutil import (
-        count_parquet_files,
-        fs_delete,
-        swap_tables,
-    )
+    In place, or as a fresh snapshot at ``dest`` published by a
+    pointer flip: both forms and their locking are
+    ``fsutil.compact_index``. Returns ``band_files_*`` and
+    ``orphan_generations_purged``."""
 
-    stage = f"{path.rstrip('/')}/_compact_tmp"
-    cfg, tables = _compact_minhash_rewrite(spark, path, stage)
-    before = count_parquet_files(spark, f"{path}/bands")
-    swap_tables(spark, path, stage, tables)
-    # tombstones are now physically purged from the data files
-    fs_delete(spark, f"{path}/tombstones")
-    return {
-        "band_files_before": before,
-        "band_files_after": count_parquet_files(spark, f"{path}/bands"),
-        "orphan_generations_purged": cfg["incomplete_generations"],
-    }
+    def rewrite(snap, out):
+        cfg = _minhash_manifest(spark, snap)
+        committed = cfg["committed"]
+        tables = [MINHASH_TABLE, MINHASH_MEMBERS, "content"]
+        if cfg["store_texts"] and fsutil.fs_exists(spark, f"{snap}/texts"):
+            tables.append("texts")
+        live = {t: _minhash_committed(spark, snap, t, committed)
+                for t in tables}
+        id_col = [c for c in live[MINHASH_MEMBERS].columns if c != "sig"][0]
+        tomb = fsutil.read_tombstones(spark, snap, id_col)
+        n = spark.sparkContext.defaultParallelism
+        gen0 = F.lit(0)
+        for t, df in live.items():
+            if tomb is not None:  # purge point for delete tombstones
+                df = df.join(F.broadcast(tomb), id_col, "left_anti")
+            if t == MINHASH_TABLE:
+                (
+                    df.repartition(F.col(MINHASH_PART_COL))
+                    .sortWithinPartitions(MINHASH_PART_COL, "bucket")
+                    .withColumn("gen", gen0)
+                    .write.mode("overwrite").partitionBy(
+                        MINHASH_PART_COL, "gen")
+                    .parquet(f"{out}/{t}")
+                )
+            else:
+                df.repartition(n).withColumn("gen", gen0).write.mode(
+                    "overwrite"
+                ).parquet(f"{out}/{t}")
+        # single committed generation-0 manifest (the compact's commit
+        # row)
+        _minhash_append_manifest(spark, out, cfg, 0, committed=True,
+                                 mode="overwrite")
+        return (tables + ["params"],
+                {"orphan_generations_purged": cfg["incomplete_generations"]})
 
-
-def _compact_minhash_rewrite(spark, path: str, out_dir: str,
-                             fresh_dest: bool = False) -> tuple:
-    """The shared rewrite core of in-place and dest compaction: write
-    the purged, committed-only, single-generation-0 rewrite of the
-    index at ``path`` into ``out_dir`` (the compact stage, or a fresh
-    dest snapshot). Returns (cfg, written table names)."""
-    from keystone_spark.fsutil import (
-        clear_index_control_state,
-        count_parquet_files,
-        fs_delete,
-        fs_exists,
-    )
-
-    cfg = _minhash_manifest(spark, path)
-    committed = cfg["committed"]
-    bands = _minhash_committed(spark, path, "bands", committed)
-    sigs = _minhash_committed(spark, path, "sigs", committed)
-    content = _minhash_committed(spark, path, "content", committed)
-    id_col = [c for c in sigs.columns if c != "sig"][0]
-    texts = None
-    if cfg["store_texts"] and fs_exists(spark, f"{path}/texts"):
-        texts = _minhash_committed(spark, path, "texts", committed)
-    tomb = _minhash_tombstones(spark, path, id_col)
-    if tomb is not None:
-        # purge point for delete_from_minhash_index tombstones
-        bands = bands.join(F.broadcast(tomb), id_col, "left_anti")
-        sigs = sigs.join(F.broadcast(tomb), id_col, "left_anti")
-        content = content.join(F.broadcast(tomb), id_col, "left_anti")
-        if texts is not None:
-            texts = texts.join(F.broadcast(tomb), id_col, "left_anti")
-    if fresh_dest:
-        clear_index_control_state(spark, out_dir)
-    else:
-        fs_delete(spark, out_dir)
-    gen0 = F.lit(0)
-    (
-        bands.repartition(F.col("band"))
-        .sortWithinPartitions("band", "bucket")
-        .withColumn("gen", gen0)
-        .write.mode("overwrite").partitionBy("band", "gen")
-        .parquet(f"{out_dir}/bands")
-    )
-    n = spark.sparkContext.defaultParallelism
-    sigs.repartition(n).withColumn("gen", gen0).write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/sigs")
-    content.repartition(n).withColumn("gen", gen0).write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/content")
-    tables = ["bands", "sigs", "content"]
-    if texts is not None:
-        texts.repartition(n).withColumn("gen", gen0).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/texts")
-        tables.append("texts")
-    # single committed generation-0 manifest (the compact's commit row)
-    _minhash_append_manifest(spark, out_dir, cfg, 0, committed=True,
-                             mode="overwrite")
-    tables.append("params")
-    if count_parquet_files(spark, f"{out_dir}/bands") == 0:
-        fs_delete(spark, out_dir)
-        raise ValueError(
-            "compact aborted: every indexed document is tombstoned, and "
-            "the staged rewrite would leave an empty bands table that no "
-            "reader can load (parquet schema inference fails on a "
-            "file-less partitioned directory) — the live index is "
-            "untouched; delete the index directory instead of "
-            "compacting it empty"
-        )
-    return cfg, tables
+    return fsutil.compact_index(spark, path, dest, MINHASH_TABLE,
+                                MINHASH_PART_COL, rewrite,
+                                files_key=MINHASH_PART_COL)
 
 
 def neardup_against_corpus(
@@ -2240,9 +2057,7 @@ def match_minhash_index(
     only generations with a committed manifest row are served (crash
     safety, VERDICT r10 #1) — so data without a readable manifest is an
     interrupted/corrupt index, not a validable one."""
-    from keystone_spark.fsutil import resolve_index_path
-
-    path = resolve_index_path(spark, path)  # follow _LATEST
+    path = fsutil.resolve_index_path(spark, path)  # follow _LATEST
     cfg = _minhash_manifest(spark, path)
     given = {"n_hashes": n_hashes, "n_bands": n_bands,
              "shingle_k": shingle_k, "seed": seed}
@@ -2256,11 +2071,11 @@ def match_minhash_index(
                         for k, (g, s) in sorted(bad.items()))
         )
     committed = cfg["committed"]
-    bands_c = _minhash_committed(spark, path, "bands", committed).select(
-        id_col, F.col("band").cast("int").alias("band"), "bucket"
-    )
-    sigs_c = _minhash_committed(spark, path, "sigs", committed)
-    tomb = _minhash_tombstones(spark, path, id_col)
+    bands_c = _minhash_committed(
+        spark, path, MINHASH_TABLE, committed
+    ).select(id_col, F.col("band").cast("int").alias("band"), "bucket")
+    sigs_c = _minhash_committed(spark, path, MINHASH_MEMBERS, committed)
+    tomb = fsutil.read_tombstones(spark, path, id_col)
     if tomb is not None:
         # tombstoned docs stop matching IMMEDIATELY (no candidate can
         # form without a band row); physical purge happens at

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from keystone_spark import fsutil
 from keystone_spark.functions.text import tokens, word_ngrams
 from keystone_spark.plans.pipeline import ColumnTransformer, Estimator, Transformer
 
@@ -595,6 +596,9 @@ class Bm25Index:
     that search's partition pruning needs.)"""
 
     FORMAT_VERSION = 4
+    TABLE = "postings"  # the partitioned data table
+    PART_COL = "tbucket"
+    MEMBERS = "docs"  # one row per document
 
     def __init__(self, postings: DataFrame, df_t: DataFrame, params: dict,
                  path: str | None = None, docs: DataFrame | None = None):
@@ -702,7 +706,7 @@ class Bm25Index:
             .repartition(F.col("tbucket"))
             .sortWithinPartitions("tbucket", "term")
             .write.mode(mode).partitionBy("tbucket", "gen")
-            .parquet(f"{path}/postings")
+            .parquet(f"{path}/{self.TABLE}")
         )
         (
             self.df_t.select("term", "tbucket", "df")
@@ -721,7 +725,7 @@ class Bm25Index:
         (
             self.docs.withColumn("gen", F.lit(int(generation)))
             .write.mode(mode).partitionBy("gen")
-            .parquet(f"{path}/docs")
+            .parquet(f"{path}/{self.MEMBERS}")
         )
 
     @classmethod
@@ -747,13 +751,11 @@ class Bm25Index:
         and must not race a live compact of the old one — the clears
         cannot distinguish a crashed compact's leftovers from a running
         one's; coordinate rebuilds with the compaction schedule."""
-        from keystone_spark.fsutil import clear_index_control_state
-
         spark = self.postings.sparkSession
-        clear_index_control_state(spark, path)
+        fsutil.clear_index_control_state(spark, path)
         self._write_data(path, "overwrite", 0)
         self._append_manifest(
-            self.postings.sparkSession, path, self.params, 0,
+            spark, path, self.params, 0,
             self.params["n_docs"], self.params["sum_dl"],
             committed=True, mode="overwrite",
         )
@@ -761,10 +763,7 @@ class Bm25Index:
         # instead of scanning postings; any later generation append
         # stales it via the file-count fence and status falls back to
         # the scan until the next compact re-syncs it
-        from keystone_spark.fsutil import refresh_index_stats
-
-        refresh_index_stats(
-            self.postings.sparkSession, path, "postings", "tbucket")
+        fsutil.refresh_index_stats(spark, path, self.TABLE, self.PART_COL)
         self.path = path
 
     @classmethod
@@ -777,13 +776,8 @@ class Bm25Index:
         its generation number claimed). The orphan set is surfaced in
         ``params["incomplete_generations"]`` and physically purged at
         the next ``compact``."""
-        from keystone_spark.fsutil import (
-            assert_no_interrupted_swap,
-            resolve_index_path,
-        )
-
-        path = resolve_index_path(spark, path)  # follow _LATEST
-        assert_no_interrupted_swap(spark, path)
+        path = fsutil.resolve_index_path(spark, path)  # follow _LATEST
+        fsutil.assert_no_interrupted_swap(spark, path)
         gens = spark.read.parquet(f"{path}/params").collect()
         fixed = {(int(r["version"]), float(r["k1"]), float(r["b"]),
                   int(r["n_term_buckets"]), r["id_col"]) for r in gens}
@@ -801,9 +795,7 @@ class Bm25Index:
                 "table, r12) — rebuild the index with "
                 "Bm25Index.build().save()"
             )
-        from keystone_spark.fsutil import generation_sets
-
-        sets = generation_sets(gens)
+        sets = fsutil.generation_sets(gens)
         params = {
             "version": version, "k1": k1, "b": b,
             "n_docs": sum(int(r["n_docs"]) for r in gens if r["committed"]),
@@ -812,12 +804,12 @@ class Bm25Index:
             **sets,
         }
         keep = F.col("gen").isin([int(g) for g in sets["committed"]])
-        return cls(
-            spark.read.parquet(f"{path}/postings").where(keep).drop("gen"),
-            spark.read.parquet(f"{path}/df").where(keep).drop("gen"),
-            params, path=path,
-            docs=spark.read.parquet(f"{path}/docs").where(keep).drop("gen"),
-        )
+
+        def committed(table):
+            return spark.read.parquet(f"{path}/{table}").where(keep).drop("gen")
+
+        return cls(committed(cls.TABLE), committed("df"), params, path=path,
+                   docs=committed(cls.MEMBERS))
 
     @classmethod
     def add(
@@ -856,15 +848,16 @@ class Bm25Index:
         so a retried CRASHED add still lands — its orphan rows are
         never in the committed set.
 
-        Crash safety (VERDICT r10 #1): the mutation is a two-phase
-        commit — INTENT manifest row first (durably claims the
-        generation number), data appends tagged with the generation,
-        COMMIT manifest row (carrying the stats deltas) LAST. A crash
-        anywhere in between leaves an uncommitted generation that
-        ``load`` never serves (search equals the pre-add index), and a
-        blind RE-RUN of the batch is safe: it allocates the NEXT
-        generation because the intent row advanced the max, so nothing
-        the first attempt landed is ever counted. Orphans are purged
+        Crash safety (VERDICT r10 #1): the mutation is the two-phase
+        commit of ``fsutil.commit_generation`` — INTENT manifest row
+        first (durably claims the generation number), data appends
+        tagged with the generation, COMMIT manifest row (carrying the
+        stats deltas) LAST. A crash anywhere in between leaves an
+        uncommitted generation that ``load`` never serves (search
+        equals the pre-add index), and a blind RE-RUN of the batch is
+        safe: it allocates the NEXT generation because the intent row
+        advanced the max, so nothing the first attempt landed is ever
+        counted. Orphans are purged
         at the next ``compact``. Both properties are pinned by
         crash-simulation tests.
 
@@ -873,29 +866,7 @@ class Bm25Index:
         observability dict; reload via ``load`` to search the updated
         index (an already-loaded instance's file listing predates the
         append)."""
-        from keystone_spark.fsutil import (
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            read_compact_epoch,
-            release_write_lock,
-            resolve_index_path,
-        )
-
-        # mutations target the CURRENT snapshot (a dest-compact/retrain
-        # may have republished the index under a _LATEST pointer)
-        root, path = path, resolve_index_path(spark, path)
-        # mutation lock FIRST (VERDICT r11 #1 — enforced single-writer):
-        # generation allocation below reads max_generation from the
-        # manifest, so two concurrent adds without the lock would both
-        # claim gen N+1 and interleave their data rows under one
-        # committed generation. Lock-then-check-compact is the
-        # deadlock-free handshake documented on acquire_write_lock.
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
-            entry_epoch = read_compact_epoch(spark, path)
+        with fsutil.locked_mutation(spark, path) as (path, fence):
             idx = cls.load(spark, path)  # validates format + manifest
             p = idx.params
             if skip_existing_ids:
@@ -908,7 +879,7 @@ class Bm25Index:
                 # all-empty-docs replay is skipped too (the old
                 # postings-derived skip set could not see them).
                 known = idx.docs.select(p["id_col"])
-                tomb = cls._tombstones(spark, path, p["id_col"])
+                tomb = fsutil.read_tombstones(spark, path, p["id_col"])
                 if tomb is not None:
                     known = known.unionByName(tomb)
                 batch_docs = batch_docs.join(
@@ -930,37 +901,29 @@ class Bm25Index:
                 return {"batch_docs": 0, "postings_added": 0,
                         "generation": None}
             postings = postings.persist()
-            try:
-                batch = cls(postings, df_t, p, docs=docs_tbl)
-                gen = int(p["max_generation"]) + 1
-                cls._append_manifest(spark, path, p, gen, 0, 0,
-                                     committed=False)
-                batch._write_data(path, "append", gen)
-                n_postings = postings.count()
-                # COMMIT-point fences: the lock check catches a compact
-                # still running; the epoch fence catches one that
-                # started AND FINISHED inside this add's write window
-                # (its swap already erased the gen-N files — committing
-                # would record a generation with no data, or
-                # double-count on a re-allocated gen number). Either
-                # way the add aborts uncommitted and a blind retry is
-                # safe.
-                from keystone_spark.fsutil import (
-                    assert_same_compact_epoch,
-                )
+            batch = cls(postings, df_t, p, docs=docs_tbl)
+            written = {}
 
-                assert_not_compacting(spark, path)
-                assert_same_compact_epoch(spark, path, entry_epoch)
-                cls._append_manifest(spark, path, p, gen, n_docs,
-                                     sum_dl, committed=True)
+            def write_manifest(gen, committed):
+                # the intent row carries zero deltas, the commit row
+                # the batch's (n_docs, sum_dl)
+                cls._append_manifest(
+                    spark, path, p, gen, n_docs if committed else 0,
+                    sum_dl if committed else 0, committed=committed)
+
+            def write_data(gen):
+                batch._write_data(path, "append", gen)
+                written["postings"] = postings.count()
+
+            try:
+                gen = fsutil.commit_generation(
+                    fence, p["max_generation"], write_manifest, write_data)
             finally:
                 postings.unpersist()
                 docs_tbl.unpersist()
-        finally:
-            release_write_lock(spark, path)
         return {
             "batch_docs": n_docs,
-            "postings_added": n_postings,
+            "postings_added": written["postings"],
             "sum_dl_added": sum_dl,
             "generation": gen,
         }
@@ -989,27 +952,13 @@ class Bm25Index:
         cadences). The tombstone column takes the index's stored id
         type (from the postings schema), so string-id indexes delete
         correctly too."""
-        from keystone_spark.fsutil import (
-            assert_not_compacting,
-            ids_to_tombstones,
-            resolve_index_path,
-        )
 
-        root, path = path, resolve_index_path(spark, path)
-        assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_col = idx.params["id_col"]
-        id_type = idx.postings.schema[id_col].dataType
-        tomb = ids_to_tombstones(spark, ids, id_col, id_type)
-        from keystone_spark.fsutil import append_tombstones
+        def stored_id(snap):
+            idx = cls.load(spark, snap)
+            id_col = idx.params["id_col"]
+            return id_col, idx.postings.schema[id_col].dataType
 
-        return append_tombstones(spark, path, tomb, root=root)
-
-    @staticmethod
-    def _tombstones(spark, path: str, id_col: str) -> DataFrame | None:
-        from keystone_spark.fsutil import read_tombstones
-
-        return read_tombstones(spark, path, id_col)
+        return fsutil.delete_ids(spark, path, ids, stored_id)
 
     @classmethod
     def compact(cls, spark, path: str, dest: str | None = None) -> dict:
@@ -1030,213 +979,66 @@ class Bm25Index:
         by test). The subtraction reads the v4 per-doc membership
         table, so it is exact even for zero-token documents (the v3
         postings-derived form could not see them and left them counted
-        in N forever).
+        in N forever). Uncommitted orphan generations (from a crashed
+        add) are dropped too: the rewrite reads through ``load``, which
+        serves committed rows only.
 
-        In-place (``dest=None``): the rewrite stages under
-        ``{path}/_compact_tmp`` and swaps via the Hadoop FileSystem API
-        (VERDICT r10 #2), so ``file://``, bare local, and ``hdfs://``
-        index paths all compact in place. Directory rename is atomic
-        on local/HDFS; object stores emulate it by copy+delete.
+        In place, or as a fresh snapshot at ``dest`` published by a
+        pointer flip: both forms and their locking are
+        ``fsutil.compact_index``. Returns ``postings_files_*`` and
+        ``orphan_generations_purged``; the in-place form adds
+        ``generations_merged``."""
 
-        Object stores (``dest=...``, VERDICT r11 #3): the compacted
-        index is written as a FRESH index at ``dest`` (no rename of
-        live data at all) and the flip is one atomic ``_LATEST``
-        pointer publish at ``path`` — readers that ``load(path)``
-        resolve the pointer and see the old snapshot until the flip
-        and the new one after; the old snapshot dir stays intact for
-        in-flight readers (delete it once they drain). Tombstones and
-        orphan generations are purged from ``dest``; the SOURCE
-        snapshot is untouched, so its own tombstone set keeps
-        filtering it correctly. Canonical layout: snapshots under a
-        root (``{root}/v0`` -> ``compact(root, dest=f"{root}/v1")``).
-
-        Not safe to run concurrently with ``add``/``delete`` (enforced
-        by the lock handshake). Uncommitted orphan generations (from a
-        crashed add) are physically dropped here — the rewrite reads
-        through ``load``, which serves committed rows only."""
-        from keystone_spark.fsutil import (
-            acquire_compact_lock,
-            fs_delete,
-            release_compact_lock,
-            resolve_index_path,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                     root.rstrip("/")):
-            raise ValueError(
-                "compact dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
+        def rewrite(snap, out):
+            idx = cls.load(spark, snap)  # validates format + manifest
+            p = idx.params
+            id_col = p["id_col"]
+            postings, docs_tbl = idx.postings, idx.docs
+            n_docs, sum_dl = p["n_docs"], p["sum_dl"]
+            tomb = fsutil.read_tombstones(spark, snap, id_col)
+            if tomb is not None:
+                # exact purge accounting from the per-doc membership
+                # table (v4): a deleted doc with ZERO tokens left no
+                # postings, so the old postings-derived subtraction
+                # kept it counted in N forever — the docs table has its
+                # row, so N and sum_dl land exactly on the survivors.
+                gone = (
+                    docs_tbl.join(F.broadcast(tomb), id_col, "left_semi")
+                    .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
+                    .first()
+                )
+                n_docs -= int(gone["n"])
+                sum_dl -= int(gone["s"] or 0)
+                postings = postings.join(F.broadcast(tomb), id_col,
+                                         "left_anti")
+                docs_tbl = docs_tbl.join(F.broadcast(tomb), id_col,
+                                         "left_anti")
+            # one whole bucket per task -> one right-sized file per
+            # bucket directory; _write_data re-sorts by (tbucket, term)
+            # for row-group pruning. df is RE-DERIVED from the
+            # (surviving) postings — exact by construction (one posting
+            # row per (doc, term)), and the single code path that is
+            # correct both with and without tombstones.
+            merged = cls(
+                postings.repartition(F.col(cls.PART_COL)),
+                postings.groupBy("term", cls.PART_COL).agg(
+                    F.count("*").alias("df")),
+                p,
+                docs=docs_tbl.repartition(
+                    spark.sparkContext.defaultParallelism),
             )
-        # lock FIRST, list/load after: the staged rewrite's file
-        # listing and tombstone read must postdate the lock, or a
-        # mutation committing in between is silently erased by the swap
-        acquire_compact_lock(spark, path)
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        if dest is not None:
-            # dest mode never mutates the source, so the lock is
-            # released unconditionally — no repair path to keep it for
-            try:
-                from keystone_spark.fsutil import assert_no_write_lock
+            merged._write_data(out, "overwrite", 0)
+            cls._append_manifest(spark, out, p, 0, n_docs, sum_dl,
+                                 committed=True, mode="overwrite")
+            return ([cls.TABLE, "df", cls.MEMBERS, "params"],
+                    {"orphan_generations_purged":
+                     p["incomplete_generations"]})
 
-                assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                return cls._compact_into(spark, root, path, idx, dest)
-            finally:
-                release_compact_lock(spark, path)
-        try:
-            # compact's half of the mutation-lock handshake (r12): an
-            # in-flight add/delete would otherwise be purged as orphans
-            # and aborted at its epoch fence — fail fast instead
-            from keystone_spark.fsutil import assert_no_write_lock
-
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)  # validates format + manifest
-            fs_delete(spark, stage)
-            return cls._compact_locked(spark, path, idx, stage)
-        except BaseException:
-            # staging/guard failure (live index untouched) — or a swap
-            # failure, where the lock must stay held until repair; the
-            # marker tells the two apart
-            from keystone_spark.fsutil import SWAP_MARKER, fs_exists
-
-            if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-                release_compact_lock(spark, path)
-            raise
-
-    @classmethod
-    def _purged_for_compact(cls, spark, path: str, idx: "Bm25Index"
-                            ) -> tuple["Bm25Index", int, int]:
-        """(merged index over surviving docs, exact n_docs, sum_dl) —
-        the shared rewrite core of in-place and dest compaction."""
-        p = idx.params
-        id_col = p["id_col"]
-        postings = idx.postings
-        docs_tbl = idx.docs
-        n_docs, sum_dl = p["n_docs"], p["sum_dl"]
-        tomb = cls._tombstones(spark, path, id_col)
-        if tomb is not None:
-            # exact purge accounting from the per-doc membership table
-            # (v4): a deleted doc with ZERO tokens left no postings, so
-            # the old postings-derived subtraction kept it counted in N
-            # forever — the docs table has its row, so N and sum_dl
-            # land exactly on the surviving corpus.
-            gone = (
-                docs_tbl.join(F.broadcast(tomb), id_col, "left_semi")
-                .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-                .first()
-            )
-            n_docs -= int(gone["n"])
-            sum_dl -= int(gone["s"] or 0)
-            postings = postings.join(F.broadcast(tomb), id_col,
-                                     "left_anti")
-            docs_tbl = docs_tbl.join(F.broadcast(tomb), id_col,
-                                     "left_anti")
-        # one whole bucket per task -> one right-sized file per bucket
-        # directory; _write_data re-sorts by (tbucket, term) for
-        # row-group pruning. df is RE-DERIVED from the (surviving)
-        # postings — exact by construction (one posting row per
-        # (doc, term)), and the single code path that is correct both
-        # with and without tombstones.
-        n = spark.sparkContext.defaultParallelism
-        merged = cls(
-            postings.repartition(F.col("tbucket")),
-            postings.groupBy("term", "tbucket").agg(
-                F.count("*").alias("df")
-            ),
-            p,
-            docs=docs_tbl.repartition(n),
-        )
-        return merged, n_docs, sum_dl
-
-    @classmethod
-    def _compact_into(cls, spark, root: str, path: str,
-                      idx: "Bm25Index", dest: str) -> dict:
-        """Dest-mode compact body (source lock held by the caller):
-        write the purged rewrite as a fresh index at ``dest``, then
-        publish it with one atomic ``_LATEST`` pointer flip at
-        ``root`` — the object-store-safe path (no rename of live
-        data)."""
-        from keystone_spark.fsutil import (
-            clear_index_control_state,
-            count_parquet_files,
-            fs_delete,
-            pointer_target,
-            write_latest_pointer,
-        )
-
-        merged, n_docs, sum_dl = cls._purged_for_compact(spark, path,
-                                                         idx)
-        clear_index_control_state(spark, dest)
-        merged._write_data(dest, "overwrite", 0)
-        cls._append_manifest(spark, dest, idx.params, 0, n_docs, sum_dl,
-                             committed=True, mode="overwrite")
-        if count_parquet_files(spark, f"{dest}/postings") == 0:
-            fs_delete(spark, dest)
-            raise ValueError(
-                "compact aborted: every document is tombstoned, and "
-                "the rewritten postings table at dest would be empty "
-                "(no reader can load a file-less directory) — the "
-                "live index is untouched; delete the index instead of "
-                "compacting it empty"
-            )
-        ptr = write_latest_pointer(spark, root,
-                                   pointer_target(root, dest))
-        return {
-            "dest": dest,
-            "pointer_version": ptr,
-            "postings_files_after": count_parquet_files(
-                spark, f"{dest}/postings"),
-            "orphan_generations_purged":
-                idx.params["incomplete_generations"],
-        }
-
-    @classmethod
-    def _compact_locked(cls, spark, path: str, idx: "Bm25Index",
-                        stage: str) -> dict:
-        from keystone_spark.fsutil import (
-            count_parquet_files,
-            fs_delete,
-            release_compact_lock,
-            swap_tables,
-        )
-
-        p = idx.params
-        merged, n_docs, sum_dl = cls._purged_for_compact(spark, path,
-                                                         idx)
-        merged._write_data(stage, "overwrite", 0)
-        cls._append_manifest(spark, stage, p, 0, n_docs, sum_dl,
-                             committed=True, mode="overwrite")
-        if count_parquet_files(spark, f"{stage}/postings") == 0:
-            fs_delete(spark, stage)
-            raise ValueError(
-                "compact aborted: every document is tombstoned, and the "
-                "staged rewrite would leave an empty postings table that "
-                "no reader can load (parquet schema inference fails on "
-                "a file-less directory) — the live index is untouched; "
-                "delete the index directory instead of compacting it "
-                "empty"
-            )
-        files_before = count_parquet_files(spark, f"{path}/postings")
-        swap_tables(spark, path, stage,
-                    ["postings", "df", "docs", "params"])
-        # tombstones are now physically purged from the data files
-        fs_delete(spark, f"{path}/tombstones")
-        from keystone_spark.fsutil import (
-            bump_compact_epoch,
-            refresh_index_stats,
-        )
-
-        bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the merged rewrite (r14)
-        refresh_index_stats(spark, path, "postings", "tbucket")
-        release_compact_lock(spark, path)
-        return {"postings_files_before": files_before,
-                "postings_files_after": count_parquet_files(
-                    spark, f"{path}/postings"),
-                "generations_merged": True,
-                "orphan_generations_purged":
-                    p["incomplete_generations"]}
+        out = fsutil.compact_index(spark, path, dest, cls.TABLE,
+                                   cls.PART_COL, rewrite)
+        if dest is None:
+            out["generations_merged"] = True
+        return out
 
     def search(
         self,
@@ -1308,7 +1110,7 @@ class Bm25Index:
             # deleted docs vanish from results immediately; corpus
             # stats stay pre-delete until compact purges (see delete —
             # deliberate Lucene deleted-docs-until-merge parity)
-            tomb = self._tombstones(spark, self.path, id_col)
+            tomb = fsutil.read_tombstones(spark, self.path, id_col)
             if tomb is not None:
                 sub = sub.join(F.broadcast(tomb), id_col, "left_anti")
         # per-term df = sum of its generation deltas over the pruned

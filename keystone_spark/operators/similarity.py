@@ -547,22 +547,15 @@ def _cell_histogram(df: DataFrame) -> dict:
     }
 
 
-def _check_new_dest(root: str, path: str, dest: str, verb: str) -> None:
-    if dest.rstrip("/") in (path.rstrip("/"), root.rstrip("/")):
-        raise ValueError(
-            f"{verb} dest must be a NEW index path — not the "
-            "current snapshot, and not the pointer root itself"
-        )
-
-
 class _IvfFamily:
     """The storage and commit protocol shared by the two IVF families —
     one logical index (frozen coarse centroids, a table partitioned by
     ``cell``, tombstones) with two physical encodings: ``IvfIndex``
     keeps the raw vectors in ``corpus``, ``IvfPqIndex`` keeps PQ codes
     in ``codes``. This class owns ``add``, ``delete``, ``compact``, the
-    lock/publish shell of ``retrain`` and ``save``/``load``. A family
-    supplies:
+    lock/publish shell of ``retrain`` and ``save``/``load``, each a
+    thin caller of the protocol in ``fsutil`` (``locked_mutation``,
+    ``delete_ids``, ``compact_index``). A family supplies:
 
     - ``TABLE`` (the cell-partitioned table) and ``MANIFEST`` (the
       model JSON, also the family's on-disk marker);
@@ -576,6 +569,7 @@ class _IvfFamily:
 
     TABLE: str
     MANIFEST: str
+    PART_COL = "cell"
 
     def _load_tombstones(self, spark) -> DataFrame | None:
         if self.path is None:
@@ -639,16 +633,7 @@ class _IvfFamily:
         id until ``compact`` purges its tombstone (search would
         anti-join the new row out anyway); re-ingest deleted content
         under a fresh id instead."""
-        # mutations target the CURRENT snapshot (a dest-compact or
-        # retrain may have republished under a _LATEST pointer)
-        root, path = path, fsutil.resolve_index_path(spark, path)
-        # mutation lock FIRST (VERDICT r11 #1): serializes concurrent
-        # adds/deletes; lock-then-check-compact is the deadlock-free
-        # handshake documented on acquire_write_lock
-        fsutil.acquire_write_lock(spark, path)
-        try:
-            fsutil.assert_latest_unchanged(spark, root, path)
-            fsutil.assert_not_compacting(spark, path)
+        with fsutil.locked_mutation(spark, path) as (path, fence):
             idx = cls.load(spark, path)
             # pin the batch to the STORED schema (r13): an append whose
             # id/vector types differ from the table (array<double>
@@ -674,25 +659,18 @@ class _IvfFamily:
                 # before this batch existed — committing under it hands
                 # the swap rows it will erase
                 fsutil.assert_not_compacting(spark, path)
-                entry_epoch = fsutil.read_compact_epoch(spark, path)
                 # pre-write stats read (r14): validation is against the
                 # PRE-append file listing, so it must happen before the
                 # parquet write changes the count
                 pre_counts = fsutil.read_valid_index_stats(
-                    spark, path, cls.TABLE, "cell")
-                rows.write.mode("append").partitionBy("cell").parquet(
-                    f"{path}/{cls.TABLE}")
-                # post-write lock re-check (ADVICE r11 #2): the write
-                # job is the LONGEST phase — a compact that STARTED
-                # during it and is still running holds the lock but has
-                # not bumped the epoch yet, so the epoch fence alone
-                # would pass while the compact's swap goes on to erase
-                # the just-appended rows. Same pattern as
-                # fsutil.append_tombstones and Bm25Index.add.
+                    spark, path, cls.TABLE, cls.PART_COL)
+                rows.write.mode("append").partitionBy(
+                    cls.PART_COL).parquet(f"{path}/{cls.TABLE}")
+                # post-write fence (ADVICE r11 #2): the write job is the
+                # LONGEST phase, and a compact that started during it
+                # would erase the just-appended rows
                 try:
-                    fsutil.assert_not_compacting(spark, path)
-                    fsutil.assert_same_compact_epoch(
-                        spark, path, entry_epoch)
+                    fence()
                 except ValueError as e:
                     # re-wrap PRESERVING IndexContention (r13): the
                     # streaming fold's retry loop keys on the class
@@ -712,14 +690,12 @@ class _IvfFamily:
                     for c, n in cells.items():
                         pre_counts[c] = pre_counts.get(c, 0) + n
                     fsutil.write_index_stats(
-                        spark, path, cls.TABLE, "cell", pre_counts)
+                        spark, path, cls.TABLE, cls.PART_COL, pre_counts)
                 else:
                     fsutil.refresh_index_stats(
-                        spark, path, cls.TABLE, "cell")
+                        spark, path, cls.TABLE, cls.PART_COL)
             finally:
                 rows.unpersist()
-        finally:
-            fsutil.release_write_lock(spark, path)
         total = sum(cells.values())
         return {"vectors_added": total,
                 "cells_touched": len(cells), "cell_histogram": cells,
@@ -740,12 +716,12 @@ class _IvfFamily:
         ``compact`` physically purges its rows. ``ids`` is a list or a
         one-column DataFrame (typed from the stored table schema);
         unknown ids are harmless no-op rows."""
-        root, path = path, fsutil.resolve_index_path(spark, path)
-        fsutil.assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_type = idx.indexed.schema[idx.id_col].dataType
-        tomb = fsutil.ids_to_tombstones(spark, ids, idx.id_col, id_type)
-        return fsutil.append_tombstones(spark, path, tomb, root=root)
+
+        def stored_id(snap):
+            idx = cls.load(spark, snap)
+            return idx.id_col, idx.indexed.schema[idx.id_col].dataType
+
+        return fsutil.delete_ids(spark, path, ids, stored_id)
 
     @classmethod
     def compact(cls, spark, path: str, dest: str | None = None) -> dict:
@@ -753,125 +729,63 @@ class _IvfFamily:
         one file per cell directory (every ``add`` leaves a small file
         set per touched cell). Search results afterwards equal an index
         whose surviving rows were encoded in one pass with the same
-        frozen model (pinned by test). In-place: stage-and-swap through
-        the Hadoop FileSystem API (rename is atomic on local/HDFS
-        only). ``dest=...``: the object-store-safe form — the purged
-        table written as a FRESH index at ``dest``, published with one
-        atomic ``_LATEST`` pointer flip at ``path`` (see
-        ``Bm25Index.compact``). Not safe concurrently with ``add``
-        (enforced by the lock handshake). Returns
-        ``{TABLE}_files_before`` / ``{TABLE}_files_after`` (dest form:
-        ``dest``, ``pointer_version`` and ``{TABLE}_files_after``)."""
-        table = cls.TABLE
-        root, path = path, fsutil.resolve_index_path(spark, path)
-        if dest is not None:
-            _check_new_dest(root, path, dest, "compact")
-        # lock FIRST, load after: the rewrite's file listing and
-        # tombstone read must postdate the lock (see Bm25Index.compact).
-        # The WHOLE post-lock body sits in one try — an analyzer or IO
-        # error anywhere before the swap must release the lock, or it
-        # leaks and blocks every later mutation
-        fsutil.acquire_compact_lock(spark, path)
-        if dest is not None:
-            # dest mode never mutates the source: release
-            # unconditionally — no repair path to keep the lock for
-            try:
-                fsutil.assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                purged = copy.copy(idx)  # same frozen model, new table
-                purged.indexed = idx._live(spark).repartition(F.col("cell"))
-                purged.save(dest)
-                if fsutil.count_parquet_files(
-                        spark, f"{dest}/{table}") == 0:
-                    fsutil.fs_delete(spark, dest)
-                    raise ValueError(
-                        "compact aborted: every vector is tombstoned "
-                        f"and the rewritten {table} table at dest "
-                        "would be empty — delete the index instead of "
-                        "compacting it empty"
-                    )
-                ptr = fsutil.write_latest_pointer(
-                    spark, root, fsutil.pointer_target(root, dest))
-            finally:
-                fsutil.release_compact_lock(spark, path)
-            return {"dest": dest, "pointer_version": ptr,
-                    f"{table}_files_after": fsutil.count_parquet_files(
-                        spark, f"{dest}/{table}")}
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        try:
-            # compact's half of the mutation-lock handshake (r12)
-            fsutil.assert_no_write_lock(spark, path)
-            live = cls.load(spark, path)._live(spark)
-            fsutil.fs_delete(spark, stage)
-            (
-                live.repartition(F.col("cell"))
-                .write.mode("overwrite").partitionBy("cell")
-                .parquet(f"{stage}/{table}")
-            )
-            if fsutil.count_parquet_files(spark, f"{stage}/{table}") == 0:
-                fsutil.fs_delete(spark, stage)
-                raise ValueError(
-                    "compact aborted: every vector is tombstoned, and "
-                    f"the staged rewrite would leave an empty {table} "
-                    "table that no reader can load (parquet schema "
-                    "inference fails on a file-less directory) — the "
-                    "live index is untouched; delete the index "
-                    "directory instead of compacting it empty"
-                )
-            before = fsutil.count_parquet_files(spark, f"{path}/{table}")
-            fsutil.swap_tables(spark, path, stage, [table])
-            fsutil.fs_delete(spark, f"{path}/tombstones")
-        except BaseException:
-            if not fsutil.fs_exists(spark, f"{stage}/{fsutil.SWAP_MARKER}"):
-                fsutil.release_compact_lock(spark, path)
-            raise
-        fsutil.bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the rewritten table (r14);
-        # one narrow partition-column scan inside the already-held lock
-        fsutil.refresh_index_stats(spark, path, table, "cell")
-        fsutil.release_compact_lock(spark, path)
-        return {f"{table}_files_before": before,
-                f"{table}_files_after": fsutil.count_parquet_files(
-                    spark, f"{path}/{table}")}
+        frozen model (pinned by test). In place, or as a fresh snapshot
+        at ``dest`` published by a pointer flip: both forms, their
+        locking and their result keys (``{TABLE}_files_*``) are
+        ``fsutil.compact_index``."""
+
+        def rewrite(snap, out):
+            purged = copy.copy(cls.load(spark, snap))  # same frozen model
+            purged.indexed = purged._live(spark).repartition(
+                F.col(cls.PART_COL))
+            purged._write(out)
+            # in place, the model is unchanged: only the table swaps
+            return [cls.TABLE], {}
+
+        return fsutil.compact_index(spark, path, dest, cls.TABLE,
+                                    cls.PART_COL, rewrite)
 
     @classmethod
     def _retrain(cls, spark, path: str, dest: str, train) -> dict:
-        """The lock/publish shell of both families' ``retrain``.
+        """The shell of both families' ``retrain``: the dest form of
+        ``fsutil.compact_index`` with a rewrite that re-trains.
         ``train(idx, live)`` receives the loaded index and its
         tombstone-filtered table and returns ``(new_index, stats)``:
         the re-trained model over the re-encoded live rows (unsaved)
-        and family-specific result keys. Same locking as a
-        dest-compact: the rewrite must not race a mutation and never
-        mutates the source, so the lock is released unconditionally.
-        Tombstones are purged in ``dest`` (a retrain is also a
-        compact)."""
-        root, path = path, fsutil.resolve_index_path(spark, path)
-        _check_new_dest(root, path, dest, "retrain")
-        fsutil.acquire_compact_lock(spark, path)
-        try:
-            fsutil.assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
+        and family-specific result keys. Tombstones are purged in
+        ``dest`` (a retrain is also a compact)."""
+        trained = {}
+
+        def rewrite(snap, out):
+            idx = cls.load(spark, snap)
             new, stats = train(idx, idx._live(spark))
-            new.indexed = new.indexed.repartition(F.col("cell"))
-            new.save(dest)
-            if fsutil.count_parquet_files(
-                    spark, f"{dest}/{cls.TABLE}") == 0:
-                fsutil.fs_delete(spark, dest)
-                raise ValueError(
-                    "retrain aborted: the live corpus is empty — "
-                    "nothing to train on"
-                )
-            hist = _cell_histogram(
-                spark.read.parquet(f"{dest}/{cls.TABLE}"))
-            ptr = fsutil.write_latest_pointer(
-                spark, root, fsutil.pointer_target(root, dest))
-        finally:
-            fsutil.release_compact_lock(spark, path)
-        # n_cells reports the centroids actually trained (ADVICE r12
-        # #4): a live sample smaller than k yields len(C) < k centroids
-        return {"dest": dest, "pointer_version": ptr, "n_cells": len(new.C),
-                **stats, "vectors": sum(hist.values()),
+            new.indexed = new.indexed.repartition(F.col(cls.PART_COL))
+            new._write(out)
+            # n_cells reports the centroids actually trained (ADVICE
+            # r12 #4): a live sample smaller than k yields len(C) < k
+            trained.update(n_cells=len(new.C), **stats)
+            return [cls.TABLE], {}
+
+        out = fsutil.compact_index(spark, path, dest, cls.TABLE,
+                                   cls.PART_COL, rewrite, verb="retrain")
+        # dest's fresh occupancy manifest is the new cell histogram
+        hist = fsutil.read_valid_index_stats(
+            spark, dest, cls.TABLE, cls.PART_COL) or fsutil.scan_index_stats(
+            spark, dest, cls.TABLE, cls.PART_COL)
+        return {"dest": dest, "pointer_version": out["pointer_version"],
+                **trained, "vectors": sum(hist.values()),
                 "cell_histogram": hist}
+
+    def _write(self, path: str) -> None:
+        """The table partitioned by cell and the model JSON: what
+        ``save`` and every compact or retrain rewrite write. The JSON
+        rides the same Hadoop FileSystem as the table (file://,
+        hdfs://, bare local all work)."""
+        self.indexed.write.mode("overwrite").partitionBy(
+            self.PART_COL).parquet(f"{path}/{self.TABLE}")
+        fsutil.fs_write_text(self.indexed.sparkSession,
+                             f"{path}/{self.MANIFEST}",
+                             json.dumps(self._model_json()))
 
     def save(self, path: str) -> None:
         """The table partitioned by cell (-> partition pruning on load
@@ -881,20 +795,12 @@ class _IvfFamily:
         # at this path (single-writer contract: a rebuild must not race
         # a live compact/mutation of the old index)
         fsutil.clear_index_control_state(spark, path)
-        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/{self.TABLE}"
-        )
+        self._write(path)
         # manifest-carried occupancy (r14): one narrow partition-column
         # scan NOW so every later index-status / --if-occupancy-above /
         # streaming retrain-gate read is driver-side metadata instead
         # of a table-proportional Spark job
-        fsutil.refresh_index_stats(spark, path, self.TABLE, "cell")
-        # the model JSON rides the same Hadoop FileSystem as the table
-        # (file://, hdfs://, bare local all work) — a driver-local
-        # open() here made every non-local path fail at load before the
-        # FS-agnostic compact could even run
-        fsutil.fs_write_text(spark, f"{path}/{self.MANIFEST}",
-                             json.dumps(self._model_json()))
+        fsutil.refresh_index_stats(spark, path, self.TABLE, self.PART_COL)
         self.path = path
 
     @classmethod

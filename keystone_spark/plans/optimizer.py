@@ -87,47 +87,3 @@ def auto_cache_plan(
         if name not in chosen:
             out.append(CacheDecision(name, False, est_bytes, reuse))
     return out
-
-
-@dataclass
-class JoinChoice:
-    strategy: str  # 'broadcast' | 'shuffle_hash' | 'sort_merge'
-    reason: str
-
-
-def choose_join_strategy(
-    left_bytes: int,
-    right_bytes: int,
-    executor_mem_bytes: int = 8 << 30,
-    broadcast_threshold: int = 64 << 20,
-) -> JoinChoice:
-    """R3's cost-model idea applied to the relational layer: pick the join
-    strategy from side sizes. In production Catalyst+AQE makes this call
-    from runtime statistics — this helper exists for plan construction
-    when sizes are known a priori (e.g. a dimension table you know is
-    small but whose stats Spark hasn't collected), feeding a
-    broadcast()/hint("shuffle_hash") wrapper.
-    """
-    small = min(left_bytes, right_bytes)
-    if small <= broadcast_threshold:
-        return JoinChoice("broadcast", f"small side {small >> 20}MB <= threshold")
-    if small <= executor_mem_bytes // 8:
-        return JoinChoice(
-            "shuffle_hash", f"small side {small >> 20}MB builds an in-memory hash table"
-        )
-    return JoinChoice("sort_merge", "both sides large -> spillable sort-merge")
-
-
-def apply_join_strategy(left, right, on, choice: JoinChoice, how: str = "inner"):
-    """Lower a JoinChoice onto a DataFrame join via broadcast()/hints."""
-    from pyspark.sql import functions as F
-
-    sl, sr = left, right
-    if choice.strategy == "broadcast":
-        # broadcast the smaller side regardless of argument order
-        sr = F.broadcast(right)
-    elif choice.strategy == "shuffle_hash":
-        sr = right.hint("shuffle_hash")
-    elif choice.strategy == "sort_merge":
-        sr = right.hint("merge")
-    return sl.join(sr, on, how)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from keystone_spark import fsutil
+from keystone_spark.operators import dedup
+from keystone_spark.operators.nlp import Bm25Index
 from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
 
 
@@ -36,16 +38,17 @@ def _family(spark, snap: str) -> tuple[str, str, str, str]:
         return "sq8", "codes", "codes", None  # flat index: no partition
     for family, cls in (("ivfpq", IvfPqIndex), ("ivf", IvfIndex)):
         if fsutil.fs_exists(spark, f"{snap}/{cls.MANIFEST}"):
-            return family, cls.TABLE, cls.TABLE, "cell"
-    if fsutil.fs_exists(spark, f"{snap}/postings"):
-        return "bm25", "docs", "postings", "tbucket"
-    if fsutil.fs_exists(spark, f"{snap}/bands"):
-        return "minhash", "sigs", "bands", "band"
+            return family, cls.TABLE, cls.TABLE, cls.PART_COL
+    if fsutil.fs_exists(spark, f"{snap}/{Bm25Index.TABLE}"):
+        return "bm25", Bm25Index.MEMBERS, Bm25Index.TABLE, Bm25Index.PART_COL
+    if fsutil.fs_exists(spark, f"{snap}/{dedup.MINHASH_TABLE}"):
+        return ("minhash", dedup.MINHASH_MEMBERS, dedup.MINHASH_TABLE,
+                dedup.MINHASH_PART_COL)
     raise ValueError(
         f"no stored index recognized at {snap} — expected one of "
         f"sq8.json (sq8), {IvfPqIndex.MANIFEST} (ivfpq), "
         f"{IvfIndex.MANIFEST} (ivf), "
-        "postings/ (bm25), bands/ (minhash)"
+        f"{Bm25Index.TABLE}/ (bm25), {dedup.MINHASH_TABLE}/ (minhash)"
     )
 
 

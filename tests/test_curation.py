@@ -623,3 +623,32 @@ def test_token_budget_select_drops_null_quality_rows(spark):
     got = sorted(r["doc_id"] for r in token_budget_select(
         df, budget=100).collect())
     assert got == [1, 4]
+
+
+def test_token_budget_select_release_frees_checkpoint(spark):
+    """The boundary bucket's localCheckpoint rides the result's
+    ``_keystone_caches``: ``release(out)`` frees its RDD blocks, so
+    repeated calls leave the executors' storage where it started
+    (``unpersist``/``clearCache`` do not reach checkpoint blocks)."""
+    from keystone_spark.operators.curation import token_budget_select
+    from keystone_spark.operators.dedup import release
+
+    def rdd_blocks():
+        # {rdd id: cached partitions}; keyed by id because checkpoints
+        # leaked by earlier tests may be cleaned up mid-test
+        return {int(i.id()): int(i.numCachedPartitions())
+                for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    def new_blocks():
+        return sum(n for r, n in rdd_blocks().items() if r not in base)
+
+    df = spark.createDataFrame(
+        [(i, 10, 1.0 - i / 100) for i in range(40)],
+        "doc_id long, toks long, quality double")
+    base = set(rdd_blocks())
+    for _ in range(3):
+        out = token_budget_select(df, budget=205, n_buckets=4)
+        assert sorted(r["doc_id"] for r in out.collect()) == list(range(20))
+        assert new_blocks() > 0  # the boundary bucket is checkpointed
+        release(out)
+    assert new_blocks() == 0

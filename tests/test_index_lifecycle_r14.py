@@ -192,7 +192,7 @@ def test_ivf_status_occupancy_is_manifest_only_and_scan_parity(
 def test_stats_manifest_all_families(spark, tmp_path):
     """bm25/minhash/ivfpq: build writes the stats manifest, a
     stats-unaware generation append stales it (fence -> scan), compact
-    re-syncs it."""
+    re-syncs it, and a dest compact's fresh snapshot carries its own."""
     from keystone_spark.operators import dedup as ddp
     from keystone_spark.operators.nlp import Bm25Index
     from keystone_spark.operators.similarity import IvfPqIndex
@@ -203,6 +203,10 @@ def test_stats_manifest_all_families(spark, tmp_path):
     assert index_status(spark, pq)["occupancy"]["source"] == "manifest"
     IvfPqIndex.add(spark, pq, _vecs(spark, range(200, 210), seed=3))
     st = index_status(spark, pq)
+    assert st["occupancy"]["source"] == "manifest"
+    assert st["n_vectors"] == 74
+    IvfPqIndex.compact(spark, pq, dest=str(tmp_path / "pq_v1"))
+    st = index_status(spark, str(tmp_path / "pq_v1"))
     assert st["occupancy"]["source"] == "manifest"
     assert st["n_vectors"] == 74
 
@@ -220,10 +224,25 @@ def test_stats_manifest_all_families(spark, tmp_path):
     assert index_status(spark, bp)["occupancy"]["source"] == "scan"
     Bm25Index.compact(spark, bp)
     assert index_status(spark, bp)["occupancy"]["source"] == "manifest"
+    Bm25Index.add(spark, bp, spark.createDataFrame(
+        [(101, "one more doc")], "doc_id long, text string"
+    ).select("doc_id", F.split("text", " ").alias("toks")))
+    Bm25Index.compact(spark, bp, dest=str(tmp_path / "bm25_v1"))
+    st = index_status(spark, str(tmp_path / "bm25_v1"))
+    assert st["occupancy"]["source"] == "manifest"
+    assert st["n_docs"] == 8
 
     mh = str(tmp_path / "mh")
     ddp.build_minhash_index(docs, mh, n_hashes=32, n_bands=8)
     assert index_status(spark, mh)["occupancy"]["source"] == "manifest"
+    ddp.add_to_minhash_index(spark, mh, spark.createDataFrame(
+        [(100, "an unrelated extra document body")],
+        "doc_id long, text string"))
+    assert index_status(spark, mh)["occupancy"]["source"] == "scan"
+    ddp.compact_minhash_index(spark, mh, dest=str(tmp_path / "mh_v1"))
+    st = index_status(spark, str(tmp_path / "mh_v1"))
+    assert st["occupancy"]["source"] == "manifest"
+    assert st["n_docs"] == 7
 
 
 # ------- VERDICT r13 #1 + ADVICE r13 #4: occupancy-gated, rate-limited,

@@ -131,26 +131,3 @@ def test_fitted_pipeline_save_load_roundtrip(spark, tmp_path):
     reloaded = FittedPipeline.load(str(tmp_path / "model"))
     got = reloaded(df).orderBy("id").toPandas()["scores"].tolist()
     np.testing.assert_allclose(np.array(got), np.array(expected), rtol=1e-12)
-
-
-def test_choose_join_strategy_cases():
-    from keystone_spark.plans.optimizer import choose_join_strategy
-
-    assert choose_join_strategy(10 << 30, 1 << 20).strategy == "broadcast"
-    assert choose_join_strategy(10 << 30, 512 << 20).strategy == "shuffle_hash"
-    assert choose_join_strategy(10 << 30, 8 << 30).strategy == "sort_merge"
-
-
-def test_apply_join_strategy_plans(spark):
-    """The lowered hint must show up in the physical plan."""
-    from keystone_spark.plans.optimizer import (
-        JoinChoice,
-        apply_join_strategy,
-    )
-
-    a = spark.range(1000).withColumnRenamed("id", "k")
-    b = spark.range(100).withColumnRenamed("id", "k")
-    bc = apply_join_strategy(a, b, "k", JoinChoice("broadcast", "t"))
-    assert "BroadcastHashJoin" in bc._jdf.queryExecution().executedPlan().toString()
-    smj = apply_join_strategy(a, b, "k", JoinChoice("sort_merge", "t"))
-    assert "SortMergeJoin" in smj._jdf.queryExecution().executedPlan().toString()

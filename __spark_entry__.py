@@ -57,6 +57,67 @@ def _memo(cache: dict, key, build: Callable[[], str]) -> str:
     return val
 
 
+def _assert_pruned(out: DataFrame, col: str, n_parts: int | None,
+                   what: str) -> None:
+    """In-query pruning assertion of the index queries: ``out``'s
+    executed plan must scan with a partition filter on ``col`` and,
+    given ``n_parts``, keep strictly between 0 and ``n_parts``
+    partitions (a filter listing every partition prunes nothing)."""
+    import re
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    m = re.search(
+        rf"PartitionFilters: \[[^\]]*{col}#\d+ (?:INSET|IN) \(?([^\])]*)",
+        plan)
+    if not m:
+        raise AssertionError(
+            f"{what} lost its {col} partition filter:\n" + plan[:2000])
+    n = len(m.group(1).split(","))
+    if n_parts is not None and not 0 < n < n_parts:
+        raise AssertionError(
+            f"{what} partition filter is vacuous ({n} of {n_parts} "
+            f"{col} partitions scanned):\n" + plan[:2000])
+
+
+def _ann_invariants(out: DataFrame, exact: DataFrame, deleted=None,
+                    pred=None, meta: DataFrame | None = None) -> DataFrame:
+    """The per-probe invariant set an approximate top-10 query declares
+    (an ANN result is not value-hashable): ``n`` results, dense ranks
+    1..10 (``ranks_ok``) and recall@10 >= 0.5 against ``exact``, the
+    exact kernel's top-10 (``recall_ok``). ``pred`` adds ``filter_ok``
+    (every served row satisfies it, over ``meta``'s columns);
+    ``deleted`` adds ``no_deleted`` (no served row matches it). The
+    oracle side is ``oracle_sql``'s invariant template."""
+    hits = (
+        out.select("probe", "vec_id")
+        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
+        .groupBy("probe")
+        .agg(F.count("*").alias("hits"))
+    )
+    served, cols = out, ["probe", "n", "ranks_ok"]
+    aggs = [
+        F.count("*").cast("long").alias("n"),
+        ((F.min("rk") == 1) & (F.max("rk") == 10)
+         & (F.count_distinct("rk") == 10)).alias("ranks_ok"),
+    ]
+    if pred is not None:
+        served = out.join(meta, "vec_id")
+        aggs.append((F.sum(F.when(pred, 0).otherwise(1)) == 0)
+                    .alias("filter_ok"))
+        cols.append("filter_ok")
+    cols.append((F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"))
+    if deleted is not None:
+        aggs.append((F.sum(F.when(deleted, 1).otherwise(0)) == 0)
+                    .alias("no_deleted"))
+        cols.append("no_deleted")
+    return (
+        served.groupBy("probe").agg(*aggs)
+        .join(hits, "probe", "left")
+        .select(*cols)
+        .orderBy("probe")
+    )
+
+
 # ---------------------------------------------------------------------------
 # relational surface (SURVEY §2.11)
 # ---------------------------------------------------------------------------
@@ -1160,32 +1221,8 @@ def q_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = idx.search(e, probes, k=10, n_probe_cells=8, refine=8,
                      predicate=pred, metadata=e)
     exact = cosine_topk(e.where(pred), probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    labels = e.select("vec_id", "label")
-    per = (
-        out.join(labels, "vec_id")
-        .groupBy("probe")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            ((F.min("rk") == 1) & (F.max("rk") == 10)
-             & (F.count_distinct("rk") == 10)).alias("ranks_ok"),
-            (F.sum(F.when(F.col("label") % 3 == 0, 0).otherwise(1)) == 0
-             ).alias("filter_ok"),
-        )
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe", "n", "ranks_ok", "filter_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact, pred=pred,
+                           meta=e.select("vec_id", "label"))
 
 
 def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1323,28 +1360,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.where(F.col("vec_id") < 10)
     out = ivf_topk(e, probes, k=10, n_cells=16, n_probe_cells=8)
     exact = cosine_topk(e, probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10) & (F.count_distinct("rk") == 10)).alias(
-            "ranks_ok"
-        ),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact)
 
 
 _IVF_INDEX_CACHE: dict = {}
@@ -1379,44 +1395,10 @@ def q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=6)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[[^\]]*cell#\d+ (?:INSET|IN) \(?([^\])]*)", plan)
-    if not m:
-        raise AssertionError(
-            "IvfIndex search scan lost its cell partition filter:\n" + plan[:2000]
-        )
-    n_cells_scanned = len(m.group(1).split(","))
-    if not 0 < n_cells_scanned < 16:
-        raise AssertionError(
-            f"IvfIndex partition filter is vacuous ({n_cells_scanned} of 16 "
-            "cells scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "cell", 16, "IvfIndex search scan")
 
     exact = cosine_topk(e, probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10) & (F.count_distinct("rk") == 10)).alias(
-            "ranks_ok"
-        ),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact)
 
 
 def q_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1458,58 +1440,13 @@ def q_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = idx.search(probes, k=10, n_probe_cells=8,
                      predicate=pred, metadata=e)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*cell#\d+ (?:INSET|IN) \(?([^\])]*)",
-        plan,
-    )
-    if not m:
-        raise AssertionError(
-            "filtered IvfIndex search lost its cell partition filter "
-            "(the predicate semi-join must not defeat pruning):\n"
-            + plan[:2000]
-        )
-    n_cells_scanned = len(m.group(1).split(","))
-    if not 0 < n_cells_scanned < 16:
-        raise AssertionError(
-            f"filtered partition filter is vacuous ({n_cells_scanned} "
-            "of 16 cells scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "cell", 16, "filtered IvfIndex search")
 
     # exact ground truth over the predicate-filtered corpus — recall
     # against THIS (not the unfiltered truth) is what filtered ANN owes
     exact = cosine_topk(e.where(pred), probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    labels = e.select("vec_id", "label")
-    per = (
-        out.join(labels, "vec_id")
-        .groupBy("probe")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            ((F.min("rk") == 1) & (F.max("rk") == 10)
-             & (F.count_distinct("rk") == 10)).alias("ranks_ok"),
-            (F.sum(F.when(F.col("label") % 3 == 0, 0).otherwise(1)) == 0
-             ).alias("filter_ok"),
-        )
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            "filter_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact, pred=pred,
+                           meta=e.select("vec_id", "label"))
 
 
 def q_cosine_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1567,47 +1504,10 @@ def q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=6)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[[^\]]*cell#\d+ (?:INSET|IN) \(?([^\])]*)", plan)
-    if not m:
-        raise AssertionError(
-            "IvfIndex delete-path search lost its cell partition "
-            "filter:\n" + plan[:2000]
-        )
-    n_cells_scanned = len(m.group(1).split(","))
-    if not 0 < n_cells_scanned < 16:
-        raise AssertionError(
-            f"IvfIndex partition filter is vacuous ({n_cells_scanned} "
-            "of 16 cells scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "cell", 16, "IvfIndex delete-path search")
 
     exact = cosine_topk(e.where(~deleted), probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10) & (F.count_distinct("rk") == 10)).alias(
-            "ranks_ok"
-        ),
-        (F.sum(F.when(deleted, 1).otherwise(0)) == 0).alias("no_deleted"),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-            "no_deleted",
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact, deleted=deleted)
 
 
 def q_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1664,49 +1564,10 @@ def q_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("retrain did not purge the tombstones")
     out = idx.search(probes, k=10, n_probe_cells=6)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*cell#\d+ (?:INSET|IN) \(?([^\])]*)",
-        plan,
-    )
-    if not m:
-        raise AssertionError(
-            "retrained IvfIndex search lost its cell partition "
-            "filter:\n" + plan[:2000]
-        )
-    n_cells_scanned = len(m.group(1).split(","))
-    if not 0 < n_cells_scanned < 16:
-        raise AssertionError(
-            f"retrained partition filter is vacuous ({n_cells_scanned} "
-            "of 16 cells scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "cell", 16, "retrained IvfIndex search")
 
     exact = cosine_topk(e.where(~deleted), probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10)
-         & (F.count_distinct("rk") == 10)).alias("ranks_ok"),
-        (F.sum(F.when(deleted, 1).otherwise(0)) == 0).alias("no_deleted"),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-            "no_deleted",
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact, deleted=deleted)
 
 
 def q_ivf_stream_autoretrain_topk(spark: SparkSession, sf_dir: str
@@ -1803,49 +1664,10 @@ def q_ivf_stream_autoretrain_topk(spark: SparkSession, sf_dir: str
     # the probe union still leaves 2 cells pruned (non-vacuous filter)
     out = idx.search(probes, k=10, n_probe_cells=8)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*cell#\d+ (?:INSET|IN) \(?([^\])]*)",
-        plan,
-    )
-    if not m:
-        raise AssertionError(
-            "auto-retrained IvfIndex search lost its cell partition "
-            "filter:\n" + plan[:2000]
-        )
-    n_cells_scanned = len(m.group(1).split(","))
-    if not 0 < n_cells_scanned < 16:
-        raise AssertionError(
-            f"auto-retrained partition filter is vacuous "
-            f"({n_cells_scanned} of 16 cells scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "cell", 16, "auto-retrained IvfIndex search")
 
     exact = cosine_topk(e.where(~deleted), probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10)
-         & (F.count_distinct("rk") == 10)).alias("ranks_ok"),
-        (F.sum(F.when(deleted, 1).otherwise(0)) == 0).alias("no_deleted"),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-            "no_deleted",
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact, deleted=deleted)
 
 
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2817,28 +2639,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.where(F.col("vec_id") < 10)
     out = pq_topk(e, probes, k=10, m=16, ks=32, refine=8)
     exact = cosine_topk(e, probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10) & (F.count_distinct("rk") == 10)).alias(
-            "ranks_ok"
-        ),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact)
 
 
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2930,28 +2731,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = IvfPqIndex.load(spark, path)
     out = idx.search(e, probes, k=10, n_probe_cells=8, refine=8)
     exact = cosine_topk(e, probes, k=10)
-    hits = (
-        out.select("probe", "vec_id")
-        .join(exact.select("probe", "vec_id"), ["probe", "vec_id"])
-        .groupBy("probe")
-        .agg(F.count("*").alias("hits"))
-    )
-    per = out.groupBy("probe").agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.min("rk") == 1) & (F.max("rk") == 10) & (F.count_distinct("rk") == 10)).alias(
-            "ranks_ok"
-        ),
-    )
-    return (
-        per.join(hits, "probe", "left")
-        .select(
-            "probe",
-            "n",
-            "ranks_ok",
-            (F.coalesce(F.col("hits"), F.lit(0)) >= 5).alias("recall_ok"),
-        )
-        .orderBy("probe")
-    )
+    return _ann_invariants(out, exact)
 
 
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3638,24 +3418,7 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = idx.search(qs, k=10, k1=1.2, b=0.75)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*tbucket#\d+ (?:INSET|IN) \(?([^\])]*)",
-        plan,
-    )
-    if not m:
-        raise AssertionError(
-            "Bm25Index search scan lost its tbucket partition filter:\n"
-            + plan[:2000]
-        )
-    n_scanned = len(m.group(1).split(","))
-    if not 0 < n_scanned < 64:
-        raise AssertionError(
-            f"Bm25Index partition filter is vacuous ({n_scanned} of 64 "
-            "term buckets scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "tbucket", 64, "Bm25Index search scan")
     return out.select(
         "query_id", "doc_id", F.round("score", 6).alias("score"), "rk"
     ).orderBy("query_id", "rk")
@@ -3764,15 +3527,8 @@ def q_bm25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = idx.search(qs, k=10)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[[^\]]*tbucket#\d+ (?:INSET|IN)", plan)
-    if not m:
-        raise AssertionError(
-            "post-compact streamed Bm25Index search lost its tbucket "
-            "partition filter:\n" + plan[:2000]
-        )
+    _assert_pruned(out, "tbucket", None,
+                   "post-compact streamed Bm25Index search")
     return out.select(
         "query_id", "doc_id", F.round("score", 6).alias("score"), "rk"
     ).orderBy("query_id", "rk")
@@ -3823,24 +3579,7 @@ def q_bm25_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = idx.search(qs, k=10, k1=1.2, b=0.75)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*tbucket#\d+ (?:INSET|IN) \(?([^\])]*)",
-        plan,
-    )
-    if not m:
-        raise AssertionError(
-            "post-compact Bm25Index search lost its tbucket partition "
-            "filter:\n" + plan[:2000]
-        )
-    n_scanned = len(m.group(1).split(","))
-    if not 0 < n_scanned < 64:
-        raise AssertionError(
-            f"post-compact partition filter is vacuous ({n_scanned} of "
-            "64 term buckets scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "tbucket", 64, "post-compact Bm25Index search")
     return out.select(
         "query_id", "doc_id", F.round("score", 6).alias("score"), "rk"
     ).orderBy("query_id", "rk")
@@ -3917,24 +3656,7 @@ def q_bm25_pointer_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = idx.search(qs, k=10, k1=1.2, b=0.75)
 
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*tbucket#\d+ (?:INSET|IN) \(?([^\])]*)",
-        plan,
-    )
-    if not m:
-        raise AssertionError(
-            "pointer-resolved Bm25Index search lost its tbucket "
-            "partition filter:\n" + plan[:2000]
-        )
-    n_scanned = len(m.group(1).split(","))
-    if not 0 < n_scanned < 64:
-        raise AssertionError(
-            f"post-dest-compact partition filter is vacuous "
-            f"({n_scanned} of 64 term buckets scanned):\n" + plan[:2000]
-        )
+    _assert_pruned(out, "tbucket", 64, "pointer-resolved Bm25Index search")
     return out.select(
         "query_id", "doc_id", F.round("score", 6).alias("score"), "rk"
     ).orderBy("query_id", "rk")
@@ -6970,24 +6692,6 @@ def _oracle_sql_literals() -> dict[str, str]:
                    TRUE AS sse_reduced_ok
             FROM embeddings WHERE embedding IS NOT NULL
         """,
-        # per-probe IVF invariants: 10 dense-ranked results, recall@10 vs
-        # the exact kernel >= 0.5 (measured 0.6-0.9, deterministic seed).
-        "ivf_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS recall_ok
-            FROM embeddings WHERE vec_id < 10 ORDER BY probe
-        """,
-        # PQ ANN: same per-probe invariants as ivf_topk (min recall 9/10
-        # measured at m=16 ks=32 refine=8, deterministic seed)
-        "pq_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS recall_ok
-            FROM embeddings WHERE vec_id < 10 ORDER BY probe
-        """,
         # SCD2 history: change points + lead validity intervals
         "scd2_intervals": """
             WITH ordered AS (
@@ -8441,14 +8145,6 @@ def _oracle_sql_literals() -> dict[str, str]:
                    MAX(CAST(props::JSON ->> 'k' AS BIGINT)) AS max_k
             FROM events GROUP BY event_type ORDER BY event_type
         """,
-        # IVF-PQ: same per-probe invariants as ivf_topk/pq_topk
-        "ivfpq_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS recall_ok
-            FROM embeddings WHERE vec_id < 10 ORDER BY probe
-        """,
         # KMV sketch at unsaturated cardinality = exact distinct/set algebra
         "kmv_distinct": """
             SELECT
@@ -8522,36 +8218,6 @@ def _oracle_sql_literals() -> dict[str, str]:
             WHERE sq > 1.15 * (SELECT AVG(sq) FROM qty)
             ORDER BY s_suppkey
         """,
-        # same invariant shape as ivf_topk at the pruned-search config
-        # (3 probes, 6/16 probed cells — the query also asserts the cell
-        # partition filter is present AND non-vacuous inside Spark)
-        "ivf_index_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS recall_ok
-            FROM embeddings WHERE vec_id < 3 ORDER BY probe
-        """,
-        "ivf_delete_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS recall_ok,
-                   TRUE AS no_deleted
-            FROM embeddings WHERE vec_id < 3 ORDER BY probe
-        """,
-        # filtered ANN invariant set: the pushed-down predicate must
-        # return a FULL k per probe (n=10 — post-filtering could not),
-        # only predicate-satisfying neighbors, recall vs the exact
-        # FILTERED kernel
-        "ivf_filtered_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS filter_ok,
-                   TRUE AS recall_ok
-            FROM embeddings WHERE vec_id < 3 ORDER BY probe
-        """,
         # budget prefix replayed as one global running sum (the engine
         # side does it bucket-wise to avoid the unpartitioned window)
         "token_budget_select": """
@@ -8598,15 +8264,6 @@ def _oracle_sql_literals() -> dict[str, str]:
                                  AND e.label = p.label
                 WHERE p.vec_id < 6) t
             WHERE rk <= 5 ORDER BY probe, rk
-        """,
-        # PQ-family filtered ANN invariant set (see ivf_filtered_topk)
-        "ivfpq_filtered_topk": """
-            SELECT CAST(vec_id AS BIGINT) AS probe,
-                   CAST(10 AS BIGINT) AS n,
-                   TRUE AS ranks_ok,
-                   TRUE AS filter_ok,
-                   TRUE AS recall_ok
-            FROM embeddings WHERE vec_id < 3 ORDER BY probe
         """,
         # MMR greedy selection replayed as UNROLLED chained CTEs: cand =
         # exact top-8 per probe; s1 = argmax rel; each later step scores
@@ -9122,14 +8779,33 @@ def oracle_sql() -> dict[str, str]:
     # the same survivor-corpus form with the 7-residue delete set
     d["bm25_pointer_compact"] = d["bm25_search"].replace(
         "FROM documents)", "FROM documents WHERE doc_id % 10 <> 7)")
-    # ivf_retrain_topk declares the same invariant set as
-    # ivf_delete_topk (k results, dense ranks, recall floor vs the
-    # exact kernel over survivors, no deleted id served) — computed by
-    # the Spark query over the RETRAINED pointer-resolved snapshot
-    d["ivf_retrain_topk"] = d["ivf_delete_topk"]
-    # ivf_stream_autoretrain_topk (r13): same invariant set again,
-    # computed over the snapshot the STREAMING fold's auto-retrain
-    # published (delete -> stream-ingest -> fold fires retrain ->
-    # pointer-resolved search over the surviving union)
-    d["ivf_stream_autoretrain_topk"] = d["ivf_delete_topk"]
+    # the nine approximate top-10 queries declare a per-probe invariant
+    # set instead of values (``_ann_invariants``: n = 10, dense ranks,
+    # recall@10 >= 0.5 vs the exact kernel, plus filter_ok for the
+    # filtered searches and no_deleted for the takedown, retrain and
+    # stream-retrain searches); the oracle is one row per probe with
+    # every flag TRUE. Measured recall is deterministic (seeded
+    # centroids and codebooks): 0.6-0.9 for ivf_topk, min 9/10 for
+    # pq_topk at m=16 ks=32 refine=8.
+    def ann_invariants(n_probes: int, *flags: str) -> str:
+        cols = "".join(f",\n                   TRUE AS {f}" for f in flags)
+        return f"""
+            SELECT CAST(vec_id AS BIGINT) AS probe,
+                   CAST(10 AS BIGINT) AS n,
+                   TRUE AS ranks_ok{cols}
+            FROM embeddings WHERE vec_id < {n_probes} ORDER BY probe
+        """
+
+    for name, n_probes, flags in (
+        ("ivf_topk", 10, ("recall_ok",)),
+        ("pq_topk", 10, ("recall_ok",)),
+        ("ivfpq_topk", 10, ("recall_ok",)),
+        ("ivf_index_topk", 3, ("recall_ok",)),
+        ("ivf_filtered_topk", 3, ("filter_ok", "recall_ok")),
+        ("ivfpq_filtered_topk", 3, ("filter_ok", "recall_ok")),
+        ("ivf_delete_topk", 3, ("recall_ok", "no_deleted")),
+        ("ivf_retrain_topk", 3, ("recall_ok", "no_deleted")),
+        ("ivf_stream_autoretrain_topk", 3, ("recall_ok", "no_deleted")),
+    ):
+        d[name] = ann_invariants(n_probes, *flags)
     return d

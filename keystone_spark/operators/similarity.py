@@ -1,16 +1,23 @@
 """Similarity search over embedding columns (array<float/double>).
 
 Design for 100 TB:
-- ``cosine_topk``: brute-force exact top-k, but *vectorized and pruned* —
-  probes are collected (they're small by construction: you search for k
-  neighbors of a handful of queries) and shipped to every partition; each
-  Arrow batch computes one BLAS-3 gemm (normalized X @ P.T) and emits only
-  its partition-local top-k per probe, so the shuffle carries
-  O(partitions * probes * k) rows instead of O(N * probes). A final
-  window rank reduces to the global top-k.
+- One exact kernel, ``_exact_topk``: probes are collected (they're small
+  by construction: you search for k neighbors of a handful of queries)
+  and shipped to every partition; each Arrow batch computes one BLAS-3
+  gemm (normalized X @ P.T), optionally masks each probe's column to the
+  rows it may see (its IVF cells, its group), and emits only its
+  partition-local top-k per probe by (cos desc, id), so the shuffle
+  carries O(partitions * probes * k) rows instead of O(N * probes). One
+  window rank (``_rank``) reduces to the global top-k. ``cosine_topk``
+  (no mask), ``IvfIndex.search`` (the probe's cells) and
+  ``grouped_cosine_topk`` (the probe's group) are its three callers.
   This is the Spark-idiomatic form of KeystoneML's per-partition
   row-batching + gemm trick (reference: utils/MatrixUtils.scala#rowsToMatrix,
   used by nodes/learning/LinearMapper.scala) — Arrow gives us the batching.
+- One ADC kernel, in ``IvfPqIndex.search``: PQ candidates by asymmetric
+  distance, then an exact re-rank of the bounded candidate set.
+  ``ivf_topk`` and ``pq_topk`` are the on-the-fly compositions of the
+  two index families (build without save, then search).
 - ``lsh_bucket_topk``: the approximate scale path — random-hyperplane
   signatures bucket vectors so candidate generation is an equi-join on
   (band, bucket); exact rerank within candidates. Recall is tunable via
@@ -41,18 +48,96 @@ from keystone_spark import fsutil
 
 
 def _collect_probes(
-    probes: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    rows = probes.select(id_col, vec_col).where(F.col(vec_col).isNotNull()).collect()
+    probes: DataFrame, id_col: str, vec_col: str, *extra: str
+) -> tuple:
+    """The non-null probe vectors as (ids, float64 matrix), plus one list
+    per ``extra`` column. Every search starts here, so every search
+    rejects an empty probe set with the same error."""
+    rows = (probes.select(id_col, vec_col, *extra)
+            .where(F.col(vec_col).isNotNull()).collect())
+    if not rows:
+        raise ValueError("probes must be a non-empty DataFrame of vectors")
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
-    return ids, mat
+    return (ids, mat, *([r[2 + i] for r in rows] for i in range(len(extra))))
 
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return mat / norms
+
+
+def _scored_schema(id_col: str, score: str) -> StructType:
+    return StructType([
+        StructField("probe", LongType()),
+        StructField(id_col, LongType()),
+        StructField(score, DoubleType()),
+    ])
+
+
+def _rank(partial: DataFrame, k: int, id_col: str,
+          score: str = "cos") -> DataFrame:
+    """The global step of every top-k here: rank each probe's
+    partition-local candidates by (score desc, id) as ``rk`` and keep
+    the first k."""
+    w = Window.partitionBy("probe").orderBy(F.col(score).desc(), id_col)
+    return (
+        partial.withColumn("rk", F.row_number().over(w).cast("long"))
+        .where(F.col("rk") <= k)
+    )
+
+
+def _exact_topk(
+    rows: DataFrame,
+    p_ids: np.ndarray,
+    p_norm: np.ndarray,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+    mask: tuple[str, list] | None = None,
+) -> DataFrame:
+    """The exact cosine top-k kernel: per Arrow batch of ``rows`` one
+    gemm against the normalized probes, then each probe's
+    partition-local top-k by (cos desc, id), then ``_rank``.
+
+    ``mask=(col, keys)`` restricts probe j to the rows whose ``col``
+    value is in ``keys[j]`` (IVF: the probe's cells; grouped search:
+    the probe's group). Returns (probe, {id_col}, cos, rk)."""
+    mask_col, keys = mask or (None, None)
+
+    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy(np.int64)
+            X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+            sims = _normalize(X) @ p_norm.T  # (n, n_probes) — one gemm
+            vals = None if mask_col is None else pdf[mask_col].to_numpy()
+            out_p, out_i, out_c = [], [], []
+            for j in range(len(p_ids)):
+                col = sims[:, j]
+                keep = (ids != p_ids[j] if exclude_self
+                        else np.ones(len(ids), dtype=bool))
+                if vals is not None:
+                    keep &= np.isin(vals, keys[j])
+                idx = np.nonzero(keep)[0]
+                if len(idx) == 0:
+                    continue
+                take = min(k, len(idx))
+                # partial top-k: argpartition then exact order (cos desc, id)
+                cand = idx[np.argpartition(-col[idx], take - 1)[:take]]
+                cand = cand[np.lexsort((ids[cand], -col[cand]))]
+                out_p.extend([p_ids[j]] * len(cand))
+                out_i.extend(ids[cand].tolist())
+                out_c.extend(col[cand].tolist())
+            yield pd.DataFrame({"probe": out_p, id_col: out_i, "cos": out_c})
+
+    cols = [id_col, vec_col] + ([mask_col] if mask_col else [])
+    partial = rows.select(*cols).mapInPandas(
+        part, _scored_schema(id_col, "cos"))
+    return _rank(partial, k, id_col)
 
 
 def cosine_topk(
@@ -72,52 +157,9 @@ def cosine_topk(
     probe_id_col = probe_id_col or id_col
     data = data.where(F.col(vec_col).isNotNull())  # null vec: no neighbors
     p_ids, p_mat = _collect_probes(probes, probe_id_col, vec_col)
-    if p_mat.ndim != 2 or len(p_ids) == 0:
-        raise ValueError("probes must be a non-empty DataFrame of vectors")
-    p_norm = _normalize(p_mat)  # small: broadcast via task closure
-    n_probes = len(p_ids)
-    per_part_k = k
-
-    out_schema = StructType(
-        [
-            StructField("probe", LongType()),
-            StructField(id_col, LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(np.int64)
-            X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            sims = _normalize(X) @ p_norm.T  # (n, n_probes) — one gemm
-            out_p, out_i, out_c = [], [], []
-            for j in range(n_probes):
-                col = sims[:, j]
-                mask = np.ones(len(ids), dtype=bool)
-                if exclude_self:
-                    mask = ids != p_ids[j]
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                take = min(per_part_k, len(idx))
-                # partial top-k: argpartition then exact order (cos desc, id)
-                cand = idx[np.argpartition(-col[idx], take - 1)[:take]]
-                order = np.lexsort((ids[cand], -col[cand]))
-                cand = cand[order]
-                out_p.extend([p_ids[j]] * len(cand))
-                out_i.extend(ids[cand].tolist())
-                out_c.extend(col[cand].tolist())
-            yield pd.DataFrame({"probe": out_p, id_col: out_i, "cos": out_c})
-
-    partial = data.select(id_col, vec_col).mapInPandas(part, out_schema)
-    w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-    return (
-        partial.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-    )
+    # probes are small: the normalized matrix rides the task closure
+    return _exact_topk(data, p_ids, _normalize(p_mat), k, id_col, vec_col,
+                       exclude_self)
 
 
 def lsh_signatures(
@@ -326,11 +368,7 @@ def lsh_bucket_topk(
         .join(F.broadcast(pv) if broadcast_probes else pv, "probe")
         .select("probe", id_col, cosine_similarity("__pv", "__dv").alias("cos"))
     )
-    w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-    )
+    return _rank(scored, k, id_col)
 
 
 def _kmeans_centroids(
@@ -364,79 +402,22 @@ def ivf_topk(
     """IVF approximate cosine top-k: k-means cells prune the search space.
 
     Train: centroids from a seeded driver-local sample (IVF's standard
-    recipe — the coarse quantizer is tiny). Search: every Arrow batch
-    assigns its rows to cells with one small gemm, then scores each probe
-    only against rows falling in that probe's ``n_probe_cells`` nearest
-    cells — ~n_probe_cells/n_cells of the brute-force work. Emits
-    partition-local top-k per probe; a final window rank reduces globally,
-    so the shuffle stays O(partitions * probes * k).
+    recipe — the coarse quantizer is tiny). Search: each probe is scored
+    only against rows falling in its ``n_probe_cells`` nearest cells —
+    ~n_probe_cells/n_cells of the brute-force candidates — by the exact
+    kernel, so the shuffle stays O(partitions * probes * k).
 
-    At 100 TB you would persist the cell assignment and bucket the table
-    by cell so each query touches only its cells' files; the kernel here
-    computes assignments on the fly, which keeps the operator a pure
-    function of its inputs (same plan shape, no index-build step).
+    This is ``IvfIndex.build(...).search(...)`` without a save: the cell
+    assignment is computed on the fly, which keeps the operator a pure
+    function of its inputs (no index-build step). For repeated search at
+    scale, save the ``IvfIndex`` so each query touches only its cells'
+    files.
     """
-    data = data.where(F.col(vec_col).isNotNull())  # null vec: not indexable
-    p_ids, p_mat = _collect_probes(probes, id_col, vec_col)
-    p_norm = _normalize(p_mat)
-
-    # deterministic training sample: first sample_size rows by id
-    # (TakeOrderedAndProject — partition-local top-k, no full sort; a bare
-    # limit() would pick partition-order-dependent rows and make the
-    # centroids, and thus the whole result, nondeterministic)
-    samp = np.array(
-        [
-            r[1]
-            for r in data.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_size)
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    C = _normalize(_kmeans_centroids(_normalize(samp), n_cells, seed))
-    # each probe's n_probe_cells nearest cells (cosine == dot on normalized)
-    probe_cells = np.argsort(-(p_norm @ C.T), axis=1)[:, :n_probe_cells]
-
-    out_schema = StructType(
-        [
-            StructField("probe", LongType()),
-            StructField(id_col, LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(np.int64)
-            X = _normalize(np.asarray(list(pdf[vec_col]), dtype=np.float64))
-            cells = (X @ C.T).argmax(axis=1)
-            out_p, out_i, out_c = [], [], []
-            for j in range(len(p_ids)):
-                mask = np.isin(cells, probe_cells[j])
-                if exclude_self:
-                    mask &= ids != p_ids[j]
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                col = X[idx] @ p_norm[j]
-                take = min(k, len(idx))
-                cand = idx[np.argpartition(-col, take - 1)[:take]]
-                order = np.lexsort((ids[cand], -(X[cand] @ p_norm[j])))
-                cand = cand[order]
-                out_p.extend([p_ids[j]] * len(cand))
-                out_i.extend(ids[cand].tolist())
-                out_c.extend((X[cand] @ p_norm[j]).tolist())
-            yield pd.DataFrame({"probe": out_p, id_col: out_i, "cos": out_c})
-
-    partial = data.select(id_col, vec_col).mapInPandas(part, out_schema)
-    w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-    return (
-        partial.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-    )
+    return IvfIndex.build(
+        data, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
+        sample_size=sample_size, seed=seed,
+    ).search(probes, k=k, n_probe_cells=n_probe_cells,
+             exclude_self=exclude_self)
 
 
 def _cast_batch_checked(batch: DataFrame, id_col: str, vec_col: str,
@@ -816,8 +797,9 @@ class _IvfFamily:
 class IvfIndex(_IvfFamily):
     """Fit-once IVF index: trained centroids + a cell-assigned corpus.
 
-    ``ivf_topk`` recomputes cell assignments per query (pure function —
-    good for one-shot jobs); this class is the production shape for
+    ``ivf_topk`` is this class built and searched without a save, so it
+    recomputes cell assignments per query (pure function — good for
+    one-shot jobs); a saved index is the production shape for
     repeated search at scale: assignments are computed ONCE and the
     corpus persisted partitioned by cell, so every later search prunes to
     its probed cells' files at the scan (Spark partition pruning — at
@@ -964,49 +946,11 @@ class IvfIndex(_IvfFamily):
         ``n_probe_cells`` (the survivors may live outside the probed
         cells); raise ``n_probe_cells`` as selectivity rises — the
         standard IVF prefilter trade-off."""
-        id_col, vec_col = self.id_col, self.vec_col
         p_ids, p_norm, probe_cells, subset = self._pruned_scan(
             probes, n_probe_cells, predicate, metadata)
-
-        out_schema = StructType(
-            [
-                StructField("probe", LongType()),
-                StructField(id_col, LongType()),
-                StructField("cos", DoubleType()),
-            ]
-        )
-
-        def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ids = pdf[id_col].to_numpy(np.int64)
-                cells = pdf["cell"].to_numpy(np.int64)
-                X = _normalize(np.asarray(list(pdf[vec_col]), dtype=np.float64))
-                out_p, out_i, out_c = [], [], []
-                for j in range(len(p_ids)):
-                    mask = np.isin(cells, probe_cells[j])
-                    if exclude_self:
-                        mask &= ids != p_ids[j]
-                    idx = np.nonzero(mask)[0]
-                    if len(idx) == 0:
-                        continue
-                    col = X[idx] @ p_norm[j]
-                    take = min(k, len(idx))
-                    cand = idx[np.argpartition(-col, take - 1)[:take]]
-                    order = np.lexsort((ids[cand], -(X[cand] @ p_norm[j])))
-                    cand = cand[order]
-                    out_p.extend([p_ids[j]] * len(cand))
-                    out_i.extend(ids[cand].tolist())
-                    out_c.extend((X[cand] @ p_norm[j]).tolist())
-                yield pd.DataFrame({"probe": out_p, id_col: out_i, "cos": out_c})
-
-        partial = subset.mapInPandas(part, out_schema)
-        w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-        return (
-            partial.withColumn("rk", F.row_number().over(w).cast("long"))
-            .where(F.col("rk") <= k)
-        )
+        return _exact_topk(subset, p_ids, p_norm, k, self.id_col,
+                           self.vec_col, exclude_self,
+                           mask=("cell", probe_cells))
 
 
 def _train_pq_codebooks(
@@ -1047,128 +991,21 @@ def pq_topk(
 
     The 100 TB story is MEMORY: each vector compresses to m uint8 codes
     (64-dim float32: 256 B -> 8 B at m=8, 32x), so a corpus that cannot
-    hold its raw vectors in executor memory can still scan its codes; at
-    scale you would persist the codes once next to the ids (exactly like
-    ``IvfIndex`` persists cells) and combine both (IVF-PQ). Here codes
-    are computed on the fly so the operator stays a pure function of its
-    inputs.
+    hold its raw vectors in executor memory can still scan its codes.
 
-    Search per Arrow batch: encode rows (m small gemms against the
-    codebooks), build each probe's (m, ks) lookup table of subspace
-    dots, ADC score = sum of table entries at the row's codes (numpy
-    take + sum — no per-row Python), emit partition-local top-(refine*k)
-    by ADC. Globally: rank ADC candidates, keep refine*k per probe,
-    re-rank THOSE exactly (join back to the raw vectors — a bounded
-    candidate join, O(probes*refine*k) rows), final top-k. The exact
-    re-rank bounds the damage of quantization error: a true neighbor is
-    lost only if ADC pushes it out of the top refine*k entirely.
+    This is ``IvfPqIndex`` with a single cell, built without a save and
+    searched at once: codes are computed on the fly so the operator
+    stays a pure function of its inputs, and the ADC scan, the
+    top-(refine*k) candidate cut and the exact re-rank against ``data``
+    are that index's (see ``IvfPqIndex.search``). The exact re-rank
+    bounds the damage of quantization error: a true neighbor is lost
+    only if ADC pushes it out of the top refine*k entirely.
     """
-    data = data.where(F.col(vec_col).isNotNull())
-    p_ids, p_mat = _collect_probes(probes, id_col, vec_col)
-    if p_mat.ndim != 2 or len(p_ids) == 0:
-        raise ValueError("probes must be a non-empty DataFrame of vectors")
-    p_norm = _normalize(p_mat)
-
-    samp = np.array(
-        [
-            r[1]
-            for r in data.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_size)
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    books = _train_pq_codebooks(_normalize(samp), m, ks, seed)
-    dsub = books.shape[2]
-    # per-probe ADC lookup tables: luts[p, j, c] = <probe_p[j], books[j, c]>
-    luts = np.einsum("pjd,jcd->pjc", p_norm.reshape(len(p_ids), m, dsub), books)
-
-    n_cand = refine * k
-    out_schema = StructType(
-        [
-            StructField("probe", LongType()),
-            StructField(id_col, LongType()),
-            StructField("adc", DoubleType()),
-        ]
-    )
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(np.int64)
-            X = _normalize(np.asarray(list(pdf[vec_col]), dtype=np.float64))
-            sub = X.reshape(len(X), m, dsub)
-            # encode: nearest codebook entry per subspace (m small gemms;
-            # ||c||^2 term suffices — argmin over -2<x,c>+||c||^2)
-            codes = np.empty((len(X), m), dtype=np.int64)
-            for j in range(m):
-                d2 = (
-                    (books[j] ** 2).sum(axis=1)[None, :]
-                    - 2.0 * (sub[:, j, :] @ books[j].T)
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            out_p, out_i, out_a = [], [], []
-            for p in range(len(p_ids)):
-                # ADC: gather each row's m table entries and sum
-                adc = luts[p][np.arange(m)[None, :], codes].sum(axis=1)
-                mask = (
-                    ids != p_ids[p]
-                    if exclude_self
-                    else np.ones(len(ids), dtype=bool)
-                )
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                take = min(n_cand, len(idx))
-                cand = idx[np.argpartition(-adc[idx], take - 1)[:take]]
-                out_p.extend([p_ids[p]] * len(cand))
-                out_i.extend(ids[cand].tolist())
-                out_a.extend(adc[cand].tolist())
-            yield pd.DataFrame({"probe": out_p, id_col: out_i, "adc": out_a})
-
-    partial = data.select(id_col, vec_col).mapInPandas(part, out_schema)
-    w_adc = Window.partitionBy("probe").orderBy(F.col("adc").desc(), id_col)
-    cands = (
-        partial.withColumn("__r", F.row_number().over(w_adc))
-        .where(F.col("__r") <= n_cand)
-        .select("probe", id_col)
-    )
-
-    # exact re-rank of the bounded candidate set: join back to the raw
-    # vectors, per-row exact cosine against the (small, closured) probes
-    rerank_schema = StructType(
-        [
-            StructField("probe", LongType()),
-            StructField(id_col, LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
-    probe_row = {int(pid): i for i, pid in enumerate(p_ids)}
-    joined = cands.join(data.select(id_col, vec_col), id_col)
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = _normalize(np.asarray(list(pdf[vec_col]), dtype=np.float64))
-            pi = np.array([probe_row[int(p)] for p in pdf["probe"]])
-            cos = np.einsum("nd,nd->n", X, p_norm[pi])
-            yield pd.DataFrame(
-                {
-                    "probe": pdf["probe"].to_numpy(np.int64),
-                    id_col: pdf[id_col].to_numpy(np.int64),
-                    "cos": cos,
-                }
-            )
-
-    exact_df = joined.mapInPandas(exact, rerank_schema)
-    w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-    return (
-        exact_df.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-    )
+    return IvfPqIndex.build(
+        data, n_cells=1, m=m, ks=ks, id_col=id_col, vec_col=vec_col,
+        sample_size=sample_size, seed=seed,
+    ).search(data, probes, k=k, n_probe_cells=1, refine=refine,
+             exclude_self=exclude_self)
 
 
 class IvfPqIndex(_IvfFamily):
@@ -1408,18 +1245,11 @@ class IvfPqIndex(_IvfFamily):
         m, ks, dsub = self.books.shape
         p_ids, p_norm, probe_cells, subset = self._pruned_scan(
             probes, n_probe_cells, predicate, metadata)
+        # per-probe ADC lookup tables: luts[p, j, c] = <probe_p[j], books[j, c]>
         luts = np.einsum(
             "pjd,jcd->pjc", p_norm.reshape(len(p_ids), m, dsub), self.books
         )
         n_cand = refine * k
-
-        out_schema = StructType(
-            [
-                StructField("probe", LongType()),
-                StructField(id_col, LongType()),
-                StructField("adc", DoubleType()),
-            ]
-        )
 
         def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -1436,30 +1266,21 @@ class IvfPqIndex(_IvfFamily):
                     idx = np.nonzero(mask)[0]
                     if len(idx) == 0:
                         continue
+                    # ADC: gather each row's m table entries and sum
                     adc = luts[p][np.arange(m)[None, :], codes[idx]].sum(axis=1)
                     take = min(n_cand, len(idx))
-                    cand = idx[np.argpartition(-adc, take - 1)[:take]]
-                    out_p.extend([p_ids[p]] * len(cand))
-                    out_i.extend(ids[cand].tolist())
-                    a = luts[p][np.arange(m)[None, :], codes[cand]].sum(axis=1)
-                    out_a.extend(a.tolist())
+                    top = np.argpartition(-adc, take - 1)[:take]
+                    out_p.extend([p_ids[p]] * take)
+                    out_i.extend(ids[idx[top]].tolist())
+                    out_a.extend(adc[top].tolist())
                 yield pd.DataFrame({"probe": out_p, id_col: out_i, "adc": out_a})
 
-        partial = subset.mapInPandas(part, out_schema)
-        w_adc = Window.partitionBy("probe").orderBy(F.col("adc").desc(), id_col)
-        cands = (
-            partial.withColumn("__r", F.row_number().over(w_adc))
-            .where(F.col("__r") <= n_cand)
-            .select("probe", id_col)
-        )
+        partial = subset.mapInPandas(part, _scored_schema(id_col, "adc"))
+        cands = _rank(partial, n_cand, id_col,
+                      score="adc").select("probe", id_col)
 
-        rerank_schema = StructType(
-            [
-                StructField("probe", LongType()),
-                StructField(id_col, LongType()),
-                StructField("cos", DoubleType()),
-            ]
-        )
+        # exact re-rank of the bounded candidate set: join back to the
+        # raw vectors, per-row exact cosine against the closured probes
         probe_row = {int(pid): i for i, pid in enumerate(p_ids)}
         joined = cands.join(
             base.where(F.col(vec_col).isNotNull()).select(id_col, vec_col),
@@ -1481,12 +1302,8 @@ class IvfPqIndex(_IvfFamily):
                     }
                 )
 
-        exact_df = joined.mapInPandas(exact, rerank_schema)
-        w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-        return (
-            exact_df.withColumn("rk", F.row_number().over(w).cast("long"))
-            .where(F.col("rk") <= k)
-        )
+        return _rank(joined.mapInPandas(exact, _scored_schema(id_col, "cos")),
+                     k, id_col)
 
 
 class Sq8Index:
@@ -1678,62 +1495,20 @@ def grouped_cosine_topk(
     that the constraint is PER-PROBE (each probe carries its own group
     value), not one global predicate.
 
-    One scan of ``data`` with the probe matrix in the task closure;
-    the kernel masks each partition's rows to the probe's group before
-    the gemm, and per-partition top-k prunes map-side exactly like
-    ``cosine_topk``. Partition/bucket ``data`` by ``group_col``
+    One scan of ``data`` with the probe matrix in the task closure:
+    ``cosine_topk``'s kernel with each probe's column masked to the
+    rows of its group, so per-partition top-k prunes map-side the same
+    way. Partition/bucket ``data`` by ``group_col``
     upstream and Catalyst prunes the scan to the probed groups — the
     100 TB form; the kernel is unchanged either way.
 
     Returns (probe, ``{id_col}``, cos, rk) with rk dense per probe."""
     data = data.where(F.col(vec_col).isNotNull())
-    rows = probes.select(id_col, vec_col, group_col).collect()
-    if not rows:
-        raise ValueError("probes must be a non-empty DataFrame")
-    p_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    p_norm = _normalize(np.array([r[1] for r in rows], dtype=np.float64))
-    p_groups = [r[2] for r in rows]
+    p_ids, p_mat, p_groups = _collect_probes(probes, id_col, vec_col,
+                                             group_col)
     wanted_groups = sorted({g for g in p_groups if g is not None})
     # group filter pushes to the scan (partition pruning when data is
     # partitioned/bucketed by the group column)
     subset = data.where(F.col(group_col).isin(wanted_groups))
-
-    out_schema = StructType([
-        StructField("probe", LongType()),
-        StructField(id_col, LongType()),
-        StructField("cos", DoubleType()),
-    ])
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(np.int64)
-            groups = pdf[group_col].to_numpy()
-            X = _normalize(np.asarray(list(pdf[vec_col]), dtype=np.float64))
-            out_p, out_i, out_c = [], [], []
-            for j in range(len(p_ids)):
-                mask = groups == p_groups[j]
-                if exclude_self:
-                    mask &= ids != p_ids[j]
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                col = X[idx] @ p_norm[j]
-                take = min(k, len(idx))
-                cand = idx[np.argpartition(-col, take - 1)[:take]]
-                order = np.lexsort((ids[cand], -(X[cand] @ p_norm[j])))
-                cand = cand[order]
-                out_p.extend([p_ids[j]] * len(cand))
-                out_i.extend(ids[cand].tolist())
-                out_c.extend((X[cand] @ p_norm[j]).tolist())
-            yield pd.DataFrame({"probe": out_p, id_col: out_i,
-                                "cos": out_c})
-
-    partial = subset.select(
-        id_col, vec_col, group_col).mapInPandas(part, out_schema)
-    w = Window.partitionBy("probe").orderBy(F.col("cos").desc(), id_col)
-    return (
-        partial.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-    )
+    return _exact_topk(subset, p_ids, _normalize(p_mat), k, id_col, vec_col,
+                       exclude_self, mask=(group_col, [[g] for g in p_groups]))

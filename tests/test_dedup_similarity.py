@@ -189,6 +189,65 @@ def test_ivf_index_matches_ivf_topk_and_roundtrips(spark, sf_dir, tmp_path):
     assert len(m.group(1).split(",")) == 2, m.group(0)
 
 
+@pytest.mark.parametrize("case", ["ivf_all_cells", "one_group"])
+def test_masked_and_unmasked_topk_are_one_kernel(spark, sf_dir, case):
+    """IVF search with every cell probed, and grouped search over a
+    single group, mask nothing: both must return exactly the exact
+    kernel's rows."""
+    from keystone_spark.operators.similarity import (
+        grouped_cosine_topk,
+        ivf_topk,
+    )
+    from keystone_spark.sources import load_table
+
+    e = load_table(spark, "embeddings", sf_dir)
+    probes = e.where(F.col("vec_id") < 5)
+
+    def rows(df):
+        return sorted(
+            (r.probe, r.vec_id, r.rk, round(r.cos, 6)) for r in df.collect()
+        )
+
+    if case == "ivf_all_cells":
+        got = ivf_topk(e, probes, k=5, n_cells=8, n_probe_cells=8)
+    else:
+        g = e.withColumn("g", F.lit("all"))
+        got = grouped_cosine_topk(g, g.where(F.col("vec_id") < 5), "g", k=5)
+    assert rows(got) == rows(cosine_topk(e, probes, k=5))
+
+
+@pytest.mark.parametrize(
+    "search",
+    ["cosine_topk", "ivf_topk", "pq_topk", "grouped_cosine_topk",
+     "IvfIndex.search", "IvfPqIndex.search", "Sq8Index.search"],
+)
+def test_every_search_rejects_empty_probes(spark, search):
+    """An empty probe set fails every search with one error, raised
+    where the probes are collected (not as a numpy AxisError from the
+    normalization that follows)."""
+    from keystone_spark.operators import similarity as S
+
+    rows = [(i, [float(i + j) for j in range(8)], i % 2) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, g int")
+    empty = df.where("vec_id < 0")
+    run = {
+        "cosine_topk": lambda: S.cosine_topk(df, empty),
+        "ivf_topk": lambda: S.ivf_topk(df, empty, n_cells=2),
+        "pq_topk": lambda: S.pq_topk(df, empty, m=4, ks=4),
+        "grouped_cosine_topk": lambda: S.grouped_cosine_topk(df, empty, "g"),
+        "IvfIndex.search": lambda: S.IvfIndex.build(
+            df, n_cells=2).search(empty),
+        "IvfPqIndex.search": lambda: S.IvfPqIndex.build(
+            df, n_cells=2, m=4, ks=4).search(df, empty),
+        "Sq8Index.search": lambda: S.Sq8Index.build(df).search(df, empty),
+    }[search]
+    with pytest.raises(
+            ValueError,
+            match="probes must be a non-empty DataFrame of vectors"):
+        run()
+
+
 def test_near_dedup_survives_null_and_empty_text(spark):
     """Null/empty/short documents must pass through near-dedup unharmed
     (no shingles -> sentinel signature -> never a candidate); exact dedup

@@ -565,3 +565,21 @@ def test_hamming_predicate_inside_band_join(spark):
     join_ix = plan.find("Join condition:")
     agg_ix = plan.find("HashAggregate")
     assert join_ix >= 0 and agg_ix >= 0
+
+
+def test_capped_clique_plan_reuses_the_signature_exchange(spark, sf_dir):
+    """The lazy capped clique path keeps no banded persist: both sides
+    of the band self-join must read ONE run of the Arrow signature
+    kernel through exchange reuse. Counted on the final adaptive plan
+    (the text before ``Initial Plan``), since the initial plan still
+    lists the kernel under each join side."""
+    from keystone_spark.operators.dedup import simhash_candidates
+    from keystone_spark.sources import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    out = simhash_candidates(docs, n_bands=16, max_hamming=12,
+                             band_cliques=3)
+    out.collect()
+    final = plan_of(out).split("Initial Plan")[0]
+    assert final.count("MapInPandas") == 1, final[:4000]
+    assert final.count("ReusedExchange") >= 1, final[:4000]

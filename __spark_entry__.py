@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from keystone_spark.caches import attach
 from keystone_spark.sources import load_table
 from keystone_spark.operators.relational import top_k_per_group
 
@@ -643,12 +644,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     out = minhash_dedup(d, n_hashes=64, n_bands=16, threshold=0.8)
-    final = out.select("doc_id").orderBy("doc_id")
-    # carry the persist contract across the projection — the attribute
-    # lives on the Python object, not the plan (ADVICE r7; without it the
-    # bench release loop finds nothing and the drop-set cache leaks)
-    final._keystone_caches = list(getattr(out, "_keystone_caches", []))
-    return final
+    return attach(out.select("doc_id").orderBy("doc_id"), out)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,7 +661,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     out = dedup_clusters(d, n_hashes=64, n_bands=16, threshold=0.8)
-    return out.select("doc_id", "cluster_id").orderBy("doc_id")
+    return attach(out.select("doc_id", "cluster_id").orderBy("doc_id"), out)
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,9 +703,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = simhash_verified_pairs(
         d, n_bands=16, max_hamming=12, band_cliques=3, threshold=0.8
     )
-    final = out.orderBy("i", "j")
-    final._keystone_caches = list(getattr(out, "_keystone_caches", []))
-    return final
+    return attach(out.orderBy("i", "j"), out)
 
 
 def q_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1245,14 +1239,11 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.col("n_chars")).alias("quality"),
     )
     out = token_budget_select(scored, budget=12000, n_buckets=32)
-    final = (
+    return attach(
         out.select("doc_id", "toks", F.round("quality", 6).alias("quality"))
-        .orderBy("doc_id")
+        .orderBy("doc_id"),
+        out,
     )
-    # the boundary bucket's checkpoint rides the result (see
-    # q_minhash_dedup): the harness release loop frees it
-    final._keystone_caches = list(getattr(out, "_keystone_caches", []))
-    return final
 
 
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3174,7 +3165,8 @@ def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("i", "j", F.round(cos, 6).alias("cos"))
         .where(F.col("cos") >= 0.3)
     )
-    return semantic_clusters(pairs, e.select("vec_id")).orderBy("vec_id")
+    out = semantic_clusters(pairs, e.select("vec_id"))
+    return attach(out.orderBy("vec_id"), out)
 
 
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3726,11 +3718,11 @@ def q_pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("j").alias("i"), F.col("i").alias("j"))
     )
     ranks = pagerank(sym, nodes=e.select("vec_id"), max_iter=20)
-    return ranks.agg(
+    return attach(ranks.agg(
         F.count("*").cast("long").alias("n_nodes"),
         (F.abs(F.sum("rank") - 1.0) < 1e-9).alias("sum_ok"),
         (F.min("rank") > 0.0).alias("all_pos"),
-    )
+    ), ranks)
 
 
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3821,11 +3813,7 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("__mh") == 0).alias("planted_exact"),
         )
     )
-    # propagate hash64_candidates' persist contract through the aggregate
-    # (ADVICE r7 medium): without this the bench/verify release loop finds
-    # nothing and the persisted signature table leaks on every run
-    out._keystone_caches = list(getattr(cands, "_keystone_caches", []))
-    return out
+    return attach(out, cands)
 
 
 def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4048,7 +4036,7 @@ def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("p").asc(), F.col("o_orderkey").asc()],
         rank_col="__r",
     )
-    return (
+    return attach(
         ranked.select("p", ntile_from_rank("__r", n, 10).alias("bucket"))
         .groupBy("bucket")
         .agg(
@@ -4056,7 +4044,8 @@ def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("p"), 6).alias("lo"),
             F.round(F.max("p"), 6).alias("hi"),
         )
-        .orderBy("bucket")
+        .orderBy("bucket"),
+        ranked,
     )
 
 
@@ -4401,7 +4390,7 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         cumsum={"s": "__cum"},
         rank_col="__r",
     )
-    return (
+    return attach(
         ranked.select("s", ntile_from_rank("__r", n, 10).alias("decile"))
         .groupBy("decile")
         .agg(
@@ -4409,7 +4398,8 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("s") / F.lit(float(tots["s"])), 6)
             .alias("rev_share"),
         )
-        .orderBy("decile")
+        .orderBy("decile"),
+        ranked,
     )
 
 
@@ -4622,13 +4612,14 @@ def q_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("cum_share") <= 0.95, "B")
         .otherwise("C")
     )
-    return (
+    return attach(
         ranked.groupBy(cls.alias("abc"))
         .agg(
             F.count("*").alias("n_parts"),
             F.round(F.sum("rev"), 6).alias("class_rev"),
         )
-        .orderBy("abc")
+        .orderBy("abc"),
+        rk,
     )
 
 
@@ -4777,19 +4768,20 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("f", [F.col("freq").desc(), F.col("o_custkey")]),
         ("m", [F.col("money").desc(), F.col("o_custkey")]),
     ]:
-        per, n, _ = ranked_series(per, order, rank_col="__rk")
-        per = per.withColumn(
+        ranked, n, _ = ranked_series(per, order, rank_col="__rk")
+        per = attach(ranked.withColumn(
             f"__q_{key}", ntile_from_rank("__rk", n, 5)
-        ).drop("__rk")
+        ).drop("__rk"), ranked, per)
     seg = per.select(
         (F.col("__q_r") * 100 + F.col("__q_f") * 10 + F.col("__q_m"))
         .cast("long")
         .alias("segment")
     )
-    return (
+    return attach(
         seg.groupBy("segment")
         .agg(F.count("*").alias("n_customers"))
-        .orderBy("segment")
+        .orderBy("segment"),
+        per,
     )
 
 
@@ -5099,11 +5091,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = neardup_against_corpus(
         corpus, batch, n_hashes=64, n_bands=16, threshold=0.8
     )
-    final = out.orderBy("doc_id")
-    # carry the persist contract across the sort (ADVICE r7 — the
-    # attribute lives on the Python object, not the plan)
-    final._keystone_caches = list(getattr(out, "_keystone_caches", []))
-    return final
+    return attach(out.orderBy("doc_id"), out)
 
 
 def q_incremental_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5154,9 +5142,7 @@ def q_incremental_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_minhash_index(
         spark, path, batch, corpus, n_hashes=64, n_bands=16, threshold=0.8
     )
-    final = out.orderBy("doc_id")
-    final._keystone_caches = list(getattr(out, "_keystone_caches", []))
-    return final
+    return attach(out.orderBy("doc_id"), out)
 
 
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:

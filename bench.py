@@ -65,6 +65,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
     from keystone_spark import get_session, warm_python_workers
+    from keystone_spark.caches import release
 
     spark = get_session("keystone_spark_bench")
     # pre-warm the Python worker pool so the first Arrow-kernel slot
@@ -76,10 +77,9 @@ def main() -> None:
     def run(df) -> None:
         # noop datasource: full plan incl. every output column, zero sink IO
         df.write.format("noop").mode("overwrite").save()
-        # honor the release(out) persist contract (e.g. minhash_dedup in
-        # b13) so repeated slots don't accumulate persisted blocks
-        for c in getattr(df, "_keystone_caches", []):
-            c.unpersist()
+        # free what the query's operators materialized (e.g.
+        # minhash_dedup in b13) so repeated slots don't accumulate blocks
+        release(df)
 
     def run_suite(d: str, curation: bool = False,
                   iters: int = 2) -> dict[str, float]:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 def curate(spark, sf_dir: str, jaccard_threshold: float = 0.8,
            min_tokens: int = 5, max_digit_ratio: float = 0.3,
            pack_budget: int = 2048, out_dir: str | None = None) -> dict:
+    from keystone_spark.caches import release
     from keystone_spark.functions.text import (
         bpe_ish_token_count,
         gopher_rules,
@@ -122,6 +123,7 @@ def curate(spark, sf_dir: str, jaccard_threshold: float = 0.8,
     if out_dir:
         write_table(packed, out_dir, fmt="parquet",
                     partition_by=["lang_pred"])
+    release(near)
 
     return {
         "app": "curate_corpus",

@@ -9,10 +9,10 @@ ordinary Spark shuffles.
 
 from __future__ import annotations
 
-from types import SimpleNamespace
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from keystone_spark.caches import attach, checkpoint
 
 
 def pack_sequences(
@@ -1000,10 +1000,10 @@ def token_budget_select(
     selected rows (original columns); quality ties across the budget
     line break by id ASC.
 
-    The boundary bucket is ``localCheckpoint``-ed so the range
-    boundaries and partition offsets stay fixed across its actions.
-    Its blocks ride the result's ``_keystone_caches``; free them with
-    ``dedup.release(out)`` once the result is materialized
+    The boundary bucket is checkpointed (``caches.checkpoint``) so the
+    range boundaries and partition offsets stay fixed across its
+    actions. The result owns the checkpoint; free its blocks with
+    ``caches.release(out)`` once the result is materialized
     (``unpersist``/``clearCache`` leave checkpoint blocks in place).
     Two tradeoffs: construction is eager (the boundary bucket is
     computed here, not at the caller's first action), and losing the
@@ -1040,57 +1040,48 @@ def token_budget_select(
             break
     out = dfb.where(F.col("__qb").isin(keep_whole)) if keep_whole \
         else dfb.limit(0)
-    caches = []
-    if boundary is not None:
-        # r15 (VERDICT r14 #4/#5): the boundary bucket used to run an
-        # UNPARTITIONED cumulative window — bounded to ~1/n_buckets of
-        # the data, but at 100 TB still a multi-TB single-task sort.
-        # Replace it with the exact two-phase range-shuffle prefix sum
-        # (the ranked_series shape, in pure long arithmetic so the
-        # running total stays integer-exact like the oracle's):
-        # range-partition on the selection order, pin the partitioning
-        # (repartitionByRange re-samples boundaries per action), collect
-        # ONE ROW PER PARTITION of token totals, broadcast exclusive
-        # offsets back, and finish with a partition-LOCAL window. Every
-        # partition sorts in parallel; driver-side data is one row per
-        # partition, never the bucket.
-        rem = int(budget) - spent
-        spark = dfb.sparkSession
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        pr = (
-            dfb.where(F.col("__qb") == boundary)
-            .repartitionByRange(n_parts, q.desc(), F.col(id_col))
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
-        )
-        # the checkpointed RDD behind pr's plan holds its blocks;
-        # unpersisting it is the only way to free them
-        ckpt = pr._jdf.queryExecution().analyzed().rdd()
-        caches.append(SimpleNamespace(
-            unpersist=lambda blocking=False: ckpt.unpersist(blocking)))
-        stats = sorted(
-            pr.groupBy("__pid").agg(F.sum(t).alias("__s")).collect(),
-            key=lambda r: r["__pid"],
-        )
-        offs, run = [], 0
-        for r in stats:
-            offs.append((int(r["__pid"]), run))
-            run += int(r["__s"])
-        off_df = spark.createDataFrame(
-            offs or [(0, 0)], "__pid int, __off long"
-        )
-        w = (
-            Window.partitionBy("__pid")
-            .orderBy(q.desc(), F.col(id_col))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        part = (
-            pr.join(F.broadcast(off_df), "__pid")
-            .withColumn("__cum", F.sum(t).over(w) + F.col("__off"))
-            .where(F.col("__cum") <= rem)
-            .drop("__cum", "__off", "__pid")
-        )
-        out = out.unionByName(part)
-    out = out.drop("__qb")
-    out._keystone_caches = caches
-    return out
+    if boundary is None:
+        return out.drop("__qb")
+    # r15 (VERDICT r14 #4/#5): the boundary bucket used to run an
+    # UNPARTITIONED cumulative window — bounded to ~1/n_buckets of
+    # the data, but at 100 TB still a multi-TB single-task sort.
+    # Replace it with the exact two-phase range-shuffle prefix sum
+    # (the ranked_series shape, in pure long arithmetic so the
+    # running total stays integer-exact like the oracle's):
+    # range-partition on the selection order, pin the partitioning
+    # (repartitionByRange re-samples boundaries per action), collect
+    # ONE ROW PER PARTITION of token totals, broadcast exclusive
+    # offsets back, and finish with a partition-LOCAL window. Every
+    # partition sorts in parallel; driver-side data is one row per
+    # partition, never the bucket.
+    rem = int(budget) - spent
+    spark = dfb.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    pr = checkpoint(
+        dfb.where(F.col("__qb") == boundary)
+        .repartitionByRange(n_parts, q.desc(), F.col(id_col))
+        .withColumn("__pid", F.spark_partition_id())
+    )
+    stats = sorted(
+        pr.groupBy("__pid").agg(F.sum(t).alias("__s")).collect(),
+        key=lambda r: r["__pid"],
+    )
+    offs, run = [], 0
+    for r in stats:
+        offs.append((int(r["__pid"]), run))
+        run += int(r["__s"])
+    off_df = spark.createDataFrame(
+        offs or [(0, 0)], "__pid int, __off long"
+    )
+    w = (
+        Window.partitionBy("__pid")
+        .orderBy(q.desc(), F.col(id_col))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    part = (
+        pr.join(F.broadcast(off_df), "__pid")
+        .withColumn("__cum", F.sum(t).over(w) + F.col("__off"))
+        .where(F.col("__cum") <= rem)
+        .drop("__cum", "__off", "__pid")
+    )
+    return attach(out.unionByName(part).drop("__qb"), pr)

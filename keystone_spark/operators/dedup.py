@@ -9,8 +9,9 @@ Scale design (100 TB of documents):
   (vectorized (a*h+b) mod p mins), candidates from an equi-join on
   (band, band_hash) buckets — never an all-pairs comparison. Verification
   reranks candidates only.
-- SimHash: 64-bit signature JVM-side (functions/text.simhash64), banded
-  into 4x16-bit keys; Hamming verify on candidates.
+- SimHash: 64-bit signature voted per Arrow batch (bit-identical to
+  functions/text.simhash64), banded into 4x16-bit keys; Hamming verify
+  on candidates.
 - embedding near-dup: delegate to operators/similarity.lsh_bucket_topk.
 
 All candidate generators return PAIRS (i < j); ``keep_first_dedup``
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from keystone_spark import fsutil
+from keystone_spark.caches import attach, persist, release
 
 DEFAULT_BUCKET_CAP = 2000
 
@@ -43,33 +45,6 @@ DEFAULT_BUCKET_CAP = 2000
 # means an oversized bucket signals a true duplicate family, not corpus
 # growth.
 HAMMING_BUCKET_CAP = 256
-
-
-def _persist_once(df: DataFrame, caches: list | None = None) -> DataFrame:
-    """``persist()`` only when this plan is not already cached, and
-    register the cache for release ONLY when this call created it.
-
-    The dedup operators build deterministic plans, and callers (bench
-    warmup+timed loops, the verify harness) rebuild the SAME plan several
-    times per process. A plain ``persist()`` on a rebuilt plan re-enters
-    the CacheManager entry of the previous run ("Asked to cache already
-    cached data" WARN) and on a shared cluster churns the block manager
-    (VERDICT r7 "What's wrong" #3). The storage-level probe is a metadata
-    lookup (CacheManager map), not a job.
-
-    Ownership (ADVICE r8): Spark's CacheManager unpersists by PLAN
-    equality, so an invocation that skipped the persist (plan already
-    cached by an earlier caller) must NOT later unpersist it — that
-    would yank the cache out from under the original owner. Callers
-    therefore never call ``.unpersist()`` on a ``_persist_once`` result
-    directly; they pass ``caches`` and release only what lands in it
-    (which is exactly the caches this invocation created)."""
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap):
-        df.persist()
-        if caches is not None:
-            caches.append(df)
-    return df
 
 
 def clique_band_segments(n_seg: int, n_cliques: int) -> list[tuple[int, int]]:
@@ -170,8 +145,8 @@ def _emit_banded_pairs(
     (``simhash_candidates`` / ``hash64_candidates``): takes the
     ``(id, __sh)`` signature table, explodes band-bucket keys, guards
     against bucket skew, then band self-join + map-side Hamming verify.
-    Any persisted inputs ride the returned DataFrame's
-    ``_keystone_caches`` (release via ``release(pairs)``).
+    Any persisted inputs are owned by the returned DataFrame (free
+    them with ``release(pairs)``).
 
     Two skew-guard shapes, chosen by LAYOUT (r15; see the comment at
     the branch below):
@@ -280,7 +255,7 @@ def _emit_banded_pairs(
         capped = True  # groupBy-dedup emission (the only valid one here)
         bucket_cap = None  # probe below is skipped
     else:
-        banded = _persist_once(banded_plan, caches)
+        banded = persist(banded_plan, caches)
         capped = False
     if bucket_cap is not None:
         # Adaptive skew probe (the AQE idea, one level up): ONE
@@ -291,7 +266,7 @@ def _emit_banded_pairs(
         # materialized above, so the probe costs one cached scan, not a
         # kernel re-run.
         big_own: list = []
-        big = _persist_once(
+        big = persist(
             banded.groupBy("band", "bucket")
             .agg(F.count("*").alias("__n"))
             .where(F.col("__n") > bucket_cap)
@@ -316,8 +291,7 @@ def _emit_banded_pairs(
                 .where(F.col("__rn") <= bucket_cap)
                 .drop("__rn")
             )
-        for c in big_own:
-            c.unpersist()
+        release(big_own)
     a = banded.alias("a")
     b = banded.alias("b")
     xor = F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))
@@ -347,8 +321,7 @@ def _emit_banded_pairs(
             .groupBy("i", "j")
             .agg(F.min("hamming").alias("hamming"))
         )
-    pairs._keystone_caches = caches
-    return pairs
+    return attach(pairs, caches)
 
 
 def _drop_oversized_buckets(
@@ -377,7 +350,7 @@ def _drop_oversized_buckets(
     )
     return banded.join(F.broadcast(big), keys, "left_anti")
 
-from keystone_spark.functions.text import char_shingles, simhash64, tokens
+from keystone_spark.functions.text import char_shingles, tokens
 
 _MERSENNE = (1 << 61) - 1
 _M61 = np.uint64(_MERSENNE)
@@ -559,16 +532,14 @@ def minhash_lsh_candidates(
     subtrees, so without a cache the band-key hashing (16 xxhash64s over
     stringified signature slices per doc) runs three times — measured as
     the dominant non-kernel cost of b13 at sf1 (VERDICT r7 #2). The
-    persisted banded DataFrame rides the result's ``_keystone_caches``
-    (release via ``release(result)`` once candidates are materialized —
-    ADVICE r8: the old optional ``caches`` out-param leaked the persist
-    for direct public-API callers using default args); ``caches`` is
-    still honored for callers that manage release inline
-    (``minhash_dedup`` does)."""
-    own: list = []
+    persisted banded DataFrame is owned by the result (free it with
+    ``release(result)`` once candidates are materialized); pass
+    ``caches`` to receive it instead, for callers that hand it on to
+    their own result (``minhash_dedup`` does)."""
+    own = [] if caches is None else caches
     banded = minhash_banded(sigs, id_col, n_bands, n_hashes)
     if bucket_cap is not None:
-        banded = _persist_once(banded, own)
+        banded = persist(banded, own)
     banded = _drop_oversized_buckets(banded, ["band", "bucket"], bucket_cap)
     a = banded.alias("a")
     b = banded.alias("b")
@@ -582,12 +553,7 @@ def minhash_lsh_candidates(
         .select(F.col(f"a.{id_col}").alias("i"), F.col(f"b.{id_col}").alias("j"))
         .distinct()
     )
-    if caches is not None:
-        caches.extend(own)
-        out._keystone_caches = []
-    else:
-        out._keystone_caches = own
-    return out
+    return out if caches is not None else attach(out, own)
 
 
 def jaccard_verify(
@@ -638,8 +604,9 @@ def jaccard_verify(
     of the rest (simhash_pairs verify at sf0.1: 22s -> seconds).
 
     The shingle table is persisted (consumed by both the i- and j-side
-    joins); pass ``caches`` to receive the persisted DataFrame so you can
-    unpersist after materializing the output (``minhash_dedup`` does)."""
+    joins) and owned by the result (free it with ``release(result)``);
+    pass ``caches`` to receive it instead, like
+    ``minhash_lsh_candidates``."""
     cand_ids = (
         pairs.select(F.col("i").alias(id_col))
         .unionByName(pairs.select(F.col("j").alias(id_col)))
@@ -671,7 +638,8 @@ def jaccard_verify(
                 ),
             ),
         )
-    sh = _persist_once(sh, caches)
+    own = [] if caches is None else caches
+    sh = persist(sh, own)
 
     # Two-phase attach (r14 optimization round, guide §8 "decide with
     # small rows, move big rows once" / §2.3 "shuffle fewer bytes"):
@@ -752,7 +720,7 @@ def jaccard_verify(
         .where(F.col("jac") >= threshold)
         .select("i", "j", F.round("jac", 6).alias("jac"))
     )
-    return out
+    return out if caches is not None else attach(out, own)
 
 
 def minhash_estimate_filter(
@@ -801,6 +769,39 @@ def minhash_estimate_filter(
     )
 
 
+def _verified_near_pairs(cand, sigs, texts, id_col, text_col, n_hashes,
+                         shingle_k, threshold, owned: list) -> DataFrame:
+    """The estimate -> verify tail of every MinHash near-pair path:
+    a persisted signature-estimate prune of the candidates, then exact
+    shingle Jaccard on the survivors, (i, j, jac). No histogram
+    prefilter: the estimate prune already left near-certain verifies,
+    so the bound would be pure overhead. Persists land in ``owned``."""
+    likely = persist(
+        minhash_estimate_filter(cand, sigs, id_col, n_hashes, threshold),
+        owned,
+    )
+    return jaccard_verify(
+        likely, texts, id_col, text_col, shingle_k, threshold,
+        caches=owned, n_hist=None,
+    )
+
+
+def _minhash_near_pairs(docs, id_col, text_col, n_hashes, n_bands, shingle_k,
+                        threshold, seed, bucket_cap, owned: list) -> DataFrame:
+    """Verified (i, j, jac) near pairs among ``docs``: persisted
+    signatures, banded LSH candidates, then ``_verified_near_pairs``.
+    The signatures are consumed twice (band join + estimate filter), so
+    they persist and the Arrow stage runs exactly once (AutoCacheRule
+    R2: reuse count >= 2 -> cache). Persists land in ``owned``."""
+    sigs = persist(minhash_signatures(
+        docs, id_col, text_col, n_hashes, shingle_k, seed
+    ), owned)
+    cand = minhash_lsh_candidates(sigs, id_col, n_bands, n_hashes, bucket_cap,
+                                  caches=owned)
+    return _verified_near_pairs(cand, sigs, docs, id_col, text_col,
+                                n_hashes, shingle_k, threshold, owned)
+
+
 def minhash_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -824,14 +825,13 @@ def minhash_dedup(
     same text, so any near-dup caught via the duplicate is caught via its
     keeper.
 
-    Cache hygiene (VERDICT r1 #6, rephased r15): every persist the
-    operator creates rides ``result._keystone_caches`` — call
-    ``release(result)`` after materializing the result (the bench and
-    registry harnesses do) so caches never accumulate across queries in
-    a long-lived session. No construction-time actions: the plan is
-    fully lazy and the caches materialize inside the caller's one
-    action instead of a serial chain of eager ``.count()`` barriers
-    (VERDICT r14 #4)."""
+    Cache hygiene (VERDICT r1 #6, rephased r15): the result owns every
+    persist the operator creates — call ``release(result)`` after
+    materializing the result (the bench and registry harnesses do) so
+    caches never accumulate across queries in a long-lived session. No
+    construction-time actions: the plan is fully lazy and the caches
+    materialize inside the caller's one action instead of a serial
+    chain of eager ``.count()`` barriers (VERDICT r14 #4)."""
     # null text never dedups (matches SQL NULL semantics and the oracle:
     # no shingles -> no pairs), so nulls bypass the exact phase untouched
     nn = df.where(F.col(text_col).isNotNull())
@@ -844,49 +844,25 @@ def minhash_dedup(
     # survivors is consumed THREE times (signature kernel, verify's
     # candidate-text semi-join, final anti-join), and each consumer
     # otherwise re-runs the exact-first scan+agg+semi-join (~1.5 s x 3
-    # at sf1, r9). It still references the cache after return, so it
-    # rides _keystone_caches rather than an inline unpersist.
-    result_caches: list = []
-    survivors = _persist_once(
+    # at sf1, r9). It still references the cache after return, so the
+    # result owns it rather than an inline unpersist.
+    owned: list = []
+    survivors = persist(
         nn.join(keepers, id_col, "left_semi").unionByName(
             df.where(F.col(text_col).isNull())
         ),
-        result_caches,
+        owned,
     )
-    # signatures are consumed twice (band join + estimate filter);
-    # persist so the Arrow stage runs exactly once
-    # (AutoCacheRule R2: reuse count >= 2 -> cache)
-    sigs = _persist_once(minhash_signatures(
-        survivors, id_col, text_col, n_hashes, shingle_k, seed
-    ), result_caches)
-    cand = minhash_lsh_candidates(sigs, id_col, n_bands, n_hashes, bucket_cap,
-                                  caches=result_caches)
-    likely = _persist_once(
-        minhash_estimate_filter(cand, sigs, id_col, n_hashes, threshold),
-        result_caches,
-    )
-    # r15 (VERDICT r14 #4): no eager .count() barriers. The old shape
-    # materialized `likely` and `drop` with construction-time jobs
-    # purely so upstream caches could be unpersisted mid-pipeline; that
-    # serialized the whole operator into a chain of driver actions
-    # (b13 scaled 1.22x from 8 to 32 cores at sf1). Every cache now
-    # rides ``_keystone_caches`` and is released by the caller's
-    # ``release(out)`` AFTER the one real action — the r7 bimodality
-    # fix (caches must not accumulate ACROSS queries in a long-lived
-    # session) is about release-per-query, which still happens; only
-    # the within-query peak footprint grows, by spillable
-    # MEMORY_AND_DISK blocks that are each a projection of the
-    # candidate- or distinct-content-scale tables.
-    dups = jaccard_verify(
-        likely, survivors, id_col, text_col, shingle_k, threshold,
-        caches=result_caches, n_hist=None,  # estimate filter already pruned
-    )
-    drop = _persist_once(
-        dups.select(F.col("j").alias(id_col)).distinct(), result_caches
-    )
-    out = survivors.join(drop, id_col, "left_anti")
-    out._keystone_caches = result_caches  # via release(out)
-    return out
+    # no eager .count() barriers (VERDICT r14 #4: a chain of driver
+    # actions scaled b13 only 1.22x from 8 to 32 cores at sf1): every
+    # cache is freed by the caller's release(out) AFTER the one real
+    # action, at the cost of a larger within-query peak of spillable
+    # MEMORY_AND_DISK blocks
+    dups = _minhash_near_pairs(survivors, id_col, text_col, n_hashes,
+                               n_bands, shingle_k, threshold, seed,
+                               bucket_cap, owned)
+    drop = persist(dups.select(F.col("j").alias(id_col)).distinct(), owned)
+    return attach(survivors.join(drop, id_col, "left_anti"), owned)
 
 
 def dedup_clusters(
@@ -914,7 +890,8 @@ def dedup_clusters(
     produce near edges among keepers only. A copy's near-dups route
     through its keeper (identical text => identical jaccard), so
     components match the full all-pairs graph. Components resolve via
-    large-star/small-star (operators/graph.py)."""
+    large-star/small-star (operators/graph.py), whose checkpoints the
+    result owns: free them with ``release(result)``."""
     from keystone_spark.operators.graph import connected_components
 
     nn = df.where(F.col(text_col).isNotNull())
@@ -926,39 +903,26 @@ def dedup_clusters(
         .select(F.col("__k").alias("i"), F.col(id_col).alias("j"))
     )
     # consumed by the signature kernel AND verify's candidate-text
-    # semi-join; released at the end with `caches` —
-    # connected_components localCheckpoints eagerly, so nothing
-    # references it after labels exist (r9)
-    late_caches: list = []
-    survivors = _persist_once(
+    # semi-join; freed with the other edge-side caches once
+    # connected_components has eagerly checkpointed the labels, so
+    # nothing references them after it returns (r9)
+    edge_caches: list = []
+    survivors = persist(
         nn.join(
             with_keeper.where(F.col(id_col) == F.col("__k")).select(id_col),
             id_col,
             "left_semi",
         ),
-        late_caches,
+        edge_caches,
     )
-    # r15 (VERDICT r14 #4): no eager .count() barrier — caches release
-    # together after connected_components has materialized the labels
-    # (CC localCheckpoints eagerly, so labels no longer reference them)
-    sigs = _persist_once(minhash_signatures(
-        survivors, id_col, text_col, n_hashes, shingle_k, seed
-    ), late_caches)
-    cand = minhash_lsh_candidates(sigs, id_col, n_bands, n_hashes, bucket_cap,
-                                  caches=late_caches)
-    likely = _persist_once(minhash_estimate_filter(
-        cand, sigs, id_col, n_hashes, threshold
-    ), late_caches)
-    near = jaccard_verify(
-        likely, survivors, id_col, text_col, shingle_k, threshold,
-        caches=late_caches, n_hist=None,  # estimate filter already pruned
-    ).select("i", "j")
+    near = _minhash_near_pairs(survivors, id_col, text_col, n_hashes,
+                               n_bands, shingle_k, threshold, seed,
+                               bucket_cap, edge_caches).select("i", "j")
     edges = exact_edges.unionByName(near)
     labels = connected_components(
         edges, "i", "j", node_col=id_col, comp_col="cluster_id"
     )
-    for c in late_caches:
-        c.unpersist()
+    release(edge_caches)
     return labels
 
 
@@ -1016,13 +980,6 @@ def edit_distance_pairs(
     )
 
 
-def release(df: DataFrame) -> None:
-    """Unpersist the caches a dedup operator attached to its result (call
-    after the result has been materialized/written)."""
-    for c in getattr(df, "_keystone_caches", []):
-        c.unpersist()
-
-
 def simhash_signatures_arrow(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -1069,15 +1026,14 @@ def simhash_candidates(
     text_col: str = "text",
     n_bands: int = 4,
     max_hamming: int = 3,
-    impl: str = "arrow",
     bucket_cap: int | None = HAMMING_BUCKET_CAP,
     band_cliques: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup candidates: 64-bit signature banded into
     n_bands segments (a pair within Hamming distance n_bands-1 shares at
-    least one exact band by pigeonhole); verify with bit_count.
-    impl='arrow' (default) vectorizes signature computation per batch;
-    impl='codegen' keeps everything JVM-side. Buckets larger than
+    least one exact band by pigeonhole); verify with bit_count. The
+    signatures come from ``simhash_signatures_arrow`` (vectorized per
+    batch) and band through ``hash64_candidates``. Buckets larger than
     ``bucket_cap`` are excluded before the self-join (skew guard — see
     ``_drop_oversized_buckets``); pass None to disable. EAGER when
     ``bucket_cap`` is set on a small single-segment layout (the adaptive
@@ -1108,24 +1064,9 @@ def simhash_candidates(
     construction; for corpus-scale near-dup, ``minhash_dedup`` is the
     declared path (band keys hash into 2^64 values, so occupancy
     tracks true duplicate families, not corpus size)."""
-    assert 64 % n_bands == 0
-    seg = 64 // n_bands
-    if impl == "arrow":
-        sh = simhash_signatures_arrow(df, id_col, text_col)
-    else:
-        sh = df.select(
-            F.col(id_col), simhash64(tokens(F.col(text_col))).alias("__sh")
-        )
-    # recall guarantee: single-segment banding covers Hamming <=
-    # n_bands-1; clique banding covers <= n_bands-band_cliques-1 (each
-    # bit error corrupts at most one segment). Above the guarantee,
-    # candidate recall is best-effort in BOTH schemes.
-    if band_cliques is not None:
-        bands = clique_band_segments(n_bands, band_cliques)
-    else:
-        bands = [(b,) for b in range(n_bands)]
-    return _emit_banded_pairs(
-        sh, id_col, bands, seg, max_hamming, bucket_cap
+    return hash64_candidates(
+        simhash_signatures_arrow(df, id_col, text_col), id_col, "__sh",
+        n_bands, max_hamming, bucket_cap, band_cliques,
     )
 
 
@@ -1177,7 +1118,7 @@ def simhash_verified_pairs(
     (judge-measured r9 on the shipped tree)."""
     nn = df.where(F.col(text_col).isNotNull())
     caches: list = []
-    ck = _persist_once(
+    ck = persist(
         nn.select(F.col(id_col), F.xxhash64(text_col).alias("__ck")),
         caches,
     )
@@ -1189,10 +1130,9 @@ def simhash_verified_pairs(
     )
     rep_pairs = simhash_candidates(
         reps, id_col, text_col, n_bands=n_bands, max_hamming=max_hamming,
-        impl="arrow", bucket_cap=bucket_cap, band_cliques=band_cliques,
+        bucket_cap=bucket_cap, band_cliques=band_cliques,
     )
-    cand = _persist_once(rep_pairs.select("i", "j"), caches)
-    caches.extend(getattr(rep_pairs, "_keystone_caches", []))
+    cand = persist(rep_pairs.select("i", "j"), caches)
     verified = jaccard_verify(
         cand, reps, id_col, text_col, shingle_k, threshold, caches=caches
     )
@@ -1229,9 +1169,7 @@ def simhash_verified_pairs(
             F.lit(1.0).alias("jac"),
         )
     )
-    out = within.unionByName(cross)
-    out._keystone_caches = caches
-    return out
+    return attach(within.unionByName(cross), caches, rep_pairs)
 
 
 def semantic_clusters(
@@ -1258,11 +1196,13 @@ def semantic_clusters(
     broadcasts back onto the spine and the only data-sized operation is
     the single spine scan; set ``broadcast_labels=False`` when the
     duplicate fraction is large enough that the labels must sort-merge.
+    The result owns the components' checkpoints (``release(result)``).
     """
     from keystone_spark.operators.graph import connected_components
 
-    comp = connected_components(pairs, src=src, dst=dst, node_col="__n",
-                                comp_col="__c").withColumnRenamed("__n", id_col)
+    cc = connected_components(pairs, src=src, dst=dst, node_col="__n",
+                              comp_col="__c")
+    comp = cc.withColumnRenamed("__n", id_col)
     if broadcast_labels:
         comp = F.broadcast(comp)
     spine = ids.select(F.col(id_col).cast("long").alias(id_col)).distinct()
@@ -1273,9 +1213,9 @@ def semantic_clusters(
             F.coalesce(F.col("__c"), F.col(id_col)).alias("cluster_id"),
         )
     )
-    return labeled.withColumn(
+    return attach(labeled.withColumn(
         "is_rep", (F.col("cluster_id") == F.col(id_col)).cast("int")
-    )
+    ), cc)
 
 
 def hash64_candidates(
@@ -1520,18 +1460,17 @@ def build_minhash_index(
     # min-id-per-content collapse, mirroring neardup_against_corpus's
     # inline path (see its docstring for the result-identity argument):
     # the index stores one representative per distinct content
-    crep_own: list = []
-    crep = _persist_once(
+    own: list = []
+    crep = persist(
         corpus.select(F.col(id_col), F.xxhash64(text_col).alias("__ck"))
         .groupBy("__ck")
         .agg(F.min(id_col).alias(id_col)),
-        crep_own,
+        own,
     )
     corpus = corpus.join(crep.select(id_col), id_col, "left_semi")
-    sigs_own: list = []
-    sigs = _persist_once(minhash_signatures(
+    sigs = persist(minhash_signatures(
         corpus, id_col, text_col, n_hashes, shingle_k, seed
-    ), sigs_own)
+    ), own)
     banded = minhash_banded(sigs, id_col, n_bands, n_hashes)
     kept = _drop_oversized_buckets(banded, ["band", "bucket"], bucket_cap)
     gen0 = F.lit(0)
@@ -1551,8 +1490,7 @@ def build_minhash_index(
             "gen", gen0
         ).write.mode("overwrite").parquet(f"{path}/texts")
     n_sigs = sigs.count()
-    for c in sigs_own + crep_own:
-        c.unpersist()
+    release(own)
     spark = corpus.sparkSession
     # manifest row LAST (the build's commit point) — one-row parquet,
     # FS-agnostic (rides the same Hadoop filesystem as the index)
@@ -1678,13 +1616,13 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
         # the batch becomes the representative and indexes normally).
         batch = batch.join(F.broadcast(tomb), id_col, "left_anti")
     caches: list = []
-    brep = _persist_once(
+    brep = persist(
         batch.select(F.col(id_col), F.xxhash64(text_col).alias("ck"))
         .groupBy("ck")
         .agg(F.min(id_col).alias(id_col)),
         caches,
     )
-    new = _persist_once(
+    new = persist(
         brep.join(content.select("ck"), "ck", "left_anti"), caches
     )
     n_batch = brep.count()
@@ -1692,16 +1630,15 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
     if n_new == 0:
         # nothing to write -> no intent row either: a replayed or
         # re-crawled batch leaves the manifest untouched (idempotent)
-        for c in caches:
-            c.unpersist()
+        release(caches)
         return {"batch_docs": int(n_batch), "new_content": 0,
                 "band_rows_added": 0, "band_rows_capped": 0,
                 "generation": None}
     new_reps = batch.join(new.select(id_col), id_col, "left_semi")
-    sigs_new = _persist_once(minhash_signatures(
+    sigs_new = persist(minhash_signatures(
         new_reps, id_col, text_col, n_hashes, shingle_k, seed
     ), caches)
-    bands_new = _persist_once(
+    bands_new = persist(
         minhash_banded(sigs_new, id_col, n_bands, n_hashes), caches
     )
     n_banded = bands_new.count()
@@ -1739,7 +1676,7 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
                               "left_anti")
     else:
         kept = bands_new
-    kept = _persist_once(kept, caches)
+    kept = persist(kept, caches)
     n_kept = kept.count()
 
     def write_data(gen):
@@ -1765,8 +1702,7 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
                 spark, path, cfg, g, committed=done),
             write_data)
     finally:
-        for c in caches:
-            c.unpersist()
+        release(caches)
     return {
         "batch_docs": int(n_batch),
         "new_content": int(n_new),
@@ -1964,7 +1900,7 @@ def neardup_against_corpus(
             .select(id_col)
         )
         corpus_reps = corpus.join(crep, id_col, "left_semi")
-        sigs_c = _persist_once(minhash_signatures(
+        sigs_c = persist(minhash_signatures(
             corpus_reps, id_col, text_col, n_hashes, shingle_k, seed
         ), result_caches)
         bands_c = _drop_oversized_buckets(
@@ -1972,7 +1908,7 @@ def neardup_against_corpus(
             ["band", "bucket"],
             bucket_cap,
         )
-    sigs_b = _persist_once(minhash_signatures(
+    sigs_b = persist(minhash_signatures(
         batch_reps, id_col, text_col, n_hashes, shingle_k, seed
     ), result_caches)
     bands_b = minhash_banded(sigs_b, id_col, n_bands, n_hashes)
@@ -1999,18 +1935,14 @@ def neardup_against_corpus(
         )
         .distinct()
     )
-    sigs_all = sigs_b.unionByName(sigs_c)
-    # r15 (VERDICT r14 #4): no eager .count() barrier — sigs_b releases
-    # with the rest of result_caches via release(out)
-    likely = _persist_once(minhash_estimate_filter(
-        cand, sigs_all, id_col, n_hashes, threshold
-    ), result_caches)
     texts = batch_reps.select(id_col, text_col).unionByName(
         corpus_reps.select(id_col, text_col)
     )
-    verified = jaccard_verify(
-        likely, texts, id_col, text_col, shingle_k, threshold,
-        caches=result_caches, n_hist=None,  # estimate filter already pruned
+    # r15 (VERDICT r14 #4): no eager .count() barrier — sigs_b is freed
+    # with the rest of result_caches via release(out)
+    verified = _verified_near_pairs(
+        cand, sigs_b.unionByName(sigs_c), texts, id_col, text_col,
+        n_hashes, shingle_k, threshold, result_caches,
     )
     best = Window.partitionBy("i").orderBy(F.desc("jac"), F.asc("j"))
     rep_out = (
@@ -2024,8 +1956,7 @@ def neardup_against_corpus(
         .join(rep_out, "__rep")
         .select(F.col(id_col), "dup_of", "jac")
     )
-    out._keystone_caches = result_caches  # released via release(out)
-    return out
+    return attach(out, result_caches)
 
 
 def match_minhash_index(

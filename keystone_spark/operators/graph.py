@@ -9,10 +9,13 @@ Scale design (100 TB near-dup graphs):
   case, each round two groupBy shuffles over (node, node) PAIRS — never a
   collected adjacency list, so a high-degree hub's edges stay spread
   across tasks instead of materializing in one record.
-- Iterative plans grow lineage each round; ``localCheckpoint(eager=True)``
-  truncates it so Catalyst re-analyzes a constant-depth plan (on a real
-  cluster with executor loss concerns, swap for reliable
-  ``checkpoint()`` against the checkpoint dir — same call shape).
+- Iterative plans grow lineage each round; an eager local checkpoint
+  (``caches.checkpoint``) truncates it so Catalyst re-analyzes a
+  constant-depth plan (on a real cluster with executor loss concerns,
+  swap for reliable ``checkpoint()`` against the checkpoint dir — same
+  call shape). Each superseded checkpoint is freed as soon as the next
+  one has landed, and the result owns the ones its plan still reads:
+  free them with ``caches.release(result)`` once it is materialized.
 - Convergence is detected by a (count, xxhash64-sum) checksum of the
   canonical edge set: one cheap agg action per round, no driver collect of
   edges.
@@ -25,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from keystone_spark.caches import attach, checkpoint, release
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -87,13 +92,12 @@ def connected_components(
     )
     # checkpointed (like b) so the returned labels plan never re-runs the
     # caller's edge-generation pipeline — only these bounded node/star sets
-    nodes = (
+    nodes = checkpoint(
         e0.select(F.col("u").alias(node_col))
         .unionByName(e0.select(F.col("v").alias(node_col)))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    b = _canonical(e0).localCheckpoint(eager=True)
+    b = checkpoint(_canonical(e0))
 
     def _checksum(d: DataFrame) -> tuple:
         row = d.agg(
@@ -103,13 +107,10 @@ def connected_components(
 
     chk = _checksum(b)
     for _ in range(max_iter):
-        b_next = _canonical(_small_star(_canonical(_large_star(b)))).localCheckpoint(
-            eager=True
-        )
+        b_next = checkpoint(_canonical(_small_star(_canonical(_large_star(b)))))
         chk_next = _checksum(b_next)
-        prev = b
+        release(b)
         b = b_next
-        prev.unpersist()
         if chk_next == chk:
             break
         chk = chk_next
@@ -124,7 +125,7 @@ def connected_components(
             F.coalesce(F.col(comp_col), F.col(node_col)).alias(comp_col),
         )
     )
-    return out
+    return attach(out, nodes, b)
 
 
 def pagerank(
@@ -167,7 +168,7 @@ def pagerank(
     # upstream edge derivation (e.g. a candidate-pair join) once per
     # unrolled iteration — measured 15.4s -> ~4s on the declared query,
     # where edges come from an all-pairs cosine join
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     ends = (
         e.select(F.col("s").alias(node_col))
         .unionByName(e.select(F.col("d").alias(node_col)))
@@ -176,18 +177,18 @@ def pagerank(
         ends = ends.unionByName(
             nodes.select(F.col(nodes.columns[0]).cast("long").alias(node_col))
         )
-    verts = ends.distinct().localCheckpoint(eager=True)
+    verts = checkpoint(ends.distinct())
     n = verts.count()
     out_deg = e.groupBy("s").agg(F.count("*").alias("deg"))
     # fold the STATIC out-degree into the vertex table once: the
     # per-iteration state is (node, deg, rank), so the ranks ⋈ out_deg
     # join — two shuffles per iteration — leaves the loop entirely
     # (deg is NULL exactly for dangling nodes, which is the mass test)
-    vstate = (
+    vstate = checkpoint(
         verts.join(out_deg, verts[node_col] == out_deg["s"], "left")
         .select(node_col, "deg")
-        .localCheckpoint(eager=True)
     )
+    release(verts)  # vstate has landed; no plan reads verts any more
     ranks = vstate.withColumn(rank_col, F.lit(1.0 / n))
     base = (1.0 - damping) / n
     # With no per-iteration driver fetch the loop is fully lazy, so the
@@ -197,6 +198,7 @@ def pagerank(
     # (at fixture scale each job is overhead-dominated; at cluster scale
     # fewer barriers means fewer scheduling waves).
     checkpoint_every = 4
+    held = vstate  # the last checkpoint the ranks plan reads
     for it in range(max_iter):
         dang = (
             ranks.where(F.col("deg").isNull())
@@ -225,5 +227,13 @@ def pagerank(
             )
         )
         if it % checkpoint_every == checkpoint_every - 1 or it == max_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(node_col, rank_col)
+            ranks = checkpoint(ranks)
+            if held is not vstate:
+                release(held)  # superseded by the one that just landed
+            held = ranks
+    # the last iteration always checkpoints, so only with max_iter == 0
+    # does the result read vstate
+    release(e)
+    if held is not vstate:
+        release(vstate)
+    return attach(ranks.select(node_col, rank_col), held)

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
+from keystone_spark.caches import attach, checkpoint
 from keystone_spark.plans.pipeline import ColumnTransformer, Estimator, Transformer
 
 
@@ -469,16 +470,17 @@ def ranked_series(
     cumulative doubles can differ from a strictly sequential fold by
     ~1e-15 relative (document thresholds accordingly).
 
-    The range-partitioned intermediate is pinned with an EAGER
-    ``localCheckpoint`` before the stats collect: ``repartitionByRange``
+    The range-partitioned intermediate is pinned with an EAGER local
+    checkpoint (``caches.checkpoint``) before the stats collect:
+    ``repartitionByRange``
     samples its boundaries with an RDD-id-derived seed, so two separate
     actions (the stats job here, the caller's output job later) could
     otherwise land on DIFFERENT boundaries whenever boundary sampling is
     a strict subset of the data — exactly the large-input regime this
     function exists for — silently mismatching the collected offsets.
     The checkpoint freezes one physical partitioning that both jobs
-    read; its blocks are released by the ContextCleaner once the caller
-    drops the returned DataFrame.
+    read. The returned DataFrame owns it: free its blocks with
+    ``caches.release(df_out)`` once the output is materialized.
 
     ``order_by`` must define a TOTAL order (include a tiebreaker).
     ``cumsum`` maps source column -> output running-total column.
@@ -496,10 +498,9 @@ def ranked_series(
     spark = df.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    part = (
+    part = checkpoint(
         df.repartitionByRange(int(n_parts), *order_by)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     aggs = [F.count("*").alias("__n")] + [
         F.sum(c).alias(f"__s_{c}") for c in cumsum
@@ -537,7 +538,7 @@ def ranked_series(
             + F.col(f"__off_{c}"),
         )
         drop.append(f"__off_{c}")
-    return out.drop(*drop), run_n, dict(run_s)
+    return attach(out.drop(*drop), part), run_n, dict(run_s)
 
 
 def ntile_from_rank(rank_col: str, n_total: int, k: int) -> Column:

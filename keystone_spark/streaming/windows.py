@@ -832,13 +832,13 @@ def stream_neardup_against_index(
     smaller trigger interval tightens that window."""
     from pyspark.errors import AnalysisException
 
+    from keystone_spark.caches import release
     from keystone_spark.operators.dedup import (
         _minhash_committed,
         _minhash_manifest,
         add_to_minhash_index,
         compact_minhash_index,
         match_minhash_index,
-        release,
     )
 
     from keystone_spark.fsutil import resolve_index_path, retry_contention

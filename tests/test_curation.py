@@ -1,6 +1,7 @@
 """Curation operators: token-budget packing, stratified sampling, mixture."""
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_pack_sequences_offset_sharding(spark):
@@ -625,13 +626,77 @@ def test_token_budget_select_drops_null_quality_rows(spark):
     assert got == [1, 4]
 
 
-def test_token_budget_select_release_frees_checkpoint(spark):
-    """The boundary bucket's localCheckpoint rides the result's
-    ``_keystone_caches``: ``release(out)`` frees its RDD blocks, so
-    repeated calls leave the executors' storage where it started
-    (``unpersist``/``clearCache`` do not reach checkpoint blocks)."""
+def _docs(spark):
+    """Two near-duplicate families plus unrelated docs."""
+    base = ["the quick brown fox jumps over the lazy dog again and again",
+            "a stitch in time saves nine when the work is done early"]
+    rows = [(i, base[i % 2] + (" extra" if i >= 2 else ""))
+            for i in range(6)]
+    rows += [(10 + i, t) for i, t in enumerate([
+        "completely different words live here", "spark clusters process data",
+        "numbers like 12345 and 67890", "zebra yak xylophone walrus"])]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _edges(spark):
+    return spark.createDataFrame([(1, 2), (1, 3), (4, 5)], "i long, j long")
+
+
+def _release_case(name):
+    """(operator call, expected row count) for one owner of storage."""
     from keystone_spark.operators.curation import token_budget_select
-    from keystone_spark.operators.dedup import release
+    from keystone_spark.operators.dedup import (
+        dedup_clusters,
+        jaccard_verify,
+        minhash_dedup,
+    )
+    from keystone_spark.operators.graph import connected_components, pagerank
+    from keystone_spark.operators.stats import ranked_series
+
+    def budget(spark):
+        df = spark.createDataFrame(
+            [(i, 10, 1.0 - i / 100) for i in range(40)],
+            "doc_id long, toks long, quality double")
+        return token_budget_select(df, budget=205, n_buckets=4)
+
+    def verify(spark):
+        pairs = spark.createDataFrame([(0, 2), (1, 3), (0, 10)],
+                                      "i long, j long")
+        return jaccard_verify(pairs, _docs(spark), threshold=0.5)
+
+    cases = {
+        "token_budget_select": (budget, 20),
+        "minhash_dedup": (
+            lambda spark: minhash_dedup(_docs(spark), n_hashes=32,
+                                        n_bands=8, threshold=0.5), 6),
+        "jaccard_verify": (verify, 2),
+        "dedup_clusters": (
+            lambda spark: dedup_clusters(_docs(spark), n_hashes=32,
+                                         n_bands=8, threshold=0.5), 6),
+        "connected_components": (
+            lambda spark: connected_components(_edges(spark)), 5),
+        # two checkpoints, so the first is freed when the second lands
+        "pagerank": (lambda spark: pagerank(_edges(spark), max_iter=5), 5),
+        "ranked_series": (
+            lambda spark: ranked_series(
+                spark.range(50).withColumn("v", F.col("id") % 7),
+                [F.col("v"), F.col("id")], n_parts=4)[0], 50),
+    }
+    return cases[name]
+
+
+@pytest.mark.parametrize("name", [
+    "token_budget_select", "minhash_dedup", "jaccard_verify",
+    "dedup_clusters", "connected_components", "pagerank", "ranked_series",
+])
+def test_release_frees_operator_storage(spark, name):
+    """Every persist or checkpoint an operator creates has a release
+    path: ``release(out)`` frees the blocks the result owns, so a call
+    leaves the executors' storage where it started (``unpersist``/
+    ``clearCache`` do not reach checkpoint blocks). One call per case:
+    any block a call leaks survives its release, and the fast tier has
+    no time for repeats."""
+    from keystone_spark.caches import release
 
     def rdd_blocks():
         # {rdd id: cached partitions}; keyed by id because checkpoints
@@ -642,13 +707,10 @@ def test_token_budget_select_release_frees_checkpoint(spark):
     def new_blocks():
         return sum(n for r, n in rdd_blocks().items() if r not in base)
 
-    df = spark.createDataFrame(
-        [(i, 10, 1.0 - i / 100) for i in range(40)],
-        "doc_id long, toks long, quality double")
+    run, n_rows = _release_case(name)
     base = set(rdd_blocks())
-    for _ in range(3):
-        out = token_budget_select(df, budget=205, n_buckets=4)
-        assert sorted(r["doc_id"] for r in out.collect()) == list(range(20))
-        assert new_blocks() > 0  # the boundary bucket is checkpointed
-        release(out)
+    out = run(spark)
+    assert len(out.collect()) == n_rows
+    assert new_blocks() > 0  # the operator did materialize something
+    release(out)
     assert new_blocks() == 0

@@ -872,17 +872,18 @@ def test_bucket_cap_truncation_bounds_join_rows(spark):
 def test_persist_once_ownership(spark):
     """Cache-ownership contract (ADVICE r8): when two invocations build
     the SAME deterministic plan, only the first persist OWNS the cache
-    — the second _persist_once must not register it for release, so
-    releasing the second invocation's caches cannot yank the cache out
-    from under the first (CacheManager unpersists by plan equality)."""
-    from keystone_spark.operators.dedup import _persist_once
+    — the second ``caches.persist`` must not register it for release,
+    so releasing the second invocation's caches cannot yank the cache
+    out from under the first (CacheManager unpersists by plan
+    equality)."""
+    from keystone_spark.caches import persist
 
     df = spark.range(100).selectExpr("id", "id * 2 AS v")
     own1: list = []
-    a = _persist_once(df.where("v > 10"), own1)
+    a = persist(df.where("v > 10"), own1)
     assert own1 == [a]  # first caller persisted -> owns
     own2: list = []
-    b = _persist_once(df.where("v > 10"), own2)  # same plan, new object
+    b = persist(df.where("v > 10"), own2)  # same plan, new object
     assert own2 == []  # second caller skipped -> owns nothing
     lvl = b.storageLevel
     assert lvl.useMemory or lvl.useDisk  # still cached (owner's entry)

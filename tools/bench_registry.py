@@ -117,6 +117,7 @@ def run_registry(spark, sf_dir: str, keys=None, repeats: int = 2,
     import statistics
 
     import __spark_entry__ as entry_mod
+    from keystone_spark.caches import release
 
     qs = entry_mod.queries()
     keys = list(keys) if keys else list(qs)
@@ -130,13 +131,12 @@ def run_registry(spark, sf_dir: str, keys=None, repeats: int = 2,
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            # release the query's persist contract (release(out) — e.g.
+            # free what the query's operators materialized (e.g.
             # minhash_dedup's drop-id set); without this, 170 queries x
             # 3 runs accumulate persisted blocks in one JVM and storage
             # eviction + GC pressure make late-registry timings bimodal
             # (minhash_dedup measured 8s standalone vs 22s late-registry)
-            for c in getattr(df, "_keystone_caches", []):
-                c.unpersist()
+            release(df)
             return dt
 
         once()  # warmup: file listing, codegen, broadcast build

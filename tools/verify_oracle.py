@@ -79,6 +79,7 @@ def main() -> int:
     sys.path.insert(0, ".")
     import __spark_entry__ as entry_mod
     from keystone_spark import get_session
+    from keystone_spark.caches import release
 
     spark = get_session("verify_oracle", shuffle_partitions=16)
     con = load_duck(sf_dir)
@@ -91,12 +92,11 @@ def main() -> int:
         try:
             out = fn(spark, sf_dir)
             sdf = out.toPandas()
-            # honor the release(out) persist contract per query, then
-            # sweep strays — 170 queries in one JVM otherwise accumulate
+            # free what the query's operators materialized, then sweep
+            # strays — 170 queries in one JVM otherwise accumulate
             # persisted blocks (same leak bench_registry.run_registry
             # releases; harmless for correctness, bad for memory)
-            for c in getattr(out, "_keystone_caches", []):
-                c.unpersist()
+            release(out)
             spark.catalog.clearCache()
         except Exception as e:
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")

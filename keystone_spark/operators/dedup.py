@@ -32,12 +32,13 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from keystone_spark import fsutil
 from keystone_spark.caches import attach, persist, release
+from keystone_spark.sources.tables import ensure_parallelism
 
 DEFAULT_BUCKET_CAP = 2000
 
 # 64-bit Hamming banding (simhash/phash) has a CONSTANT band-key space
 # (<= 2^8-2^9 under any structural-recall layout at hamming ~ 12 — see
-# _emit_banded_pairs), so bucket occupancy grows with the corpus and the
+# hash64_candidates), so bucket occupancy grows with the corpus and the
 # self-join cost with its square. Buckets over this cap TRUNCATE to their
 # lowest-id members, bounding per-bucket join work at cap^2 (256^2 = 65k
 # comparisons) — total collision volume is then linear in banded rows.
@@ -88,242 +89,6 @@ def clique_band_segments(n_seg: int, n_cliques: int) -> list[tuple[int, int]]:
     ]
 
 
-def _band_agrees(xor, segs: tuple[int, ...], seg: int):
-    """Predicate: every segment of this band is zero in the pair's XOR —
-    i.e. the two signatures share this band's combined key exactly."""
-    mask = (1 << seg) - 1
-    pred = None
-    for s in segs:
-        p = F.shiftrightunsigned(xor, s * seg).bitwiseAND(F.lit(mask)) == 0
-        pred = p if pred is None else (pred & p)
-    return pred
-
-
-def _band_agree_mask(xor, bands: list[tuple[int, ...]], seg: int):
-    """Bitmask over bands: bit b set iff the two signatures agree on
-    band b's combined key, as one FLAT sum of per-band terms.
-
-    Shape matters more than op count here: the pre-r8 form was a nested
-    first-agreeing-band WHEN chain, and at 35 bands the ~70-deep
-    conditional fell out of whole-stage codegen into interpreted
-    evaluation — measured 96 s vs 2.3 s for the same 35M-row collision
-    scan. A flat sum splits cleanly across generated methods, stays in
-    codegen at any band count, and the lowest-set-bit trick below turns
-    it back into the first-agreeing-band index."""
-    out = None
-    for b, segs in enumerate(bands):
-        term = F.when(
-            _band_agrees(xor, bands[b], seg), F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        out = term if out is None else (out + term)
-    return out
-
-
-def _is_first_band(band_col, xor, bands: list[tuple[int, ...]], seg: int):
-    """Exact-once emission predicate (uncapped single-segment layouts):
-    this joined row's ``band`` is the FIRST (lowest-index) band where the
-    pair's signatures agree. The first such band is the lowest set bit of
-    the agreement mask, isolated with m & -m; joined rows always have
-    m != 0 (they matched on an agreeing bucket by construction)."""
-    m = _band_agree_mask(xor, bands, seg)
-    # shiftleft needs a literal shift in the Python API; SQL takes a column
-    band_bit = F.expr(
-        f"shiftleft(CAST(1 AS BIGINT), {band_col})"
-    )
-    return band_bit == m.bitwiseAND(-m)
-
-
-def _emit_banded_pairs(
-    sh: DataFrame,
-    id_col: str,
-    bands: list[tuple[int, ...]],
-    seg: int,
-    max_hamming: int,
-    bucket_cap: int | None,
-) -> DataFrame:
-    """Shared banding + pair-emission tail of the 64-bit kernels
-    (``simhash_candidates`` / ``hash64_candidates``): takes the
-    ``(id, __sh)`` signature table, explodes band-bucket keys, guards
-    against bucket skew, then band self-join + map-side Hamming verify.
-    Any persisted inputs are owned by the returned DataFrame (free
-    them with ``release(pairs)``).
-
-    Two skew-guard shapes, chosen by LAYOUT (r15; see the comment at
-    the branch below):
-
-    - clique / >16-band layouts (capped): the truncation window runs
-      UNCONDITIONALLY and the plan is fully lazy — no probe job, no
-      banded cache. The window's (band, bucket) exchange is the same
-      partitioning the self-join needs, so at scale it costs no extra
-      shuffle, and the two identical join-side subplans share the
-      exchange at runtime (AQE stage reuse).
-    - small single-segment layouts: EAGER when ``bucket_cap`` is set
-      (ADVICE r7) — the adaptive skew probe runs one Spark job
-      (signature kernel + banding + count agg) at DataFrame-
-      CONSTRUCTION time, because the choice between the exact-once
-      filter and the groupBy dedup depends on its outcome; the banded
-      table is persisted so the probe and both join sides read one
-      materialization. Callers that build the plan but never execute
-      it still pay the kernel once; pass ``bucket_cap=None`` for a
-      fully lazy (but unguarded) plan.
-
-    Pair multiplicity (a pair joins once per agreeing band) is resolved
-    by one of two row-local strategies:
-
-    - EXACT-ONCE FILTER — uncapped single-segment layouts: "this row's
-      band is the first agreeing band" is a pure function of the two
-      signatures, so a filter emits each pair exactly once with ZERO
-      extra shuffle. Kept for small layouts only: the agreement-mask
-      expression grows with the band count, and past ~16 bands the
-      generated join-condition method fell out of JIT (r8: clique35
-      measured 96 s vs 3.8 s for the same collision volume).
-    - HAMMING-FILTER + GROUP-BY — capped or clique layouts: the cheap
-      ``bit_count(xor) <= max_hamming`` predicate runs INSIDE the join
-      (tiny, JIT-safe), so only true near-pairs reach the groupBy(i, j)
-      dedup — a shuffle of output-scale rows, not collision-scale. A
-      pair survives iff at least one of its agreeing buckets kept both
-      members under the cap; the groupBy collapses whatever
-      multiplicity remains.
-
-    SCALE CEILING (measured, VERDICT r8 #3): a 64-bit signature at
-    ``max_hamming`` ~ 12 admits only <= ~8-9 bit band keys under any
-    structural-recall layout (pigeonhole needs >= 13 agreeing chances),
-    so the band key space is CONSTANT and uncapped bucket occupancy
-    grows linearly with the corpus — the band self-join quadratically
-    (r8's uncapped clique config: 758 s at sf5). The cap TRUNCATES each
-    oversized bucket to its ``bucket_cap`` lowest-id members (one
-    WindowGroupLimit pass), bounding total collision volume at
-    n_banded_rows x cap — linear — at the documented recall cost that
-    pairs straddling the truncation boundary of EVERY their shared
-    bucket are missed. Size ``bucket_cap`` so the declared scale
-    point's occupancy stays under it when full recall is required;
-    for corpus-scale near-dup, ``minhash_dedup``'s 2^64 key space
-    (occupancy tracks duplicate families, not corpus size) is the
-    declared path.
-    """
-    mask = (1 << seg) - 1
-
-    def bucket_expr(segs: tuple[int, ...]):
-        # combined key: concatenate the segment values into one long —
-        # 2^(len(segs)*seg) distinct buckets per band
-        expr = None
-        for s in segs:
-            v = F.shiftrightunsigned(F.col("__sh"), s * seg).bitwiseAND(
-                F.lit(mask)
-            )
-            expr = v if expr is None else F.shiftleft(expr, seg).bitwiseOR(v)
-        return expr
-
-    caches: list = []
-    banded_plan = sh.select(
-        id_col,
-        "__sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        bucket_expr(segs).alias("bucket"),
-                    )
-                    for b, segs in enumerate(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "__sh", "bb.band", "bb.bucket")
-    # The exact-once emission path below is only ever taken by small
-    # single-segment layouts; clique/large layouts always dedup with the
-    # hamming-filter + groupBy strategy REGARDLESS of the probe's
-    # outcome, so for them the probe's only effect is skipping the
-    # truncation window when every bucket is under the cap — and the
-    # window is a semantic NO-OP in exactly that case (row_number <=
-    # cap filters nothing). r15 measurement (sf0.1, warm, interleaved):
-    # the eager probe chain (count-agg job + isEmpty job + `big`
-    # persist) cost MORE than the always-on WindowGroupLimit pass it
-    # sometimes saved (~7.2-11.1 s vs ~4-5 s per invocation), so the
-    # ineligible layouts now apply the truncation unconditionally and
-    # stay fully LAZY (no construction-time Spark job). Identical
-    # output either way: over-cap buckets truncate to the same
-    # lowest-id members, under-cap buckets pass through untouched.
-    exact_once_eligible = all(len(s) == 1 for s in bands) and len(bands) <= 16
-    if bucket_cap is not None and not exact_once_eligible:
-        w = Window.partitionBy("band", "bucket").orderBy(id_col)
-        banded = (
-            banded_plan.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= bucket_cap)
-            .drop("__rn")
-        )
-        capped = True  # groupBy-dedup emission (the only valid one here)
-        bucket_cap = None  # probe below is skipped
-    else:
-        banded = persist(banded_plan, caches)
-        capped = False
-    if bucket_cap is not None:
-        # Adaptive skew probe (the AQE idea, one level up): ONE
-        # map-side-combinable count-agg decides whether any bucket
-        # actually exceeds the cap. The common corpus has none — then
-        # the truncation window is skipped and the exact-once fast path
-        # stays available. The agg reads the banded cache just
-        # materialized above, so the probe costs one cached scan, not a
-        # kernel re-run.
-        big_own: list = []
-        big = persist(
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__n"))
-            .where(F.col("__n") > bucket_cap)
-            .select("band", "bucket"),
-            big_own,
-        )
-        capped = not big.isEmpty()
-        if capped:
-            # TRUNCATE oversized buckets to their ``bucket_cap``
-            # lowest-id members instead of dropping them wholesale
-            # (r9, VERDICT r8 #3): per-bucket join work is then bounded
-            # by cap^2 BY DESIGN — total collision volume <=
-            # n_banded_rows * cap, LINEAR in the corpus — while each
-            # boilerplate family still yields pairs among its first
-            # ``cap`` members (the r7/r8 anti-join lost the whole
-            # family). row_number <= cap compiles to WindowGroupLimit
-            # (rank-limit pushed map-side before the window shuffle),
-            # so the guard costs one bounded shuffle of banded rows.
-            w = Window.partitionBy("band", "bucket").orderBy(id_col)
-            banded = (
-                banded.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= bucket_cap)
-                .drop("__rn")
-            )
-        release(big_own)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    xor = F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    )
-    exact_once = not capped and all(len(s) == 1 for s in bands) and len(bands) <= 16
-    if exact_once:
-        joined = joined.where(_is_first_band("a.band", xor, bands, seg))
-        pairs = joined.select(
-            F.col(f"a.{id_col}").alias("i"),
-            F.col(f"b.{id_col}").alias("j"),
-            F.bit_count(xor).alias("hamming"),
-        ).where(F.col("hamming") <= max_hamming)
-    else:
-        pairs = (
-            joined.where(F.bit_count(xor) <= max_hamming)
-            .select(
-                F.col(f"a.{id_col}").alias("i"),
-                F.col(f"b.{id_col}").alias("j"),
-                F.bit_count(xor).alias("hamming"),
-            )
-            # hamming is a pure function of the pair: min == the value
-            .groupBy("i", "j")
-            .agg(F.min("hamming").alias("hamming"))
-        )
-    return attach(pairs, caches)
-
-
 def _drop_oversized_buckets(
     banded: DataFrame, keys: list[str], bucket_cap: int | None
 ) -> DataFrame:
@@ -336,10 +101,10 @@ def _drop_oversized_buckets(
     Exact-dedup-first (see ``minhash_dedup``) absorbs the identical-doc
     case before banding; what a dropped oversized bucket loses is only
     near-dup detection *among* >cap boilerplate variants. A pair whose
-    first agreeing band is capped but whose LATER band survives is
-    still emitted — see ``_emit_banded_pairs``, which switches from the
-    exact-once pure filter to a verified-pair dedup whenever this guard
-    is live."""
+    bucket is dropped in one band but shared in a surviving bucket of
+    another band is still emitted: both self-joins that use this guard
+    dedup their pairs with ``distinct``, so one surviving shared bucket
+    suffices."""
     if bucket_cap is None:
         return banded
     big = (
@@ -394,20 +159,6 @@ def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     return df.dropDuplicates(cols) if cols else df.dropDuplicates()
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread a narrow input (e.g. one small parquet file) across the
-    cluster before a CPU-heavy Arrow kernel. The shuffle moves only the raw
-    rows (cheap); without it, a single-file scan pins the whole signature
-    computation to one Python worker. No-op when the input already has
-    enough partitions (the 100 TB case). Delegates to
-    sources.tables.ensure_parallelism, which skips the partition probe
-    on shuffle-bearing plans (probing ``.rdd`` under AQE executes query
-    stages — ~2.8 s per signature call at sf1, r9)."""
-    from keystone_spark.sources.tables import ensure_parallelism
-
-    return ensure_parallelism(df)
-
-
 def shingle_hashes(text_col, k: int = 5):
     """Distinct k-char shingles -> array<long> xxhash64 values, JVM-side."""
     return F.transform(char_shingles(text_col, k), lambda s: F.xxhash64(s))
@@ -430,7 +181,7 @@ def minhash_signatures(
     A = rng.integers(1, _MERSENNE, size=n_hashes, dtype=np.int64)
     B = rng.integers(0, _MERSENNE, size=n_hashes, dtype=np.int64)
 
-    hashed = _ensure_parallelism(df).select(
+    hashed = ensure_parallelism(df).select(
         F.col(id_col).alias("__id"), shingle_hashes(F.col(text_col), shingle_k).alias("__h")
     )
     # id passes through untouched, so it keeps the caller's type —
@@ -621,7 +372,7 @@ def jaccard_verify(
     # (r9). The semi-join bounds the table to candidate docs, so the
     # respread shuffle moves candidate-scale text, never the corpus.
     shing = char_shingles(F.col(text_col), shingle_k)
-    sh = _ensure_parallelism(
+    sh = ensure_parallelism(
         df.join(cand_ids, id_col, "left_semi")
     ).select(F.col(id_col), shing.alias("__sh"))
     use_hist = n_hist is not None and n_hist > 1
@@ -987,7 +738,7 @@ def simhash_signatures_arrow(
     (xxhash64 in codegen), the 64-way bit voting runs as one numpy pass per
     batch. Bit-for-bit identical to functions/text.simhash64 (tested), ~10x
     faster per doc; the all-codegen form remains for zero-Python paths."""
-    hashed = _ensure_parallelism(df).select(
+    hashed = ensure_parallelism(df).select(
         F.col(id_col).alias("__id"),
         F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("__h"),
     )
@@ -1034,11 +785,8 @@ def simhash_candidates(
     least one exact band by pigeonhole); verify with bit_count. The
     signatures come from ``simhash_signatures_arrow`` (vectorized per
     batch) and band through ``hash64_candidates``. Buckets larger than
-    ``bucket_cap`` are excluded before the self-join (skew guard — see
-    ``_drop_oversized_buckets``); pass None to disable. EAGER when
-    ``bucket_cap`` is set on a small single-segment layout (the adaptive
-    skew probe runs one Spark job at construction time); clique layouts
-    stay lazy (see ``_emit_banded_pairs``).
+    ``bucket_cap`` truncate to their lowest-id members before the
+    self-join (skew guard); pass None to disable.
 
     SCALE CEILING (measured; VERDICT r8 #3 corrected the r8 overclaim):
     EVERY structural-recall banding of a 64-bit signature at
@@ -1055,7 +803,7 @@ def simhash_candidates(
     the clique join measured 758 s vs the capped r7 layout's 71 s.
     ``bucket_cap`` (default ``HAMMING_BUCKET_CAP``) is therefore the
     load-bearing control: oversized buckets truncate to their cap
-    lowest-id members (see ``_emit_banded_pairs``), bounding total
+    lowest-id members (see ``hash64_candidates``), bounding total
     collision work at banded_rows x cap — linear — at a documented,
     deliberate recall cost inside over-cap boilerplate families
     (r9 measured at cap=256: the declared simhash_pairs query fell
@@ -1169,7 +917,7 @@ def simhash_verified_pairs(
             F.lit(1.0).alias("jac"),
         )
     )
-    return attach(within.unionByName(cross), caches, rep_pairs)
+    return attach(within.unionByName(cross), caches)
 
 
 def semantic_clusters(
@@ -1227,27 +975,116 @@ def hash64_candidates(
     bucket_cap: int | None = HAMMING_BUCKET_CAP,
     band_cliques: int | None = None,
 ) -> DataFrame:
-    """Banded near-dup candidates over ANY 64-bit signature column (the
-    simhash_candidates kernel generalized): pigeonhole guarantees a pair
-    within Hamming distance n_bands-1 shares an exact band, the band
-    equi-join replaces the all-pairs product, bit_count verifies. Use
-    with text simhash, image phash (multimodal.phash64), audio
-    fingerprints — anything that emits a LongType signature.
-    ``band_cliques`` switches to within-clique segment-PAIR band keys
-    (guaranteed through Hamming n_bands-band_cliques-1, collision rate
-    /2^seg — see ``simhash_candidates``/``clique_band_segments``).
-    EAGER when ``bucket_cap`` is set on a small single-segment layout;
-    clique layouts stay lazy (see ``_emit_banded_pairs``).
+    """Banded near-dup candidates (i, j, hamming) over ANY 64-bit
+    signature column (the simhash_candidates kernel generalized):
+    pigeonhole guarantees a pair within Hamming distance n_bands-1
+    shares an exact band, the band equi-join replaces the all-pairs
+    product, bit_count verifies. Use with text simhash, image phash
+    (multimodal.phash64), audio fingerprints — anything that emits a
+    LongType signature. ``band_cliques`` switches to within-clique
+    segment-PAIR band keys (guaranteed through Hamming
+    n_bands-band_cliques-1, collision rate /2^seg — see
+    ``simhash_candidates``/``clique_band_segments``).
+
+    One lazy plan for every layout and cap; building it runs no Spark
+    job:
+
+    1. explode one (band, bucket) key row per band;
+    2. co-partition the banded rows on (band, bucket), the partitioning
+       the self-join needs. With ``bucket_cap`` set, that is the
+       truncation window's shuffle: each bucket keeps its
+       ``bucket_cap`` lowest-id members (row_number <= cap compiles to
+       WindowGroupLimit, pruned map-side before the shuffle; buckets
+       under the cap pass untouched). Without a cap it is an explicit
+       hash repartition. Either way both join sides read ONE exchange
+       (exchange reuse), so the signature kernel upstream runs once
+       even when the join is planned as a broadcast;
+    3. band self-join on (band, bucket, i < j) with the
+       ``bit_count(xor) <= max_hamming`` predicate INSIDE the join
+       condition — a tiny, JIT-safe expression, so only true near
+       pairs leave the join;
+    4. groupBy(i, j) collapses the multiplicity of a pair that shares
+       several buckets — a shuffle of output-scale rows, not
+       collision-scale. A pair survives iff at least one of its shared
+       buckets kept both members under the cap.
+
+    SCALE CEILING (measured, VERDICT r8 #3): a 64-bit signature at
+    ``max_hamming`` ~ 12 admits only <= ~8-9 bit band keys under any
+    structural-recall layout (pigeonhole needs >= 13 agreeing chances),
+    so the band key space is CONSTANT and uncapped bucket occupancy
+    grows linearly with the corpus — the band self-join quadratically
+    (r8's uncapped clique config: 758 s at sf5). The cap bounds total
+    collision volume at n_banded_rows x cap — linear — at the
+    documented recall cost that pairs straddling the truncation
+    boundary of EVERY their shared bucket are missed. Size
+    ``bucket_cap`` so the declared scale point's occupancy stays under
+    it when full recall is required; for corpus-scale near-dup,
+    ``minhash_dedup``'s 2^64 key space (occupancy tracks duplicate
+    families, not corpus size) is the declared path.
     """
     assert 64 % n_bands == 0
     seg = 64 // n_bands
-    sh = df.select(F.col(id_col), F.col(hash_col).alias("__sh"))
+    mask = (1 << seg) - 1
     if band_cliques is not None:
         bands = clique_band_segments(n_bands, band_cliques)
     else:
         bands = [(b,) for b in range(n_bands)]
-    return _emit_banded_pairs(
-        sh, id_col, bands, seg, max_hamming, bucket_cap
+
+    def bucket_expr(segs: tuple[int, ...]):
+        # combined key: concatenate the segment values into one long —
+        # 2^(len(segs)*seg) distinct buckets per band
+        expr = None
+        for s in segs:
+            v = F.shiftrightunsigned(F.col("__sh"), s * seg).bitwiseAND(
+                F.lit(mask)
+            )
+            expr = v if expr is None else F.shiftleft(expr, seg).bitwiseOR(v)
+        return expr
+
+    sh = df.select(F.col(id_col), F.col(hash_col).alias("__sh"))
+    banded = sh.select(
+        id_col,
+        "__sh",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        bucket_expr(segs).alias("bucket"),
+                    )
+                    for b, segs in enumerate(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select(id_col, "__sh", "bb.band", "bb.bucket")
+    if bucket_cap is None:
+        banded = banded.repartition("band", "bucket")
+    else:
+        w = Window.partitionBy("band", "bucket").orderBy(id_col)
+        banded = (
+            banded.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") <= bucket_cap)
+            .drop("__rn")
+        )
+    a = banded.alias("a")
+    b = banded.alias("b")
+    xor = F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.bit_count(xor) <= max_hamming),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("i"),
+            F.col(f"b.{id_col}").alias("j"),
+            F.bit_count(xor).alias("hamming"),
+        )
+        # hamming is a pure function of the pair: min == the value
+        .groupBy("i", "j")
+        .agg(F.min("hamming").alias("hamming"))
     )
 
 

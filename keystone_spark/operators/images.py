@@ -423,10 +423,6 @@ def hog_features(
     pinned by the naive-loop oracle in tests. Grayscale input expected;
     multi-channel images use the first channel.
     """
-    fields = list(df.schema.fields)
-    out_schema = StructType(fields + [StructField(out_col, ArrayType(DoubleType()))])
-    cols = [f.name for f in fields]
-
     def hog_one(arr: np.ndarray) -> list[float]:
         g = arr[:, :, 0]
         gy, gx = np.gradient(g)
@@ -444,15 +440,7 @@ def hog_features(
         out = out / np.maximum(norms, 1e-12)
         return out.ravel().tolist()
 
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [hog_one(_img_to_np(img)) for img in pdf[image_col]]
-            yield pdf[cols + [out_col]]
-
-    return df.mapInPandas(part, out_schema)
+    return _map_images(df, image_col, out_col, ArrayType(DoubleType()), hog_one)
 
 
 def _gauss_smooth(img: np.ndarray, sigma: float) -> np.ndarray:
@@ -487,10 +475,6 @@ def daisy_features(
     Each histogram is L2-normalized. Output length:
     bins * (1 + rings * ring_points).
     """
-    fields = list(df.schema.fields)
-    out_schema = StructType(fields + [StructField(out_col, ArrayType(DoubleType()))])
-    cols = [f.name for f in fields]
-
     def one(arr: np.ndarray) -> list[float]:
         g = arr[:, :, 0]
         gy, gx = np.gradient(g)
@@ -521,12 +505,4 @@ def daisy_features(
                 )
         return np.concatenate(out).tolist()
 
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [one(_img_to_np(img)) for img in pdf[image_col]]
-            yield pdf[cols + [out_col]]
-
-    return df.mapInPandas(part, out_schema)
+    return _map_images(df, image_col, out_col, ArrayType(DoubleType()), one)

@@ -357,8 +357,8 @@ def test_banded_pair_survives_capped_first_band(spark):
     capped one, (b) pairs are still found among the cap survivors of a
     boilerplate family (the r7/r8 anti-join lost the whole family), and
     (c) members beyond the cap contribute nothing through that bucket.
-    With bucket_cap=None the exact-once pure filter emits every pair
-    exactly once with no dedup shuffle."""
+    With bucket_cap=None every pair is still emitted exactly once: the
+    pair-dedup groupBy collapses pairs that share several buckets."""
     from keystone_spark.operators.dedup import hash64_candidates
 
     # 4 bands x 16 bits. X and Y agree in bands 0 AND 1 (band 0 is their
@@ -393,8 +393,8 @@ def test_banded_pair_survives_capped_first_band(spark):
     # and must contribute nothing
     assert all(i < 18 and j < 18 for (i, j) in emitted)
 
-    # uncapped: the pure exact-once filter emits every pair (including
-    # all filler-filler near-pairs) EXACTLY once, with no dedup shuffle
+    # uncapped: every pair (including all filler-filler near-pairs) is
+    # emitted EXACTLY once
     uncapped = hash64_candidates(
         df, "img_id", "h", n_bands=4, max_hamming=3, bucket_cap=None
     ).collect()

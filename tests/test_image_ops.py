@@ -138,11 +138,14 @@ def test_hog_features_vs_naive(spark):
     g = rng.random((h, w))
     img = {"height": h, "width": w, "n_channels": 1,
            "data": g.astype(np.float32).ravel().tolist()}
+    # the null row (missing media) must propagate as a null descriptor
     df = spark.createDataFrame(
-        [(0, img)],
+        [(0, img), (1, None)],
         "id int, image struct<height:int,width:int,n_channels:int,data:array<float>>",
     )
-    got = np.array(hog_features(df, cell=4, bins=9).first().hog)
+    rows = hog_features(df, cell=4, bins=9).orderBy("id").collect()
+    assert rows[1].hog is None
+    got = np.array(rows[0].hog)
 
     # naive oracle: same definition, double loops
     gf = np.asarray(img["data"], dtype=np.float64).reshape(h, w)
@@ -187,11 +190,14 @@ def test_daisy_features_shape_and_orientation(spark):
     g = np.zeros((h, w), dtype=np.float32)
     g[:, w // 2 :] = 1.0
     img = {"height": h, "width": w, "n_channels": 1, "data": g.ravel().tolist()}
+    # the null row (missing media) must propagate as a null descriptor
     df = spark.createDataFrame(
-        [(0, img)],
+        [(0, img), (1, None)],
         "id int, image struct<height:int,width:int,n_channels:int,data:array<float>>",
     )
-    out = np.array(daisy_features(df, bins=4, rings=2, ring_points=6).first().daisy)
+    rows = daisy_features(df, bins=4, rings=2, ring_points=6).orderBy("id").collect()
+    assert rows[1].daisy is None
+    out = np.array(rows[0].daisy)
     assert out.shape == (4 * (1 + 2 * 6),)
     center = out[:4]
     assert center[0] > 0.9          # +x orientation dominates

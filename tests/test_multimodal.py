@@ -196,8 +196,6 @@ def test_phash64_invariance_and_discrimination(spark):
     cands = hash64_candidates(hashed, "vec_id", "phash", n_bands=8,
                               max_hamming=7)
     got = {(r.i, r.j) for r in cands.collect()}
-    from keystone_spark.operators.dedup import release
-    release(cands)  # drop the banded-signature persist (ADVICE r7)
     assert (0, 1) in got and (0, 2) in got and (1, 2) in got
     assert all(3 not in pair for pair in got)
 

@@ -540,46 +540,69 @@ def test_equidepth_hist_no_single_partition_sort(spark, sf_dir, qs):
     assert "ntile" not in plan.lower()
 
 
-def test_hamming_predicate_inside_band_join(spark):
+_HAMMING_LAYOUTS = {
+    "single4": dict(n_bands=4, max_hamming=3),
+    "clique16x3": dict(n_bands=16, max_hamming=12, band_cliques=3),
+}
+
+
+@pytest.fixture(
+    scope="module",
+    params=[(lay, cap) for lay in _HAMMING_LAYOUTS for cap in (256, None)],
+    ids=lambda p: f"{p[0]}-{'uncapped' if p[1] is None else f'cap{p[1]}'}",
+)
+def hamming_plan(request, spark, sf_dir):
+    """One ``simhash_candidates`` plan per (layout, bucket_cap): the
+    number of Spark jobs that BUILDING it ran (counted in a job group),
+    its initial plan, and its final adaptive plan after a collect (the
+    text before ``Initial Plan``)."""
+    from keystone_spark.operators.dedup import simhash_candidates
+    from keystone_spark.sources import load_table
+
+    layout, cap = request.param
+    kw = _HAMMING_LAYOUTS[layout]
+    docs = load_table(spark, "documents", sf_dir)
+    sc = spark.sparkContext
+    group = f"hamming-plan-{layout}-{cap}"
+    sc.setJobGroup(group, group)
+    try:
+        out = simhash_candidates(docs, bucket_cap=cap, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    initial = plan_of(out)
+    out.collect()
+    return {
+        "max_hamming": kw["max_hamming"],
+        "build_jobs": build_jobs,
+        "initial": initial,
+        "final": plan_of(out).split("Initial Plan")[0],
+    }
+
+
+def test_hamming_predicate_inside_band_join(hamming_plan):
     """The 64-bit banded kernel (simhash_pairs / phash_neardup) must
     carry the bit_count Hamming filter INSIDE the band join condition —
     evaluated per joined row before any downstream exchange — not as a
     post-join filter over the full collision volume (the r8 JIT-cliff
-    fix, pinned per VERDICT r8 #9). Also pins that only output-scale
-    rows reach the pair-dedup aggregate (the groupBy reads the join
-    directly)."""
-    from keystone_spark.operators.dedup import hash64_candidates
-
-    df = spark.range(100).select(
-        F.col("id").alias("img_id"), F.xxhash64("id").alias("h")
-    )
-    out = hash64_candidates(
-        df, "img_id", "h", n_bands=16, max_hamming=12,
-        bucket_cap=None, band_cliques=3,
-    )
-    plan = plan_of(out)
-    cond = [l for l in plan.splitlines() if "Join condition:" in l]
-    assert cond, plan[:2000]
-    assert any("bit_count" in c and "<= 12" in c for c in cond), cond
-    # no Filter node between the join and the pair-dedup aggregate
-    join_ix = plan.find("Join condition:")
-    agg_ix = plan.find("HashAggregate")
-    assert join_ix >= 0 and agg_ix >= 0
+    fix, pinned per VERDICT r8 #9), for every layout and cap."""
+    cond = [
+        l for l in hamming_plan["initial"].splitlines()
+        if "Join condition:" in l
+    ]
+    assert any(
+        "bit_count" in c and f"<= {hamming_plan['max_hamming']}" in c
+        for c in cond
+    ), cond
 
 
-def test_capped_clique_plan_reuses_the_signature_exchange(spark, sf_dir):
-    """The lazy capped clique path keeps no banded persist: both sides
-    of the band self-join must read ONE run of the Arrow signature
-    kernel through exchange reuse. Counted on the final adaptive plan
-    (the text before ``Initial Plan``), since the initial plan still
-    lists the kernel under each join side."""
-    from keystone_spark.operators.dedup import simhash_candidates
-    from keystone_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    out = simhash_candidates(docs, n_bands=16, max_hamming=12,
-                             band_cliques=3)
-    out.collect()
-    final = plan_of(out).split("Initial Plan")[0]
+def test_capped_clique_plan_reuses_the_signature_exchange(hamming_plan):
+    """Every layout and cap builds one LAZY plan: constructing it runs
+    no Spark job, and both sides of the band self-join read ONE run of
+    the Arrow signature kernel through exchange reuse. Counted on the
+    final adaptive plan, since the initial plan still lists the kernel
+    under each join side."""
+    assert hamming_plan["build_jobs"] == 0
+    final = hamming_plan["final"]
     assert final.count("MapInPandas") == 1, final[:4000]
     assert final.count("ReusedExchange") >= 1, final[:4000]

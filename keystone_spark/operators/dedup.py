@@ -92,19 +92,19 @@ def clique_band_segments(n_seg: int, n_cliques: int) -> list[tuple[int, int]]:
 def _drop_oversized_buckets(
     banded: DataFrame, keys: list[str], bucket_cap: int | None
 ) -> DataFrame:
-    """Skew guard for LSH band joins (VERDICT r1 #3): a bucket of n docs
-    yields n^2/2 candidate pairs in ONE join task; 100 TB corpora put 1e4+
-    boilerplate docs (license headers, templates) in a bucket -> 1e8+ pairs.
-    Buckets over ``bucket_cap`` are dropped wholesale via a
-    map-side-combinable count + broadcast anti-join (no sort, no one-task
-    window over the giant bucket, so the guard itself cannot skew).
-    Exact-dedup-first (see ``minhash_dedup``) absorbs the identical-doc
-    case before banding; what a dropped oversized bucket loses is only
-    near-dup detection *among* >cap boilerplate variants. A pair whose
-    bucket is dropped in one band but shared in a surviving bucket of
-    another band is still emitted: both self-joins that use this guard
-    dedup their pairs with ``distinct``, so one surviving shared bucket
-    suffices."""
+    """Skew guard for ``edit_distance_pairs`` and the MinHash
+    corpus-index joins: a bucket of n docs yields n^2/2 candidate pairs
+    in ONE join task; 100 TB corpora put 1e4+ boilerplate docs (license
+    headers, templates) in a bucket -> 1e8+ pairs. Buckets over
+    ``bucket_cap`` are dropped wholesale via a map-side-combinable count
+    + broadcast anti-join (no sort, no one-task window over the giant
+    bucket, so the guard itself cannot skew). Exact-dedup-first (see
+    ``minhash_dedup``) absorbs the identical-doc case before banding;
+    what a dropped oversized bucket loses is only near-dup detection
+    *among* >cap boilerplate variants; a pair still meets through any
+    other shared bucket that survives (the joins ``distinct`` their
+    pairs). ``minhash_lsh_candidates`` applies the same rule as a window
+    count, whose shuffle is the partitioning its self-join needs."""
     if bucket_cap is None:
         return banded
     big = (
@@ -120,6 +120,12 @@ from keystone_spark.functions.text import char_shingles, tokens
 _MERSENNE = (1 << 61) - 1
 _M61 = np.uint64(_MERSENNE)
 _MASK32 = np.uint64(0xFFFFFFFF)
+
+# Shingle rows per block of the MinHash signature kernel: every
+# _mulmod61 temporary is (block rows x n_hashes) uint64, ~1 MB at 128
+# hashes, instead of one (all shingles in the Arrow batch x n_hashes)
+# array of ~100 MB per temporary.
+SIG_BLOCK_ROWS = 1024
 
 
 def _fold61(x: np.ndarray) -> np.ndarray:
@@ -174,8 +180,12 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig array<long>[n_hashes]) — MinHash over shingle hashes.
 
-    Shingling+hashing stays in codegen; the n_hashes mins are one numpy
-    broadcast op per Arrow batch: sig = min over shingles of (a*h+b) mod M.
+    Shingling+hashing stays in codegen; the n_hashes mins are numpy
+    broadcast ops over blocks of whole documents of about
+    ``SIG_BLOCK_ROWS`` shingles: sig = min over shingles of
+    (a*h+b) mod M. Blocking changes no value, and stored MinHash
+    indexes depend on that: the signatures are byte-identical to a
+    whole-batch evaluation.
     """
     rng = np.random.default_rng(seed)
     A = rng.integers(1, _MERSENNE, size=n_hashes, dtype=np.int64)
@@ -197,25 +207,32 @@ def minhash_signatures(
         for pdf in batches:
             if pdf.empty:
                 continue
-            # ONE vectorized pass over the whole Arrow batch: flatten every
-            # doc's shingle hashes, compute (a*h+b) mod M for all hashes x
-            # all n_hashes at once (exact Mersenne mulmod — see _mulmod61),
+            # Vectorized per block of whole docs: flatten the block's
+            # shingle hashes, compute (a*h+b) mod M for all of them x all
+            # n_hashes at once (exact Mersenne mulmod — see _mulmod61),
             # then segmented-min back to per-doc signatures with
-            # minimum.reduceat — ~10x over a per-doc loop.
+            # minimum.reduceat — ~10x over a per-doc loop. Docs whose
+            # first row falls in the same SIG_BLOCK_ROWS-wide window of
+            # the flattened rows share a block, so a block holds about
+            # that many rows plus at most one doc's overhang.
             # NULL text -> null shingle array: treat as empty (sentinel
             # signature; such docs never match anything in near-dedup —
             # exact dedup is the right tool for empty/null content).
             lens = pdf["__h"].map(lambda h: 0 if h is None else len(h)).to_numpy()
-            keep = lens > 0
-            flat = np.concatenate([np.asarray(h, dtype=np.uint64)
-                                   for h in pdf["__h"][keep]]) if keep.any() else np.empty(0, np.uint64)
+            rows = np.flatnonzero(lens > 0)
             sigs = np.full((len(pdf), n_hashes), _MERSENNE, dtype=np.int64)
-            if len(flat):
-                prods = _fold61(_mulmod61(Au[None, :], flat[:, None]) + Bu[None, :])
-                prods = np.where(prods >= _M61, prods - _M61, prods)
-                offsets = np.concatenate([[0], np.cumsum(lens[keep])[:-1]])
-                mins = np.minimum.reduceat(prods, offsets, axis=0)
-                sigs[keep] = mins.astype(np.int64)
+            if len(rows):
+                hs = pdf["__h"].to_numpy()
+                starts = np.cumsum(lens[rows]) - lens[rows]
+                cuts = np.flatnonzero(np.diff(starts // SIG_BLOCK_ROWS)) + 1
+                for blk in np.split(rows, cuts):
+                    flat = np.concatenate([np.asarray(h, dtype=np.uint64)
+                                           for h in hs[blk]])
+                    prods = _fold61(_mulmod61(Au[None, :], flat[:, None]) + Bu[None, :])
+                    prods = np.where(prods >= _M61, prods - _M61, prods)
+                    offsets = np.cumsum(lens[blk]) - lens[blk]
+                    mins = np.minimum.reduceat(prods, offsets, axis=0)
+                    sigs[blk] = mins.astype(np.int64)
             yield pd.DataFrame({"__id": pdf["__id"], "sig": list(sigs)})
 
     return (
@@ -275,26 +292,34 @@ def minhash_lsh_candidates(
     (band, xxhash64(band slice)); docs sharing any band bucket are
     candidate pairs (i < j). Equi-join on the bucket key — shuffle, not
     broadcast, so it scales with corpus size. Buckets larger than
-    ``bucket_cap`` are excluded before the self-join (see
-    ``_drop_oversized_buckets``); pass None to disable.
+    ``bucket_cap`` are dropped wholesale before the self-join (the rule
+    of ``_drop_oversized_buckets``); pass None to disable.
 
-    The banded table feeds THREE consumers (the skew-guard count agg and
-    both self-join sides); Catalyst does not share common DataFrame
-    subtrees, so without a cache the band-key hashing (16 xxhash64s over
-    stringified signature slices per doc) runs three times — measured as
-    the dominant non-kernel cost of b13 at sf1 (VERDICT r7 #2). The
-    persisted banded DataFrame is owned by the result (free it with
-    ``release(result)`` once candidates are materialized); pass
-    ``caches`` to receive it instead, for callers that hand it on to
-    their own result (``minhash_dedup`` does)."""
-    own = [] if caches is None else caches
+    One lazy plan that persists nothing. The banded rows are shuffled
+    on (band, bucket), the partitioning the self-join needs, so the join
+    adds no exchange of its own. With ``bucket_cap`` set, that shuffle
+    is the guard's: ``count(*) over (partition by band, bucket) <=
+    bucket_cap``. Without it, an explicit ``repartition("band",
+    "bucket")`` takes its place. When ``sigs`` is a lazy plan, both join
+    sides read one exchange (exchange reuse), so it runs once. Over
+    cached signatures (``minhash_dedup``) each side bands the cached
+    rows itself: Spark 4.1's adaptive execution gives every scan of a
+    cache its own query stage and never reuses an exchange above one.
+    ``release(result)`` is a no-op, and ``caches`` (kept for callers
+    that collect an operator's caches in one list) receives nothing."""
     banded = minhash_banded(sigs, id_col, n_bands, n_hashes)
-    if bucket_cap is not None:
-        banded = persist(banded, own)
-    banded = _drop_oversized_buckets(banded, ["band", "bucket"], bucket_cap)
+    if bucket_cap is None:
+        banded = banded.repartition("band", "bucket")
+    else:
+        w = Window.partitionBy("band", "bucket")
+        banded = (
+            banded.withColumn("__n", F.count("*").over(w))
+            .where(F.col("__n") <= bucket_cap)
+            .drop("__n")
+        )
     a = banded.alias("a")
     b = banded.alias("b")
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -304,7 +329,6 @@ def minhash_lsh_candidates(
         .select(F.col(f"a.{id_col}").alias("i"), F.col(f"b.{id_col}").alias("j"))
         .distinct()
     )
-    return out if caches is not None else attach(out, own)
 
 
 def jaccard_verify(
@@ -321,8 +345,10 @@ def jaccard_verify(
     jac >= threshold. Join-back of shingle arrays + JVM set ops.
 
     Shingles are recomputed only for docs that appear in a candidate pair
-    (semi-join first): candidates are a tiny fraction of the corpus, so
-    this avoids re-shingling 100 TB to verify a few thousand pairs.
+    (join first): candidates are a tiny fraction of the corpus, so this
+    avoids re-shingling 100 TB to verify a few thousand pairs. Each
+    shingle row also carries its doc's partner ids, so ``pairs`` is
+    read once and the verify joins read it back from that table.
 
     TWO LOSSLESS prefilters run before the array intersection, cheapest
     first:
@@ -356,25 +382,34 @@ def jaccard_verify(
 
     The shingle table is persisted (consumed by both the i- and j-side
     joins) and owned by the result (free it with ``release(result)``);
-    pass ``caches`` to receive it instead, like
-    ``minhash_lsh_candidates``."""
-    cand_ids = (
-        pairs.select(F.col("i").alias(id_col))
-        .unionByName(pairs.select(F.col("j").alias(id_col)))
-        .distinct()
+    pass ``caches`` to receive it instead, for callers that hand it on
+    to their own result (the MinHash near-pair paths do)."""
+    # Each candidate doc's row carries its partner ids (the j of every
+    # pair it is the i of), so ``pairs`` is read once, inside the cached
+    # shingle table's plan, and the joins below read the pairs back
+    # from the cache: a candidate pipeline above another cache (the
+    # MinHash signatures) would otherwise run once per read.
+    itype, jtype = pairs.schema["i"].dataType, pairs.schema["j"].dataType
+    partners = (
+        pairs.select(F.explode(F.array(
+            F.struct(F.col("i").alias(id_col), F.col("j").alias("__p")),
+            F.struct(F.col("j").alias(id_col), F.lit(None).cast(jtype).alias("__p")),
+        )).alias("__e"))
+        .groupBy(F.col(f"__e.{id_col}").alias(id_col))
+        .agg(F.collect_list("__e.__p").alias("__ps"))
     )
     # persisted: consumed by both the i-side and j-side joins below —
-    # without it the semi-join + shingling runs twice. Re-spread first:
+    # without it the join + shingling runs twice. Re-spread first:
     # shingling + the histogram column are the CPU-heavy kernel of this
     # verify, and a narrow lineage (single-file fixture scan through a
-    # broadcast semi-join) otherwise pins them to one core — measured
+    # broadcast join) otherwise pins them to one core — measured
     # 73 s single-core vs ~4 s spread at sf0.1's 806k-candidate verify
-    # (r9). The semi-join bounds the table to candidate docs, so the
+    # (r9). The join bounds the table to candidate docs, so the
     # respread shuffle moves candidate-scale text, never the corpus.
     shing = char_shingles(F.col(text_col), shingle_k)
-    sh = ensure_parallelism(
-        df.join(cand_ids, id_col, "left_semi")
-    ).select(F.col(id_col), shing.alias("__sh"))
+    sh = ensure_parallelism(df.join(partners, id_col)).select(
+        F.col(id_col), shing.alias("__sh"), "__ps"
+    )
     use_hist = n_hist is not None and n_hist > 1
     if use_hist:
         sh = sh.withColumn(
@@ -391,6 +426,9 @@ def jaccard_verify(
         )
     own = [] if caches is None else caches
     sh = persist(sh, own)
+    pairs = sh.select(
+        F.col(id_col).cast(itype).alias("i"), F.explode("__ps").alias("j")
+    )
 
     # Two-phase attach (r14 optimization round, guide §8 "decide with
     # small rows, move big rows once" / §2.3 "shuffle fewer bytes"):
@@ -522,15 +560,14 @@ def minhash_estimate_filter(
 
 def _verified_near_pairs(cand, sigs, texts, id_col, text_col, n_hashes,
                          shingle_k, threshold, owned: list) -> DataFrame:
-    """The estimate -> verify tail of every MinHash near-pair path:
-    a persisted signature-estimate prune of the candidates, then exact
-    shingle Jaccard on the survivors, (i, j, jac). No histogram
-    prefilter: the estimate prune already left near-certain verifies,
-    so the bound would be pure overhead. Persists land in ``owned``."""
-    likely = persist(
-        minhash_estimate_filter(cand, sigs, id_col, n_hashes, threshold),
-        owned,
-    )
+    """The estimate -> verify tail of every MinHash near-pair path: a
+    signature-estimate prune of the candidates, then exact shingle
+    Jaccard on the survivors, (i, j, jac). No histogram prefilter: the
+    estimate prune already left near-certain verifies, so the bound
+    would be pure overhead. The prune, a join against the cached
+    signatures, is not cached itself. Verify's shingle table lands in
+    ``owned``."""
+    likely = minhash_estimate_filter(cand, sigs, id_col, n_hashes, threshold)
     return jaccard_verify(
         likely, texts, id_col, text_col, shingle_k, threshold,
         caches=owned, n_hist=None,
@@ -539,16 +576,19 @@ def _verified_near_pairs(cand, sigs, texts, id_col, text_col, n_hashes,
 
 def _minhash_near_pairs(docs, id_col, text_col, n_hashes, n_bands, shingle_k,
                         threshold, seed, bucket_cap, owned: list) -> DataFrame:
-    """Verified (i, j, jac) near pairs among ``docs``: persisted
-    signatures, banded LSH candidates, then ``_verified_near_pairs``.
-    The signatures are consumed twice (band join + estimate filter), so
-    they persist and the Arrow stage runs exactly once (AutoCacheRule
-    R2: reuse count >= 2 -> cache). Persists land in ``owned``."""
+    """Verified (i, j, jac) near pairs among ``docs``: signatures, banded
+    LSH candidates, then ``_verified_near_pairs``. Two caches land in
+    ``owned``: the signatures (the Arrow kernel is the costliest stage,
+    read by the band join and the estimate prune — AutoCacheRule R2)
+    and verify's shingle table, the only cache whose plan reads
+    another. Everything else is recomputed where it is read: every
+    adaptive plan update re-renders each nested cache's plan once per
+    reference, so nesting caches grows the plan string
+    multiplicatively."""
     sigs = persist(minhash_signatures(
         docs, id_col, text_col, n_hashes, shingle_k, seed
     ), owned)
-    cand = minhash_lsh_candidates(sigs, id_col, n_bands, n_hashes, bucket_cap,
-                                  caches=owned)
+    cand = minhash_lsh_candidates(sigs, id_col, n_bands, n_hashes, bucket_cap)
     return _verified_near_pairs(cand, sigs, docs, id_col, text_col,
                                 n_hashes, shingle_k, threshold, owned)
 
@@ -576,13 +616,15 @@ def minhash_dedup(
     same text, so any near-dup caught via the duplicate is caught via its
     keeper.
 
-    Cache hygiene (VERDICT r1 #6, rephased r15): the result owns every
-    persist the operator creates — call ``release(result)`` after
-    materializing the result (the bench and registry harnesses do) so
-    caches never accumulate across queries in a long-lived session. No
-    construction-time actions: the plan is fully lazy and the caches
-    materialize inside the caller's one action instead of a serial
-    chain of eager ``.count()`` barriers (VERDICT r14 #4)."""
+    Cache hygiene: the result owns the operator's two caches, the
+    signatures and verify's shingle table — call ``release(result)``
+    after materializing the result (the bench and registry harnesses
+    do) so caches never accumulate across queries in a long-lived
+    session. The survivors, candidates, estimate prune and drop set are
+    recomputed where read rather than cached (see
+    ``_minhash_near_pairs``). No construction-time actions: the plan is
+    fully lazy and the caches materialize inside the caller's one
+    action."""
     # null text never dedups (matches SQL NULL semantics and the oracle:
     # no shingles -> no pairs), so nulls bypass the exact phase untouched
     nn = df.where(F.col(text_col).isNotNull())
@@ -592,27 +634,14 @@ def minhash_dedup(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
-    # survivors is consumed THREE times (signature kernel, verify's
-    # candidate-text semi-join, final anti-join), and each consumer
-    # otherwise re-runs the exact-first scan+agg+semi-join (~1.5 s x 3
-    # at sf1, r9). It still references the cache after return, so the
-    # result owns it rather than an inline unpersist.
-    owned: list = []
-    survivors = persist(
-        nn.join(keepers, id_col, "left_semi").unionByName(
-            df.where(F.col(text_col).isNull())
-        ),
-        owned,
+    survivors = nn.join(keepers, id_col, "left_semi").unionByName(
+        df.where(F.col(text_col).isNull())
     )
-    # no eager .count() barriers (VERDICT r14 #4: a chain of driver
-    # actions scaled b13 only 1.22x from 8 to 32 cores at sf1): every
-    # cache is freed by the caller's release(out) AFTER the one real
-    # action, at the cost of a larger within-query peak of spillable
-    # MEMORY_AND_DISK blocks
+    owned: list = []
     dups = _minhash_near_pairs(survivors, id_col, text_col, n_hashes,
                                n_bands, shingle_k, threshold, seed,
                                bucket_cap, owned)
-    drop = persist(dups.select(F.col("j").alias(id_col)).distinct(), owned)
+    drop = dups.select(F.col("j").alias(id_col)).distinct()
     return attach(survivors.join(drop, id_col, "left_anti"), owned)
 
 
@@ -653,19 +682,14 @@ def dedup_clusters(
         with_keeper.where(F.col(id_col) != F.col("__k"))
         .select(F.col("__k").alias("i"), F.col(id_col).alias("j"))
     )
-    # consumed by the signature kernel AND verify's candidate-text
-    # semi-join; freed with the other edge-side caches once
-    # connected_components has eagerly checkpointed the labels, so
-    # nothing references them after it returns (r9)
-    edge_caches: list = []
-    survivors = persist(
-        nn.join(
-            with_keeper.where(F.col(id_col) == F.col("__k")).select(id_col),
-            id_col,
-            "left_semi",
-        ),
-        edge_caches,
+    survivors = nn.join(
+        with_keeper.where(F.col(id_col) == F.col("__k")).select(id_col),
+        id_col,
+        "left_semi",
     )
+    # freed once connected_components has eagerly checkpointed the
+    # labels, so nothing references them after it returns
+    edge_caches: list = []
     near = _minhash_near_pairs(survivors, id_col, text_col, n_hashes,
                                n_bands, shingle_k, threshold, seed,
                                bucket_cap, edge_caches).select("i", "j")

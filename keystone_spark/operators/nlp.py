@@ -1176,132 +1176,3 @@ class Bm25Index:
             scores.withColumn("rk", F.row_number().over(win))
             .where(F.col("rk") <= k)
         )
-
-
-def bigram_pmi(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 5,
-    top_k: int = 50,
-) -> DataFrame:
-    """Collocation mining: pointwise mutual information of adjacent
-    token pairs, PMI(a,b) = ln( P(a,b) / (P(a)P(b)) ) with bigram
-    probability over total bigrams and unigram probabilities over total
-    tokens. The classic corpus-linguistics signal for multiword units
-    ("new york") vs chance co-occurrence; in a training-data pipeline it
-    drives tokenizer-merge audits and boilerplate phrase discovery.
-
-    Returns the ``top_k`` bigrams with count >= ``min_count``:
-    ``(gram, c_ab, pmi)`` ordered by rounded PMI desc, gram asc.
-
-    Shapes: two exploded count aggs (unigrams, bigrams) + two equi-joins
-    of the surviving bigrams onto the unigram counts + one-row total
-    aggregates cross-joined — all map-side-combinable; the min_count
-    filter runs BEFORE the unigram joins so only candidate rows shuffle
-    twice. No windows, no Python."""
-    toks = df.select(tokens(F.col(text_col)).alias("__t")).where(
-        F.size("__t") >= 2
-    )
-    uni = (
-        toks.select(F.explode("__t").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("c"))
-    )
-    n_tok = uni.agg(F.sum("c").cast("double").alias("__n"))
-    big = (
-        toks.select(F.explode(word_ngrams(F.col("__t"), 2)).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count("*").alias("c_ab"))
-        .where(F.col("c_ab") >= min_count)
-    )
-    n_big = (
-        toks.select((F.size("__t") - 1).alias("__m"))
-        .agg(F.sum("__m").cast("double").alias("__m"))
-    )
-    parts = F.split(F.col("gram"), " ")
-    cand = big.select("gram", "c_ab", parts[0].alias("__a"), parts[1].alias("__b"))
-    ca = uni.select(F.col("tok").alias("__a"), F.col("c").alias("__ca"))
-    cb = uni.select(F.col("tok").alias("__b"), F.col("c").alias("__cb"))
-    pmi = (
-        F.col("c_ab").cast("double") / F.col("__m")
-    ) / (
-        (F.col("__ca").cast("double") / F.col("__n"))
-        * (F.col("__cb").cast("double") / F.col("__n"))
-    )
-    scored = (
-        cand.join(ca, "__a")
-        .join(cb, "__b")
-        .crossJoin(F.broadcast(n_tok))
-        .crossJoin(F.broadcast(n_big))
-        .select(
-            "gram",
-            F.col("c_ab").cast("long").alias("c_ab"),
-            F.round(F.log(pmi), 6).alias("pmi"),
-        )
-    )
-    return scored.orderBy(F.desc("pmi"), F.asc("gram")).limit(top_k)
-
-
-def token_label_mi(
-    df: DataFrame,
-    label: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_k: int = 500,
-    top_k: int = 50,
-) -> DataFrame:
-    """Mutual information between token PRESENCE and a boolean document
-    label, over the global top-``vocab_k`` tokens by document frequency
-    — the feature-selection score behind classic quality/domain
-    classifiers (which tokens carry signal about the label). For token t
-    with document-frequency df, a = |docs with t and label|, over N docs
-    of which L are labeled:
-
-        MI = sum_cells (n_ij/N) * ln( n_ij*N / (n_i. * n_.j) )
-
-    with zero cells contributing 0. Returns ``(tok, df, mi)`` for the
-    ``top_k`` tokens by rounded MI desc, tok asc.
-
-    Shapes: distinct (doc, token) explode -> count agg -> bounded top-k
-    vocab broadcast back -> one conditional agg per token + one-row
-    totals cross-joined. Everything map-side-combinable; the 2x2 cell
-    algebra is pure codegen arithmetic on the agg output (vocab_k rows),
-    so the expensive path is one explode + one agg regardless of
-    vocab_k."""
-    base = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__d"), label.alias("__l"), F.col(text_col).alias("__x")
-    )
-    totals = base.agg(
-        F.count("*").cast("double").alias("__N"),
-        F.sum(F.col("__l").cast("long")).cast("double").alias("__L"),
-    )
-    doc_tok = base.select(
-        "__d", "__l", F.explode(F.array_distinct(tokens(F.col("__x")))).alias("tok")
-    )
-    per_tok = doc_tok.groupBy("tok").agg(
-        F.count("*").alias("df"),
-        F.sum(F.col("__l").cast("long")).alias("a"),
-    )
-    vocab = per_tok.orderBy(F.desc("df"), F.asc("tok")).limit(vocab_k)
-
-    def _term(n_ij: Column, row_tot: Column, col_tot: Column, n: Column) -> Column:
-        return F.when(
-            n_ij > 0,
-            (n_ij / n) * F.log((n_ij * n) / (row_tot * col_tot)),
-        ).otherwise(F.lit(0.0))
-
-    dfd = F.col("df").cast("double")
-    a = F.col("a").cast("double")
-    n, ell = F.col("__N"), F.col("__L")
-    mi = (
-        _term(a, dfd, ell, n)
-        + _term(dfd - a, dfd, n - ell, n)
-        + _term(ell - a, n - dfd, ell, n)
-        + _term(n - ell - (dfd - a), n - dfd, n - ell, n)
-    )
-    scored = vocab.crossJoin(F.broadcast(totals)).select(
-        "tok",
-        F.col("df").cast("long").alias("df"),
-        F.round(mi, 6).alias("mi"),
-    )
-    return scored.orderBy(F.desc("mi"), F.asc("tok")).limit(top_k)

@@ -46,6 +46,51 @@ def test_minhash_similar_docs_collide(docs_df):
     assert (3, 4) not in pairs      # unrelated docs don't collide
 
 
+def _golden_corpus():
+    """Fixed MinHash corpus: a null text, an empty one, one shorter than
+    the shingle length, word-salad documents of 5-44 words and one
+    3,000-letter document with more distinct shingles than a signature
+    kernel block, so block boundaries fall between documents and one
+    document spans a whole block."""
+    words = ["spark", "arrow", "pipeline", "corpus", "shingle", "bucket",
+             "band", "signature", "keystone", "optimizer", "cache", "join"]
+    x = 2463534242
+
+    def nxt():
+        nonlocal x
+        x = (x * 1103515245 + 12345) % (1 << 31)
+        return x
+
+    rows = [(0, None), (1, "abc"), (2, "")]
+    for i in range(3, 60):
+        rows.append((i, " ".join(words[nxt() % len(words)]
+                                 for _ in range(5 + i % 40))))
+    rows.insert(30, (100, "".join(chr(97 + nxt() % 26) for _ in range(3000))))
+    return rows
+
+
+def test_minhash_signatures_golden_digest(spark):
+    """Stored MinHash indexes (build_minhash_index / match_minhash_index)
+    compare signatures computed on different days, so the kernel's
+    output must never change: sha256 of the sorted (id, signature) rows,
+    computed with the whole-batch kernel and asserted on every later
+    one."""
+    import hashlib
+
+    from keystone_spark.operators.dedup import SIG_BLOCK_ROWS
+
+    rows = _golden_corpus()
+    big = rows[30][1]
+    assert len({big[k:k + 5] for k in range(len(big) - 4)}) > SIG_BLOCK_ROWS
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted((r.doc_id, list(r.sig))
+                 for r in minhash_signatures(df).collect())
+    assert len(got) == 61
+    assert hashlib.sha256(repr(got).encode()).hexdigest() == (
+        "60e70b8abed398faaef8fd87316699a3f60e7c3913eb124efde2e1269f68bd7d"
+    )
+
+
 def test_jaccard_verify_threshold(docs_df):
     pairs = docs_df.sparkSession.createDataFrame(
         [(0, 1), (0, 3)], "i long, j long"
@@ -896,32 +941,41 @@ def test_persist_once_ownership(spark):
 
 
 def test_lsh_candidates_release_contract(spark):
-    """minhash_lsh_candidates persists its banded table internally;
-    direct public-API callers (default args) must get a release path via
-    the result's _keystone_caches instead of leaking the persist
-    (ADVICE r8)."""
+    """minhash_lsh_candidates is one lazy plan that persists nothing:
+    counting its result leaves no cached block behind (only the
+    caller's own signature cache), and ``release(result)`` is a safe
+    no-op for direct public-API callers."""
     from keystone_spark.operators.dedup import (
         minhash_lsh_candidates,
         minhash_signatures,
         release,
     )
 
+    def new_blocks():
+        # keyed by RDD id: caches leaked by earlier tests may be cleaned
+        # up mid-test
+        return sum(int(i.numCachedPartitions())
+                   for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+                   if int(i.id()) not in base)
+
     df = spark.createDataFrame(
         [(i, f"some text body number {i % 7} repeated here") for i in range(40)],
         "doc_id long, text string",
     )
-    sigs = minhash_signatures(df, n_hashes=16)
-    cand = minhash_lsh_candidates(sigs, n_bands=4, n_hashes=16)
-    cand.count()
-    owned = list(getattr(cand, "_keystone_caches", []))
-    assert owned, "banded persist must ride the result for release()"
-    assert all(
-        c.storageLevel.useMemory or c.storageLevel.useDisk for c in owned
-    )
-    release(cand)
-    assert not any(
-        c.storageLevel.useMemory or c.storageLevel.useDisk for c in owned
-    )
+    sigs = minhash_signatures(df, n_hashes=16).persist()
+    sigs.count()
+    base = {int(i.id())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    for cap in (50, None):
+        caches: list = []
+        cand = minhash_lsh_candidates(sigs, n_bands=4, n_hashes=16,
+                                      bucket_cap=cap, caches=caches)
+        assert cand.count() > 0
+        assert caches == []
+        assert new_blocks() == 0
+        release(cand)
+        assert new_blocks() == 0
+    sigs.unpersist()
 
 
 def test_match_minhash_index_corrupt_manifest_raises(spark, tmp_path):

@@ -606,3 +606,132 @@ def test_capped_clique_plan_reuses_the_signature_exchange(hamming_plan):
     final = hamming_plan["final"]
     assert final.count("MapInPandas") == 1, final[:4000]
     assert final.count("ReusedExchange") >= 1, final[:4000]
+
+
+def cache_id(df) -> int:
+    """Identity of the cache ``df``'s plan is stored in."""
+    spark = df.sparkSession
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    return spark._jvm.System.identityHashCode(
+        cached.get().cachedRepresentation().cacheBuilder()
+    )
+
+
+def final_plan_nodes(df, names: dict | None = None) -> list[tuple[str, str, list[str]]]:
+    """(plan, node name, output column names) for every node of ``df``'s
+    final adaptive plan, read after an action. Query stages are entered,
+    a reused exchange is one node and is not entered, and each distinct
+    cached relation's plan is entered once however often it is scanned,
+    under the plan name ``names`` gives its ``cache_id`` (``other``
+    otherwise). A scan of a cache is named ``scan:<plan name>``."""
+    jvm = df.sparkSession._jvm
+    names = names or {}
+    entered: set = set()
+    out = []
+
+    def walk(node, plan):
+        name = node.nodeName()
+        cols, it = [], node.output().iterator()
+        while it.hasNext():
+            cols.append(it.next().name())
+        if name == "InMemoryTableScan":
+            rel = node.relation()
+            key = jvm.System.identityHashCode(rel.cacheBuilder())
+            out.append((plan, f"scan:{names.get(key, 'other')}", cols))
+            if key not in entered:
+                entered.add(key)
+                walk(rel.cachedPlan(), names.get(key, "other"))
+            return
+        out.append((plan, name, cols))
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan(), plan)
+        elif name.endswith("QueryStage"):
+            walk(node.plan(), plan)
+        else:
+            it = node.children().iterator()
+            while it.hasNext():
+                walk(it.next(), plan)
+
+    walk(df._jdf.queryExecution().executedPlan(), "main")
+    return out
+
+
+@pytest.fixture(scope="module")
+def minhash_plan(spark, sf_dir):
+    """One ``minhash_dedup`` call on the documents fixture: the Spark
+    jobs that BUILDING it ran, its final plan's nodes (the caches it
+    owns named ``op0``, ``op1``, ...) and the length of the final plan
+    string after a collect. The seed is one no registry query uses: a
+    cache left by an earlier call with the same plan would be reused,
+    and this call would then own nothing."""
+    from keystone_spark.caches import _owned, release
+    from keystone_spark.operators.dedup import minhash_dedup
+    from keystone_spark.sources import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash-plan", "minhash-plan")
+    try:
+        out = minhash_dedup(docs, n_hashes=64, n_bands=16, seed=11)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    build_jobs = len(sc.statusTracker().getJobIdsForGroup("minhash-plan"))
+    out.collect()
+    owned = {cache_id(c): f"op{k}" for k, c in enumerate(_owned(out))}
+    plan = {
+        "build_jobs": build_jobs,
+        "n_owned": len(owned),
+        "nodes": final_plan_nodes(out, owned),
+        "plan_chars": len(out._jdf.queryExecution().executedPlan().toString()),
+    }
+    release(out)
+    return plan
+
+
+def test_minhash_dedup_is_one_flat_plan(minhash_plan):
+    """``minhash_dedup`` builds lazily (no construction job), runs the
+    Arrow signature kernel once (one MapInPandas node, inside its
+    signature cache) and keeps its two caches flat: the only one whose
+    plan reads the other is verify's shingle table. Nested caches made
+    the final plan string tens of MB at 1,000 documents, rebuilt on
+    every adaptive plan update; the bound sits at about twice the flat
+    plan's size on this fixture."""
+    nodes = minhash_plan["nodes"]
+    assert minhash_plan["build_jobs"] == 0
+    assert [n for _, n, _ in nodes].count("MapInPandas") == 1
+    assert minhash_plan["n_owned"] == 2
+    nested = {(p, n) for p, n, _ in nodes
+              if p.startswith("op") and n.startswith("scan:op")}
+    assert len(nested) <= 1, nested
+    assert minhash_plan["plan_chars"] < 2_400_000, minhash_plan["plan_chars"]
+
+
+def test_minhash_band_join_reads_the_guard_exchange(minhash_plan):
+    """The bucket guard's window shuffles the banded rows on (band,
+    bucket), the partitioning the self-join needs, so the join adds no
+    shuffle of its own: each plan that runs the band join holds exactly
+    two (band, bucket) exchanges, one per join side, counting a reused
+    one. Spark 4.1's adaptive execution does not reuse one exchange for
+    both sides here: each scan of the signature cache becomes its own
+    table-cache query stage, whose canonical form keeps its stage id,
+    so the two sides never compare equal. Both sides still read the one
+    run of the kernel through that cache."""
+    band = {}
+    for plan, name, cols in minhash_plan["nodes"]:
+        if "bucket" in cols and name in ("Exchange", "ReusedExchange"):
+            band.setdefault(plan, []).append(name)
+    assert band, "no (band, bucket) exchange in the final plan"
+    for plan, names in band.items():
+        assert len(names) == 2, (plan, names)
+
+
+def test_phash_neardup_runs_the_dct_kernel_once(spark, sf_dir, qs):
+    """``phash_neardup`` counts its images on the unhashed input, so
+    the phash64 Arrow kernel runs once, under the band join: one
+    MapInPandas node in the final adaptive plan."""
+    df = qs["phash_neardup"](spark, sf_dir)
+    df.collect()
+    names = [n for _, n, _ in final_plan_nodes(df)]
+    assert names.count("MapInPandas") == 1, names

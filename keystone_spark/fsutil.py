@@ -32,6 +32,7 @@ manifest writer.
 
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 
@@ -64,17 +65,21 @@ def fs_rename(spark, src: str, dst: str) -> None:
 
 def count_parquet_files(spark, path: str) -> int:
     """Recursive ``*.parquet`` file count under ``path`` (observability
-    for compact's files-before/after stats). Driver-side listing only."""
+    for compact's files-before/after stats). Driver-side listing only,
+    level by level: one glob counts a level's ``*.parquet`` files and one
+    more looks for anything below it, so the py4j round trips grow with
+    the partition depth, not with the file count."""
     fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return 0
-    it = fs.listFiles(p, True)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    # escape glob metacharacters in the base path; only the appended
+    # wildcards may match
+    level = re.sub(r"([\\{}\[\]*?])", r"\\\1", p.toString())
     n = 0
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            n += 1
-    return n
+    while True:
+        n += len(fs.globStatus(Path(level + "/*.parquet")) or [])
+        level += "/*"
+        if not fs.globStatus(Path(level)):
+            return n
 
 
 SWAP_MARKER = "_SWAP_STARTED"

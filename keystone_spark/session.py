@@ -64,6 +64,28 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS``, else the machine's CPU
+    count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _default_driver_mem() -> str:
+    """Driver heap cap: ``SPARK_GRAFT_DRIVER_MEM``, else half the memory
+    available at start in whole GB (at least 1, at most 48). A fixed cap
+    above the machine's memory lets the JVM grow until the kernel kills
+    it or a neighbour."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            avail = next(int(ln.split()[1]) * 1024 for ln in f
+                         if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        avail = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, avail // 2**31))}g"
+
+
 def get_session(
     app_name: str = "keystone_spark",
     master: str | None = None,
@@ -72,9 +94,11 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    Local defaults come from env: ``SPARK_GRAFT_CPUS`` (parallelism) —
-    on a real cluster pass ``master=None`` with a cluster deploy config
-    and these local knobs are ignored.
+    Local defaults come from env, else from the machine:
+    ``SPARK_GRAFT_CPUS`` (parallelism, default the CPU count) and
+    ``SPARK_GRAFT_DRIVER_MEM`` (driver heap, default half the available
+    memory) — on a real cluster pass ``master=None`` with a cluster
+    deploy config and these local knobs are ignored.
     """
     # numpy >= 1.18 madvise(MADV_HUGEPAGE)s every large allocation; on
     # kernels whose THP defrag does synchronous compaction that turns
@@ -87,7 +111,7 @@ def get_session(
     # set it BEFORE the JVM starts; export wins over us if the operator
     # set it explicitly.
     os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -97,7 +121,7 @@ def get_session(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Reuse Python workers across Arrow stages (static conf; true by

@@ -23,6 +23,8 @@ import sys
 
 import pytest
 
+from keystone_spark.session import default_cpus
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SNAPSHOT = os.path.join(REPO, "tools", "registry_snapshot.json")
 
@@ -36,7 +38,7 @@ def _skip_if_cpu_mismatch(snapshot_path):
     (exit 3)."""
     with open(snapshot_path) as f:
         snap_cpus = (json.load(f).get("__protocol__") or {}).get("cpus")
-    cur = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cur = default_cpus()
     if snap_cpus is not None and int(snap_cpus) != cur:
         pytest.skip(
             f"SPARK_GRAFT_CPUS={cur} but the snapshot basis is "
@@ -68,7 +70,7 @@ def test_no_query_regressed_vs_snapshot():
          "--check", SNAPSHOT],
         cwd=REPO,
         env={**os.environ,
-             "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "32")},
+             "SPARK_GRAFT_CPUS": str(default_cpus())},
         capture_output=True,
         text=True,
         timeout=2400,
@@ -115,7 +117,7 @@ def test_sf1_family_not_regressed_vs_snapshot():
          "--check", sf1_snapshot, "--sf-dir", sf1, "--family-sf1"],
         cwd=REPO,
         env={**os.environ,
-             "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "32")},
+             "SPARK_GRAFT_CPUS": str(default_cpus())},
         capture_output=True,
         text=True,
         timeout=2400,
@@ -162,7 +164,7 @@ def test_sf5_family_not_regressed_vs_snapshot():
          "--check", sf5_snapshot, "--sf-dir", sf5, "--family-sf5"],
         cwd=REPO,
         env={**os.environ,
-             "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "32")},
+             "SPARK_GRAFT_CPUS": str(default_cpus())},
         capture_output=True,
         text=True,
         timeout=3600,

@@ -91,6 +91,60 @@ def test_minhash_signatures_golden_digest(spark):
     )
 
 
+def test_fingerprint_verify_equals_string_verify(spark):
+    """``_minhash_near_pairs`` verifies on the shingle fingerprints its
+    signature cache holds; on the same candidates its (i, j, jac) rows
+    equal ``jaccard_verify``'s over the shingle strings. The corpus
+    covers null and empty text, texts shorter than k (one equal to
+    another after trim and lower-casing), a 3,000-letter doc with a
+    copy and a near copy, and word-salad docs from a 12-word vocabulary
+    whose Jaccards straddle the threshold. Two null texts meet at 1.0
+    on both paths, which is why the callers keep null text out."""
+    from keystone_spark.caches import release
+    from keystone_spark.operators.dedup import (
+        DEFAULT_BUCKET_CAP, _minhash_near_pairs, minhash_estimate_filter)
+
+    rows = _golden_corpus()
+    big = rows[30][1]
+    rows += [(101, big), (102, big[:1500] + "zz" + big[1502:]), (103, None),
+             (104, ""), (105, " ABC "), (106, "abd")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    owned: list = []
+    _, fused = _minhash_near_pairs(df, "doc_id", "text", 64, 32, 5, 0.5, 42,
+                                   DEFAULT_BUCKET_CAP, owned)
+    got = {(r.i, r.j): r.jac for r in fused.collect()}
+    release(owned)
+    sigs = minhash_signatures(df, n_hashes=64)
+    likely = minhash_estimate_filter(
+        minhash_lsh_candidates(sigs, n_bands=32, n_hashes=64), sigs,
+        n_hashes=64, threshold=0.5)
+    want = {(r.i, r.j): r.jac for r in jaccard_verify(
+        likely, df, threshold=0.5, n_hist=None).collect()}
+    assert got == want
+    for pair in [(100, 101), (0, 103), (2, 104), (1, 105)]:
+        assert got[pair] == 1.0, pair
+    assert 0.9 < got[(100, 102)] < 1.0
+    assert (1, 106) not in got
+    assert sum(0.5 <= v < 0.9 for v in got.values()) >= 10
+
+
+def test_minhash_dedup_keeps_every_null_text_row(spark):
+    """Null text never dedups, as in the DuckDB oracle: every null row
+    is kept. Exact and near copies still drop, and so does a second
+    empty text."""
+    from keystone_spark.caches import release
+
+    df = spark.createDataFrame(
+        [(1, None), (2, None),
+         (3, "the quick brown fox jumps over the lazy dog"),
+         (4, "the quick brown fox jumps over the lazy dog!"),
+         (5, "abc"), (6, "abc"), (7, ""), (8, "")],
+        "doc_id long, text string")
+    out = minhash_dedup(df)
+    assert sorted(r.doc_id for r in out.collect()) == [1, 2, 3, 5, 7]
+    release(out)
+
+
 def test_jaccard_verify_threshold(docs_df):
     pairs = docs_df.sparkSession.createDataFrame(
         [(0, 1), (0, 3)], "i long, j long"

@@ -22,7 +22,11 @@ def test_all_queries_run(spark, sf_dir):
     # Same per-query assertions as the original serial loop, but the
     # ~200 tiny jobs overlap on the scheduler (guide §2.6) so the gate
     # fits the driver's pytest budget; failures carry the query name.
+    # Each result's caches are released, so none outlives this test and
+    # a later call that builds the same plan owns its own cache.
     from concurrent.futures import ThreadPoolExecutor
+
+    from keystone_spark.caches import release
 
     def run(item):
         name, fn = item
@@ -30,6 +34,7 @@ def test_all_queries_run(spark, sf_dir):
             df = fn(spark, sf_dir)
             assert df.columns, name
             df.limit(5).collect()
+            release(df)
             return None
         except Exception as e:  # noqa: BLE001 - reported with name below
             return (name, repr(e))

@@ -83,6 +83,7 @@ def test_dedup_clusters_transitive(spark, sf_dir):
     its component, each cluster has >= 2 members, and members agree with
     minhash_dedup: exactly the non-cluster-min docs are dropped by
     keep-first dedup restricted to each cluster."""
+    from keystone_spark.caches import release
     from keystone_spark.operators.dedup import dedup_clusters, minhash_dedup
     from keystone_spark.sources import load_table
 
@@ -101,12 +102,10 @@ def test_dedup_clusters_transitive(spark, sf_dir):
     # its own cluster only if it is directly (not just transitively)
     # similar, so the kept set is a SUPERSET of the cluster minima and
     # drops only clustered non-minima
-    kept = {
-        r["doc_id"]
-        for r in minhash_dedup(docs, n_hashes=64, n_bands=16, threshold=0.8)
-        .select("doc_id")
-        .collect()
-    }
+    dedup = minhash_dedup(docs, n_hashes=64, n_bands=16, threshold=0.8)
+    kept = {r["doc_id"] for r in dedup.select("doc_id").collect()}
+    release(dedup)
+    release(labels)
     clustered = {r["doc_id"] for r in rows}
     minima = set(by_cluster)
     assert minima <= kept

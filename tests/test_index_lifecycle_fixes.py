@@ -796,3 +796,48 @@ def test_compact_completing_inside_add_window_fences_the_commit(
                       for r in df.collect())
 
     assert key(idx.search(qs, k=4)) == key(full.search(qs, k=4))
+
+
+def _count_parquet_by_listing(spark, path):
+    """Reference count: a recursive listing, one file at a time."""
+    from keystone_spark.fsutil import _fs_path
+
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return 0
+    it, n = fs.listFiles(p, True), 0
+    while it.hasNext():
+        n += it.next().getPath().getName().endswith(".parquet")
+    return n
+
+
+def test_count_parquet_files_equals_recursive_listing(spark, tmp_path):
+    """``count_parquet_files`` globs level by level; its count equals a
+    recursive listing's on the stored layouts: one partition level (the
+    IVF ``cell=`` corpus), two (the MinHash ``band=/gen=`` tables), and
+    a tree with hidden and ``_``-prefixed entries under a base path that
+    holds glob metacharacters. A missing path counts 0."""
+    import os
+
+    from keystone_spark.fsutil import count_parquet_files
+
+    df = spark.range(60).select(
+        "id", (F.col("id") % 4).alias("cell"), (F.col("id") % 3).alias("band"),
+        (F.col("id") % 2).alias("gen"))
+    for _ in range(2):
+        df.repartition(2).write.mode("append").partitionBy("cell").parquet(
+            str(tmp_path / "ivf"))
+        df.repartition(2).write.mode("append").partitionBy(
+            "band", "gen").parquet(str(tmp_path / "mh"))
+    odd = tmp_path / "odd[1]{x}*?"
+    for sub in ("k=1", "k=2/.hid", "_temporary/0"):
+        os.makedirs(odd / sub)
+        for name in ("a.parquet", ".b.parquet", "_c.parquet", "d.txt"):
+            (odd / sub / name).touch()
+    (odd / "top.parquet").touch()
+
+    for path in (tmp_path / "ivf", tmp_path / "mh", odd):
+        want = _count_parquet_by_listing(spark, str(path))
+        assert want > 0
+        assert count_parquet_files(spark, str(path)) == want, path
+    assert count_parquet_files(spark, str(tmp_path / "missing")) == 0

@@ -505,9 +505,16 @@ def test_no_global_window_over_unbounded_input(spark, sf_dir, qs):
     allowed_seen = set()
     from concurrent.futures import ThreadPoolExecutor
 
+    from keystone_spark.caches import release
+
     def nodes(item):
+        # building a query registers its operator caches; release them so
+        # a later call that builds the same plan owns its own
         name, fn = item
-        return name, _global_window_nodes(fn(spark, sf_dir))
+        df = fn(spark, sf_dir)
+        found = _global_window_nodes(df)
+        release(df)
+        return name, found
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         results = list(pool.map(nodes, qs.items()))
@@ -661,11 +668,9 @@ def final_plan_nodes(df, names: dict | None = None) -> list[tuple[str, str, list
 @pytest.fixture(scope="module")
 def minhash_plan(spark, sf_dir):
     """One ``minhash_dedup`` call on the documents fixture: the Spark
-    jobs that BUILDING it ran, its final plan's nodes (the caches it
-    owns named ``op0``, ``op1``, ...) and the length of the final plan
-    string after a collect. The seed is one no registry query uses: a
-    cache left by an earlier call with the same plan would be reused,
-    and this call would then own nothing."""
+    jobs that BUILDING it ran and that its collect ran, its final plan's
+    nodes (the caches it owns named ``op0``, ``op1``, ...) and the
+    length of the final plan string after the collect."""
     from keystone_spark.caches import _owned, release
     from keystone_spark.operators.dedup import minhash_dedup
     from keystone_spark.sources import load_table
@@ -674,14 +679,17 @@ def minhash_plan(spark, sf_dir):
     sc = spark.sparkContext
     sc.setJobGroup("minhash-plan", "minhash-plan")
     try:
-        out = minhash_dedup(docs, n_hashes=64, n_bands=16, seed=11)
+        out = minhash_dedup(docs, n_hashes=64, n_bands=16)
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup("minhash-plan"))
+        sc.setJobGroup("minhash-run", "minhash-run")
+        out.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    build_jobs = len(sc.statusTracker().getJobIdsForGroup("minhash-plan"))
-    out.collect()
+    run_jobs = len(sc.statusTracker().getJobIdsForGroup("minhash-run"))
     owned = {cache_id(c): f"op{k}" for k, c in enumerate(_owned(out))}
     plan = {
         "build_jobs": build_jobs,
+        "run_jobs": run_jobs,
         "n_owned": len(owned),
         "nodes": final_plan_nodes(out, owned),
         "plan_chars": len(out._jdf.queryExecution().executedPlan().toString()),
@@ -693,19 +701,28 @@ def minhash_plan(spark, sf_dir):
 def test_minhash_dedup_is_one_flat_plan(minhash_plan):
     """``minhash_dedup`` builds lazily (no construction job), runs the
     Arrow signature kernel once (one MapInPandas node, inside its
-    signature cache) and keeps its two caches flat: the only one whose
-    plan reads the other is verify's shingle table. Nested caches made
-    the final plan string tens of MB at 1,000 documents, rebuilt on
-    every adaptive plan update; the bound sits at about twice the flat
-    plan's size on this fixture."""
+    signature cache) and owns that one cache, which reads no other
+    cache of the operator: the exact verify reads its shingle hashes
+    from it. Nested caches made the final plan string tens of MB at
+    1,000 documents, rebuilt on every adaptive plan update; the bound
+    sits at about 1.7 times the plan's size on this fixture (0.14 MB,
+    against 1.08 MB for a second, shingle-table cache above it)."""
     nodes = minhash_plan["nodes"]
     assert minhash_plan["build_jobs"] == 0
     assert [n for _, n, _ in nodes].count("MapInPandas") == 1
-    assert minhash_plan["n_owned"] == 2
+    assert minhash_plan["n_owned"] == 1
     nested = {(p, n) for p, n, _ in nodes
               if p.startswith("op") and n.startswith("scan:op")}
-    assert len(nested) <= 1, nested
-    assert minhash_plan["plan_chars"] < 2_400_000, minhash_plan["plan_chars"]
+    assert not nested, nested
+    assert minhash_plan["plan_chars"] < 250_000, minhash_plan["plan_chars"]
+
+
+def test_minhash_dedup_run_jobs(minhash_plan):
+    """The fixed Spark cost of one ``minhash_dedup`` call, in jobs its
+    collect runs on the fixture: 23 with the one signature cache,
+    against 33 when verify re-shingled the text into a second cache.
+    Adaptive execution may add a job or two when it re-plans a join."""
+    assert minhash_plan["run_jobs"] <= 26, minhash_plan["run_jobs"]
 
 
 def test_minhash_band_join_reads_the_guard_exchange(minhash_plan):

@@ -302,7 +302,9 @@ def main() -> int:
                   f"use {family_snapshot}", file=sys.stderr)
             return 2
 
-    current_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from keystone_spark.session import default_cpus
+
+    current_cpus = default_cpus()
     snap = None
     if args.check:
         with open(args.check) as f:

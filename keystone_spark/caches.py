@@ -14,13 +14,16 @@ never reach checkpoint blocks).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 _ATTR = "_keystone_caches"
 
 
-def persist(df: DataFrame, owned: list) -> DataFrame:
-    """``persist()`` only when this plan is not already cached, and add
-    the cache to ``owned`` only when this call created it.
+def persist(df: DataFrame, owned: list,
+            level: StorageLevel | None = None) -> DataFrame:
+    """``persist()`` (at ``level``, else Spark's default) only when this
+    plan is not already cached, and add the cache to ``owned`` only when
+    this call created it.
 
     Callers (bench warmup+timed loops, the verify harness) rebuild the
     SAME deterministic plan several times per process; re-persisting it
@@ -31,7 +34,7 @@ def persist(df: DataFrame, owned: list) -> DataFrame:
     under its owner. Free only what landed in ``owned``."""
     lvl = df.storageLevel
     if not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap):
-        df.persist()
+        df.persist() if level is None else df.persist(level)
         owned.append(df)
     return df
 

@@ -225,24 +225,22 @@ def _signature_kernel(df, id_col, text_col, n_hashes, shingle_k, seed,
             # first row falls in the same SIG_BLOCK_ROWS-wide window of
             # the flattened rows share a block, so a block holds about
             # that many rows plus at most one doc's overhang.
-            # Null text is one null shingle (hashed to xxhash64's seed),
-            # so all null docs share a signature: the near-dup paths drop
-            # null text first. An empty array keeps the sentinel.
-            lens = pdf["__h"].map(lambda h: 0 if h is None else len(h)).to_numpy()
-            rows = np.flatnonzero(lens > 0)
-            sigs = np.full((len(pdf), n_hashes), _MERSENNE, dtype=np.int64)
-            if len(rows):
-                hs = pdf["__h"].to_numpy()
-                starts = np.cumsum(lens[rows]) - lens[rows]
-                cuts = np.flatnonzero(np.diff(starts // SIG_BLOCK_ROWS)) + 1
-                for blk in np.split(rows, cuts):
-                    flat = np.concatenate([np.asarray(h, dtype=np.uint64)
-                                           for h in hs[blk]])
-                    prods = _fold61(_mulmod61(Au[None, :], flat[:, None]) + Bu[None, :])
-                    prods = np.where(prods >= _M61, prods - _M61, prods)
-                    offsets = np.cumsum(lens[blk]) - lens[blk]
-                    mins = np.minimum.reduceat(prods, offsets, axis=0)
-                    sigs[blk] = mins.astype(np.int64)
+            # Every row has at least one shingle hash: null text is one
+            # null shingle (hashed to xxhash64's seed), so all null docs
+            # share a signature and the near-dup paths drop null text first.
+            hs = pdf["__h"].to_numpy()
+            lens = np.fromiter(map(len, hs), dtype=np.int64, count=len(hs))
+            starts = np.cumsum(lens) - lens
+            cuts = np.flatnonzero(np.diff(starts // SIG_BLOCK_ROWS)) + 1
+            sigs = np.empty((len(pdf), n_hashes), dtype=np.int64)
+            for blk in np.split(np.arange(len(pdf)), cuts):
+                flat = np.concatenate([np.asarray(h, dtype=np.uint64)
+                                       for h in hs[blk]])
+                prods = _fold61(_mulmod61(Au[None, :], flat[:, None]) + Bu[None, :])
+                prods = np.where(prods >= _M61, prods - _M61, prods)
+                offsets = starts[blk] - starts[blk[0]]
+                mins = np.minimum.reduceat(prods, offsets, axis=0)
+                sigs[blk] = mins.astype(np.int64)
             out = pd.DataFrame({"__id": pdf["__id"], "sig": list(sigs)})
             yield out.assign(__h=pdf["__h"]) if keep_hashes else out
 
@@ -677,17 +675,15 @@ def dedup_clusters(
         "left_semi",
     )
     # freed once connected_components has eagerly checkpointed the
-    # labels, so nothing references them after it returns
+    # edges (its one read of them), so nothing references them after it
+    # returns
     edge_caches: list = []
     _, near = _minhash_near_pairs(survivors, id_col, text_col, n_hashes,
                                   n_bands, shingle_k, threshold, seed,
                                   bucket_cap, edge_caches)
-    # persisted: connected_components reads the edges twice (its node
-    # and edge checkpoints), and the band join and verify would run twice
-    edges = persist(exact_edges.unionByName(near.select("i", "j")),
-                    edge_caches)
     labels = connected_components(
-        edges, "i", "j", node_col=id_col, comp_col="cluster_id"
+        exact_edges.unionByName(near.select("i", "j")), "i", "j",
+        node_col=id_col, comp_col="cluster_id"
     )
     release(edge_caches)
     return labels

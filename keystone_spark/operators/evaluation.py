@@ -17,11 +17,15 @@ def confusion_matrix(
     df: DataFrame, label_col: str = "label", pred_col: str = "pred"
 ) -> DataFrame:
     """(label, pred, cnt) counts — the core of
-    evaluation/MulticlassClassifierEvaluator.scala."""
+    evaluation/MulticlassClassifierEvaluator.scala — ordered by (label,
+    pred). There are at most n_classes^2 rows, so they are sorted inside
+    one partition: a global ``orderBy`` would add a range-partition
+    sample job and a second shuffle to every collect."""
     return (
         df.groupBy(F.col(label_col).alias("label"), F.col(pred_col).alias("pred"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("label", "pred")
+        .coalesce(1)
+        .sortWithinPartitions("label", "pred")
     )
 
 

@@ -90,14 +90,19 @@ def connected_components(
         )
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
     )
-    # checkpointed (like b) so the returned labels plan never re-runs the
-    # caller's edge-generation pipeline — only these bounded node/star sets
-    nodes = checkpoint(
-        e0.select(F.col("u").alias(node_col))
-        .unionByName(e0.select(F.col("v").alias(node_col)))
+    # the one read of the caller's edges: checkpointed (self loops
+    # kept, for their nodes) so neither the node set nor any star round
+    # re-runs the caller's edge-generation pipeline
+    pairs = checkpoint(
+        e0.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
     )
-    b = checkpoint(_canonical(e0))
+    nodes = (
+        pairs.select(F.col("u").alias(node_col))
+        .unionByName(pairs.select(F.col("v").alias(node_col)))
+        .distinct()
+    )
+    b = pairs.where(F.col("u") != F.col("v"))
 
     def _checksum(d: DataFrame) -> tuple:
         row = d.agg(
@@ -125,7 +130,7 @@ def connected_components(
             F.coalesce(F.col(comp_col), F.col(node_col)).alias(comp_col),
         )
     )
-    return attach(out, nodes, b)
+    return attach(out, pairs, b)
 
 
 def pagerank(

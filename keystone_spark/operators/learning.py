@@ -2,15 +2,20 @@
 
 Strategy (SURVEY.md §2.5): where MLlib has the semantics, wrap it (the
 reference's hand-rolled BCD/LBFGS/TSQR exist because 2015-era MLlib didn't
-cover them; today's does). The solver *selection* cost model — the
+cover them; today's does). The operator *selection* cost model — the
 reference's flagship optimization (nodes/learning/LeastSquaresEstimator.scala)
-— survives in plans/optimizer.choose_solver. Feature columns are
+— survives in plans/optimizer: ``choose_solver`` for the solver and
+``local_frame`` for the driver budget. Least squares and k-means take a
+driver-sized input in one bounded collect and fit it in numpy (the
+reference's LocalLeastSquaresEstimator and KMeansPlusPlusEstimator:
+k-means++ seeding, then the same Lloyd kernel the IVF quantizers train
+with); larger inputs fall back to MLlib. Feature columns are
 array<double>; conversion to MLlib VectorUDT happens at the wrapper
 boundary via pyspark.ml.functions.array_to_vector (JVM-side, no Python).
 
-Apply-side models (LinearMapper) run as Arrow-batched gemms — the
-per-partition rowsToMatrix+BLAS pattern (reference: utils/MatrixUtils.scala,
-nodes/learning/LinearMapper.scala).
+Apply-side models (LinearMapper, the k-means nearest-centre model) run as
+Arrow-batched numpy kernels — the per-partition rowsToMatrix+BLAS pattern
+(reference: utils/MatrixUtils.scala, nodes/learning/LinearMapper.scala).
 """
 
 from __future__ import annotations
@@ -22,7 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
-from keystone_spark.plans.optimizer import choose_solver
+from keystone_spark.operators.similarity import _lloyd, _nearest
+from keystone_spark.plans.optimizer import choose_solver, local_frame, local_rows
 from keystone_spark.plans.pipeline import Estimator, LabelEstimator, Transformer
 
 
@@ -144,25 +150,20 @@ class LeastSquaresEstimator(LabelEstimator):
         self.strategy = strategy
 
     def _fit(self, df: DataFrame) -> LinearMapper:
-        first = df.select(self.in_col, self.label_col).first()
+        sel = df.select(self.in_col, self.label_col)
+        if self.strategy == "local":  # an explicit override collects any size
+            return self._solve_local(sel.toPandas())
+        if self.strategy is None:
+            pdf = local_frame(sel, [self.in_col, self.label_col])
+            if pdf is not None:
+                return self._solve_local(pdf)
+        first = sel.first()
         d = len(first[0])
         multi = isinstance(first[1], (list, tuple))
         k = len(first[1]) if multi else 1
-        n = df.count()
-        choice = self.strategy or choose_solver(n, d, k).strategy
-
-        if choice == "local":
-            pdf = df.select(self.in_col, self.label_col).toPandas()
-            X = np.asarray(list(pdf[self.in_col]), dtype=np.float64)
-            Y = np.asarray(list(pdf[self.label_col]), dtype=np.float64)
-            if Y.ndim == 1:
-                Y = Y[:, None]
-            if self.reg_param > 0:
-                A = X.T @ X + self.reg_param * len(X) * np.eye(d)
-                W = np.linalg.solve(A, X.T @ Y)
-            else:
-                W, *_ = np.linalg.lstsq(X, Y, rcond=None)
-            return LinearMapper(W, None, self.in_col, self.out_col)
+        # the input holds more than local_rows(d) rows, which is all the
+        # cost model needs to pick between the distributed solvers
+        choice = self.strategy or choose_solver(local_rows(d) + 1, d, k).strategy
 
         # distributed: MLlib LinearRegression per target column
         from pyspark.ml.regression import LinearRegression
@@ -187,6 +188,18 @@ class LeastSquaresEstimator(LabelEstimator):
             model = lr.fit(vec.withColumn("__y", yj))
             ws.append(model.coefficients.toArray())
         W = np.stack(ws, axis=1)  # d x k
+        return LinearMapper(W, None, self.in_col, self.out_col)
+
+    def _solve_local(self, pdf: pd.DataFrame) -> LinearMapper:
+        X = np.asarray(list(pdf[self.in_col]), dtype=np.float64)
+        Y = np.asarray(list(pdf[self.label_col]), dtype=np.float64)
+        if Y.ndim == 1:
+            Y = Y[:, None]
+        if self.reg_param > 0:
+            A = X.T @ X + self.reg_param * len(X) * np.eye(X.shape[1])
+            W = np.linalg.solve(A, X.T @ Y)
+        else:
+            W, *_ = np.linalg.lstsq(X, Y, rcond=None)
         return LinearMapper(W, None, self.in_col, self.out_col)
 
 
@@ -265,9 +278,30 @@ class NaiveBayesEstimator(LabelEstimator):
         return t
 
 
+def _kmeans_pp(X: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """k-means++ seeding (Arthur & Vassilvitskii, SODA 2007): each next
+    centre is a row drawn with probability proportional to its squared
+    distance from the nearest centre so far."""
+    rng = np.random.default_rng(seed)
+    C = np.empty((k, X.shape[1]))
+    C[0] = X[rng.integers(len(X))]
+    d2 = ((X - C[0]) ** 2).sum(axis=1)
+    for j in range(1, k):
+        tot = d2.sum()
+        i = rng.choice(len(X), p=d2 / tot) if tot > 0 else rng.integers(len(X))
+        C[j] = X[i]
+        d2 = np.minimum(d2, ((X - C[j]) ** 2).sum(axis=1))
+    return C
+
+
 class KMeansEstimator(Estimator):
-    """k-means with k-means|| init; model emits one-hot assignment
-    (reference: nodes/learning/KMeansPlusPlus.scala)."""
+    """k-means whose model emits the nearest centre as ``cluster`` and as a
+    one-hot ``out_col`` (reference: nodes/learning/KMeansPlusPlus.scala).
+
+    A driver-sized input (``plans.optimizer.local_frame``) is collected
+    once and fitted by k-means++ seeding and Lloyd iterations in numpy;
+    a larger one by MLlib's distributed k-means||. Null feature rows are
+    left out of the fit and get a null cluster."""
 
     name = "kmeans"
 
@@ -277,31 +311,46 @@ class KMeansEstimator(Estimator):
         self.seed, self.max_iter = seed, max_iter
 
     def _fit(self, df: DataFrame) -> Transformer:
-        from pyspark.ml.clustering import KMeans
+        rows = df.where(F.col(self.in_col).isNotNull())
+        pdf = local_frame(rows, [self.in_col])
+        if pdf is not None:
+            X = np.asarray(list(pdf[self.in_col]), dtype=np.float64)
+            C = _lloyd(X, _kmeans_pp(X, self.k, self.seed), self.max_iter)
+        else:
+            from pyspark.ml.clustering import KMeans
 
-        vec = df.withColumn("__v", array_to_vector(F.col(self.in_col)))
-        model = KMeans(
-            featuresCol="__v", k=self.k, seed=self.seed, maxIter=self.max_iter,
-            initMode="k-means||",
-        ).fit(vec)
+            vec = rows.withColumn("__v", array_to_vector(F.col(self.in_col)))
+            model = KMeans(
+                featuresCol="__v", k=self.k, seed=self.seed, maxIter=self.max_iter,
+                initMode="k-means||",
+            ).fit(vec)
+            C = np.array([np.asarray(c) for c in model.clusterCenters()])
         k, in_col, out_col = self.k, self.in_col, self.out_col
 
+        @pandas_udf("long")
+        def nearest(s: pd.Series) -> pd.Series:
+            # null feature vectors map to a null cluster (not a kernel crash)
+            mask = s.notna().to_numpy()
+            out = pd.Series(pd.NA, index=s.index, dtype="Int64")
+            if mask.any():
+                out[mask] = _nearest(np.asarray(list(s[mask]), dtype=np.float64), C)
+            return out
+
         def apply(d: DataFrame) -> DataFrame:
-            withv = d.withColumn("__v", array_to_vector(F.col(in_col)))
-            assigned = model.transform(withv)
+            c = F.col("__cluster")
             onehot = F.transform(
                 F.sequence(F.lit(0), F.lit(k - 1)),
-                lambda i: F.when(i == F.col("prediction"), 1.0).otherwise(0.0),
+                lambda i: F.when(i == c, 1.0).otherwise(0.0),
             )
             return (
-                assigned.withColumn(out_col, onehot)
-                .withColumn("cluster", F.col("prediction").cast("long"))
-                .drop("__v", "prediction")
+                d.withColumn("__cluster", nearest(F.col(in_col)))
+                .withColumn(out_col, F.when(c.isNotNull(), onehot))
+                .withColumn("cluster", c)
+                .drop("__cluster")
             )
 
         t = Transformer(apply, "kmeans_model")
-        t.model = model
-        t.centers = np.array([np.asarray(c) for c in model.clusterCenters()])
+        t.centers = C
         return t
 
 

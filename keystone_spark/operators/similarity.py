@@ -371,20 +371,52 @@ def lsh_bucket_topk(
     return _rank(scored, k, id_col)
 
 
-def _kmeans_centroids(
-    X: np.ndarray, n_cells: int, seed: int, iters: int = 10
-) -> np.ndarray:
-    """Driver-local Lloyd iterations on a sample (classic IVF training)."""
-    rng = np.random.default_rng(seed)
-    C = X[rng.choice(len(X), size=min(n_cells, len(X)), replace=False)].copy()
+# Elements of the (rows, k, d) difference tensor one _nearest block holds.
+_NEAREST_BLOCK = 1 << 20
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centre by squared Euclidean distance.
+    Rows go in blocks so the (rows, k, d) difference tensor stays bounded
+    whatever ``len(X)``; each (row, centre) distance is the same sum
+    whatever the block size."""
+    step = max(1, _NEAREST_BLOCK // max(C.size, 1))
+    out = np.empty(len(X), dtype=np.int64)
+    for lo in range(0, len(X), step):
+        blk = X[lo : lo + step]
+        d = ((blk[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        out[lo : lo + step] = d.argmin(axis=1)
+    return out
+
+
+def _lloyd(X: np.ndarray, C: np.ndarray, iters: int) -> np.ndarray:
+    """Driver-local Lloyd iterations from the centres ``C``, refined in
+    place and returned: the one k-means kernel, shared by the IVF/PQ
+    quantizers and ``learning.KMeansEstimator``. A centre that loses
+    every member keeps its position. An assignment that repeats the
+    previous one leaves every centre where it is, so the loop stops there
+    with the centres ``iters`` rounds give."""
+    assign = None
     for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
+        new = _nearest(X, C)
+        if assign is not None and np.array_equal(new, assign):
+            break
+        assign = new
         for c in range(len(C)):
             m = assign == c
             if m.any():
                 C[c] = X[m].mean(axis=0)
     return C
+
+
+def _kmeans_centroids(
+    X: np.ndarray, n_cells: int, seed: int, iters: int = 10
+) -> np.ndarray:
+    """Lloyd iterations on a driver-local sample from ``n_cells`` of its
+    rows drawn at random (classic IVF training)."""
+    rng = np.random.default_rng(seed)
+    C = X[rng.choice(len(X), size=min(n_cells, len(X)), replace=False)].copy()
+    return _lloyd(X, C, iters)
 
 
 def ivf_topk(

@@ -10,12 +10,27 @@ rewrites. What survives here, in Python above Catalyst:
   (greedy by estimated bytes saved, like keystone's GreedyCache).
 - R3 NodeOptimizationRule -> ``choose_solver``: cost-model solver selection
   for least squares (reference: nodes/learning/LeastSquaresEstimator.scala
-  picking BCD vs dense/sparse LBFGS vs local solve from (n, d, k, mem)).
+  picking BCD vs dense/sparse LBFGS vs local solve from (n, d, k, mem)),
+  and ``local_frame``: the same driver budget applied to any estimator
+  with a driver-local kernel (k-means, least squares), deciding from one
+  bounded collect instead of a row count.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Sequence
+
+import pandas as pd
+from pyspark.sql import DataFrame
+
+# Most input bytes an estimator collects to fit on the driver
+# (KeystoneML's LocalLeastSquaresEstimator / KMeansPlusPlusEstimator regime).
+LOCAL_BYTES = 256 << 20
+
+
+def _local_bytes(driver_mem_bytes: int) -> int:
+    return min(driver_mem_bytes // 4, LOCAL_BYTES)
 
 
 @dataclass
@@ -45,11 +60,35 @@ def choose_solver(
     gram_bytes = n_features * n_features * 8
     if sparse:
         return SolverChoice("lbfgs", "sparse gradients -> iterative solver")
-    if data_bytes < min(driver_mem_bytes // 4, 256 << 20):
+    if data_bytes < _local_bytes(driver_mem_bytes):
         return SolverChoice("local", f"data {data_bytes >> 20}MB fits driver")
     if n_features <= 4096 and gram_bytes < executor_mem_bytes // 8:
         return SolverChoice("normal", f"gram {gram_bytes >> 20}MB cheap, exact one-pass")
     return SolverChoice("lbfgs", f"d={n_features} too wide for normal equations")
+
+
+def local_rows(n_features: int, driver_mem_bytes: int = 4 << 30) -> int:
+    """The most rows of ``n_features`` doubles that ``choose_solver``
+    still solves on the driver."""
+    return (_local_bytes(driver_mem_bytes) - 1) // (8 * max(n_features, 1))
+
+
+def local_frame(df: DataFrame, cols: Sequence[str]) -> pd.DataFrame | None:
+    """``df[cols]`` as one pandas frame when it fits the driver budget
+    ``choose_solver`` solves locally under, else ``None`` (the caller
+    then takes its distributed path). ``cols[0]`` is the feature array
+    whose length sets the row width.
+
+    Two jobs and no ``count()``: a ``first()`` for the width, then one
+    Arrow collect of at most ``local_rows + 1`` rows, so the driver never
+    receives more than the budget before the caller picks its operator."""
+    sel = df.select(*cols)
+    first = sel.first()
+    if first is None:
+        raise ValueError("cannot fit on an empty input")
+    budget = local_rows(len(first[0]))
+    pdf = sel.limit(budget + 1).toPandas()
+    return pdf if len(pdf) <= budget else None
 
 
 @dataclass

@@ -15,7 +15,8 @@ Graph IR executed by a memoizing GraphExecutor (reference:
   SURVEY.md §3).
 - ``Pipeline.fit`` walks stages once, fitting each estimator on the
   then-current DataFrame — fit-once semantics; inputs feeding an estimator
-  AND later stages are persisted (AutoCacheRule, see plans/optimizer.py).
+  AND later stages are persisted through ``caches.persist`` and freed
+  through ``caches.release`` (AutoCacheRule, see plans/optimizer.py).
 - ``gather`` merges branches by concatenating their output columns
   (keystone's Pipeline.gather + VectorCombiner).
 """
@@ -29,6 +30,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from keystone_spark.caches import attach, persist, release
 
 
 class Transformer:
@@ -58,10 +61,15 @@ class Identity(Transformer):
 
 
 class Cacher(Transformer):
-    """Explicit persist node (reference: workflow/Cacher.scala)."""
+    """Explicit persist node (reference: workflow/Cacher.scala). The
+    result owns the cache it made: free it with ``caches.release``."""
 
     def __init__(self, level: StorageLevel = StorageLevel.MEMORY_AND_DISK):
-        super().__init__(lambda df: df.persist(level), "cacher")
+        def cache(df: DataFrame) -> DataFrame:
+            owned: list = []
+            return attach(persist(df, owned, level), owned)
+
+        super().__init__(cache, "cacher")
 
 
 class Checkpointer(Transformer):
@@ -147,7 +155,7 @@ class Pipeline:
         while in scope (AutoCacheRule R2) and unpersisted afterwards."""
         fitted: list[Transformer] = []
         cur = df
-        cached: list[DataFrame] = []
+        owned: list = []
         try:
             for stage in self.stages:
                 if isinstance(stage, Estimator):
@@ -155,8 +163,7 @@ class Pipeline:
                     # the fitted transformer re-reads it for downstream
                     # stages -> reuse count >= 2 -> persist.
                     if cur is not df:
-                        cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
-                        cached.append(cur)
+                        cur = persist(cur, owned, StorageLevel.MEMORY_AND_DISK)
                     t = stage.fit(cur)
                     fitted.append(t)
                     cur = t(cur)
@@ -164,8 +171,7 @@ class Pipeline:
                     fitted.append(stage)
                     cur = stage(cur)
         finally:
-            for c in cached:
-                c.unpersist()
+            release(owned)
         return FittedPipeline(fitted)
 
     def __call__(self, df: DataFrame) -> DataFrame:

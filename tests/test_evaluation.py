@@ -24,6 +24,26 @@ def test_confusion_matrix(spark):
     assert cm == {(0, 0): 2, (0, 1): 1, (1, 1): 2, (2, 0): 1}
 
 
+def test_confusion_matrix_collect_runs_two_jobs(spark):
+    """The (label, pred) rows come back in order from one aggregation
+    job and one single-partition sort: no range-partition sample job and
+    no second shuffle, as a global orderBy would add."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 2000, numPartitions=4).select(
+        (F.col("id") % 4).alias("label"), (F.col("id") % 7 % 3).alias("pred"))
+    sc = spark.sparkContext
+    sc.setJobGroup("confusion-collect", "confusion-collect")
+    try:
+        rows = [tuple(r) for r in confusion_matrix(df).collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("confusion-collect")) == 2
+    expected = [tuple(r) for r in df.groupBy("label", "pred").count()
+                .orderBy("label", "pred").collect()]
+    assert rows == expected and len(rows) == 12
+
+
 def test_accuracy(spark):
     assert abs(accuracy(_preds_df(spark)) - 4 / 6) < 1e-9
 

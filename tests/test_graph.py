@@ -69,6 +69,27 @@ def test_cc_empty(spark):
     assert _cc_spark(spark, []) == {}
 
 
+def test_cc_reads_its_edges_once(spark):
+    """The caller's edge pipeline runs once: the node set and every
+    star round read connected_components' own checkpoint of it."""
+    from keystone_spark.caches import release
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    edges = [(1, 2), (2, 3), (5, 6), (7, 7)]
+    raw = spark.createDataFrame(edges, "i long, j long")
+    out = connected_components(raw.mapInPandas(tap, raw.schema))
+    got = {r.node: r.component for r in out.collect()}
+    release(out)
+    assert seen.value == len(edges)
+    assert got == _union_find(edges)
+
+
 def test_cc_chain_needs_multiple_rounds(spark):
     """A 200-node chain exercises the iterative path (one round cannot
     star-collapse it); all nodes must still land on component min 0."""

@@ -113,6 +113,150 @@ def test_kmeans_onehot_separated_clusters(spark):
     assert len(set(c[:20])) == 1 and len(set(c[20:])) == 1
 
 
+def _fit_jobs(spark, group, est, df):
+    """``est.fit(df)`` and the number of Spark jobs it ran (counted in a
+    job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        model = est.fit(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return model, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _blobs(spark, n=600):
+    """Three well-separated 2-D blobs, ``n`` rows in id order (blob = id % 3),
+    persisted like a Pipeline.fit estimator input."""
+    centres = np.array([[-6.0, 0.0], [0.0, 6.0], [6.0, 0.0]])
+    X = centres[np.arange(n) % 3] + RNG.normal(scale=0.2, size=(n, 2))
+    df = _df_from(spark, X, "id long, features array<double>").persist()
+    df.count()
+    return df, centres
+
+
+def _same_partition(df, n):
+    """Every blob (id % 3) lands in exactly one cluster, and the three
+    blobs in three different ones."""
+    c = df.sort("id").toPandas()["cluster"].to_numpy()
+    per_blob = [set(c[np.arange(n) % 3 == b]) for b in range(3)]
+    assert all(len(s) == 1 for s in per_blob)
+    assert len(set().union(*per_blob)) == 3
+
+
+def test_kmeans_fit_reads_its_input_in_two_jobs(spark):
+    """A driver-sized input is fitted on the driver: one ``first()`` and
+    one bounded collect, then k-means++ and Lloyd in numpy."""
+    df, centres = _blobs(spark)
+    model, jobs = _fit_jobs(spark, "kmeans-local-fit", KMeansEstimator(k=3, seed=1), df)
+    assert jobs <= 2
+    found = sorted(map(tuple, np.round(model.centers)))
+    assert found == sorted(map(tuple, centres))
+    _same_partition(model(df), 600)
+    df.unpersist()
+
+
+def test_kmeans_over_budget_falls_back_to_mllib(spark, monkeypatch):
+    """An input over the driver budget never reaches the driver-local
+    kernel: MLlib's k-means|| fits it, and the nearest-centre model
+    still separates the blobs."""
+    from keystone_spark.operators import learning
+    from keystone_spark.plans import optimizer
+
+    def local_kernel_called(*a):
+        raise AssertionError("driver-local k-means ran over budget")
+
+    monkeypatch.setattr(optimizer, "LOCAL_BYTES", 64)
+    monkeypatch.setattr(learning, "_kmeans_pp", local_kernel_called)
+    df, centres = _blobs(spark)
+    model = KMeansEstimator(k=3, seed=1).fit(df)
+    found = sorted(map(tuple, np.round(model.centers)))
+    assert found == sorted(map(tuple, centres))
+    _same_partition(model(df), 600)
+    df.unpersist()
+
+
+def test_kmeans_null_feature_row_gets_null_cluster(spark):
+    X = np.vstack([RNG.normal(-5, 0.1, size=(10, 2)), RNG.normal(5, 0.1, size=(10, 2))])
+    rows = [(i, X[i].tolist()) for i in range(20)] + [(20, None)]
+    df = spark.createDataFrame(rows, "id int, features array<double>")
+    model = KMeansEstimator(k=2, seed=3).fit(df)
+    assert model.centers.shape == (2, 2)
+    out = {r.id: r for r in model(df).collect()}
+    assert out[20].cluster is None and out[20].cluster_onehot is None
+    assert {out[i].cluster for i in range(10)} != {out[i].cluster for i in range(10, 20)}
+    assert all(sum(out[i].cluster_onehot) == 1.0 for i in range(20))
+
+
+def test_least_squares_local_fit_reads_its_input_in_two_jobs(spark):
+    X = RNG.normal(size=(400, 6))
+    W_true = RNG.normal(size=(6, 3))
+    df = spark.createDataFrame(
+        [(i, X[i].tolist(), (X[i] @ W_true).tolist()) for i in range(400)],
+        "id int, features array<double>, y array<double>",
+    ).persist()
+    df.count()
+    model, jobs = _fit_jobs(spark, "lstsq-local-fit",
+                            LeastSquaresEstimator("features", "y"), df)
+    assert jobs <= 2
+    np.testing.assert_allclose(model.W, W_true, atol=1e-8)
+    df.unpersist()
+
+
+def test_least_squares_over_budget_takes_the_normal_path(spark, monkeypatch):
+    """Over the driver budget the cost model picks the distributed
+    normal-equation solve, which still matches numpy's lstsq."""
+    from keystone_spark.plans import optimizer
+
+    def local_solve_called(*a):
+        raise AssertionError("local solve ran over budget")
+
+    monkeypatch.setattr(optimizer, "LOCAL_BYTES", 64)
+    monkeypatch.setattr(LeastSquaresEstimator, "_solve_local", local_solve_called)
+    X = RNG.normal(size=(128, 4))
+    y = X @ RNG.normal(size=4) + RNG.normal(scale=0.01, size=128)
+    df = spark.createDataFrame(
+        [(i, X[i].tolist(), float(y[i])) for i in range(128)],
+        "id int, features array<double>, y double",
+    )
+    model = LeastSquaresEstimator("features", "y").fit(df)
+    exact, *_ = np.linalg.lstsq(X, y, rcond=None)
+    np.testing.assert_allclose(model.W.ravel(), exact, atol=1e-4)
+
+
+def test_lloyd_kernel_centroids_golden_digest(spark, sf_dir):
+    """k-means and the IVF/PQ quantizers share one Lloyd kernel, and a
+    stored IVF index assigns appended vectors against centroids trained
+    before: the kernel's centroids must never change. sha256 of the
+    centroid bytes, computed before the kernel was shared and blocked,
+    on a seeded matrix spanning many distance blocks and on the
+    embeddings fixture."""
+    import hashlib
+    import os
+
+    from keystone_spark.operators.similarity import (
+        IvfIndex, IvfPqIndex, _kmeans_centroids)
+    from keystone_spark.sources import load_table
+
+    def digest(a):
+        return hashlib.sha256(np.ascontiguousarray(a).tobytes()).hexdigest()
+
+    X = np.random.default_rng(11).normal(size=(4096, 64))
+    assert digest(_kmeans_centroids(X, 64, 5)) == (
+        "1d3f0ad7841ea5c3b15951c0bbd692e878f9f436a870f4a05cd584b6d6601b9b")
+    fixture = {
+        "sf0.001": ("76f4964ffea86c81d1eb8809856e49cc5108cb0b1186ae83ba392df9fd62475a",
+                    "eef996565f3659ac05a129356bf05d9bd62e4e1d4383b1175e7a77820f6960ec"),
+        "sf0.01": ("7db327de6c8073ae2fa7e96b82491a30d2fc8bcb03af928f4ef3ea52fc18ee92",
+                   "1a764073c507fe6a755089ff55bae0d021aec07f761b810eb89c0e2487d30be9"),
+    }.get(os.path.basename(sf_dir.rstrip("/")))
+    if fixture is None:
+        pytest.skip(f"no recorded centroid digest for {sf_dir}")
+    emb = load_table(spark, "embeddings", sf_dir)
+    assert digest(IvfIndex.build(emb, n_cells=16).C) == fixture[0]
+    assert digest(IvfPqIndex.build(emb, n_cells=8, m=8, ks=16).books) == fixture[1]
+
+
 def test_pca_reconstruction(spark):
     # data on a 2-D subspace of R^4: top-2 PCA captures everything
     Z = RNG.normal(size=(50, 2))

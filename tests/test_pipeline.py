@@ -43,6 +43,38 @@ def test_fit_once_and_apply(spark):
     assert est.fits == 1
 
 
+class InputLevelEstimator(Estimator):
+    """Records whether each input it fits on is cached."""
+
+    name = "input_level"
+
+    def __init__(self):
+        self.cached = []
+
+    def _fit(self, df):
+        self.cached.append(df.storageLevel.useMemory)
+        df.count()
+        return Transformer(lambda d: d.withColumn("x", F.col("x") + 1.0))
+
+
+def test_fit_persists_derived_estimator_inputs_and_releases_them(spark):
+    """An estimator input derived inside the pipeline is persisted for
+    the fit and freed after it; the caller's own input is left as it
+    is, including a cache the caller made itself."""
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "x double")
+    first, second = InputLevelEstimator(), InputLevelEstimator()
+    pipe = Pipeline([first, ColumnTransformer("x", "y", lambda c: c * 2.0), second])
+    fitted = pipe.fit(df)
+    assert first.cached == [False] and second.cached == [True]
+    derived = fitted.transformers[1](fitted.transformers[0](df))
+    assert not derived.storageLevel.useMemory
+    # a derived input the caller already cached stays cached after fit
+    derived.persist()
+    pipe.fit(df)
+    assert second.cached == [True, True] and derived.storageLevel.useMemory
+    derived.unpersist()
+
+
 def test_unfitted_pipeline_apply_raises(spark):
     df = spark.createDataFrame([(1.0,)], "x double")
     pipe = Pipeline([CountingEstimator()])

@@ -4,8 +4,9 @@ Strategy (SURVEY.md §2.5): where MLlib has the semantics, wrap it (the
 reference's hand-rolled BCD/LBFGS/TSQR exist because 2015-era MLlib didn't
 cover them; today's does). The operator *selection* cost model — the
 reference's flagship optimization (nodes/learning/LeastSquaresEstimator.scala)
-— survives in plans/optimizer: ``choose_solver`` for the solver and
-``local_frame`` for the driver budget. Least squares and k-means take a
+— survives in plans/optimizer: ``local_frame`` decides whether an input
+fits the driver, and ``choose_solver`` picks the distributed least-squares
+solver for one that does not. Least squares and k-means take a
 driver-sized input in one bounded collect and fit it in numpy (the
 reference's LocalLeastSquaresEstimator and KMeansPlusPlusEstimator:
 k-means++ seeding, then the same Lloyd kernel the IVF quantizers train
@@ -22,13 +23,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from keystone_spark.operators.similarity import _lloyd, _nearest
-from keystone_spark.plans.optimizer import choose_solver, local_frame, local_rows
+from keystone_spark.plans.optimizer import as_matrix, choose_solver, local_frame
 from keystone_spark.plans.pipeline import Estimator, LabelEstimator, Transformer
 
 
@@ -152,18 +154,16 @@ class LeastSquaresEstimator(LabelEstimator):
     def _fit(self, df: DataFrame) -> LinearMapper:
         sel = df.select(self.in_col, self.label_col)
         if self.strategy == "local":  # an explicit override collects any size
-            return self._solve_local(sel.toPandas())
+            return self._solve_local(sel.toArrow())
         if self.strategy is None:
-            pdf = local_frame(sel, [self.in_col, self.label_col])
-            if pdf is not None:
-                return self._solve_local(pdf)
-        first = sel.first()
-        d = len(first[0])
+            first, tbl = local_frame(sel, [self.in_col, self.label_col])
+            if tbl is not None:
+                return self._solve_local(tbl)
+            choice = choose_solver(len(first[0])).strategy
+        else:
+            first, choice = sel.first(), self.strategy
         multi = isinstance(first[1], (list, tuple))
         k = len(first[1]) if multi else 1
-        # the input holds more than local_rows(d) rows, which is all the
-        # cost model needs to pick between the distributed solvers
-        choice = self.strategy or choose_solver(local_rows(d) + 1, d, k).strategy
 
         # distributed: MLlib LinearRegression per target column
         from pyspark.ml.regression import LinearRegression
@@ -190,11 +190,8 @@ class LeastSquaresEstimator(LabelEstimator):
         W = np.stack(ws, axis=1)  # d x k
         return LinearMapper(W, None, self.in_col, self.out_col)
 
-    def _solve_local(self, pdf: pd.DataFrame) -> LinearMapper:
-        X = np.asarray(list(pdf[self.in_col]), dtype=np.float64)
-        Y = np.asarray(list(pdf[self.label_col]), dtype=np.float64)
-        if Y.ndim == 1:
-            Y = Y[:, None]
+    def _solve_local(self, tbl: pa.Table) -> LinearMapper:
+        X, Y = as_matrix(tbl[self.in_col]), as_matrix(tbl[self.label_col])
         if self.reg_param > 0:
             A = X.T @ X + self.reg_param * len(X) * np.eye(X.shape[1])
             W = np.linalg.solve(A, X.T @ Y)
@@ -312,9 +309,9 @@ class KMeansEstimator(Estimator):
 
     def _fit(self, df: DataFrame) -> Transformer:
         rows = df.where(F.col(self.in_col).isNotNull())
-        pdf = local_frame(rows, [self.in_col])
-        if pdf is not None:
-            X = np.asarray(list(pdf[self.in_col]), dtype=np.float64)
+        _, tbl = local_frame(rows, [self.in_col])
+        if tbl is not None:
+            X = as_matrix(tbl[self.in_col])
             C = _lloyd(X, _kmeans_pp(X, self.k, self.seed), self.max_iter)
         else:
             from pyspark.ml.clustering import KMeans

@@ -224,6 +224,20 @@ def test_least_squares_over_budget_takes_the_normal_path(spark, monkeypatch):
     np.testing.assert_allclose(model.W.ravel(), exact, atol=1e-4)
 
 
+def test_as_matrix_reads_arrow_columns_without_row_objects():
+    import pyarrow as pa
+
+    from keystone_spark.plans.optimizer import as_matrix
+
+    rows = pa.chunked_array([[[1.0, 2.0], [3.0, 4.0]], [[5.0, 6.0]]])
+    np.testing.assert_array_equal(as_matrix(rows), [[1, 2], [3, 4], [5, 6]])
+    labels = as_matrix(pa.chunked_array([[1, 0, 2]], pa.int64()))
+    assert labels.dtype == np.float64 and labels.shape == (3, 1)
+    for bad in ([[1.0, 2.0], [3.0]], [[1.0, 2.0], None]):
+        with pytest.raises(ValueError):
+            as_matrix(pa.chunked_array([bad]))
+
+
 def test_lloyd_kernel_centroids_golden_digest(spark, sf_dir):
     """k-means and the IVF/PQ quantizers share one Lloyd kernel, and a
     stored IVF index assigns appended vectors against centroids trained

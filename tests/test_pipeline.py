@@ -12,7 +12,7 @@ from keystone_spark.plans.pipeline import (
     Transformer,
     gather,
 )
-from keystone_spark.plans.optimizer import auto_cache_plan, choose_solver
+from keystone_spark.plans.optimizer import auto_cache_plan, choose_solver, local_rows
 
 
 class CountingEstimator(Estimator):
@@ -116,10 +116,11 @@ def test_fitted_pipeline_save(tmp_path, spark):
 
 
 def test_choose_solver_regimes():
-    assert choose_solver(100, 8).strategy == "local"
-    assert choose_solver(10_000_000, 512).strategy == "normal"
-    assert choose_solver(10_000_000, 200_000).strategy == "lbfgs"
-    assert choose_solver(10_000_000, 512, sparse=True).strategy == "lbfgs"
+    # the local regime is local_frame's: 100 rows of 8 doubles fit the driver
+    assert local_rows(8) >= 100
+    assert choose_solver(512).strategy == "normal"
+    assert choose_solver(200_000).strategy == "lbfgs"
+    assert choose_solver(512, sparse=True).strategy == "lbfgs"
 
 
 def test_auto_cache_plan_budget():

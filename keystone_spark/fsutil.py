@@ -28,6 +28,24 @@ over ``append_tombstones``) and ``compact_index`` (in-place
 stage-and-swap and ``dest=`` pointer flip). A family supplies only its
 table names, a rewrite callback, its kernel or stats step and its
 manifest writer.
+
+Loading a stored table costs no Spark job. ``write_table`` overwrites a
+table and records its schema next to the data, as
+``{table_dir}/_schema.json`` (Spark skips ``_`` files). ``read_table``
+reads with that record; a schema-inferring ``spark.read.parquet`` runs
+one job to open a parquet footer, and ``read_table`` falls back to it
+only for a table without a record. Appends leave the record valid
+because every append is cast to the stored schema first. Tombstone
+tables keep inference (see ``read_tombstones``).
+
+Metadata answers stay under 8 KB. The JVM writes each py4j answer
+through an 8 KB buffer, and a longer answer costs a second socket
+write that the Python side receives about 44 ms late (Nagle against a
+delayed ACK). ``fs_read_text`` therefore returns a file in byte slices
+of at most 6000 bytes (8000 base64 characters), and an expected
+condition, such as a missing tombstone directory, is checked with
+``fs_exists`` rather than caught as an exception whose Java stack trace
+would make a long answer.
 """
 
 from __future__ import annotations
@@ -97,16 +115,85 @@ def fs_write_text(spark, path: str, text: str) -> None:
         out.close()
 
 
+# Bytes per py4j answer in ``fs_read_text``: a byte[] answer travels
+# base64-encoded, so 6000 bytes are 8000 characters (see the module
+# note on answer size).
+_ANSWER_BYTES = 6000
+
+
 def fs_read_text(spark, path: str) -> str:
-    """Read a small text file through the Hadoop FileSystem API."""
+    """Read a small text file through the Hadoop FileSystem API, in
+    byte slices of at most ``_ANSWER_BYTES`` so that no py4j answer
+    exceeds 8 KB. The slices are joined before decoding, so a
+    multi-byte character split across two of them decodes whole."""
     fs, p = _fs_path(spark, path)
     stream = fs.open(p)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
+        parts = []
+        while True:
+            part = stream.readNBytes(_ANSWER_BYTES)
+            parts.append(part)
+            if len(part) < _ANSWER_BYTES:
+                return b"".join(parts).decode("utf-8", errors="replace")
     finally:
         stream.close()
+
+
+SCHEMA_FILE = "_schema.json"
+
+
+def _as_read(dt):
+    """``dt`` as a parquet read reports it: every field, array element
+    and map value nullable."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_read(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
+
+
+def write_table(df, table_dir: str, partition_by: str | None = None) -> None:
+    """Overwrite the stored table at ``table_dir`` with ``df`` and
+    record, in ``{table_dir}/_schema.json``, the schema a schema-
+    inferring read of it would report: partition column last, every
+    field nullable. The record is written after the data (an overwrite
+    deletes the directory first), so a crash between the two leaves a
+    table that ``read_table`` still reads, by inference."""
+    import json as _json
+
+    from pyspark.sql.types import StructType
+
+    writer = df.write.mode("overwrite")
+    fields = df.schema.fields
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+        fields = ([f for f in fields if f.name != partition_by]
+                  + [f for f in fields if f.name == partition_by])
+    writer.parquet(table_dir)
+    fs_write_text(df.sparkSession, f"{table_dir.rstrip('/')}/{SCHEMA_FILE}",
+                  _json.dumps(_as_read(StructType(fields)).jsonValue()))
+
+
+def read_table(spark, table_dir: str):
+    """The stored table at ``table_dir``, read with the schema
+    ``write_table`` recorded: no Spark job, where a schema-inferring
+    read runs one to open a parquet footer. A table written without a
+    record (before this layout, or by a writer that crashed before the
+    record) is read by inference."""
+    import json as _json
+
+    from pyspark.sql.types import StructType
+
+    rec = f"{table_dir.rstrip('/')}/{SCHEMA_FILE}"
+    if not fs_exists(spark, rec):
+        return spark.read.parquet(table_dir)
+    schema = StructType.fromJson(_json.loads(fs_read_text(spark, rec)))
+    return spark.read.schema(schema).parquet(table_dir)
 
 
 def swap_tables(spark, path: str, stage: str, tables: list[str]) -> None:
@@ -978,15 +1065,21 @@ def append_tombstones(spark, path: str, tomb, root: str | None = None
 
 def read_tombstones(spark, path: str, id_col: str):
     """Distinct tombstoned ids at ``{path}/tombstones``, or None when no
-    delete was ever issued. ONLY the missing-path error class is
-    treated as "no tombstones" (ADVICE r10 #5): any other
-    AnalysisException — e.g. a column mismatch from deleting under a
-    different id_col than the index stores — propagates, because
-    swallowing it silently disables tombstone filtering and deleted
-    documents reappear in results."""
+    delete was ever issued. A missing directory is checked for first:
+    answering it with a caught exception would carry the Java stack
+    trace back over py4j on every search of an index without deletes.
+    An existing table keeps schema inference, so that any
+    AnalysisException other than a directory removed since the check
+    (a compact's purge) propagates — e.g. a column mismatch from
+    deleting under a different id_col than the index stores (ADVICE r10
+    #5): a recorded schema would read that column as nulls instead,
+    silently disabling tombstone filtering, and deleted documents would
+    reappear in results."""
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
+    if not fs_exists(spark, f"{path}/tombstones"):
+        return None
     try:
         df = spark.read.parquet(f"{path}/tombstones")
     except AnalysisException as e:
@@ -1243,7 +1336,7 @@ def scan_index_stats(spark, snap: str, table: str, part_col: str) -> dict:
     before r14."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{snap.rstrip('/')}/{table}")
+    df = read_table(spark, f"{snap.rstrip('/')}/{table}")
     return {
         int(r[part_col]): int(r["n"])
         for r in df.groupBy(part_col).agg(F.count("*").alias("n")).collect()

@@ -568,7 +568,11 @@ class _IvfFamily:
     in ``codes``. This class owns ``add``, ``delete``, ``compact``, the
     lock/publish shell of ``retrain`` and ``save``/``load``, each a
     thin caller of the protocol in ``fsutil`` (``locked_mutation``,
-    ``delete_ids``, ``compact_index``). A family supplies:
+    ``delete_ids``, ``compact_index``). Every overwrite of the table
+    (build/save, compact in place or to ``dest``, retrain) records its
+    schema as ``{TABLE}/_schema.json``, and ``add`` appends rows cast
+    to that schema, so every ``load`` (one per ``add`` and per served
+    search) reads the table without a Spark job. A family supplies:
 
     - ``TABLE`` (the cell-partitioned table) and ``MANIFEST`` (the
       model JSON, also the family's on-disk marker);
@@ -790,12 +794,13 @@ class _IvfFamily:
                 "cell_histogram": hist}
 
     def _write(self, path: str) -> None:
-        """The table partitioned by cell and the model JSON: what
-        ``save`` and every compact or retrain rewrite write. The JSON
-        rides the same Hadoop FileSystem as the table (file://,
-        hdfs://, bare local all work)."""
-        self.indexed.write.mode("overwrite").partitionBy(
-            self.PART_COL).parquet(f"{path}/{self.TABLE}")
+        """The table partitioned by cell, with its recorded schema
+        (``fsutil.write_table``), and the model JSON: what ``save`` and
+        every compact or retrain rewrite write. The JSON rides the same
+        Hadoop FileSystem as the table (file://, hdfs://, bare local
+        all work)."""
+        fsutil.write_table(self.indexed, f"{path}/{self.TABLE}",
+                           self.PART_COL)
         fsutil.fs_write_text(self.indexed.sparkSession,
                              f"{path}/{self.MANIFEST}",
                              json.dumps(self._model_json()))
@@ -818,12 +823,18 @@ class _IvfFamily:
 
     @classmethod
     def load(cls, spark, path: str):
+        """The index at ``path`` (or at the snapshot its ``_LATEST``
+        pointer names). Driver metadata only: the model JSON and the
+        table's recorded schema are read in answers under 8 KB, and the
+        table is read with that schema, so a load runs no Spark job
+        (``fsutil.read_table``; an index saved before tables recorded
+        their schema is read by inference)."""
         path = fsutil.resolve_index_path(spark, path)  # follow _LATEST
         fsutil.assert_no_interrupted_swap(spark, path)
         meta = json.loads(
             fsutil.fs_read_text(spark, f"{path}/{cls.MANIFEST}"))
         return cls._from_model(
-            meta, spark.read.parquet(f"{path}/{cls.TABLE}"), path)
+            meta, fsutil.read_table(spark, f"{path}/{cls.TABLE}"), path)
 
 
 class IvfIndex(_IvfFamily):
@@ -1427,11 +1438,12 @@ class Sq8Index:
         from keystone_spark.fsutil import (
             clear_index_control_state,
             fs_write_text,
+            write_table,
         )
 
         spark = self.indexed.sparkSession
         clear_index_control_state(spark, path)
-        self.indexed.write.mode("overwrite").parquet(f"{path}/codes")
+        write_table(self.indexed, f"{path}/codes")
         fs_write_text(
             spark, f"{path}/{self.MODEL_FILE}",
             json.dumps({"mins": self.mins.tolist(),
@@ -1448,6 +1460,7 @@ class Sq8Index:
         from keystone_spark.fsutil import (
             assert_no_interrupted_swap,
             fs_read_text,
+            read_table,
             resolve_index_path,
         )
 
@@ -1456,7 +1469,7 @@ class Sq8Index:
         meta = json.loads(fs_read_text(spark, f"{path}/{cls.MODEL_FILE}"))
         return cls(
             np.asarray(meta["mins"]), np.asarray(meta["spans"]),
-            spark.read.parquet(f"{path}/codes"),
+            read_table(spark, f"{path}/codes"),
             meta["id_col"], meta["vec_col"], path=path,
         )
 

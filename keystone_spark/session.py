@@ -111,6 +111,17 @@ def get_session(
     # set it BEFORE the JVM starts; export wins over us if the operator
     # set it explicitly.
     os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
+    # Python workers unpickle kernels that reference package functions,
+    # and they inherit the JVM's PYTHONPATH and working directory, not
+    # the driver's sys.path: a driver that imported the package through
+    # sys.path from outside the repository would fail in every worker
+    # with ModuleNotFoundError. Put the package's parent directory on
+    # PYTHONPATH before the JVM starts.
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    py_path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+               if p]
+    if pkg_parent not in py_path:
+        os.environ["PYTHONPATH"] = os.pathsep.join([pkg_parent, *py_path])
     cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"

@@ -208,7 +208,7 @@ def index_status(spark, path: str) -> dict:
     if part_col is None:
         out["occupancy"] = None
         out["n_vectors"] = (
-            spark.read.parquet(f"{snap}/{part_table}").count())
+            fsutil.read_table(spark, f"{snap}/{part_table}").count())
     else:
         out["occupancy"] = _occupancy(spark, snap, part_table, part_col)
     if family in ("ivf", "ivfpq"):

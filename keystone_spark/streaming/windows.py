@@ -617,6 +617,10 @@ def streaming_upsert(
     ``hdfs://`` or ``s3a://`` URI.
 
     Returns a ``DataStreamWriter`` (caller picks trigger/checkpoint).
+    Each version directory records its schema (``_schema.json``,
+    written with the data and before the pointer publish), so the next
+    fold and ``read_snapshot`` read it without a Spark job.
+
     Exactly-once snapshot state despite at-least-once foreachBatch: a
     replayed batch that crashed BEFORE its pointer publish re-folds from
     the previous version (same inputs -> same v<batch_id>); one that
@@ -648,7 +652,7 @@ def streaming_upsert(
             # would overwrite v<batch_id> while reading from it
             return
         if cur_dir:
-            cur = spark.read.parquet(f"{root}/{cur_dir}")
+            cur = fsutil.read_table(spark, f"{root}/{cur_dir}")
         else:
             cur = (
                 base_df
@@ -659,14 +663,16 @@ def streaming_upsert(
             cur, batch_df, key_cols, op_col=op_col, seq_col=seq_col
         )
         vdir = f"v{batch_id}"
-        new.write.mode("overwrite").parquet(f"{root}/{vdir}")
+        fsutil.write_table(new, f"{root}/{vdir}")
         fsutil.write_latest_pointer(spark, root, vdir)
 
     return changes_stream.writeStream.foreachBatch(fold)
 
 
 def read_snapshot(spark, snapshot_dir: str) -> DataFrame:
-    """Read the current committed version of a streaming_upsert snapshot."""
+    """Read the current committed version of a streaming_upsert
+    snapshot, with the schema its version directory records (no Spark
+    job; see ``fsutil.read_table``)."""
     from keystone_spark import fsutil
 
     root = snapshot_dir.rstrip("/")
@@ -676,7 +682,7 @@ def read_snapshot(spark, snapshot_dir: str) -> DataFrame:
             f"no streaming_upsert snapshot committed at {snapshot_dir}: "
             "no _LATEST pointer"
         )
-    return spark.read.parquet(f"{root}/{vdir}")
+    return fsutil.read_table(spark, f"{root}/{vdir}")
 
 
 def stateful_ewma(

@@ -22,12 +22,23 @@ no rename of live data at all.
 
 The four families share one mutation protocol, defined here:
 ``locked_mutation`` (write-lock prologue and commit fence),
-``commit_generation`` (intent -> data -> fence -> commit for the
-generation-manifest families), ``delete_ids`` (the delete front half
-over ``append_tombstones``) and ``compact_index`` (in-place
-stage-and-swap and ``dest=`` pointer flip). A family supplies only its
-table names, a rewrite callback, its kernel or stats step and its
-manifest writer.
+``commit_generation`` (intent -> data -> fence -> commit),
+``delete_ids`` (the delete front half over ``append_tombstones``) and
+``compact_index`` (in-place stage-and-swap and ``dest=`` pointer flip).
+A family supplies only its table names, a rewrite callback and its
+kernel or stats step.
+
+The BM25 and MinHash indexes also share one generation log. Every
+table row carries the generation that wrote it (``gen``), and
+``{index}/params`` holds one row per generation event, in the family's
+declared params schema: its config columns, its per-generation stats,
+``generation`` and ``committed``. A mutation appends an intent row
+(``append_manifest``), then its data tagged with the generation, then
+a commit row. ``read_generation_log`` reads the log with the declared
+schema, checks that the config is the same in every row and returns
+the committed generations; ``read_committed`` serves a table's rows of
+those generations only, so an interrupted mutation is invisible and
+the next compact purges it.
 
 Loading a stored table costs no Spark job. ``write_table`` overwrites a
 table and records its schema next to the data, as
@@ -35,8 +46,9 @@ table and records its schema next to the data, as
 reads with that record; a schema-inferring ``spark.read.parquet`` runs
 one job to open a parquet footer, and ``read_table`` falls back to it
 only for a table without a record. Appends leave the record valid
-because every append is cast to the stored schema first. Tombstone
-tables keep inference (see ``read_tombstones``).
+because every append is cast to the stored schema first
+(``append_table``, ``cast_checked``). Tombstone tables keep inference
+(see ``read_tombstones``).
 
 Metadata answers stay under 8 KB. The JVM writes each py4j answer
 through an 8 KB buffer, and a longer answer costs a second socket
@@ -157,43 +169,89 @@ def _as_read(dt):
     return dt
 
 
-def write_table(df, table_dir: str, partition_by: str | None = None) -> None:
+def write_table(df, table_dir: str, *partition_by: str) -> None:
     """Overwrite the stored table at ``table_dir`` with ``df`` and
     record, in ``{table_dir}/_schema.json``, the schema a schema-
-    inferring read of it would report: partition column last, every
-    field nullable. The record is written after the data (an overwrite
-    deletes the directory first), so a crash between the two leaves a
-    table that ``read_table`` still reads, by inference."""
+    inferring read of it would report: partition columns last, in
+    ``partition_by`` order, every field nullable. The record is written
+    after the data (an overwrite deletes the directory first), so a
+    crash between the two leaves a table that ``read_table`` still
+    reads, by inference."""
     import json as _json
 
     from pyspark.sql.types import StructType
 
-    writer = df.write.mode("overwrite")
-    fields = df.schema.fields
-    if partition_by is not None:
-        writer = writer.partitionBy(partition_by)
-        fields = ([f for f in fields if f.name != partition_by]
-                  + [f for f in fields if f.name == partition_by])
-    writer.parquet(table_dir)
+    fields = ([f for f in df.schema.fields if f.name not in partition_by]
+              + [df.schema[c] for c in partition_by])
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(table_dir)
     fs_write_text(df.sparkSession, f"{table_dir.rstrip('/')}/{SCHEMA_FILE}",
                   _json.dumps(_as_read(StructType(fields)).jsonValue()))
 
 
-def read_table(spark, table_dir: str):
-    """The stored table at ``table_dir``, read with the schema
-    ``write_table`` recorded: no Spark job, where a schema-inferring
-    read runs one to open a parquet footer. A table written without a
-    record (before this layout, or by a writer that crashed before the
-    record) is read by inference."""
+def cast_checked(df, stored):
+    """``df`` with each column that the StructType ``stored`` also has
+    cast to the stored type, refusing a cast that nulled a value: with
+    ``spark.sql.ansi.enabled=false`` (session.py) an un-castable value
+    (a string id into a long-id table) becomes NULL, and a null id
+    never matches a ``skip_existing_ids`` anti-join, so every replay
+    would append it again. A frame whose types already match is
+    returned untouched; a type-drifted one pays one narrow validation
+    count."""
+    from functools import reduce
+    from operator import or_
+
+    from pyspark.sql import functions as F
+
+    to = {c: _as_read(stored[c].dataType) for c in df.columns
+          if c in stored.fieldNames()}
+    checked = [c for c, t in to.items()
+               if _as_read(df.schema[c].dataType) != t]
+    if not checked:
+        return df
+    bad = df.where(reduce(or_, [
+        F.col(c).isNotNull() & F.col(c).cast(to[c]).isNull()
+        for c in checked])).count()
+    if bad:
+        raise ValueError(
+            f"append batch does not cast to the stored index schema: "
+            f"{bad} row(s) would have their "
+            f"{'/'.join(checked)} nulled by the cast (non-ANSI mode "
+            "turns an un-castable value into NULL instead of an "
+            "error) — fix the batch's column types; nothing was "
+            "appended"
+        )
+    return df.select([F.col(c).cast(to[c]).alias(c) if c in checked
+                      else F.col(c) for c in df.columns])
+
+
+def append_table(df, table_dir: str, *partition_by: str) -> None:
+    """Append ``df`` to the stored table at ``table_dir``, cast to the
+    table's schema (``cast_checked``), so that the schema
+    ``write_table`` recorded stays the one the table holds."""
+    cast = cast_checked(df, table_schema(df.sparkSession, table_dir))
+    cast.write.mode("append").partitionBy(*partition_by).parquet(table_dir)
+
+
+def table_schema(spark, table_dir: str):
+    """The schema ``write_table`` recorded for the stored table at
+    ``table_dir``: no Spark job and no listing of its files, where a
+    schema-inferring read runs one job to open a parquet footer. A
+    table written without a record (before this layout, or by a writer
+    that crashed before the record) is read by inference."""
     import json as _json
 
     from pyspark.sql.types import StructType
 
     rec = f"{table_dir.rstrip('/')}/{SCHEMA_FILE}"
     if not fs_exists(spark, rec):
-        return spark.read.parquet(table_dir)
-    schema = StructType.fromJson(_json.loads(fs_read_text(spark, rec)))
-    return spark.read.schema(schema).parquet(table_dir)
+        return spark.read.parquet(table_dir).schema
+    return StructType.fromJson(_json.loads(fs_read_text(spark, rec)))
+
+
+def read_table(spark, table_dir: str):
+    """The stored table at ``table_dir``, read with ``table_schema``."""
+    return spark.read.schema(table_schema(spark, table_dir)).parquet(
+        table_dir)
 
 
 def swap_tables(spark, path: str, stage: str, tables: list[str]) -> None:
@@ -1089,22 +1147,97 @@ def read_tombstones(spark, path: str, id_col: str):
     return df.select(F.col(id_col)).distinct()
 
 
-def generation_sets(rows) -> dict:
-    """The commit-log invariants shared by every generation-manifest
-    index (Bm25Index v3, the MinHash index): which generations are
-    COMMITTED (served by readers), the max generation ever claimed
-    (the next add allocates max+1, so a crashed attempt's number is
-    never reused), and the incomplete set (intent rows without a
-    commit — orphans a compact purges). One implementation so the
-    two families' commit semantics cannot drift apart."""
-    committed = sorted({int(r["generation"]) for r in rows
-                        if r["committed"]})
-    all_gens = {int(r["generation"]) for r in rows}
+def append_manifest(spark, path: str, schema: str, values: dict,
+                    generation: int, committed: bool,
+                    mode: str = "append") -> None:
+    """Append one row to the generation log ``{path}/params``: the
+    columns of the family's declared ``schema`` filled by name from
+    ``values`` (its config and that generation's stats), then
+    ``generation`` and ``committed``. ``mode="overwrite"`` starts a new
+    log (a build, save or compact rewrite). Raises ``KeyError`` when
+    ``values`` lacks a column of ``schema``, so a bad commit row is never
+    written with a NULL in it."""
+    row = {**values, "generation": int(generation),
+           "committed": bool(committed)}
+    df = spark.createDataFrame([row], schema)
+    missing = [c for c in df.columns if c not in row]
+    if missing:
+        raise KeyError(f"generation log row for {path} lacks {missing}")
+    df.coalesce(1).write.mode(mode).parquet(f"{path}/params")
+
+
+def read_generation_log(spark, path: str, schema: str,
+                        config: tuple) -> dict:
+    """The generation log of the index at ``path``, read with the
+    family's declared ``schema`` (one collect, no inference job).
+    Returns the ``config`` columns' values, which must be the same in
+    every row, the ``committed_rows`` (whose stats the family sums),
+    the ``committed`` generations, the ``max_generation`` ever claimed
+    (a mutation takes max+1, so a crashed attempt's number is never
+    reused) and the ``incomplete_generations`` (intents without a
+    commit). A row whose generation reads null is the pre-r11
+    single-row log: one committed generation 0. Raises ``ValueError``
+    when the log is missing or its config differs between rows."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        rows = spark.read.schema(schema).parquet(f"{path}/params").collect()
+    except AnalysisException as e:
+        if not is_missing_path(e):
+            raise
+        raise ValueError(
+            f"no index manifest at {path}/params — an index built by "
+            "this package is required"
+        ) from e
+    fixed = {tuple(r[c] for c in config) for r in rows}
+    if len(fixed) != 1:
+        raise ValueError(
+            f"index at {path} has inconsistent generation manifests "
+            f"({sorted(fixed, key=str)}) — the index is corrupt; rebuild it"
+        )
+    done = [r for r in rows if r["committed"] or r["generation"] is None]
+    committed = sorted({int(r["generation"] or 0) for r in done})
+    claimed = {int(r["generation"] or 0) for r in rows}
     return {
+        **dict(zip(config, next(iter(fixed)))),
+        "committed_rows": done,
         "committed": committed,
-        "max_generation": max(all_gens),
-        "incomplete_generations": sorted(all_gens - set(committed)),
+        "max_generation": max(claimed),
+        "incomplete_generations": sorted(claimed - set(committed)),
     }
+
+
+def read_committed(spark, path: str, table: str, committed):
+    """The table ``{path}/{table}`` as readers serve it: the rows of the
+    ``committed`` generations, without the ``gen`` column, read through
+    ``read_table``. Orphan rows of a crashed mutation are dropped by
+    the ``gen`` filter without reading their data (partition pruning
+    where ``gen`` is a partition column, row-group statistics
+    elsewhere). A table without ``gen`` predates generations and is
+    served whole."""
+    from pyspark.sql import functions as F
+
+    df = read_table(spark, f"{path}/{table}")
+    if "gen" not in df.columns:
+        return df
+    return df.where(F.col("gen").isin([int(g) for g in committed])
+                    ).drop("gen")
+
+
+def member_id(spark, table_dir: str, payload: str) -> tuple:
+    """``(name, DataType)`` of the stored id of a members table (one row
+    per indexed document): its one column besides ``payload`` and
+    ``gen``, taken from the schema the table records, so a ``delete``
+    finds it without loading the index or running a job."""
+    ids = [f for f in table_schema(spark, table_dir).fields
+           if f.name not in (payload, "gen")]
+    if len(ids) != 1:
+        raise ValueError(
+            f"cannot determine the id column of the index table "
+            f"{table_dir}: it has columns {[f.name for f in ids]} "
+            f"besides {payload!r} — the index is corrupt"
+        )
+    return ids[0].name, ids[0].dataType
 
 
 @contextmanager

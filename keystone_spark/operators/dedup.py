@@ -1177,73 +1177,32 @@ MINHASH_TABLE = "bands"
 MINHASH_PART_COL = "band"
 MINHASH_MEMBERS = "sigs"
 
-_MINHASH_PARAMS_SCHEMA = (
+# the generation log (``fsutil.read_generation_log``): its declared
+# schema and the config columns every row must agree on; a bucket_cap
+# of -1 means uncapped
+MINHASH_PARAMS_SCHEMA = (
     "n_hashes long, n_bands long, shingle_k long, seed long, "
     "bucket_cap long, store_texts boolean, generation long, "
     "committed boolean"
 )
+MINHASH_CONFIG = ("n_hashes", "n_bands", "shingle_k", "seed", "bucket_cap",
+                  "store_texts")
 
 
-def _minhash_append_manifest(spark, path: str, cfg: dict, generation: int,
-                             committed: bool, mode: str = "append") -> None:
-    spark.createDataFrame(
-        [(int(cfg["n_hashes"]), int(cfg["n_bands"]), int(cfg["shingle_k"]),
-          int(cfg["seed"]),
-          -1 if cfg["bucket_cap"] is None else int(cfg["bucket_cap"]),
-          bool(cfg["store_texts"]), int(generation), bool(committed))],
-        _MINHASH_PARAMS_SCHEMA,
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/params")
-
-
-def _minhash_manifest(spark, path: str) -> dict:
-    """Read + validate the generation manifest: returns the (single)
-    config plus the committed-generation set, max generation, and the
-    incomplete (crashed-add) generations. Raises on a missing manifest
-    or a pre-r11 layout (no generation column) — mutations need the
-    crash-safe layout; rebuild with build_minhash_index."""
-    from pyspark.errors import AnalysisException
-
+def minhash_log(spark, path: str) -> dict:
+    """The generation log of the MinHash index at ``path``, refused when
+    a compact swap was interrupted or the index predates the r11
+    generation layout (mutations need the crash-safe layout; rebuild
+    with build_minhash_index)."""
     fsutil.assert_no_interrupted_swap(spark, path)
-    try:
-        rows = spark.read.parquet(f"{path}/params").collect()
-    except AnalysisException as e:
-        if not fsutil.is_missing_path(e):
-            raise
-        raise ValueError(
-            f"no index manifest at {path}/params — a "
-            "build_minhash_index-created index is required"
-        ) from e
-    if "generation" not in rows[0].__fields__:
+    log = fsutil.read_generation_log(spark, path, MINHASH_PARAMS_SCHEMA,
+                                     MINHASH_CONFIG)
+    if log["committed_rows"][0]["generation"] is None:
         raise ValueError(
             f"index at {path} predates the r11 crash-safe generation "
             "layout — rebuild it with build_minhash_index"
         )
-    fixed = {(int(r["n_hashes"]), int(r["n_bands"]), int(r["shingle_k"]),
-              int(r["seed"]), int(r["bucket_cap"]),
-              bool(r["store_texts"])) for r in rows}
-    if len(fixed) != 1:
-        raise ValueError(
-            f"MinHash index at {path} has inconsistent generation "
-            f"manifests ({sorted(fixed)}) — the index is corrupt; "
-            "rebuild it"
-        )
-    nh, nb, sk, seed, cap, st = next(iter(fixed))
-    return {
-        "n_hashes": nh, "n_bands": nb, "shingle_k": sk, "seed": seed,
-        "bucket_cap": None if cap == -1 else cap, "store_texts": st,
-        **fsutil.generation_sets(rows),
-    }
-
-
-def _minhash_committed(spark, path: str, table: str, committed) -> DataFrame:
-    """Read one index table serving COMMITTED generations only — orphan
-    rows from a crashed add are dropped by the ``gen`` filter
-    (partition pruning on bands, file-level row-group stats on the
-    rest) without reading their data."""
-    df = spark.read.parquet(f"{path}/{table}")
-    return df.where(
-        F.col("gen").isin([int(g) for g in committed])
-    ).drop("gen")
+    return log
 
 
 def build_minhash_index(
@@ -1292,14 +1251,9 @@ def build_minhash_index(
     unbounded external (id, text) history that grows with every batch
     row.
 
-    Crash safety (VERDICT r10 #1): every table row is tagged with the
-    writing generation and readers serve only generations whose
-    manifest row is committed; the build writes its data tables first
-    and the committed generation-0 manifest LAST, and every
-    ``add_to_minhash_index`` is an intent-row / data / commit-row
-    two-phase append — an interrupted mutation is invisible, a blind
-    retry cannot double-index, and ``compact_minhash_index`` purges
-    the orphan rows."""
+    Crash safety: the index runs the generation log of ``fsutil`` (see
+    its module docstring). The build writes its data tables first and
+    the committed generation-0 manifest row LAST."""
     # a build is a brand-new index: control state from any previous
     # index at this path (tombstones, compact stage, locks, epoch
     # fence) must not leak into it — see clear_index_control_state
@@ -1323,36 +1277,29 @@ def build_minhash_index(
     banded = minhash_banded(sigs, id_col, n_bands, n_hashes)
     kept = _drop_oversized_buckets(banded, ["band", "bucket"], bucket_cap)
     gen0 = F.lit(0)
-    kept.withColumn("gen", gen0).write.mode("overwrite").partitionBy(
-        MINHASH_PART_COL, "gen"
-    ).parquet(f"{path}/{MINHASH_TABLE}")
-    sigs.withColumn("gen", gen0).write.mode("overwrite").parquet(
-        f"{path}/{MINHASH_MEMBERS}"
-    )
-    crep.select(
-        F.col("__ck").alias("ck"), F.col(id_col)
-    ).withColumn("gen", gen0).write.mode("overwrite").parquet(
-        f"{path}/content"
-    )
+    fsutil.write_table(kept.withColumn("gen", gen0),
+                       f"{path}/{MINHASH_TABLE}", MINHASH_PART_COL, "gen")
+    fsutil.write_table(sigs.withColumn("gen", gen0),
+                       f"{path}/{MINHASH_MEMBERS}")
+    fsutil.write_table(crep.select(F.col("__ck").alias("ck"), F.col(id_col))
+                       .withColumn("gen", gen0), f"{path}/content")
     if store_texts:
-        corpus.select(F.col(id_col), F.col(text_col)).withColumn(
-            "gen", gen0
-        ).write.mode("overwrite").parquet(f"{path}/texts")
+        fsutil.write_table(corpus.select(F.col(id_col), F.col(text_col))
+                           .withColumn("gen", gen0), f"{path}/texts")
     n_sigs = sigs.count()
     release(own)
-    spark = corpus.sparkSession
-    # manifest row LAST (the build's commit point) — one-row parquet,
-    # FS-agnostic (rides the same Hadoop filesystem as the index)
-    cfg = {"n_hashes": n_hashes, "n_bands": n_bands,
-           "shingle_k": shingle_k, "seed": seed, "bucket_cap": bucket_cap,
-           "store_texts": store_texts}
-    _minhash_append_manifest(spark, path, cfg, 0, committed=True,
-                             mode="overwrite")
+    # manifest row LAST (the build's commit point)
+    cfg = {"n_hashes": int(n_hashes), "n_bands": int(n_bands),
+           "shingle_k": int(shingle_k), "seed": int(seed),
+           "bucket_cap": -1 if bucket_cap is None else int(bucket_cap),
+           "store_texts": bool(store_texts)}
+    fsutil.append_manifest(spark, path, MINHASH_PARAMS_SCHEMA, cfg, 0, True,
+                           mode="overwrite")
     # manifest-carried occupancy (r14): a later add_to_minhash_index
     # stales this via the file-count fence and status falls back to
     # the band scan until the next compact re-syncs it
-    fsutil.refresh_index_stats(spark, path, MINHASH_TABLE, MINHASH_PART_COL)
-    n_bands_rows = spark.read.parquet(f"{path}/{MINHASH_TABLE}").count()
+    n_bands_rows = sum(fsutil.refresh_index_stats(
+        spark, path, MINHASH_TABLE, MINHASH_PART_COL).values())
     return {
         "corpus_docs": n_sigs,
         "band_rows": n_bands_rows,
@@ -1408,14 +1355,10 @@ def add_to_minhash_index(
     arrives AFTER the family was first indexed keeps the earlier,
     larger-id representative).
 
-    Crash safety (VERDICT r10 #1): the add runs under
-    ``fsutil.locked_mutation`` and commits through
-    ``fsutil.commit_generation`` — an INTENT manifest row claims the
-    generation number, the data appends carry that generation tag, and
-    the COMMIT manifest row lands LAST. A crash in between leaves rows
-    no reader serves; a blind re-run allocates the next generation and
-    indexes the batch exactly once (its content anti-join sees only
-    committed rows, so nothing the crashed attempt landed blocks it).
+    Crash safety: the add runs under ``fsutil.locked_mutation`` and
+    commits one generation of ``fsutil``'s generation log, so a crash
+    leaves rows no reader serves and a blind re-run indexes the batch
+    exactly once (its content anti-join sees only committed rows).
 
     Returns {batch_docs, new_content, band_rows_added,
     band_rows_capped, generation}."""
@@ -1428,13 +1371,13 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
                            id_col: str, text_col: str) -> dict:
     from pyspark.errors import AnalysisException
 
-    cfg = _minhash_manifest(spark, path)
+    cfg = minhash_log(spark, path)
     n_hashes, n_bands = cfg["n_hashes"], cfg["n_bands"]
     shingle_k, seed = cfg["shingle_k"], cfg["seed"]
-    bucket_cap = cfg["bucket_cap"]
+    bucket_cap = cfg["bucket_cap"]  # -1: uncapped
     committed = cfg["committed"]
     try:
-        content = _minhash_committed(spark, path, "content", committed)
+        content = fsutil.read_committed(spark, path, "content", committed)
     except AnalysisException as e:
         if not fsutil.is_missing_path(e):
             raise
@@ -1491,10 +1434,10 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
         minhash_banded(sigs_new, id_col, n_bands, n_hashes), caches
     )
     n_banded = bands_new.count()
-    if bucket_cap is not None:
+    if bucket_cap != -1:
         touched = bands_new.select("band", "bucket").distinct()
-        stored_bands = _minhash_committed(spark, path, MINHASH_TABLE,
-                                          committed)
+        stored_bands = fsutil.read_committed(spark, path, MINHASH_TABLE,
+                                             committed)
         if tomb is not None:
             # occupancy counts LIVE members only: tombstoned docs'
             # band rows are dead weight a compact will drop — counting
@@ -1530,25 +1473,23 @@ def _add_to_minhash_locked(spark, path: str, fence, batch: DataFrame,
 
     def write_data(gen):
         genl = F.lit(gen)
-        kept.withColumn("gen", genl).write.mode("append").partitionBy(
-            MINHASH_PART_COL, "gen"
-        ).parquet(f"{path}/{MINHASH_TABLE}")
-        sigs_new.withColumn("gen", genl).write.mode("append").parquet(
-            f"{path}/{MINHASH_MEMBERS}"
-        )
-        new.select("ck", id_col).withColumn("gen", genl).write.mode(
-            "append"
-        ).parquet(f"{path}/content")
+        fsutil.append_table(kept.withColumn("gen", genl),
+                            f"{path}/{MINHASH_TABLE}", MINHASH_PART_COL,
+                            "gen")
+        fsutil.append_table(sigs_new.withColumn("gen", genl),
+                            f"{path}/{MINHASH_MEMBERS}")
+        fsutil.append_table(new.select("ck", id_col).withColumn("gen", genl),
+                            f"{path}/content")
         if cfg["store_texts"]:
-            new_reps.select(F.col(id_col), F.col(text_col)).withColumn(
-                "gen", genl
-            ).write.mode("append").parquet(f"{path}/texts")
+            fsutil.append_table(
+                new_reps.select(F.col(id_col), F.col(text_col))
+                .withColumn("gen", genl), f"{path}/texts")
 
     try:
         gen = fsutil.commit_generation(
             fence, cfg["max_generation"],
-            lambda g, done: _minhash_append_manifest(
-                spark, path, cfg, g, committed=done),
+            lambda g, done: fsutil.append_manifest(
+                spark, path, MINHASH_PARAMS_SCHEMA, cfg, g, done),
             write_data)
     finally:
         release(caches)
@@ -1581,27 +1522,21 @@ def delete_from_minhash_index(
     recovery works immediately, before any compact). ``ids`` is a list
     or a one-column DataFrame; unknown ids are harmless no-op rows.
     The tombstone column takes the INDEX's stored id NAME AND TYPE
-    (from the sigs schema — ADVICE r11 #3: trusting the ``id_col``
-    argument made a default-arg CLI delete against a custom-id index
-    fail with a raw KeyError; the stored column is the only one the
-    anti-joins can ever match, so it is authoritative and the argument
-    is validated against it)."""
+    (from the sigs table's recorded schema, ``fsutil.member_id`` —
+    ADVICE r11 #3: trusting the ``id_col`` argument made a default-arg
+    CLI delete against a custom-id index fail with a raw KeyError; the
+    stored column is the only one the anti-joins can ever match, so it
+    is authoritative and the argument is validated against it)."""
     def stored_id(snap):
-        schema = spark.read.parquet(f"{snap}/{MINHASH_MEMBERS}").schema
-        stored = [f for f in schema.fields if f.name not in ("sig", "gen")]
-        if len(stored) != 1:
-            raise ValueError(
-                f"cannot determine the id column of the index at {snap}: "
-                f"sigs schema has non-sig columns "
-                f"{[f.name for f in stored]} — the index is corrupt"
-            )
-        if id_col != "doc_id" and id_col != stored[0].name:
+        name, dtype = fsutil.member_id(
+            spark, f"{snap}/{MINHASH_MEMBERS}", "sig")
+        if id_col != "doc_id" and id_col != name:
             raise ValueError(
                 f"id_col={id_col!r} does not match the index's stored id "
-                f"column {stored[0].name!r} — tombstones are keyed by the "
+                f"column {name!r} — tombstones are keyed by the "
                 "stored column; omit id_col to use it"
             )
-        return stored[0].name, stored[0].dataType
+        return name, dtype
 
     return fsutil.delete_ids(spark, path, ids, stored_id)
 
@@ -1625,12 +1560,12 @@ def compact_minhash_index(spark, path: str, dest: str | None = None
     ``orphan_generations_purged``."""
 
     def rewrite(snap, out):
-        cfg = _minhash_manifest(spark, snap)
+        cfg = minhash_log(spark, snap)
         committed = cfg["committed"]
         tables = [MINHASH_TABLE, MINHASH_MEMBERS, "content"]
         if cfg["store_texts"] and fsutil.fs_exists(spark, f"{snap}/texts"):
             tables.append("texts")
-        live = {t: _minhash_committed(spark, snap, t, committed)
+        live = {t: fsutil.read_committed(spark, snap, t, committed)
                 for t in tables}
         id_col = [c for c in live[MINHASH_MEMBERS].columns if c != "sig"][0]
         tomb = fsutil.read_tombstones(spark, snap, id_col)
@@ -1640,22 +1575,18 @@ def compact_minhash_index(spark, path: str, dest: str | None = None
             if tomb is not None:  # purge point for delete tombstones
                 df = df.join(F.broadcast(tomb), id_col, "left_anti")
             if t == MINHASH_TABLE:
-                (
+                fsutil.write_table(
                     df.repartition(F.col(MINHASH_PART_COL))
                     .sortWithinPartitions(MINHASH_PART_COL, "bucket")
-                    .withColumn("gen", gen0)
-                    .write.mode("overwrite").partitionBy(
-                        MINHASH_PART_COL, "gen")
-                    .parquet(f"{out}/{t}")
-                )
+                    .withColumn("gen", gen0),
+                    f"{out}/{t}", MINHASH_PART_COL, "gen")
             else:
-                df.repartition(n).withColumn("gen", gen0).write.mode(
-                    "overwrite"
-                ).parquet(f"{out}/{t}")
+                fsutil.write_table(df.repartition(n).withColumn("gen", gen0),
+                                   f"{out}/{t}")
         # single committed generation-0 manifest (the compact's commit
         # row)
-        _minhash_append_manifest(spark, out, cfg, 0, committed=True,
-                                 mode="overwrite")
+        fsutil.append_manifest(spark, out, MINHASH_PARAMS_SCHEMA, cfg, 0,
+                               True, mode="overwrite")
         return (tables + ["params"],
                 {"orphan_generations_purged": cfg["incomplete_generations"]})
 
@@ -1835,13 +1766,11 @@ def match_minhash_index(
     the index's ``params`` manifest — a mismatch silently yields empty or
     wrong matches (different bucket keys; unequal signature lengths null
     out the estimate filter), so it raises instead (ADVICE r7). A
-    corrupt/truncated/unreadable/MISSING manifest also raises (ADVICE
-    r8, tightened in r11): the manifest is now the index's COMMIT LOG —
-    only generations with a committed manifest row are served (crash
-    safety, VERDICT r10 #1) — so data without a readable manifest is an
-    interrupted/corrupt index, not a validable one."""
+    missing or unreadable manifest raises too: it is the index's
+    generation log (``fsutil``), so data without one is a corrupt
+    index."""
     path = fsutil.resolve_index_path(spark, path)  # follow _LATEST
-    cfg = _minhash_manifest(spark, path)
+    cfg = minhash_log(spark, path)
     given = {"n_hashes": n_hashes, "n_bands": n_bands,
              "shingle_k": shingle_k, "seed": seed}
     bad = {k: (v, cfg[k]) for k, v in given.items()
@@ -1854,10 +1783,10 @@ def match_minhash_index(
                         for k, (g, s) in sorted(bad.items()))
         )
     committed = cfg["committed"]
-    bands_c = _minhash_committed(
+    bands_c = fsutil.read_committed(
         spark, path, MINHASH_TABLE, committed
     ).select(id_col, F.col("band").cast("int").alias("band"), "bucket")
-    sigs_c = _minhash_committed(spark, path, MINHASH_MEMBERS, committed)
+    sigs_c = fsutil.read_committed(spark, path, MINHASH_MEMBERS, committed)
     tomb = fsutil.read_tombstones(spark, path, id_col)
     if tomb is not None:
         # tombstoned docs stop matching IMMEDIATELY (no candidate can

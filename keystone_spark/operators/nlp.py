@@ -560,25 +560,14 @@ class Bm25Index:
       (they leave no postings, so the old skip set replayed them and
       the old compact could not subtract them from N), and compact
       derives exact purge accounting from it;
-    - ``{path}/params``: rows carrying the immutable config (version,
-      k1, b, n_term_buckets, id_col — validated identical across
-      generations at load), a ``generation`` number, a ``committed``
-      flag, and — on committed rows — that generation's
-      (n_docs, sum_dl) deltas, summed at load.
+    - ``{path}/params``: the generation log (``PARAMS_SCHEMA``): the
+      config columns ``CONFIG``, identical in every row, and each
+      committed generation's (n_docs, sum_dl) deltas, summed at load.
 
-    Crash safety (VERDICT r10 #1): an ``add`` is three separate
-    parquet appends, so a crash mid-add used to leave a silently
-    double-countable partial generation. v3 makes mutations a
-    two-phase commit: ``add`` first appends an INTENT manifest row
-    (committed=false — durably claiming the generation number), then
-    the data appends tagged with that generation, then the COMMIT row
-    (committed=true, carrying the stats deltas) LAST. ``load`` serves
-    only generations with a commit row — partition pruning on ``gen``
-    drops orphan data without reading it — so an interrupted add is
-    invisible, a RETRY allocates a fresh generation (the intent row
-    advanced the max) and cannot double-count, and ``compact``
-    physically purges orphans. Interrupted adds are therefore
-    self-healing and blind-retryable.
+    Crash safety: build, add, load and compact run the generation log
+    of ``fsutil`` (see its module docstring), so an interrupted add is
+    invisible, a blind retry cannot double-count and ``compact``
+    purges the orphan rows.
 
     Scale shape: a query's terms map to a handful of tbuckets, and
     ``search`` pushes that bucket set as a partition filter on BOTH
@@ -676,11 +665,12 @@ class Bm25Index:
         }
         return cls(postings, df_t, params, docs=docs_tbl)
 
-    _PARAMS_SCHEMA = (
+    PARAMS_SCHEMA = (
         "version long, k1 double, b double, n_docs long, sum_dl long, "
         "n_term_buckets long, id_col string, generation long, "
         "committed boolean"
     )
+    CONFIG = ("version", "k1", "b", "n_term_buckets", "id_col")
 
     def _write_data(self, path: str, mode: str, generation: int) -> None:
         # TERM-ORDERED postings within every file (the Lucene layout,
@@ -701,20 +691,21 @@ class Bm25Index:
         # (tbucket, gen) dir — compact already normalizes to this
         # layout; build/add now write it directly. Search-side pruning
         # reads dirs, not file counts, so results are unchanged.
-        (
-            self.postings.withColumn("gen", F.lit(int(generation)))
+        write = fsutil.write_table if mode == "overwrite" \
+            else fsutil.append_table
+        gen = F.lit(int(generation))
+        write(
+            self.postings.withColumn("gen", gen)
             .repartition(F.col("tbucket"))
-            .sortWithinPartitions("tbucket", "term")
-            .write.mode(mode).partitionBy("tbucket", "gen")
-            .parquet(f"{path}/{self.TABLE}")
+            .sortWithinPartitions("tbucket", "term"),
+            f"{path}/{self.TABLE}", "tbucket", "gen",
         )
-        (
+        write(
             self.df_t.select("term", "tbucket", "df")
-            .withColumn("gen", F.lit(int(generation)))
+            .withColumn("gen", gen)
             .repartition(F.col("tbucket"))
-            .sortWithinPartitions("tbucket", "term")
-            .write.mode(mode).partitionBy("tbucket", "gen")
-            .parquet(f"{path}/df")
+            .sortWithinPartitions("tbucket", "term"),
+            f"{path}/df", "tbucket", "gen",
         )
         # v4 per-doc membership table (VERDICT r11 #2): one narrow row
         # per document — the idempotent skip set anti-joins THIS (cost
@@ -722,22 +713,8 @@ class Bm25Index:
         # stay visible to it, and compact's purge subtracts exact
         # (n_docs, sum_dl) from it. gen partitioning gives the same
         # committed-only pruning as the other tables.
-        (
-            self.docs.withColumn("gen", F.lit(int(generation)))
-            .write.mode(mode).partitionBy("gen")
-            .parquet(f"{path}/{self.MEMBERS}")
-        )
-
-    @classmethod
-    def _append_manifest(cls, spark, path: str, p: dict, generation: int,
-                         n_docs: int, sum_dl: int, committed: bool,
-                         mode: str = "append") -> None:
-        spark.createDataFrame(
-            [(int(p["version"]), float(p["k1"]), float(p["b"]),
-              int(n_docs), int(sum_dl), int(p["n_term_buckets"]),
-              p["id_col"], int(generation), bool(committed))],
-            cls._PARAMS_SCHEMA,
-        ).coalesce(1).write.mode(mode).parquet(f"{path}/params")
+        write(self.docs.withColumn("gen", gen), f"{path}/{self.MEMBERS}",
+              "gen")
 
     def save(self, path: str) -> None:
         """Write generation 0 (overwrite): data tables first, the
@@ -754,11 +731,8 @@ class Bm25Index:
         spark = self.postings.sparkSession
         fsutil.clear_index_control_state(spark, path)
         self._write_data(path, "overwrite", 0)
-        self._append_manifest(
-            spark, path, self.params, 0,
-            self.params["n_docs"], self.params["sum_dl"],
-            committed=True, mode="overwrite",
-        )
+        fsutil.append_manifest(spark, path, self.PARAMS_SCHEMA, self.params,
+                               0, True, mode="overwrite")
         # manifest-carried occupancy (r14): index-status reads this
         # instead of scanning postings; any later generation append
         # stales it via the file-count fence and status falls back to
@@ -767,46 +741,31 @@ class Bm25Index:
         self.path = path
 
     @classmethod
+    def _refuse_format(cls, path: str, found: str) -> None:
+        raise ValueError(
+            f"Bm25Index at {path} is {found}; this code reads "
+            f"v{cls.FORMAT_VERSION} (per-doc membership table, r12) — "
+            "rebuild the index with Bm25Index.build().save()")
+
+    @classmethod
     def load(cls, spark, path: str) -> "Bm25Index":
-        """Serve the COMMITTED generations only. Data rows belonging to
-        a generation without a commit manifest row (an interrupted
-        ``add``) are excluded by partition pruning on ``gen`` — no
-        orphan byte is read, search equals the pre-crash index, and a
-        retried add cannot double-count (the orphan's intent row keeps
-        its generation number claimed). The orphan set is surfaced in
+        """Serve the COMMITTED generations only (``fsutil``'s
+        generation log). The orphan set is surfaced in
         ``params["incomplete_generations"]`` and physically purged at
-        the next ``compact``."""
+        the next ``compact``. One Spark job: the collect of the log."""
         path = fsutil.resolve_index_path(spark, path)  # follow _LATEST
         fsutil.assert_no_interrupted_swap(spark, path)
-        gens = spark.read.parquet(f"{path}/params").collect()
-        fixed = {(int(r["version"]), float(r["k1"]), float(r["b"]),
-                  int(r["n_term_buckets"]), r["id_col"]) for r in gens}
-        if len(fixed) != 1:
-            raise ValueError(
-                f"Bm25Index at {path} has inconsistent generation "
-                f"manifests ({sorted(fixed)}) — the index is corrupt; "
-                "rebuild it"
-            )
-        version, k1, b, nb, id_col = next(iter(fixed))
-        if version != cls.FORMAT_VERSION:
-            raise ValueError(
-                f"Bm25Index at {path} is format v{version}; this code "
-                f"reads v{cls.FORMAT_VERSION} (per-doc membership "
-                "table, r12) — rebuild the index with "
-                "Bm25Index.build().save()"
-            )
-        sets = fsutil.generation_sets(gens)
-        params = {
-            "version": version, "k1": k1, "b": b,
-            "n_docs": sum(int(r["n_docs"]) for r in gens if r["committed"]),
-            "sum_dl": sum(int(r["sum_dl"]) for r in gens if r["committed"]),
-            "n_term_buckets": nb, "id_col": id_col,
-            **sets,
-        }
-        keep = F.col("gen").isin([int(g) for g in sets["committed"]])
+        log = fsutil.read_generation_log(spark, path, cls.PARAMS_SCHEMA,
+                                         cls.CONFIG)
+        if log["version"] != cls.FORMAT_VERSION:
+            cls._refuse_format(path, f"format v{log['version']}")
+        rows = log.pop("committed_rows")
+        params = {**log, "n_docs": sum(r["n_docs"] for r in rows),
+                  "sum_dl": sum(r["sum_dl"] for r in rows)}
 
         def committed(table):
-            return spark.read.parquet(f"{path}/{table}").where(keep).drop("gen")
+            return fsutil.read_committed(spark, path, table,
+                                         log["committed"])
 
         return cls(committed(cls.TABLE), committed("df"), params, path=path,
                    docs=committed(cls.MEMBERS))
@@ -848,18 +807,11 @@ class Bm25Index:
         so a retried CRASHED add still lands — its orphan rows are
         never in the committed set.
 
-        Crash safety (VERDICT r10 #1): the mutation is the two-phase
-        commit of ``fsutil.commit_generation`` — INTENT manifest row
-        first (durably claims the generation number), data appends
-        tagged with the generation, COMMIT manifest row (carrying the
-        stats deltas) LAST. A crash anywhere in between leaves an
-        uncommitted generation that ``load`` never serves (search
-        equals the pre-add index), and a blind RE-RUN of the batch is
-        safe: it allocates the NEXT generation because the intent row
-        advanced the max, so nothing the first attempt landed is ever
-        counted. Orphans are purged
-        at the next ``compact``. Both properties are pinned by
-        crash-simulation tests.
+        Crash safety: the add commits one generation of ``fsutil``'s
+        generation log (``commit_generation``; the commit row carries
+        the batch's (n_docs, sum_dl)), so a crash leaves nothing
+        ``load`` serves and a blind re-run counts the batch once.
+        Both properties are pinned by crash-simulation tests.
 
         Each add commits one small parquet file set per touched bucket;
         compact periodically (class docstring). Returns an
@@ -907,9 +859,11 @@ class Bm25Index:
             def write_manifest(gen, committed):
                 # the intent row carries zero deltas, the commit row
                 # the batch's (n_docs, sum_dl)
-                cls._append_manifest(
-                    spark, path, p, gen, n_docs if committed else 0,
-                    sum_dl if committed else 0, committed=committed)
+                fsutil.append_manifest(
+                    spark, path, cls.PARAMS_SCHEMA,
+                    {**p, "n_docs": n_docs if committed else 0,
+                     "sum_dl": sum_dl if committed else 0},
+                    gen, committed)
 
             def write_data(gen):
                 batch._write_data(path, "append", gen)
@@ -950,13 +904,17 @@ class Bm25Index:
         accumulate until compact; search pays one anti-join against
         the set per query (tiny between sensible compaction
         cadences). The tombstone column takes the index's stored id
-        type (from the postings schema), so string-id indexes delete
-        correctly too."""
-
+        name and type from the recorded schema of the ``docs`` table
+        (``fsutil.member_id``; no index load), so string-id indexes
+        delete correctly too. An index killed mid-swap, or one of
+        format v3 or older (no ``docs`` table), is refused as ``load``
+        refuses it."""
         def stored_id(snap):
-            idx = cls.load(spark, snap)
-            id_col = idx.params["id_col"]
-            return id_col, idx.postings.schema[id_col].dataType
+            fsutil.assert_no_interrupted_swap(spark, snap)
+            members = f"{snap}/{cls.MEMBERS}"
+            if not fsutil.fs_exists(spark, members):
+                cls._refuse_format(snap, "format v3 or older")
+            return fsutil.member_id(spark, members, "dl")
 
         return fsutil.delete_ids(spark, path, ids, stored_id)
 
@@ -1028,8 +986,10 @@ class Bm25Index:
                     spark.sparkContext.defaultParallelism),
             )
             merged._write_data(out, "overwrite", 0)
-            cls._append_manifest(spark, out, p, 0, n_docs, sum_dl,
-                                 committed=True, mode="overwrite")
+            fsutil.append_manifest(
+                spark, out, cls.PARAMS_SCHEMA,
+                {**p, "n_docs": n_docs, "sum_dl": sum_dl}, 0, True,
+                mode="overwrite")
             return ([cls.TABLE, "df", cls.MEMBERS, "params"],
                     {"orphan_generations_purged":
                      p["incomplete_generations"]})

@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import copy
 import json
-from functools import reduce
-from operator import or_
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -452,58 +450,6 @@ def ivf_topk(
              exclude_self=exclude_self)
 
 
-def _cast_batch_checked(batch: DataFrame, id_col: str, vec_col: str,
-                        stored) -> DataFrame:
-    """Schema-pin an append batch to the STORED table's column types,
-    refusing casts that nulled values out (ADVICE r13 #2): the engine
-    session runs with ``spark.sql.ansi.enabled=false`` (session.py),
-    so an un-castable batch — string ids into a long-id corpus — would
-    silently become NULL and be appended; null-id rows never match the
-    ``skip_existing_ids`` anti-join, so every at-least-once replay
-    would duplicate them. Pre-r13 the mismatch at least failed loudly
-    at the parquet merge; this keeps the r13 schema-pinning AND the
-    loud failure. Cost discipline: a batch whose column types ALREADY
-    match the stored schema (every well-typed streaming fold) is
-    returned untouched — no cast, no extra pass, and the add's
-    persist-once contract (VERDICT r10 #3, pinned by
-    test_vector_index_add_runs_kernel_once) holds. Only a genuinely
-    type-drifted batch pays one narrow validation count over its own
-    two columns before being cast (or refused).
-
-    ``stored`` is the stored table's StructType; columns absent from
-    it (IvfPqIndex stores codes, not raw vectors) are left as-is —
-    the encode kernel consumes them as float64 and fails loudly on
-    garbage."""
-    checked = []
-    for c in (id_col, vec_col):
-        if c not in stored.fieldNames():
-            continue
-        t = stored[c].dataType
-        if batch.schema[c].dataType == t:
-            continue  # already the stored type: nothing to validate
-        batch = batch.withColumn(f"__cast_{c}", F.col(c).cast(t))
-        checked.append(c)
-    if not checked:
-        return batch
-    bad = batch.where(
-        reduce(or_, [F.col(c).isNotNull() & F.col(f"__cast_{c}").isNull()
-                     for c in checked])
-    ).count()
-    if bad:
-        raise ValueError(
-            f"append batch does not cast to the stored index schema: "
-            f"{bad} row(s) would have their "
-            f"{'/'.join(checked)} nulled by the cast (non-ANSI mode "
-            "turns an un-castable value into NULL instead of an "
-            "error) — fix the batch's column types; nothing was "
-            "appended"
-        )
-    for c in checked:
-        batch = batch.withColumn(c, F.col(f"__cast_{c}")) \
-                     .drop(f"__cast_{c}")
-    return batch
-
-
 def _apply_search_predicate(subset: DataFrame, predicate, metadata,
                             id_col: str) -> DataFrame:
     """Push a metadata predicate into an index scan as a left-semi join
@@ -657,8 +603,7 @@ class _IvfFamily:
             # into an array<float> table) writes parquet files the
             # reader cannot merge — later scans fail (or flake by
             # file-listing order) with a physical-type mismatch.
-            batch = _cast_batch_checked(
-                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
+            batch = fsutil.cast_checked(batch, idx.indexed.schema)
             if skip_existing_ids:
                 known = idx.indexed.select(idx.id_col)
                 tomb = idx._load_tombstones(spark)
@@ -1380,6 +1325,7 @@ class Sq8Index:
     query: equality with the exact kernel at every tested sf)."""
 
     MODEL_FILE = "sq8.json"  # NOT model.json: that marker means ivfpq
+    TABLE = "codes"
 
     def __init__(self, mins, spans, indexed, id_col="vec_id",
                  vec_col="embedding", path=None):
@@ -1443,7 +1389,7 @@ class Sq8Index:
 
         spark = self.indexed.sparkSession
         clear_index_control_state(spark, path)
-        write_table(self.indexed, f"{path}/codes")
+        write_table(self.indexed, f"{path}/{self.TABLE}")
         fs_write_text(
             spark, f"{path}/{self.MODEL_FILE}",
             json.dumps({"mins": self.mins.tolist(),
@@ -1469,7 +1415,7 @@ class Sq8Index:
         meta = json.loads(fs_read_text(spark, f"{path}/{cls.MODEL_FILE}"))
         return cls(
             np.asarray(meta["mins"]), np.asarray(meta["spans"]),
-            read_table(spark, f"{path}/codes"),
+            read_table(spark, f"{path}/{cls.TABLE}"),
             meta["id_col"], meta["vec_col"], path=path,
         )
 

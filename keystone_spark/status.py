@@ -9,8 +9,9 @@ compact, retrain, or GC.
 
 Deliberately load()-free: ``load`` REFUSES an interrupted swap or a
 format mismatch, but diagnosis is exactly when those states must be
-REPORTED — so this reads the raw manifests/control files directly and
-never raises on a repairable index. Driver-side metadata reads plus
+REPORTED — so this reads the generation log (``fsutil``'s reader, which
+refuses neither) and the control files directly and never raises on a
+repairable index. Driver-side metadata reads plus
 at most three narrow Spark jobs (tombstone count, bm25/minhash
 membership count, and the occupancy histogram over the partition
 column — the occupancy one only as a FALLBACK since r14: commit paths
@@ -22,20 +23,19 @@ data table, which is what makes ``--if-occupancy-above`` cron-safe at
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from keystone_spark import fsutil
 from keystone_spark.operators import dedup
 from keystone_spark.operators.nlp import Bm25Index
-from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
+from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex, Sq8Index
 
 
 def _family(spark, snap: str) -> tuple[str, str, str, str]:
     """(family, membership table, partitioned data table, partition
     column) sniffed from the snapshot's own layout — each family has a
     unique marker file/table, so no --kind argument is needed."""
-    if fsutil.fs_exists(spark, f"{snap}/sq8.json"):
-        return "sq8", "codes", "codes", None  # flat index: no partition
+    if fsutil.fs_exists(spark, f"{snap}/{Sq8Index.MODEL_FILE}"):
+        # flat index: no partition column
+        return "sq8", Sq8Index.TABLE, Sq8Index.TABLE, None
     for family, cls in (("ivfpq", IvfPqIndex), ("ivf", IvfIndex)):
         if fsutil.fs_exists(spark, f"{snap}/{cls.MANIFEST}"):
             return family, cls.TABLE, cls.TABLE, cls.PART_COL
@@ -46,7 +46,7 @@ def _family(spark, snap: str) -> tuple[str, str, str, str]:
                 dedup.MINHASH_PART_COL)
     raise ValueError(
         f"no stored index recognized at {snap} — expected one of "
-        f"sq8.json (sq8), {IvfPqIndex.MANIFEST} (ivfpq), "
+        f"{Sq8Index.MODEL_FILE} (sq8), {IvfPqIndex.MANIFEST} (ivfpq), "
         f"{IvfIndex.MANIFEST} (ivf), "
         f"{Bm25Index.TABLE}/ (bm25), {dedup.MINHASH_TABLE}/ (minhash)"
     )
@@ -150,44 +150,25 @@ def index_status(spark, path: str) -> dict:
     else:
         out["tombstones"] = 0
 
-    # generation log (bm25/minhash): committed vs orphan; live count
+    # generation log (bm25/minhash): committed vs orphan; live count.
+    # A pre-r11 single-row log reads as one committed generation 0.
     if family in ("bm25", "minhash"):
-        rows = spark.read.parquet(f"{snap}/params").collect()
-        if "generation" in rows[0].__fields__:
-            sets = fsutil.generation_sets(rows)
-            out["committed_generations"] = len(sets["committed"])
-            out["orphan_generations"] = len(
-                sets["incomplete_generations"])
-            out["max_generation"] = sets["max_generation"]
-            committed = set(sets["committed"])
-        else:  # pre-r11 single-row manifest: one implicit generation
-            out["committed_generations"] = 1
-            out["orphan_generations"] = 0
-            out["max_generation"] = 0
-            committed = {0}
+        decl = ((Bm25Index.PARAMS_SCHEMA, Bm25Index.CONFIG)
+                if family == "bm25" else
+                (dedup.MINHASH_PARAMS_SCHEMA, dedup.MINHASH_CONFIG))
+        log = fsutil.read_generation_log(spark, snap, *decl)
+        out["committed_generations"] = len(log["committed"])
+        out["orphan_generations"] = len(log["incomplete_generations"])
+        out["max_generation"] = log["max_generation"]
         if family == "bm25":
-            out["format_version"] = int(rows[0]["version"])
-            # pre-r11 single-row manifests lack the committed column
-            # too (ADVICE r13 #3): the one implicit generation IS the
-            # committed state — mirror the committed={0} fallback
-            # above instead of raising on a legacy index (this module's
-            # contract is to REPORT repairable/legacy states, never
-            # refuse them)
-            if "committed" in rows[0].__fields__:
-                out["n_docs"] = sum(
-                    int(r["n_docs"]) for r in rows if r["committed"])
-            else:
-                out["n_docs"] = sum(int(r["n_docs"]) for r in rows)
-        elif family == "minhash":
+            out["format_version"] = log["version"]
+            out["n_docs"] = sum(r["n_docs"] for r in log["committed_rows"])
+        else:
             # 2 = r11 crash-safe generation layout, 1 = pre-r11
-            out["format_version"] = (
-                2 if "generation" in rows[0].__fields__ else 1)
-        if family == "minhash":
-            df = spark.read.parquet(f"{snap}/{member_table}")
-            if "gen" in df.columns:
-                df = df.where(F.col("gen").isin(
-                    [int(g) for g in committed]))
-            out["n_docs"] = df.count()
+            legacy = log["committed_rows"][0]["generation"] is None
+            out["format_version"] = 1 if legacy else 2
+            out["n_docs"] = fsutil.read_committed(
+                spark, snap, member_table, log["committed"]).count()
     else:  # vector families: single-write appends, no generation log
         out["format_version"] = 1
         out["committed_generations"] = None

@@ -838,21 +838,18 @@ def stream_neardup_against_index(
     smaller trigger interval tightens that window."""
     from pyspark.errors import AnalysisException
 
+    from keystone_spark import fsutil
     from keystone_spark.caches import release
     from keystone_spark.operators.dedup import (
-        _minhash_committed,
-        _minhash_manifest,
         add_to_minhash_index,
         compact_minhash_index,
         match_minhash_index,
+        minhash_log,
     )
 
-    from keystone_spark.fsutil import resolve_index_path, retry_contention
-
     spark = stream_docs.sparkSession
-    store_texts = bool(_minhash_manifest(
-        spark, resolve_index_path(spark, index_path)
-    )["store_texts"])
+    store_texts = minhash_log(
+        spark, fsutil.resolve_index_path(spark, index_path))["store_texts"]
     if update_index and not (store_texts or texts_path):
         raise ValueError(
             "update_index=True requires an index built with "
@@ -870,10 +867,9 @@ def stream_neardup_against_index(
             # manifest so texts committed by EARLIER folds are served.
             # Re-resolve per fold: a dest-compact between folds flips
             # the _LATEST pointer to a new snapshot dir.
-            rp = resolve_index_path(spark, index_path)
-            cfg = _minhash_manifest(spark, rp)
-            texts = _minhash_committed(
-                spark, rp, "texts", cfg["committed"]
+            rp = fsutil.resolve_index_path(spark, index_path)
+            texts = fsutil.read_committed(
+                spark, rp, "texts", minhash_log(spark, rp)["committed"]
             ).select(F.col(id_col), F.col(text_col))
         else:
             texts = corpus.select(F.col(id_col), F.col(text_col))
@@ -899,7 +895,7 @@ def stream_neardup_against_index(
             # concurrent compact/retrain makes the add lose its lock/
             # fence race — retry instead of killing the stream (safe:
             # the content-key anti-join makes the add idempotent)
-            retry_contention(
+            fsutil.retry_contention(
                 lambda: add_to_minhash_index(spark, index_path, bdf,
                                              id_col, text_col),
                 attempts=retry_attempts, base_sleep=retry_base_sleep,

@@ -1508,6 +1508,7 @@ def test_minhash_index_interrupted_add_is_invisible_and_retryable(
     orphan generation that match never serves; a blind retry of the
     same batch indexes it exactly once under the next generation; and
     compact physically purges the orphan rows."""
+    from keystone_spark import fsutil
     from keystone_spark.operators import dedup as dedup_mod
     from keystone_spark.operators.dedup import (
         add_to_minhash_index,
@@ -1538,20 +1539,21 @@ def test_minhash_index_interrupted_add_is_invisible_and_retryable(
 
     before = run()
 
-    real = dedup_mod._minhash_append_manifest
+    real = fsutil.append_manifest
 
-    def boom(spark_, path_, cfg, generation, committed, mode="append"):
+    def boom(spark_, path_, schema, cfg, generation, committed,
+             mode="append"):
         if committed and generation > 0:
             raise RuntimeError("simulated crash before commit row")
-        return real(spark_, path_, cfg, generation, committed, mode)
+        return real(spark_, path_, schema, cfg, generation, committed, mode)
 
-    monkeypatch.setattr(dedup_mod, "_minhash_append_manifest", boom)
+    monkeypatch.setattr(fsutil, "append_manifest", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         add_to_minhash_index(spark, path, hi)
-    monkeypatch.setattr(dedup_mod, "_minhash_append_manifest", real)
+    monkeypatch.setattr(fsutil, "append_manifest", real)
 
     # orphan generation is invisible: match equals the pre-add index
-    assert dedup_mod._minhash_manifest(spark, path)[
+    assert dedup_mod.minhash_log(spark, path)[
         "incomplete_generations"] == [1]
     assert run() == before
 
@@ -1572,7 +1574,7 @@ def test_minhash_index_interrupted_add_is_invisible_and_retryable(
     # compact purges the orphan rows; results unchanged
     stats = compact_minhash_index(spark, path)
     assert stats["orphan_generations_purged"] == [1]
-    assert dedup_mod._minhash_manifest(spark, path)[
+    assert dedup_mod.minhash_log(spark, path)[
         "incomplete_generations"] == []
     assert run() == want
 

@@ -706,20 +706,21 @@ def test_minhash_add_aborts_uncommitted_when_compact_starts_mid_add(
     path = str(tmp_path / "mh")
     ddp.build_minhash_index(corpus, path, n_hashes=64, n_bands=16)
 
-    real_manifest = ddp._minhash_append_manifest
+    real_manifest = fsutil.append_manifest
 
-    def manifest_then_lock(spark_, p, cfg, gen, committed, mode="append"):
-        real_manifest(spark_, p, cfg, gen, committed, mode)
+    def manifest_then_lock(spark_, p, schema, cfg, gen, committed,
+                           mode="append"):
+        real_manifest(spark_, p, schema, cfg, gen, committed, mode)
         if not committed:  # right after the INTENT row: compact starts
             fsutil.acquire_compact_lock(spark, path)
 
     batch = spark.createDataFrame(
         [(9, DOCS[2][1])], "doc_id long, text string"
     )
-    monkeypatch.setattr(ddp, "_minhash_append_manifest", manifest_then_lock)
+    monkeypatch.setattr(fsutil, "append_manifest", manifest_then_lock)
     with pytest.raises(ValueError, match="compacted"):
         ddp.add_to_minhash_index(spark, path, batch)
-    monkeypatch.setattr(ddp, "_minhash_append_manifest", real_manifest)
+    monkeypatch.setattr(fsutil, "append_manifest", real_manifest)
     fsutil.release_compact_lock(spark, path)
 
     # aborted generation invisible; retry lands exactly once

@@ -57,22 +57,22 @@ def test_write_lock_serializes_concurrent_bm25_adds(
     b1 = _toks(spark, DOCS[2:3])
     b2 = _toks(spark, DOCS[3:4])
 
-    real = Bm25Index._append_manifest.__func__
+    real = fsutil.append_manifest
     state = {"fired": False}
 
-    def intent_then_concurrent_add(cls, spark2, p2, params, gen, nd, sdl,
+    def intent_then_concurrent_add(spark2, p2, schema, params, gen,
                                    committed, mode="append"):
-        real(cls, spark2, p2, params, gen, nd, sdl, committed, mode)
+        real(spark2, p2, schema, params, gen, committed, mode)
         if not committed and not state["fired"]:
             state["fired"] = True  # first add sits between intent+commit
             with pytest.raises(ValueError,
                                match="write-lock already held"):
                 Bm25Index.add(spark, path, b2)
 
-    monkeypatch.setattr(Bm25Index, "_append_manifest",
-                        classmethod(intent_then_concurrent_add))
+    monkeypatch.setattr(fsutil, "append_manifest",
+                        intent_then_concurrent_add)
     s1 = Bm25Index.add(spark, path, b1)
-    monkeypatch.setattr(Bm25Index, "_append_manifest", classmethod(real))
+    monkeypatch.setattr(fsutil, "append_manifest", real)
     assert state["fired"]
     s2 = Bm25Index.add(spark, path, b2)
     assert s1["generation"] != s2["generation"]
@@ -99,22 +99,22 @@ def test_write_lock_serializes_concurrent_minhash_adds(
     b2 = spark.createDataFrame([(10, DOCS[3][1])],
                                "doc_id long, text string")
 
-    real = ddp._minhash_append_manifest
+    real = fsutil.append_manifest
     state = {"fired": False}
 
-    def intent_then_concurrent_add(spark2, p2, cfg, gen, committed,
+    def intent_then_concurrent_add(spark2, p2, schema, cfg, gen, committed,
                                    mode="append"):
-        real(spark2, p2, cfg, gen, committed, mode)
+        real(spark2, p2, schema, cfg, gen, committed, mode)
         if not committed and not state["fired"]:
             state["fired"] = True
             with pytest.raises(ValueError,
                                match="write-lock already held"):
                 ddp.add_to_minhash_index(spark, path, b2)
 
-    monkeypatch.setattr(ddp, "_minhash_append_manifest",
+    monkeypatch.setattr(fsutil, "append_manifest",
                         intent_then_concurrent_add)
     s1 = ddp.add_to_minhash_index(spark, path, b1)
-    monkeypatch.setattr(ddp, "_minhash_append_manifest", real)
+    monkeypatch.setattr(fsutil, "append_manifest", real)
     assert state["fired"]
     s2 = ddp.add_to_minhash_index(spark, path, b2)
     assert s1["generation"] != s2["generation"]
@@ -389,7 +389,7 @@ def test_bm25_v3_index_refused_with_rebuild_message(spark, tmp_path):
     Bm25Index.build(_toks(spark, DOCS), n_term_buckets=4).save(path)
     rows = spark.read.parquet(f"{path}/params").collect()
     downgraded = spark.createDataFrame(
-        [r.asDict() for r in rows], Bm25Index._PARAMS_SCHEMA
+        [r.asDict() for r in rows], Bm25Index.PARAMS_SCHEMA
     ).withColumn("version", F.lit(3).cast("long"))
     downgraded.coalesce(1).write.mode("overwrite").parquet(
         f"{path}/params")

@@ -558,8 +558,9 @@ def test_index_status_bm25_reports_orphans_tombstones_and_locks(
     fsutil.write_latest_pointer(spark, root, "v0")
     idx = Bm25Index.load(spark, root)
     # a crashed add: intent manifest row, no commit row
-    Bm25Index._append_manifest(spark, f"{root}/v0", idx.params, 7, 0, 0,
-                               committed=0)
+    fsutil.append_manifest(spark, f"{root}/v0", Bm25Index.PARAMS_SCHEMA,
+                           {**idx.params, "n_docs": 0, "sum_dl": 0}, 7,
+                           committed=0)
     Bm25Index.delete(spark, root, [2])
 
     st = index_status(spark, root)

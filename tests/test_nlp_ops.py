@@ -390,7 +390,7 @@ def test_bm25_index_rejects_foreign_format(spark, tmp_path):
     path = str(tmp_path / "bm25_v1")
     spark.createDataFrame(
         [(1, 1.2, 0.75, 10, 100, 8, "doc_id", 0, True)],
-        Bm25Index._PARAMS_SCHEMA,
+        Bm25Index.PARAMS_SCHEMA,
     ).write.parquet(f"{path}/params")
     with pytest.raises(ValueError, match="format v1"):
         Bm25Index.load(spark, path)
@@ -399,7 +399,7 @@ def test_bm25_index_rejects_foreign_format(spark, tmp_path):
     spark.createDataFrame(
         [(3, 1.2, 0.75, 10, 100, 8, "doc_id", 0, True),
          (3, 2.0, 0.75, 5, 50, 8, "doc_id", 1, True)],
-        Bm25Index._PARAMS_SCHEMA,
+        Bm25Index.PARAMS_SCHEMA,
     ).write.parquet(f"{path2}/params")
     with pytest.raises(ValueError, match="inconsistent generation"):
         Bm25Index.load(spark, path2)
@@ -628,6 +628,7 @@ def test_bm25_index_interrupted_add_is_invisible_and_retryable(spark, tmp_path):
     generation number), and compact physically purges the orphan."""
     import pytest
 
+    from keystone_spark import fsutil
     from keystone_spark.operators.nlp import Bm25Index
 
     rows = [
@@ -667,21 +668,21 @@ def test_bm25_index_interrupted_add_is_invisible_and_retryable(spark, tmp_path):
     assert crashed.params["n_docs"] == a.count()
 
     # crash (b): data lands, COMMIT row dies
-    real_manifest = Bm25Index._append_manifest.__func__
+    real_manifest = fsutil.append_manifest
 
-    def boom2(cls, spark_, p_, params, generation, n_docs, sum_dl,
-              committed, mode="append"):
+    def boom2(spark_, p_, schema, params, generation, committed,
+              mode="append"):
         if committed:
             raise RuntimeError("simulated crash before commit row")
-        return real_manifest(cls, spark_, p_, params, generation,
-                             n_docs, sum_dl, committed, mode)
+        return real_manifest(spark_, p_, schema, params, generation,
+                             committed, mode)
 
-    Bm25Index._append_manifest = classmethod(boom2)
+    fsutil.append_manifest = boom2
     try:
         with pytest.raises(RuntimeError, match="simulated crash"):
             Bm25Index.add(spark, path, b)
     finally:
-        Bm25Index._append_manifest = classmethod(real_manifest)
+        fsutil.append_manifest = real_manifest
     crashed = Bm25Index.load(spark, path)
     assert crashed.params["incomplete_generations"] == [1, 2]
     assert key(crashed.search(qs, k=5)) == before

@@ -937,8 +937,8 @@ def test_stream_neardup_store_texts_bounds_history(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from keystone_spark.operators.dedup import (
-        _minhash_manifest,
         build_minhash_index,
+        minhash_log,
     )
     from keystone_spark.streaming.windows import stream_neardup_against_index
 
@@ -991,7 +991,7 @@ def test_stream_neardup_store_texts_bounds_history(spark, tmp_path):
     # 5 folds with compact_every_n=2 -> compactions after folds 2 and
     # 4 collapsed history; at most the post-compact adds remain as
     # extra generations
-    cfg = _minhash_manifest(spark, idx)
+    cfg = minhash_log(spark, idx)
     assert cfg["incomplete_generations"] == []
     assert cfg["max_generation"] <= 2
 

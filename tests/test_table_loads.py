@@ -1,7 +1,9 @@
-"""Loads of stored vector tables and streaming snapshots are driver
-metadata: each table records its schema (``_schema.json``), so a load
-runs no Spark job, and ``fs_read_text`` returns files in py4j answers
-under 8 KB."""
+"""Loads of stored index tables and streaming snapshots are driver
+metadata: each table records its schema (``_schema.json``), so a vector
+or snapshot load runs no Spark job, a BM25 or MinHash load runs one
+(the collect of its generation log) while no table holds more than 32
+partition directories, and ``fs_read_text`` returns files in py4j
+answers under 8 KB."""
 
 import os
 import subprocess
@@ -208,6 +210,232 @@ def test_index_without_schema_record_loads_and_searches(spark, tmp_path):
     _, jobs = _jobs(spark, lambda: IvfIndex.load(spark, path), "load-old")
     assert jobs == 1  # the footer read of schema inference
     assert hits() == want
+
+
+WORDS = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+         "kilo lima mike november oscar papa quebec romeo sierra tango"
+         ).split()
+
+
+def _docs(spark, ids):
+    """Documents of 20 words and an id tail; documents i and i + 20
+    share their 20 words, so they are near duplicates."""
+    rows = [(int(i), " ".join(WORDS[(3 * i + j) % 20] for j in range(20))
+             + f" tail{i}") for i in ids]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _tokens(spark, ids):
+    return _docs(spark, ids).select("doc_id",
+                                    F.split("text", " ").alias("toks"))
+
+
+@pytest.mark.parametrize("buckets, bound", [(8, 1), (64, 3)])
+def test_bm25_load_runs_one_job(spark, tmp_path, buckets, bound):
+    """``Bm25Index.load`` reads its generation log with the declared
+    params schema (one collect) and each table with its recorded
+    schema, where inference ran one more job per table. At the default
+    64 buckets, Spark also lists ``postings`` and ``df`` in a job each:
+    they hold more than 32 bucket directories
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``)."""
+    from keystone_spark.operators.nlp import Bm25Index
+
+    path = str(tmp_path / "bm25")
+    Bm25Index.build(_tokens(spark, range(40)),
+                    n_term_buckets=buckets).save(path)
+    _, jobs = _jobs(spark, lambda: Bm25Index.load(spark, path),
+                    f"bm25-load-{buckets}")
+    assert jobs <= bound
+
+
+def test_minhash_reads_run_one_job(spark, tmp_path):
+    """The MinHash generation log plus every committed-table read run
+    one Spark job together, and so does ``match_minhash_index``
+    construction."""
+    from keystone_spark.caches import release
+    from keystone_spark.operators import dedup
+
+    path = str(tmp_path / "mh")
+    dedup.build_minhash_index(_docs(spark, range(20)), path, n_hashes=32,
+                              n_bands=8, store_texts=True)
+
+    def reads():
+        log = dedup.minhash_log(spark, path)
+        return [fsutil.read_committed(spark, path, t, log["committed"])
+                for t in ("bands", "sigs", "content", "texts")]
+
+    _, jobs = _jobs(spark, reads, "minhash-reads")
+    assert jobs <= 1
+    out, jobs = _jobs(spark, lambda: dedup.match_minhash_index(
+        spark, path, _docs(spark, range(20, 30)), _docs(spark, range(20)),
+        n_hashes=32, n_bands=8), "minhash-match")
+    assert jobs <= 1
+    assert out.count() == 10
+    release(out)
+
+
+def test_delete_finds_the_stored_id_without_a_load(spark, tmp_path,
+                                                   monkeypatch):
+    """``delete`` takes the stored id name and type from the members
+    table's recorded schema: no index load and no Spark job."""
+    from pyspark.sql.types import LongType
+
+    from keystone_spark.operators import dedup
+    from keystone_spark.operators.nlp import Bm25Index
+
+    bm, mh = str(tmp_path / "bm25"), str(tmp_path / "mh")
+    Bm25Index.build(_tokens(spark, range(40)), n_term_buckets=4).save(bm)
+    dedup.build_minhash_index(_docs(spark, range(20)), mh, n_hashes=32,
+                              n_bands=8)
+    found = []
+    real = fsutil.delete_ids
+
+    def counted(spark_, path, ids, stored_id):
+        found.append(_jobs(spark_, lambda: stored_id(path),
+                           f"stored-id-{len(found)}"))
+        return real(spark_, path, ids, stored_id)
+
+    def no_load(*args, **kwargs):
+        raise AssertionError("delete loaded the index")
+
+    monkeypatch.setattr(fsutil, "delete_ids", counted)
+    monkeypatch.setattr(fsutil, "read_generation_log", no_load)
+    monkeypatch.setattr(Bm25Index, "load", classmethod(no_load))
+    assert Bm25Index.delete(spark, bm, [3, 5]) == {"tombstones_added": 2}
+    assert dedup.delete_from_minhash_index(spark, mh, [3]) == {
+        "tombstones_added": 1}
+    assert found == [(("doc_id", LongType()), 0)] * 2
+
+
+def test_bm25_delete_refuses_a_v3_index_or_an_interrupted_swap(spark,
+                                                               tmp_path):
+    """Without a load, ``Bm25Index.delete`` still refuses what ``load``
+    refuses: an index of format v3 (no ``docs`` membership table) with
+    the rebuild message, and an index killed mid-swap."""
+    from keystone_spark.operators.nlp import Bm25Index
+
+    v3, swapped = str(tmp_path / "v3"), str(tmp_path / "swapped")
+    for path in (v3, swapped):
+        Bm25Index.build(_tokens(spark, range(10)),
+                        n_term_buckets=4).save(path)
+    rows = spark.read.parquet(f"{v3}/params").collect()
+    spark.createDataFrame(
+        [{**r.asDict(), "version": 3} for r in rows], Bm25Index.PARAMS_SCHEMA
+    ).coalesce(1).write.mode("overwrite").parquet(f"{v3}/params")
+    fsutil.fs_delete(spark, f"{v3}/{Bm25Index.MEMBERS}")
+    with pytest.raises(ValueError, match="Bm25Index.build") as ei:
+        Bm25Index.delete(spark, v3, [3])
+    assert "PATH_NOT_FOUND" not in str(ei.value)
+    with pytest.raises(ValueError, match="format v3"):
+        Bm25Index.load(spark, v3)
+
+    fsutil.fs_write_text(
+        spark, f"{swapped}/_compact_tmp/{fsutil.SWAP_MARKER}", "[]")
+    with pytest.raises(ValueError, match="interrupted compact"):
+        Bm25Index.delete(spark, swapped, [3])
+    assert not fsutil.fs_exists(spark, f"{swapped}/tombstones")
+
+
+def test_append_manifest_refuses_a_row_missing_a_column(spark, tmp_path):
+    """A generation-log row is written with every column of the declared
+    schema or not at all: a missing column would read as NULL and
+    surface only at the next load, as an inconsistent log."""
+    from keystone_spark.operators import dedup
+
+    path = str(tmp_path / "mh")
+    cfg = {"n_hashes": 32, "n_bands": 8, "shingle_k": 5, "seed": 42,
+           "bucket_cap": -1}
+    with pytest.raises(KeyError, match="store_texts"):
+        fsutil.append_manifest(spark, path, dedup.MINHASH_PARAMS_SCHEMA, cfg,
+                               0, True, mode="overwrite")
+    assert not fsutil.fs_exists(spark, f"{path}/params")
+
+
+@pytest.mark.parametrize("family", ["bm25", "minhash"])
+def test_generation_tables_record_the_inferred_schema(spark, tmp_path,
+                                                      family):
+    """After build, add, delete+compact and compact(dest), each table of
+    a generation-log index records the schema a schema-inferring read
+    reports, partition columns included, and reads the same rows."""
+    from keystone_spark.operators import dedup
+    from keystone_spark.operators.nlp import Bm25Index
+
+    root = str(tmp_path / "idx")
+    if family == "bm25":
+        tables = ["postings", "df", "docs"]
+        Bm25Index.build(_tokens(spark, range(30)), n_term_buckets=4).save(
+            f"{root}/v0")
+        ops = {"add": lambda: Bm25Index.add(spark, root,
+                                            _tokens(spark, range(30, 40))),
+               "delete": lambda: Bm25Index.delete(spark, root, [3, 5]),
+               "compact": lambda **kw: Bm25Index.compact(spark, root, **kw)}
+    else:
+        tables = ["bands", "sigs", "content", "texts"]
+        dedup.build_minhash_index(_docs(spark, range(30)), f"{root}/v0",
+                                  n_hashes=32, n_bands=8, store_texts=True)
+        ops = {"add": lambda: dedup.add_to_minhash_index(
+                   spark, root, _docs(spark, range(30, 45))),
+               "delete": lambda: dedup.delete_from_minhash_index(
+                   spark, root, [3, 5]),
+               "compact": lambda **kw: dedup.compact_minhash_index(
+                   spark, root, **kw)}
+    fsutil.write_latest_pointer(spark, root, "v0")
+
+    def check(step):
+        snap = fsutil.resolve_index_path(spark, root)
+        for t in tables:
+            table = f"{snap}/{t}"
+            inferred = spark.read.parquet(table)
+            assert _recorded(table) == inferred.schema, (step, t)
+            assert sorted(fsutil.read_table(spark, table).collect()) == \
+                sorted(inferred.collect()), (step, t)
+
+    check("build")
+    ops["add"]()
+    check("add")
+    ops["delete"]()
+    ops["compact"]()
+    check("compact")
+    ops["compact"](dest=f"{root}/v1")
+    check("compact(dest)")
+
+
+def test_generation_indexes_without_schema_records_serve_the_same_rows(
+        spark, tmp_path):
+    """A BM25 or MinHash index written before tables recorded their
+    schema still loads, by inference, and search and match return the
+    same rows."""
+    import glob
+
+    from keystone_spark.caches import release
+    from keystone_spark.operators import dedup
+    from keystone_spark.operators.nlp import Bm25Index
+
+    bm, mh = str(tmp_path / "bm25"), str(tmp_path / "mh")
+    Bm25Index.build(_tokens(spark, range(40)), n_term_buckets=4).save(bm)
+    dedup.build_minhash_index(_docs(spark, range(20)), mh, n_hashes=32,
+                              n_bands=8)
+    queries = spark.createDataFrame(
+        [(0, ["alpha", "tail7"]), (1, ["kilo", "tail33"])],
+        "query_id long, q_toks array<string>")
+
+    def results():
+        hits = sorted(Bm25Index.load(spark, bm).search(queries, k=5)
+                      .collect())
+        out = dedup.match_minhash_index(
+            spark, mh, _docs(spark, range(20, 30)), _docs(spark, range(20)),
+            n_hashes=32, n_bands=8)
+        matches = sorted(out.collect())
+        release(out)
+        return hits, matches
+
+    want = results()
+    assert len(want[0]) == 10 and len(want[1]) == 10
+    records = glob.glob(f"{tmp_path}/*/*/{fsutil.SCHEMA_FILE}")
+    assert len(records) == 6
+    for rec in records:
+        os.remove(rec)
+    assert results() == want
 
 
 @pytest.mark.slow
